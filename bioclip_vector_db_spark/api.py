@@ -15,21 +15,63 @@ of import, not of call shape:
   returns the merged-neighbor rows the server's JSON ``merged_neighbors``
   field carries, already globally merged (O27/O28 — the multi-server
   fan-out collapses into partitions of one DataFrame).
+
+One ``search`` request has the reference server's shape
+(neighborhood_server.py:181-225): the engine collects the centroid table
+(the leader index, nlist x dim) once when it opens, routes each request
+to its ``nprobe`` partitions on the driver against that matrix, and only
+then touches partition data — one statically pruned scan of the probed
+partitions, at most 2 Spark jobs per request. ``search`` rejects a query
+whose length differs from the index dimension, a non-finite component,
+and ``top_n < 1`` or ``nprobe < 1`` with ``ValueError``. ``search_batch``
+stays a distributed plan: its query table is unbounded, so its routing
+must scale with it rather than run on the driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+import copy
+from decimal import ROUND_HALF_UP, Decimal
 
-from .operators.knn import ivf_search
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from .functions.vector import PARITY_SCALE, cosine_distance, lit_array
+from .operators.knn import ivf_search, seed_kernel_choice
+from .operators.knn_numpy import _collect_centroids
 
 #: The reference's request/limit defaults (neighborhood_server.py:312,
 #: :417-421; nearest_neighbor_client.py:13).
 DEFAULT_TOP_N = 10
 DEFAULT_NPROBE = 1
 GLOBAL_MAX_NEIGHBORS = 100
+
+_PARITY_QUANTUM = Decimal(1).scaleb(-PARITY_SCALE)
+
+
+def _spark_round(x: float) -> float:
+    """Spark's ``round(x, PARITY_SCALE)`` on a DOUBLE: HALF_UP on the
+    decimal string of ``x`` (``BigDecimal.valueOf``). ``repr`` is the
+    shortest round-trip string; the JVM's ``Double.toString`` can carry a
+    longer one for the same double, which rounds differently only if a
+    HALF_UP boundary falls between the two strings."""
+    return float(Decimal(repr(x)).quantize(_PARITY_QUANTUM, rounding=ROUND_HALF_UP))
+
+
+def _probe_partitions(
+    pids: np.ndarray, cmat: np.ndarray, q: np.ndarray, nprobe: int
+) -> list[int]:
+    """The ``nprobe`` partitions ``knn.route_queries`` (expression kernel)
+    picks for ``q``, computed on the driver: distance ``1 - dot`` with the
+    dot a left fold from 0.0 in dim order (the ``aggregate(zip_with(...))``
+    order; ``cmat @ q`` sums in BLAS order and can differ in the last ulp),
+    rounded like Spark, ties to the smaller partition id."""
+    acc = np.zeros(len(pids))
+    for j, qj in enumerate(q):
+        acc += cmat[:, j] * qj
+    ranked = sorted(zip(map(_spark_round, (1.0 - acc).tolist()), pids.tolist()))
+    return [pid for _, pid in ranked[:nprobe]]
 
 
 class VectorSearchEngine:
@@ -38,9 +80,21 @@ class VectorSearchEngine:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        self.corpus = spark.read.parquet(f"{index_dir}/corpus")
         self.centroids = spark.read.parquet(f"{index_dir}/centroids")
-        self.id_mapping = spark.read.parquet(f"{index_dir}/id_mapping")
+        # The leader index in memory, like the reference server: nlist x
+        # dim, sorted by partition id. Appends never re-fit it, so it
+        # lives as long as the index.
+        self._centroid_ids, self._centroid_matrix = _collect_centroids(
+            self.centroids, "partition_id", "centroid"
+        )
+        seed_kernel_choice(self.centroids, len(self._centroid_ids))
+        self._read_grown_tables()
+
+    def _read_grown_tables(self) -> None:
+        """(Re-)read the two tables appends grow: a parquet read lists its
+        files once, so rows appended later need a new read."""
+        self.corpus = self.spark.read.parquet(f"{self.index_dir}/corpus")
+        self.id_mapping = self.spark.read.parquet(f"{self.index_dir}/id_mapping")
 
     # -- search (POST /search analog) ------------------------------------
 
@@ -52,23 +106,40 @@ class VectorSearchEngine:
     ) -> DataFrame:
         """One query vector -> merged neighbors ``(id, distance)`` rows,
         routed to ``nprobe`` partitions, ``top_n`` per partition, globally
-        merged ascending by distance (O22-O28)."""
-        q = self.spark.createDataFrame(
-            [(0, [float(x) for x in query_vector])],
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField("qv", T.ArrayType(T.DoubleType())),
-                ]
-            ),
+        merged ascending by distance (O22-O28).
+
+        Routing runs on the driver against the centroid matrix loaded at
+        open, by the exact rule of ``knn.route_queries`` (expression
+        kernel). The plan is one scan statically pruned to the probed
+        partitions: per-partition ``row_number() <= top_n`` over
+        (distance, neighbor_id), the first GLOBAL_MAX_NEIGHBORS by
+        (distance, neighbor_id), returned ordered by (distance, id) — the
+        rows ``ivf_search`` gives, in at most 2 Spark jobs.
+
+        Raises ``ValueError`` when the query length differs from the index
+        dimension, a component is not finite, or ``top_n``/``nprobe`` < 1.
+        """
+        q = np.asarray(query_vector, dtype=np.float64)
+        dim = self._centroid_matrix.shape[-1]
+        if q.ndim != 1 or len(q) != dim:
+            raise ValueError(f"query has shape {q.shape}, the index dimension is {dim}")
+        if not np.isfinite(q).all():
+            raise ValueError("query has a non-finite component")
+        if top_n < 1 or nprobe < 1:
+            raise ValueError(f"top_n and nprobe must be >= 1, got {top_n} and {nprobe}")
+        probes = _probe_partitions(self._centroid_ids, self._centroid_matrix, q, nprobe)
+        scored = self.corpus.filter(F.col("partition_id").isin(probes)).select(
+            "partition_id",
+            F.col("vec_id").alias("neighbor_id"),
+            cosine_distance(lit_array(q.tolist()), F.col("embedding")).alias("distance"),
         )
-        hits = ivf_search(
-            q,
-            self.corpus,
-            self.centroids,
-            nprobe=nprobe,
-            top_n=top_n,
-            global_limit=GLOBAL_MAX_NEIGHBORS,
+        by_distance = (F.col("distance").asc(), F.col("neighbor_id").asc())
+        w = Window.partitionBy("partition_id").orderBy(*by_distance)
+        hits = (
+            scored.withColumn("local_rank", F.row_number().over(w))
+            .filter(F.col("local_rank") <= top_n)
+            .orderBy(*by_distance)
+            .limit(GLOBAL_MAX_NEIGHBORS)
         )
         # O25 id remap: hits carry vec_id, whose original_id is its string
         # form by construction (build_id_mapping) — the join degenerates to
@@ -79,7 +150,9 @@ class VectorSearchEngine:
         ).orderBy(F.col("distance").asc(), F.col("id").asc())
 
     def search_batch(self, queries: DataFrame, top_n: int = DEFAULT_TOP_N, nprobe: int = DEFAULT_NPROBE) -> DataFrame:
-        """X3: the same search lifted to a query table."""
+        """X3: the same search lifted to a query table. Routing stays a
+        distributed plan (``knn.ivf_search``): the query table has no size
+        bound, so it is never collected to the driver."""
         return ivf_search(
             queries, self.corpus, self.centroids, nprobe=nprobe, top_n=top_n,
             global_limit=GLOBAL_MAX_NEIGHBORS,
@@ -152,7 +225,9 @@ class VectorSearchEngine:
         from .operators.indexing import append_to_index
 
         append_to_index(self.spark, self.index_dir, vectors, self.centroids)
-        return VectorSearchEngine(self.spark, self.index_dir)
+        grown = copy.copy(self)  # shares the centroids: appends never re-fit
+        grown._read_grown_tables()
+        return grown
 
     def reset(self, force: bool = False) -> None:
         """StorageInterface.reset analog (storage_impl.py:56-64): drop the

@@ -90,6 +90,25 @@ _KERNEL_CACHE: dict[tuple[int, int], str] = {}
 _CENTS_CACHE: dict[tuple[int, int], "DataFrame"] = {}
 
 
+def _plan_key(df: DataFrame) -> tuple[int, int]:
+    """(session id, semantic hash of the analyzed plan): a driver-side
+    hash, no job, equal for re-built DataFrames over the same plan."""
+    return (id(df.sparkSession), df._jdf.queryExecution().analyzed().semanticHash())
+
+
+def _kernel_for(nlist: int) -> str:
+    from .knn_numpy import LARGE_NLIST_THRESHOLD
+
+    return "numpy" if nlist > LARGE_NLIST_THRESHOLD else "expr"
+
+
+def seed_kernel_choice(centroids: DataFrame, nlist: int) -> None:
+    """Record the ``kernel='auto'`` choice for a centroid table whose row
+    count the caller already holds (api.VectorSearchEngine collects the
+    table when it opens), so no probe job ever runs for it."""
+    _KERNEL_CACHE[_plan_key(centroids)] = _kernel_for(nlist)
+
+
 def _pick_kernel(kernel: str, centroids: DataFrame) -> str:
     """Resolve ``kernel='auto'`` by probing the centroid count: small-k
     stays on the Catalyst expression path (codegen-adjacent, exact oracle
@@ -101,16 +120,12 @@ def _pick_kernel(kernel: str, centroids: DataFrame) -> str:
     session pays it once, not per query (see _KERNEL_CACHE)."""
     if kernel != "auto":
         return kernel
-    key = (
-        id(centroids.sparkSession),
-        centroids._jdf.queryExecution().analyzed().semanticHash(),
-    )
+    key = _plan_key(centroids)
     choice = _KERNEL_CACHE.get(key)
     if choice is None:
         from .knn_numpy import LARGE_NLIST_THRESHOLD
 
-        probe = centroids.limit(LARGE_NLIST_THRESHOLD + 1).count()
-        choice = "numpy" if probe > LARGE_NLIST_THRESHOLD else "expr"
+        choice = _kernel_for(centroids.limit(LARGE_NLIST_THRESHOLD + 1).count())
         _KERNEL_CACHE[key] = choice
     return choice
 
@@ -193,10 +208,7 @@ def assign_partitions(
     # centroid plan) like the kernel choice: a streaming ingest calls
     # this once per micro-batch with the SAME centroids, and rebuilding
     # the agg plan is pure driver-side py4j latency on the batch path.
-    ckey = (
-        id(centroids.sparkSession),
-        centroids._jdf.queryExecution().analyzed().semanticHash(),
-    )
+    ckey = _plan_key(centroids)
     cents = _CENTS_CACHE.get(ckey)
     if cents is None:
         cents = centroids.groupBy().agg(

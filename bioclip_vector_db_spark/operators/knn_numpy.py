@@ -136,7 +136,9 @@ def _collect_centroids(centroids: DataFrame, pid_col: str, vec_col: str):
     the distributed tier (knn_routed.py) replaces it with a capped
     router sample and never materializes the table on the driver.
     """
-    rows = centroids.select(pid_col, vec_col).orderBy(pid_col).collect()
+    # Sorted on the driver: an orderBy would add a range-partitioning
+    # sample job and an exchange to a collect of nlist rows.
+    rows = sorted(centroids.select(pid_col, vec_col).collect(), key=lambda r: r[0])
     pids = np.array([r[0] for r in rows], dtype=np.int64)
     cmat = np.array([r[1] for r in rows], dtype=np.float64)
     return pids, cmat

@@ -3,9 +3,6 @@
 - O14 JSON encode/decode of metadata (metadata_storage.py:85,147,169).
 - O15 partition-spec range expansion: ``"1,2,5-10"`` -> sorted distinct ints
   (neighborhood_server.py:353-365).
-- O27/O28 merge semantics over pre-scored per-server result sets
-  (nearest_neighbor_client.py:62-72): union + global ORDER BY + LIMIT,
-  which Spark executes as TakeOrderedAndProject (no full sort).
 """
 
 from __future__ import annotations
@@ -61,15 +58,6 @@ def expand_partition_spec_df(spark: SparkSession, spec: str) -> DataFrame:
         .distinct()
         .orderBy("partition_id")
     )
-
-
-def merge_global_topk(results: list[DataFrame], limit: int = 100) -> DataFrame:
-    """O28: merge per-server result sets ``(id, distance)`` — union all,
-    ascending distance, global limit (nearest_neighbor_client.py:62-72)."""
-    merged = results[0]
-    for r in results[1:]:
-        merged = merged.unionByName(r)
-    return merged.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(limit)
 
 
 # ---------------------------------------------------------------------------
