@@ -6,17 +6,13 @@ interpreted (higher-order functions don't enter whole-stage codegen); when
 a profile shows the dot product itself dominating, the same logical plan
 can score each Arrow batch as ONE ``E @ Q.T`` BLAS call.
 
-Every kernel here runs Arrow-native by default (``engine='arrow'``,
-r15 verdict item 1): the vector values buffer feeds the GEMM operand
-directly via ``_list_matrix`` and id/vector columns pass through as Arrow
-arrays — no per-row Python object boxing on either side, the bound the
-r14/r15 dist_payload stress legs measured on the routed tier (2.8-3.8x
-on its cogroup term). ``engine='pandas'`` keeps the original
-``mapInPandas`` stages as the A/B twin; both engines call the SAME
-numeric ``*_core`` functions (same float64 matrices, same tiled round-9
-GEMMs, same tie rules), so results are byte-identical — the engines may
-only differ in HOW rows cross the JVM/Python boundary (gated:
-tests/test_knn_arrow_engines.py).
+Every stage has one transport: Arrow in, a shared numeric ``*_core``,
+Arrow out. The vector values buffer feeds the GEMM operand directly via
+``_list_matrix`` and id/vector columns pass through as Arrow arrays, so
+no row is boxed as a Python object on either side of a ``mapInArrow``
+stage. The ``*_core`` functions own every numeric rule (float64
+matrices, tiled round-9 GEMMs, tie order); the closures only move
+columns in and out.
 
 Shape (identical distribution semantics to ``knn.knn_join``):
 1. the query side is small by contract (the reference serves one vector per
@@ -40,7 +36,6 @@ import math
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window
@@ -74,14 +69,9 @@ _TILE_ELEMS = 8_000_000
 
 def _list_matrix(col: "pa.Array | pa.ChunkedArray") -> "np.ndarray":
     """(n, d) float64 matrix from an Arrow list<float|double> column with
-    NO per-row Python boxing — the r14 dist_payload stress leg proved the
-    routed tier's cogroup term is Arrow<->pandas ROW-boxing-bound (f32
-    halved the shuffle bytes for a ~flat wall): the pandas path's
-    ``np.array(list(pdf[col]))`` materializes one Python ndarray object
-    per row on BOTH sides of every stage. flatten() honors slice offsets,
-    so this reads the values buffer directly; a ragged or null-bearing
-    vector column fails the reshape loudly, exactly like the object-array
-    failure mode of the pandas path (the embedding contract is fixed-d,
+    NO per-row Python boxing. flatten() honors slice offsets, so this
+    reads the values buffer directly; a ragged or null-bearing vector
+    column fails the reshape loudly (the embedding contract is fixed-d,
     non-null)."""
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
@@ -118,11 +108,6 @@ def _rb_append(
     return pa.RecordBatch.from_arrays(cols, schema=out_arrow)
 
 
-def _check_engine(engine: str) -> None:
-    if engine not in ("arrow", "pandas"):
-        raise ValueError(f"engine must be 'arrow' or 'pandas', got {engine!r}")
-
-
 def _collect_centroids(centroids: DataFrame, pid_col: str, vec_col: str):
     """Centroid matrix sorted by partition id -> (pids int64[k], C float64[k,d]).
 
@@ -150,12 +135,10 @@ def _best_centroid_core(
     bC: "np.ndarray",
     similarity: bool,
 ):
-    """Numeric core of the flat blocked-GEMM argbest — both engines call
-    EXACTLY this (they may only differ in how rows cross the JVM/Python
-    boundary, never in what is computed). Blocks ascend by id, within a
-    block arg{min,max} takes the FIRST extremum, cross-block updates
-    require a strict improvement, scores round to 9 dp BEFORE comparison.
-    Returns (best_id int64[b], best_v float64[b])."""
+    """Numeric core of the flat blocked-GEMM argbest. Blocks ascend by
+    id, within a block arg{min,max} takes the FIRST extremum, cross-block
+    updates require a strict improvement, scores round to 9 dp BEFORE
+    comparison. Returns (best_id int64[b], best_v float64[b])."""
     b = emb.shape[0]
     k = len(bids)
     cblock = max(1, min(k, _TILE_ELEMS // max(b, 1)))
@@ -186,7 +169,6 @@ def _blocked_best_centroid(
     out_field: "T.StructField",
     score_field: "str | None" = None,
     _collected: "tuple | None" = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Shared blocked-GEMM argbest core behind assign_partitions_numpy
     (argmin cosine distance) and argmax_centroid_numpy (argmax dot
@@ -200,7 +182,6 @@ def _blocked_best_centroid(
     shuffle, no row expansion. Empty centroid table -> empty output
     (empty-in/empty-out; without it every row would get id 0 and an
     infinite score — silently wrong)."""
-    _check_engine(engine)
     ids, cmat = (
         _collected
         if _collected is not None
@@ -214,22 +195,6 @@ def _blocked_best_centroid(
         return vectors.sparkSession.createDataFrame([], out_schema)
     bc = vectors.sparkSession.sparkContext.broadcast((ids, cmat))
     out_np_type = np.int32 if isinstance(out_field.dataType, T.IntegerType) else np.int64
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bids, bC = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            emb = np.array(list(pdf[vec_col]), dtype=np.float64)  # b x d
-            best_id, best_v = _best_centroid_core(emb, bids, bC, similarity)
-            out = pdf.copy()
-            out[out_field.name] = best_id.astype(out_np_type)
-            if score_field is not None:
-                out[score_field] = best_v
-            yield out
-
-    if engine == "pandas":
-        return vectors.mapInPandas(score, out_schema)
 
     out_arrow = to_arrow_schema(out_schema)
     vec_idx = [f.name for f in vectors.schema.fields].index(vec_col)
@@ -257,7 +222,6 @@ def assign_partitions_numpy(
     pid_col: str = "partition_id",
     centroid_vec_col: str = "centroid",
     routed: "bool | str" = "auto",
-    engine: str = "arrow",
 ) -> DataFrame:
     """O19 nearest-centroid assignment as a blocked GEMM — the large-nlist
     kernel behind ``knn.assign_partitions(kernel='numpy'|'auto')``.
@@ -298,7 +262,6 @@ def assign_partitions_numpy(
         vec_col=vec_col,
         similarity=False,
         out_field=T.StructField(pid_col, T.IntegerType()),
-        engine=engine,
     )
 
 
@@ -469,10 +432,10 @@ def _routed_best_core(
     p: int,
     similarity: bool,
 ):
-    """Numeric core of the two-tier routed argbest — both engines call
-    EXACTLY this. Tiled routing scores + one-pass top->rows inversion:
-    per batch this is O(b sqrt(k) d) GEMM + O(b p log(b p)) sort, never
-    O(b g) per-group scans or a whole b x g tile (r11 ADVICE). Returns
+    """Numeric core of the two-tier routed argbest. Tiled routing scores
+    + one-pass top->rows inversion: per batch this is O(b sqrt(k) d)
+    GEMM + O(b p log(b p)) sort, never O(b g) per-group scans or a whole
+    b x g tile (r11 ADVICE). Returns
     (best_id int64[b], best_v float64[b])."""
     b = emb.shape[0]
     top = _tiled_top_groups(emb, bS, p)  # b x p group ids
@@ -514,7 +477,6 @@ def _routed_best_centroid(
     score_field: "str | None" = None,
     probes: int = ROUTE_PROBES,
     _collected: "tuple | None" = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Two-tier argbest: route each vector to its top-``probes``
     super-centroid groups (one b x g GEMM), then argbest only against the
@@ -529,7 +491,6 @@ def _routed_best_centroid(
     Distance mode (``similarity=False``) scores 1 - dot exactly like the
     flat kernel; routing itself always probes by RAW dot to the group
     means (monotone with 1 - dot, so both modes route identically)."""
-    _check_engine(engine)
     ids, cmat = (
         _collected
         if _collected is not None
@@ -544,25 +505,6 @@ def _routed_best_centroid(
     S, members = _super_centroids(cmat, probes)
     bc = vectors.sparkSession.sparkContext.broadcast((ids, cmat, S, members))
     out_np_type = np.int32 if isinstance(out_field.dataType, T.IntegerType) else np.int64
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bids, bC, bS, bmem = bc.value
-        p = min(probes, bS.shape[0])
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            emb = np.array(list(pdf[vec_col]), dtype=np.float64)  # b x d
-            best_id, best_v = _routed_best_core(
-                emb, bids, bC, bS, bmem, p, similarity
-            )
-            out = pdf.copy()
-            out[out_field.name] = best_id.astype(out_np_type)
-            if score_field is not None:
-                out[score_field] = best_v
-            yield out
-
-    if engine == "pandas":
-        return vectors.mapInPandas(score, out_schema)
 
     out_arrow = to_arrow_schema(out_schema)
     vec_idx = [f.name for f in vectors.schema.fields].index(vec_col)
@@ -598,7 +540,6 @@ def argmax_centroid_numpy(
     routed_payload: str = "f64",
     routed_probe_margin: "float | str | None" = "auto",
     resolved_out: "dict | None" = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Best-centroid argmax (similarity form of assign_partitions_numpy):
     blocked ``E @ C.T`` GEMMs with a running (best_csim, best_cid) argmax —
@@ -666,7 +607,6 @@ def argmax_centroid_numpy(
             n_vectors=n_vectors,
             payload=routed_payload,
             probe_margin=routed_probe_margin,
-            engine=engine,
         )
     collected = None
     if routed == "auto":
@@ -689,7 +629,6 @@ def argmax_centroid_numpy(
         out_field=T.StructField(cid_col, T.LongType()),
         score_field="csim",
         _collected=collected,
-        engine=engine,
     )
 
 
@@ -702,7 +641,6 @@ def route_queries_numpy(
     query_vec_col: str = "qv",
     pid_col: str = "partition_id",
     centroid_vec_col: str = "centroid",
-    engine: str = "arrow",
 ) -> DataFrame:
     """O22 top-``nprobe`` centroid routing as a blocked GEMM — the
     large-nlist kernel behind ``knn.route_queries(kernel='numpy'|'auto')``.
@@ -714,7 +652,6 @@ def route_queries_numpy(
     expression kernel: round-9 distances, (distance, pid) ascending.
     Returns ``(query_id, qv, partition_id, probe_rank)``.
     """
-    _check_engine(engine)
     pids, cmat = _collect_centroids(centroids, pid_col, centroid_vec_col)
     bc = queries.sparkSession.sparkContext.broadcast((pids, cmat))
     out_schema = T.StructType(
@@ -727,9 +664,8 @@ def route_queries_numpy(
     )
 
     def _route_topn_core(qmat: "np.ndarray", bpids: "np.ndarray", bC: "np.ndarray"):
-        """Numeric core — both engines call EXACTLY this. Returns the
-        (b, take) int32 pid matrix in exact (d, pid) lexicographic order
-        per row."""
+        """Numeric core. Returns the (b, take) int32 pid matrix in exact
+        (d, pid) lexicographic order per row."""
         b = qmat.shape[0]
         k = len(bpids)
         take = min(nprobe, k)
@@ -758,30 +694,6 @@ def route_queries_numpy(
         order = np.lexsort((pall, dall), axis=1)[:, :take]
         return np.take_along_axis(pall, order, axis=1).astype(np.int32)
 
-    def route(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bpids, bC = bc.value
-        take = min(nprobe, len(bpids))
-        for pdf in batches:
-            b = len(pdf)
-            if not b:
-                continue
-            qmat = np.array(list(pdf[query_vec_col]), dtype=np.float64)  # b x d
-            sel = _route_topn_core(qmat, bpids, bC)
-            out_rows = {
-                query_id_col: np.repeat(pdf[query_id_col].to_numpy(), take),
-                query_vec_col: [
-                    v for v in pdf[query_vec_col] for _ in range(take)
-                ],
-                pid_col: sel.ravel(),
-                "probe_rank": np.tile(np.arange(1, take + 1, dtype=np.int64), b),
-            }
-            yield pd.DataFrame(out_rows)
-
-    if engine == "pandas":
-        return queries.select(query_id_col, query_vec_col).mapInPandas(
-            route, out_schema
-        )
-
     out_arrow = to_arrow_schema(out_schema)
 
     def route_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -794,8 +706,7 @@ def route_queries_numpy(
             qmat = _list_matrix(rb.column(1))
             sel = _route_topn_core(qmat, bpids, bC)
             # The query id/vector columns replicate via Arrow take on a
-            # repeated row index — no per-row Python list of vectors (the
-            # pandas path's one remaining boxing site).
+            # repeated row index — no per-row Python list of vectors.
             rep = pa.array(np.repeat(np.arange(b, dtype=np.int64), take))
             yield pa.RecordBatch.from_arrays(
                 [
@@ -832,7 +743,6 @@ def knn_join_numpy(
     query_vec_col: str = "qv",
     corpus_id_col: str = "vec_id",
     corpus_vec_col: str = "embedding",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Exact top-k cosine join with a BLAS inner loop.
     Returns ``(query_id, neighbor_id, distance, rank)`` like ``knn_join``.
@@ -843,7 +753,6 @@ def knn_join_numpy(
     the distributed alternative rather than OOMing the driver. The
     bound is checked with a ``limit(cap+1)`` probe — one cheap scan
     that stops early, never a full count of an oversized side."""
-    _check_engine(engine)
     cap = KNN_JOIN_NUMPY_MAX_QUERIES
     probe = queries.select(query_id_col, query_vec_col).limit(cap + 1)
     qrows = probe.collect()
@@ -862,9 +771,9 @@ def knn_join_numpy(
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)  # q x d
 
     def _knn_block_core(emb: "np.ndarray", ids: "np.ndarray"):
-        """Numeric core — both engines call EXACTLY this. Per corpus
-        batch: local top-k per query (argpartition, O(b) per query).
-        Returns flat (query_id, neighbor_id, distance) arrays."""
+        """Numeric core. Per corpus batch: local top-k per query
+        (argpartition, O(b) per query). Returns flat (query_id,
+        neighbor_id, distance) arrays."""
         dist = 1.0 - emb @ qmat.T  # b x q
         top = min(k, emb.shape[0])
         out_q, out_n, out_d = [], [], []
@@ -878,17 +787,6 @@ def knn_join_numpy(
             np.concatenate(out_n),
             np.concatenate(out_d),
         )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            emb = np.array(list(pdf[corpus_vec_col]), dtype=np.float64)  # b x d
-            ids = pdf[corpus_id_col].to_numpy(dtype=np.int64)
-            oq, on, od = _knn_block_core(emb, ids)
-            yield pd.DataFrame(
-                {"query_id": oq, "neighbor_id": on, "distance": od}
-            )
 
     cand_arrow = to_arrow_schema(_CAND_SCHEMA)
 
@@ -908,11 +806,8 @@ def knn_join_numpy(
                 schema=cand_arrow,
             )
 
-    proj = corpus.select(corpus_id_col, corpus_vec_col)
-    cands = (
-        proj.mapInArrow(score_arrow, _CAND_SCHEMA)
-        if engine == "arrow"
-        else proj.mapInPandas(score, _CAND_SCHEMA)
+    cands = corpus.select(corpus_id_col, corpus_vec_col).mapInArrow(
+        score_arrow, _CAND_SCHEMA
     )
     w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("neighbor_id").asc())
     return (
@@ -928,7 +823,6 @@ def pq_encode_numpy(
     m: int,
     sub_dim: int,
     vec_col: str = "embedding",
-    engine: str = "arrow",
 ) -> DataFrame:
     """PQ encoding as blocked GEMMs — the large-codebook kernel behind
     ``quantization.pq_encode(kernel='numpy'|'auto')``.
@@ -941,7 +835,6 @@ def pq_encode_numpy(
     no shuffle, no row expansion. At a real 256-code book this replaces
     m x 256 x sub_dim interpreted multiply-adds per row.
     """
-    _check_engine(engine)
     rows = codebooks.select("code", "mean_vec").orderBy("code").collect()
     codes = np.array([r[0] for r in rows], dtype=np.int64)
     cmat = np.array([r[1] for r in rows], dtype=np.float64)  # k x dim
@@ -952,8 +845,7 @@ def pq_encode_numpy(
     )
 
     def _pq_codes_core(emb: "np.ndarray", bcodes, bC):
-        """Numeric core — both engines call EXACTLY this. Returns the m
-        per-subspace int32 code arrays."""
+        """Numeric core. Returns the m per-subspace int32 code arrays."""
         out = []
         for s in range(m):
             sub = emb[:, s * sub_dim : (s + 1) * sub_dim]
@@ -966,20 +858,6 @@ def pq_encode_numpy(
             np.round(d, 9, out=d)
             out.append(bcodes[d.argmin(axis=1)].astype(np.int32))
         return out
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bcodes, bC = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            emb = np.array(list(pdf[vec_col]), dtype=np.float64)  # b x dim
-            out = pdf.copy()
-            for s, col in enumerate(_pq_codes_core(emb, bcodes, bC)):
-                out[f"pq_code_{s}"] = col
-            yield out
-
-    if engine == "pandas":
-        return corpus.mapInPandas(enc, out_schema)
 
     out_arrow = to_arrow_schema(out_schema)
     vec_idx = [f.name for f in corpus.schema.fields].index(vec_col)

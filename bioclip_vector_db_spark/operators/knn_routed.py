@@ -31,12 +31,9 @@ frontier. This module removes the bound:
   centroids ((group id, salt) as the equi-join key — salts sized
   per group from the sampled routing distribution so the MAX key stays
   near the per-task target, r14 item 3);
-- all three Python stages run Arrow-native by default (``mapInArrow``
-  / ``cogroup().applyInArrow``, r14 item 1): the vector values buffer
-  feeds the GEMM operand directly, with no per-row Python object
-  boxing — the bound the r14 dist_payload leg measured; the pandas
-  stages remain behind ``engine='pandas'`` with byte-identical
-  results (gated);
+- all three Python stages run Arrow-native (``mapInArrow`` /
+  ``cogroup().applyInArrow``): the vector values buffer feeds the GEMM
+  operand directly, with no per-row Python object boxing;
 - the global argbest is one groupBy(vec_id) struct-min/max over n x p
   candidate rows (no embedding payload), joined back to the input.
 
@@ -68,7 +65,6 @@ import time
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
@@ -79,7 +75,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from .knn_numpy import (
     ROUTE_PROBES,
     _SUPER_KMEANS_ITERS,
-    _invert_top_to_rows,
+    _best_centroid_core,
     _list_matrix,
     _pa_cast,
     _super_centroids,
@@ -123,11 +119,11 @@ _ROUTER_FALLBACK_REFINE_PASSES = 2
 
 #: Auto-sizing target for group_salts: MEAN routed-vector fan-in rows
 #: per (group, salt) cogroup key. The binding per-task memory bound is
-#: NOT the tiled score GEMM (_TILE_ELEMS caps that) but applyInPandas
-#: itself: the whole key's vector fan-in materializes as one pandas
-#: frame before per_group runs (r12 ADVICE) — at 512-d float64, 1e5
-#: rows is ~0.4 GB as the numpy GEMM operand plus the Arrow/pandas
-#: input frame, ~1 GB/task envelope; well inside a standard 4-8 GB
+#: NOT the tiled score GEMM (_TILE_ELEMS caps that) but the cogroup
+#: itself: the whole key's vector fan-in materializes as one Arrow
+#: table before per_group_arrow runs (r12 ADVICE) — at 512-d float64,
+#: 1e5 rows is ~0.4 GB as the numpy GEMM operand plus the Arrow input
+#: table, ~1 GB/task envelope; well inside a standard 4-8 GB
 #: executor with headroom for skewed (above-mean) groups. Over-salting
 #: is measured FREE (salts=64 row-exact and faster than salts=1,
 #: SCALE_STRESS r12), so erring low on this target only adds keys.
@@ -404,9 +400,11 @@ def _calibrate_probe_margin(
         return None
     s, d = cent_sample.shape
     # Winner-group assignment below uses the FULL router (that is what
-    # assign_groups does); the gap statistics use the LIVE-group view
-    # (that is what _route_core scores).
-    grp_full = _tiled_argmax_group(cent_sample, S)
+    # assign_groups_arrow does); the gap statistics use the LIVE-group
+    # view (that is what _route_core scores).
+    grp_full = _best_centroid_core(
+        cent_sample, np.arange(S.shape[0]), S, similarity=True
+    )[0]
     if live is None:
         live = np.arange(S.shape[0], dtype=np.int64)
     g = len(live)
@@ -424,22 +422,9 @@ def _calibrate_probe_margin(
         )
     )
     q = vec_sample[np.linspace(0, len(vec_sample) - 1, n_q).astype(np.int64)]
-    # Winner (among the centroid sample) per query — same tiled
-    # round-9 / first-max / strict-cross-block-improvement argbest as
-    # every kernel in the family.
-    from .knn_numpy import _TILE_ELEMS
-
-    best_v = np.full(n_q, -np.inf)
-    best_j = np.zeros(n_q, dtype=np.int64)
-    cblock = max(1, min(s, _TILE_ELEMS // max(n_q, 1)))
-    for c0 in range(0, s, cblock):
-        blk = q @ cent_sample[c0 : c0 + cblock].T
-        np.round(blk, 9, out=blk)
-        j = blk.argmax(axis=1)
-        v = blk[np.arange(n_q), j]
-        upd = v > best_v
-        best_v[upd] = v[upd]
-        best_j[upd] = c0 + j[upd]
+    # Winner (among the centroid sample) per query — the family's
+    # tiled round-9 / first-max / strict-cross-block-improvement argbest.
+    best_j = _best_centroid_core(q, np.arange(s), cent_sample, similarity=True)[0]
     wg = grp[best_j]
     # A winner's group is live by construction; drop any -1 defensively
     # (mismatched caller tables) rather than let it index column -1.
@@ -466,33 +451,6 @@ def _calibrate_probe_margin(
     return max(m, _CALIBRATE_MARGIN_FLOOR)
 
 
-def _tiled_argmax_group(emb: "np.ndarray", S: "np.ndarray") -> "np.ndarray":
-    """Deterministic argmax routing-group per row, tiled like
-    _tiled_top_groups: blocks ascend by group id, within a block argmax
-    takes the FIRST maximum, cross-block updates require a STRICT
-    improvement — ties break to the smallest group id, matching every
-    other argbest in the kernel family. Scores are rounded to 9 dp
-    before comparison (the family contract), which is what makes the
-    tiebreak reachable at all across tiles: BLAS summation order is
-    GEMM-shape-dependent, so raw exact-duplicate dots can differ in the
-    last ulp between tiles and between Arrow batch shapes."""
-    from .knn_numpy import _TILE_ELEMS
-
-    b, g = emb.shape[0], S.shape[0]
-    gblock = max(1, min(g, _TILE_ELEMS // max(b, 1)))
-    best_v = np.full(b, -np.inf)
-    best_g = np.zeros(b, dtype=np.int64)
-    for s in range(0, g, gblock):
-        blk = emb @ S[s : s + gblock].T
-        np.round(blk, 9, out=blk)
-        j = blk.argmax(axis=1)
-        v = blk[np.arange(b), j]
-        upd = v > best_v
-        best_v[upd] = v[upd]
-        best_g[upd] = s + j[upd]
-    return best_g
-
-
 def routed_best_centroid_distributed(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -510,7 +468,6 @@ def routed_best_centroid_distributed(
     n_vectors: "int | None" = None,
     payload: str = "f64",
     probe_margin: "float | str | None" = "auto",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Two-tier argbest with a DISTRIBUTED bottom tier (module docstring
     has the full shape). Requires ``vec_id_col`` to be unique per input
@@ -532,9 +489,9 @@ def routed_best_centroid_distributed(
     ``group_salts``: splits each routed group's VECTOR rows across this
     many cogroup keys, replicating the group's member centroids per salt
     — the standard hot-key treatment for large per-group fan-in. The
-    binding per-task memory bound is the cogroup ``applyInPandas``
+    binding per-task memory bound is the cogroup ``applyInArrow``
     full-key materialization (each key's entire vector fan-in lands in
-    one pandas frame BEFORE the tiled GEMM runs — the _TILE_ELEMS tiling
+    one Arrow table BEFORE the tiled GEMM runs — the _TILE_ELEMS tiling
     bounds only the score matrix), so keys are sized for
     ~_TARGET_ROWS_PER_GROUP_TASK (1e5) fan-in rows, not the ~10M a
     GEMM-only bound would allow (r12 ADVICE). ``None`` (default)
@@ -586,27 +543,11 @@ def routed_best_centroid_distributed(
     calibrated default is inside the oracle-gated
     semantic_dedup_routed_eval bounds (drift <= 6%, spurious <= 1%).
 
-    ``engine`` (r14 verdict item 1): ``'arrow'`` (default) runs all
-    three Python stages — centroid group-assign, vector route-explode,
-    and the per-(group, salt) cogroup GEMM — as Arrow-native UDFs
-    (``mapInArrow`` / ``cogroup().applyInArrow``) reading the vector
-    values buffer directly into the (n, d) GEMM operand and passing
-    id/vector columns through untouched; ``'pandas'`` keeps the original
-    ``mapInPandas`` / ``applyInPandas`` stages, which box one Python
-    ndarray object per row on both sides of every stage — the measured
-    per-task bound of the whole tier (SCALING.md §2.1, dist_payload
-    leg). Results are byte-identical between the engines (gated:
-    tests/test_semantic_routing.py): both build the same float64
-    matrices, run the same tiled round-9 GEMMs, and merge with the same
-    total order — the engines differ only in HOW rows cross the
-    JVM/Python boundary.
     """
     from ..plans.registry import transient_persist
 
     if payload not in ("f64", "f32"):
         raise ValueError(f"payload must be 'f64' or 'f32', got {payload!r}")
-    if engine not in ("arrow", "pandas"):
-        raise ValueError(f"engine must be 'arrow' or 'pandas', got {engine!r}")
     if probe_margin is not None and probe_margin != "auto":
         if isinstance(probe_margin, str) or not probe_margin >= 0:
             raise ValueError(
@@ -668,21 +609,6 @@ def routed_best_centroid_distributed(
         ]
     )
 
-    def assign_groups(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bS = bc_router.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            emb = np.array(list(pdf[cvec_col]), dtype=np.float64)
-            gid = _tiled_argmax_group(emb, bS)
-            yield pd.DataFrame(
-                {
-                    "_rt_gid": gid.astype(np.int32),
-                    id_col: pdf[id_col].to_numpy(),
-                    cvec_col: pdf[cvec_col],
-                }
-            )
-
     grouped_arrow = to_arrow_schema(grouped_schema)
 
     def assign_groups_arrow(
@@ -695,9 +621,10 @@ def routed_best_centroid_distributed(
             i_id = rb.schema.get_field_index(id_col)
             i_cv = rb.schema.get_field_index(cvec_col)
             emb = _list_matrix(rb.column(i_cv))
-            gid = _tiled_argmax_group(emb, bS)
-            # id and vector columns pass through UNTOUCHED — no pandas
-            # object column on either side of this stage.
+            gid = _best_centroid_core(
+                emb, np.arange(bS.shape[0]), bS, similarity=True
+            )[0]
+            # id and vector columns pass through UNTOUCHED.
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(gid.astype(np.int32), type=pa.int32()),
@@ -709,8 +636,6 @@ def routed_best_centroid_distributed(
 
     members = transient_persist(
         centroids.mapInArrow(assign_groups_arrow, grouped_schema)
-        if engine == "arrow"
-        else centroids.mapInPandas(assign_groups, grouped_schema)
     )
     # Live-group ids: <= g scalars — vectors route only over groups that
     # own >= 1 centroid, so every probe lands on a member-bearing cogroup
@@ -806,7 +731,6 @@ def routed_best_centroid_distributed(
             int(salts_arr.max()) if salts_arr is not None else n_salts
         )
         inst["payload"] = payload
-        inst["engine"] = engine
     bc_salts = spark.sparkContext.broadcast(salts_arr)
 
     # -- vectors -> top-p live groups, exploded map-side ------------------
@@ -824,11 +748,9 @@ def routed_best_centroid_distributed(
     narrow = payload == "f32"
 
     def _route_core(emb, vids, S_live, blive, p):
-        """Shared numeric routing core (both engines call EXACTLY this —
-        the engines may only differ in how rows cross the JVM/Python
-        boundary, never in what is computed): top-p live groups per row,
-        optional margin pruning, returns the exploded (row_idx, vids_r,
-        gids_r) index arrays."""
+        """Numeric routing core: top-p live groups per row, optional
+        margin pruning, returns the exploded (row_idx, vids_r, gids_r)
+        index arrays."""
         b = emb.shape[0]
         idx = _tiled_top_groups(emb, S_live, p)  # b x p, best-first
         top = blive[idx]  # b x p live gids
@@ -863,41 +785,11 @@ def routed_best_centroid_distributed(
     def _salt_of(vids_r: "np.ndarray", gids_r: "np.ndarray") -> "np.ndarray":
         """Salt id per exploded row: uniform (vid % n_salts) unless the
         per-group escalation produced an array — then each row's modulus
-        is ITS group's salt count (hot groups split across more keys).
-        Both engines call exactly this."""
+        is ITS group's salt count (hot groups split across more keys)."""
         sarr = bc_salts.value
         if sarr is None:
             return (vids_r % n_salts).astype(np.int32)
         return (vids_r % sarr[gids_r]).astype(np.int32)
-
-    def route(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bS = bc_router.value
-        blive = bc_live.value
-        S_live = bS[blive]
-        p = min(probes, len(blive))
-        for pdf in batches:
-            b = len(pdf)
-            if not b:
-                continue
-            emb = np.array(list(pdf[vec_col]), dtype=np.float64)
-            vids = pdf[vec_id_col].to_numpy()
-            row_idx, vids_r, gids_r = _route_core(emb, vids, S_live, blive, p)
-            if narrow:
-                # Narrow ONCE here (routing above always scores f64);
-                # only the shuffled copy is float32.
-                emb32 = emb.astype(np.float32)
-                ship = [emb32[i] for i in row_idx]
-            else:
-                orig = pdf[vec_col].to_numpy()
-                ship = [orig[i] for i in row_idx]
-            yield pd.DataFrame(
-                {
-                    vec_id_col: vids_r,
-                    vec_col: ship,
-                    "_rt_gid": gids_r.astype(np.int32),
-                    "_rt_salt": _salt_of(vids_r, gids_r),
-                }
-            )
 
     routed_arrow = to_arrow_schema(routed_schema)
 
@@ -962,10 +854,8 @@ def routed_best_centroid_distributed(
                     schema=routed_arrow,
                 )
 
-    routed_v = (
-        vectors.select(vec_id_col, vec_col).mapInArrow(route_arrow, routed_schema)
-        if engine == "arrow"
-        else vectors.select(vec_id_col, vec_col).mapInPandas(route, routed_schema)
+    routed_v = vectors.select(vec_id_col, vec_col).mapInArrow(
+        route_arrow, routed_schema
     )
     if inst is not None:
         # Diagnostics-only fan-in audit (r14 verdict item 3): the
@@ -1035,51 +925,6 @@ def routed_best_centroid_distributed(
     # per-call import and the only way tests can pin the tiling path.
     from .knn_numpy import _TILE_ELEMS as _tile_elems
 
-    def per_group(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left) or not len(right):
-            # right-only keys: group/salt no vector probed — no candidates.
-            # left-only keys cannot occur (vectors route over LIVE groups
-            # and every salt replica of a live group has members).
-            return pd.DataFrame(
-                {
-                    "_rt_vid": pd.Series([], dtype="int64"),
-                    "_rt_cand": pd.Series([], dtype="int64"),
-                    "_rt_score": pd.Series([], dtype="float64"),
-                }
-            )
-        order = np.argsort(right[id_col].to_numpy(), kind="stable")
-        cids = right[id_col].to_numpy()[order]
-        C = np.array(list(right[cvec_col]), dtype=np.float64)[order]
-        E = np.array(list(left[vec_col]), dtype=np.float64)
-        # Tile the score GEMM over VECTOR rows so the score matrix is
-        # bounded by _TILE_ELEMS like every other kernel in the family.
-        # NOTE the tiling bounds only the SCORE allocation: the key's
-        # whole vector fan-in (left) is already materialized by
-        # applyInPandas before this function runs — that is the binding
-        # per-task memory term, and it is what _TARGET_ROWS_PER_GROUP_
-        # TASK / auto group_salts size to ~1e5 rows (r12 ADVICE).
-        n_rows = len(E)
-        m = C.shape[0]
-        rblock = max(1, _tile_elems // max(m, 1))
-        out_j = np.empty(n_rows, dtype=np.int64)
-        out_v = np.empty(n_rows, dtype=np.float64)
-        for s in range(0, n_rows, rblock):
-            blk = E[s : s + rblock] @ C.T
-            if not similarity:
-                blk = 1.0 - blk
-            np.round(blk, 9, out=blk)
-            # first extremum = smallest cid (members sorted ascending)
-            j = blk.argmax(axis=1) if similarity else blk.argmin(axis=1)
-            out_j[s : s + rblock] = j
-            out_v[s : s + rblock] = blk[np.arange(blk.shape[0]), j]
-        return pd.DataFrame(
-            {
-                "_rt_vid": left[vec_id_col].to_numpy(dtype=np.int64),
-                "_rt_cand": cids[out_j].astype(np.int64),
-                "_rt_score": out_v,
-            }
-        )
-
     cand_arrow = to_arrow_schema(_CAND_SCHEMA)
 
     def per_group_arrow(left: pa.Table, right: pa.Table) -> pa.Table:
@@ -1095,9 +940,13 @@ def routed_best_centroid_distributed(
         cids = cids[order]
         C = _list_matrix(right.column(cvec_col))[order]
         E = _list_matrix(left.column(vec_col))
-        # Same tiled round-9 GEMM as the pandas engine (the engines may
-        # only differ in how rows cross the boundary): score allocation
-        # bounded by _TILE_ELEMS, first extremum = smallest cid.
+        # Tile the score GEMM over VECTOR rows so the score matrix is
+        # bounded by _TILE_ELEMS like every other kernel in the family.
+        # The tiling bounds only the SCORE allocation: the key's whole
+        # vector fan-in (left) is already materialized by applyInArrow
+        # before this function runs — that is the binding per-task memory
+        # term _TARGET_ROWS_PER_GROUP_TASK / auto group_salts size to.
+        # First extremum = smallest cid (members sorted ascending).
         n_rows = E.shape[0]
         m = C.shape[0]
         rblock = max(1, _tile_elems // max(m, 1))
@@ -1128,11 +977,7 @@ def routed_best_centroid_distributed(
     grouped = routed_v.groupBy("_rt_gid", "_rt_salt").cogroup(
         member_side.groupBy("_rt_gid", "_rt_salt")
     )
-    cands = (
-        grouped.applyInArrow(per_group_arrow, _CAND_SCHEMA)
-        if engine == "arrow"
-        else grouped.applyInPandas(per_group, _CAND_SCHEMA)
-    )
+    cands = grouped.applyInArrow(per_group_arrow, _CAND_SCHEMA)
     if inst is not None:
         # Diagnostics-only materialization: pins the routed-explode
         # shuffle + cogroup GEMM wall separately from the global merge.

@@ -1691,30 +1691,23 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 _UNICODE_TAINT = " é x​\x07"
 
 
-def unicode_clean(
-    df: DataFrame, *, text_col: str = "text", engine: str = "arrow"
-) -> DataFrame:
+def unicode_clean(df: DataFrame, *, text_col: str = "text") -> DataFrame:
     """Unicode hygiene — the text-normalization pass every LLM corpus gets
     before tokenization: NFC composition (decomposed accents fold to
     their composed forms), zero-width/control characters stripped, NBSP
     mapped to plain space.
 
-    ``engine='arrow'`` (default, r15 verdict item 7) runs the stage as
-    ``mapInArrow``: the strip class, NBSP fold, and both length counts
-    are Arrow C++ kernels (RE2 ``replace_substring_regex``,
-    ``utf8_length``) with no pandas Series on either side; NFC itself
+    The stage runs as ``mapInArrow``: the strip class, NBSP fold, and
+    both length counts are Arrow C++ kernels (RE2
+    ``replace_substring_regex``, ``utf8_length``); NFC itself
     stays Python's ``unicodedata`` — pyarrow 16's ``utf8_normalize``
     does NOT compose (measured: 'e'+U+0301 survives form='NFC', so it
     cannot be parity-twinned with unicodedata or DuckDB's
     nfc_normalize) — behind a C-level ``is_normalized`` quick-check
     that skips the per-row call for already-NFC text (the overwhelming
-    path on real corpora). ``engine='pandas'`` keeps the original
-    byte-identical twin (gated: tests/test_knn_arrow_engines.py).
-
-    NFC has no Catalyst builtin, so this is the one text stage that runs
-    as an Arrow ``mapInPandas`` (vectorized pandas string ops per batch —
-    never per-row Python). Returns (doc_id, clean_text, orig_len,
-    clean_len).
+    path on real corpora). NFC has no Catalyst builtin, which is why
+    this text stage leaves the JVM at all. Returns (doc_id, clean_text,
+    orig_len, clean_len).
 
     Strip class: zero-width space + C0 controls + DEL, EXCEPT tab (x09),
     newline (x0a) and carriage return (x0d) -- document-structural
@@ -1724,37 +1717,8 @@ def unicode_clean(
     stripped here but absent from the oracle's class only because a
     DuckDB VARCHAR cannot contain it -- the parity domain never includes
     one, so the bound difference is unreachable by construction."""
-    def _clean(batches):
-        import unicodedata
-
-        import pandas as pd
-
-        for pdf in batches:
-            # na_action + nullable Int64 lengths: a NULL text cell must
-            # pass through as NULL (real corpora have them), not crash
-            # the Arrow batch in unicodedata.normalize(None).
-            s = pdf[text_col].map(
-                lambda t: unicodedata.normalize("NFC", t), na_action="ignore"
-            )
-            s = s.str.replace(
-                "[\u200b\x00-\x08\x0b\x0c\x0e-\x1f\x7f]", "", regex=True
-            )
-            s = s.str.replace(" ", " ", regex=False)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "clean_text": s,
-                    "orig_len": pdf[text_col].str.len().astype("Int64"),
-                    "clean_len": s.str.len().astype("Int64"),
-                }
-            )
-
     out_ddl = "doc_id long, clean_text string, orig_len long, clean_len long"
     proj = df.select("doc_id", text_col)
-    if engine == "pandas":
-        return proj.mapInPandas(_clean, out_ddl)
-    if engine != "arrow":
-        raise ValueError(f"engine must be 'arrow' or 'pandas', got {engine!r}")
 
     _STRIP_RE = "[\u200b\x00-\x08\x0b\x0c\x0e-\x1f\x7f]"
 
@@ -1770,8 +1734,7 @@ def unicode_clean(
             txt = rb.column(1)
             if isinstance(txt, pa.ChunkedArray):
                 txt = txt.combine_chunks()
-            # orig_len BEFORE any rewrite — both utf8_length and Python's
-            # len() count codepoints, so the twin lengths agree exactly.
+            # orig_len BEFORE any rewrite; utf8_length counts codepoints.
             orig_len = pc.cast(pc.utf8_length(txt), pa.int64())
             # NFC: quick-check skips the per-row normalize for text that
             # is already composed (C-level, no allocation) — only rows
@@ -1797,8 +1760,7 @@ def unicode_clean(
             else:
                 s = txt
             # Strip class + NBSP fold as Arrow C++ kernels (RE2 / literal
-            # replace) — same classes as the pandas twin (RE2 rejects a
-            # bare \x00 inside a class, hence the alternation).
+            # replace).
             s = pc.replace_substring_regex(s, pattern=_STRIP_RE, replacement="")
             s = pc.replace_substring(s, pattern="\u00a0", replacement=" ")
             yield pa.RecordBatch.from_arrays(

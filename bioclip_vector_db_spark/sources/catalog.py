@@ -127,12 +127,14 @@ def infer_events_schema(spark: SparkSession, sf_dir: str, glob_pat: str):
         for af in arrow_schema:
             t = af.type
             if pa.types.is_timestamp(t):
-                if t.tz is not None:
-                    spark_t = T.TimestampType()
-                elif t.unit == "ns":
+                # NANOS is tested before the zone: Spark maps
+                # TIMESTAMP(NANOS, isAdjustedToUTC=*) alike.
+                if t.unit == "ns":
                     if not nanos_as_long:
                         return None  # Spark errors on TIMESTAMP(NANOS) here
                     spark_t = T.LongType()
+                elif t.tz is not None:
+                    spark_t = T.TimestampType()
                 else:
                     spark_t = T.TimestampNTZType() if infer_ntz else T.TimestampType()
             else:

@@ -1,18 +1,20 @@
-"""Engine A/B gates for the r16 Arrow-native kernel rebuilds (r15 verdict
-items 1 and 7): every blocked-BLAS kernel in knn_numpy and the text
-unicode_clean stage run Arrow-native by default, with the original pandas
-stages kept as twins — both engines call the SAME numeric cores, so
-results must be BYTE-identical, not approximately equal. The plan must
-show the engine actually switched (mapInArrow vs mapInPandas nodes), and
-parity must survive re-batching (a repartitioned input feeds different
-Arrow batch shapes through the same core)."""
+"""Arrow-kernel gates: every blocked-BLAS kernel in knn_numpy and the text
+unicode_clean stage run as ``mapInArrow`` stages over shared numeric
+cores. Each kernel's plan must carry a MapInArrow node and no pandas
+stage, and its output must be invariant to re-batching (a repartitioned
+input feeds different Arrow batch shapes through the same core). Value
+correctness against the expression kernels lives in test_knn_numpy.py
+and the DuckDB oracles; unicode_clean's rows are checked here against
+values computed in Python."""
 
 from __future__ import annotations
 
-import pytest
+import re
+import unicodedata
+
 from pyspark.sql import functions as F
 
-from bioclip_vector_db_spark.operators import knn, knn_numpy, text
+from bioclip_vector_db_spark.operators import knn, text
 from bioclip_vector_db_spark.operators.knn_numpy import (
     argmax_centroid_numpy,
     assign_partitions_numpy,
@@ -36,39 +38,28 @@ def _emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings")
 
 
-def _ab(build):
-    """Collect both engines (and a repartitioned-arrow leg: different
-    batch boundaries through the same numeric core) and assert exact
-    equality."""
-    arrow = build("arrow")
-    pandas = build("pandas")
-    a, p = _rows(arrow), _rows(pandas)
-    assert a == p, f"engine mismatch: {a[:2]} vs {p[:2]}"
-    # The engines must actually differ in the physical plan, not just in
-    # the kwarg: the arrow build runs MapInArrow (no pandas stage at
-    # all), the pandas twin MapInPandas.
-    assert "MapInArrow" in _plan(arrow) and "MapInPandas" not in _plan(arrow)
-    assert "MapInPandas" in _plan(pandas) and "MapInArrow" not in _plan(pandas)
-    return a
+def _check(build, base_input, parts: int = 7):
+    """Run ``build`` on the base input and on ``repartition(parts)`` of
+    it; assert the plan is Arrow-only and both outputs are equal."""
+    df = build(base_input)
+    plan = _plan(df)
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
+    base = _rows(df)
+    assert base, "kernel produced no rows"
+    assert _rows(build(base_input.repartition(parts))) == base
 
 
 def test_assign_partitions_engines_identical(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
     cents = knn.fixture_centroids(spark, sf_dir)
-    base = _ab(
-        lambda e: assign_partitions_numpy(emb, cents, engine=e)
-    )
-    # Re-batched leg: 7 partitions feed different batch shapes.
-    rebatched = _rows(
-        assign_partitions_numpy(emb.repartition(7), cents, engine="arrow")
-    )
-    assert rebatched == base
+    _check(lambda e: assign_partitions_numpy(e, cents), _emb(spark, sf_dir))
 
 
 def test_assign_partitions_routed_engines_identical(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
     cents = knn.fixture_centroids(spark, sf_dir)
-    _ab(lambda e: assign_partitions_numpy(emb, cents, routed=True, engine=e))
+    _check(
+        lambda e: assign_partitions_numpy(e, cents, routed=True),
+        _emb(spark, sf_dir),
+    )
 
 
 def test_argmax_centroid_engines_identical(spark, sf_dir):
@@ -77,14 +68,8 @@ def test_argmax_centroid_engines_identical(spark, sf_dir):
         F.col("partition_id").cast("long").alias("cid"),
         F.col("centroid").alias("cvec"),
     )
-    _ab(
-        lambda e: argmax_centroid_numpy(
-            emb, cents, routed=False, engine=e
-        )
-    )
-    _ab(
-        lambda e: argmax_centroid_numpy(emb, cents, routed=True, engine=e)
-    )
+    _check(lambda e: argmax_centroid_numpy(e, cents, routed=False), emb)
+    _check(lambda e: argmax_centroid_numpy(e, cents, routed=True), emb)
 
 
 def test_route_queries_engines_identical(spark, sf_dir):
@@ -93,13 +78,7 @@ def test_route_queries_engines_identical(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    base = _ab(
-        lambda e: route_queries_numpy(queries, cents, 3, engine=e)
-    )
-    rebatched = _rows(
-        route_queries_numpy(queries.repartition(5), cents, 3, engine="arrow")
-    )
-    assert rebatched == base
+    _check(lambda q: route_queries_numpy(q, cents, 3), queries, parts=5)
 
 
 def test_knn_join_engines_identical(spark, sf_dir):
@@ -108,26 +87,31 @@ def test_knn_join_engines_identical(spark, sf_dir):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     corpus = emb.filter(F.col("vec_id") >= 8)
-    _ab(lambda e: knn_join_numpy(queries, corpus, k=5, engine=e))
+    _check(lambda c: knn_join_numpy(queries, c, k=5), corpus)
 
 
 def test_pq_encode_engines_identical(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     cb = pq_codebooks(emb)
-    base = _ab(
-        lambda e: pq_encode_numpy(emb, cb, m=8, sub_dim=8, engine=e)
-    )
-    rebatched = _rows(
-        pq_encode_numpy(emb.repartition(7), cb, m=8, sub_dim=8, engine="arrow")
-    )
-    assert rebatched == base
+    _check(lambda e: pq_encode_numpy(e, cb, m=8, sub_dim=8), emb)
+
+
+#: unicode_clean's strip class, restated for the expected values below.
+_STRIP = re.compile("[\u200b\x00-\x08\x0b\x0c\x0e-\x1f\x7f]")
+
+
+def _expected_clean(t):
+    if t is None:
+        return (None, None, None)
+    s = _STRIP.sub("", unicodedata.normalize("NFC", t)).replace("\u00a0", " ")
+    return (s, len(t), len(s))
 
 
 def test_unicode_clean_engines_identical(spark, sf_dir):
-    """The text twin (r15 verdict item 7): NFC + strip + NBSP + both
-    length counts byte-identical between the Arrow-kernel stage and the
-    pandas original, on the gate's own tainted corpus plus NULL and
-    empty cells."""
+    """NFC + strip + NBSP + both length counts on the gate's own tainted
+    corpus plus NULL and empty cells: the NULL, empty and tainted rows
+    must equal values computed here with unicodedata and the same strip
+    class, and the whole output must survive re-batching."""
     docs = load_table(spark, sf_dir, "documents")
     tainted = docs.select(
         "doc_id",
@@ -140,20 +124,22 @@ def test_unicode_clean_engines_identical(spark, sf_dir):
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    base = _ab(lambda e: text.unicode_clean(tainted, engine=e))
-    rebatched = _rows(
-        text.unicode_clean(tainted.repartition(7), engine="arrow")
+    _check(text.unicode_clean, tainted)
+
+    special = tainted.filter(
+        (F.col("doc_id") % 50 == 0)
+        | (F.col("doc_id") % 97 == 0)
+        | (F.col("doc_id") % 93 == 0)
     )
-    assert rebatched == base
-
-
-def test_engine_rejects_unknown(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    cents = knn.fixture_centroids(spark, sf_dir)
-    with pytest.raises(ValueError, match="engine"):
-        assign_partitions_numpy(emb, cents, engine="polars")
-    with pytest.raises(ValueError, match="engine"):
-        text.unicode_clean(emb.select(F.col("vec_id").alias("doc_id"), F.lit("x").alias("text")), engine="polars")
+    inputs = {r.doc_id: r.text for r in special.collect()}
+    assert any(t is None for t in inputs.values())
+    assert any(t == "" for t in inputs.values())
+    assert any(t and t.endswith(text._UNICODE_TAINT) for t in inputs.values())
+    got = {
+        r.doc_id: (r.clean_text, r.orig_len, r.clean_len)
+        for r in text.unicode_clean(special).collect()
+    }
+    assert got == {d: _expected_clean(t) for d, t in inputs.items()}
 
 
 def test_margin_calibration_cached_per_plan(spark, sf_dir):

@@ -1209,15 +1209,13 @@ def test_distributed_adaptive_probing_total_under_nan_embedding(spark):
 
 
 # ---------------------------------------------------------------------------
-# Arrow-native engine (r14 verdict item 1): the dist_payload stress leg
-# proved the cogroup term is Arrow<->pandas ROW-boxing-bound, so the three
-# Python stages default to mapInArrow / applyInArrow reading the vector
-# values buffer directly. The contract: the engines may differ only in HOW
-# rows cross the JVM/Python boundary — results are byte-identical.
+# Distributed tier driven with the instrument installed: the three Python
+# stages are mapInArrow / applyInArrow reading the vector values buffer
+# directly.
 # ---------------------------------------------------------------------------
 
 
-def _run_engine(spark, vecs, cents, engine, payload="f64", margin=None, salts=None):
+def _run_distributed(spark, vecs, cents, payload="f64", margin=None, salts=None):
     from pyspark.sql import types as T
 
     from bioclip_vector_db_spark.operators import knn_routed
@@ -1238,7 +1236,6 @@ def _run_engine(spark, vecs, cents, engine, payload="f64", margin=None, salts=No
                 payload=payload,
                 probe_margin=margin,
                 group_salts=salts,
-                engine=engine,
             )
         )
     finally:
@@ -1246,39 +1243,10 @@ def _run_engine(spark, vecs, cents, engine, payload="f64", margin=None, salts=No
     return out, stage
 
 
-def test_distributed_arrow_engine_byte_identical_to_pandas(spark):
-    """Default-engine change gate: every (payload, margin, salts) combo
-    must produce byte-identical (cid, csim) maps under both engines —
-    same float64 matrices, same tiled round-9 GEMMs, same total order;
-    only the boundary transport differs."""
-    cents, vecs = _planted(spark, K=520, N=700)
-    for payload, margin, salts in [
-        ("f64", None, None),
-        ("f64", "auto", None),
-        ("f64", 0.1, 3),
-        ("f32", None, None),
-        ("f32", 0.2, 4),
-    ]:
-        arrow, st_a = _run_engine(
-            spark, vecs, cents, "arrow", payload=payload, margin=margin, salts=salts
-        )
-        pandas_, st_p = _run_engine(
-            spark, vecs, cents, "pandas", payload=payload, margin=margin, salts=salts
-        )
-        assert arrow == pandas_, f"engine mismatch at {payload}/{margin}/{salts}"
-        assert st_a["engine"] == "arrow" and st_p["engine"] == "pandas"
-
-
-def test_distributed_arrow_engine_nan_totality_and_validation(spark):
+def test_distributed_arrow_route_nan_totality(spark):
     """The structural column-0 keep (NaN totality, r14 self-review) must
-    hold through the Arrow route stage too; and an unknown engine is a
-    loud error, not a silent fallback."""
-    import pytest as _pytest
-
-    from pyspark.sql import types as T
-
-    from bioclip_vector_db_spark.operators import knn_routed
-
+    hold through the Arrow route stage: a NaN row survives margin
+    pruning, and pruned and fixed probing emit the same vec_id set."""
     cents, vecs = _planted(spark, K=520, N=300)
     poisoned = vecs.union(
         spark.createDataFrame(
@@ -1286,22 +1254,10 @@ def test_distributed_arrow_engine_nan_totality_and_validation(spark):
             "vec_id long, embedding array<double>",
         )
     )
-    pruned, _ = _run_engine(spark, poisoned, cents, "arrow", margin=0.1)
+    pruned, _ = _run_distributed(spark, poisoned, cents, margin=0.1)
     assert 999_999 in pruned
-    fixed, _ = _run_engine(spark, poisoned, cents, "arrow")
+    fixed, _ = _run_distributed(spark, poisoned, cents)
     assert set(pruned) == set(fixed)
-
-    with _pytest.raises(ValueError, match="engine"):
-        knn_routed.routed_best_centroid_distributed(
-            vecs,
-            cents,
-            id_col="cid",
-            cvec_col="cvec",
-            vec_col="embedding",
-            similarity=True,
-            out_field=T.StructField("cid", T.LongType()),
-            engine="polars",
-        )
 
 
 def test_distributed_probe_margin_auto_calibration(spark):
@@ -1316,9 +1272,9 @@ def test_distributed_probe_margin_auto_calibration(spark):
     from bioclip_vector_db_spark.operators import knn_routed
 
     cents, vecs = _planted(spark)
-    fixed, st_fixed = _run_engine(spark, vecs, cents, "arrow", margin=None)
-    auto1, st1 = _run_engine(spark, vecs, cents, "arrow", margin="auto")
-    auto2, st2 = _run_engine(spark, vecs, cents, "arrow", margin="auto")
+    fixed, st_fixed = _run_distributed(spark, vecs, cents, margin=None)
+    auto1, st1 = _run_distributed(spark, vecs, cents, margin="auto")
+    auto2, st2 = _run_distributed(spark, vecs, cents, margin="auto")
     # Deterministic: identical calibrated value AND identical rows.
     assert st1["probe_margin"] == st2["probe_margin"]
     assert auto1 == auto2

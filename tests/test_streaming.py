@@ -7,6 +7,7 @@ from __future__ import annotations
 import time
 
 import pandas as pd
+import pytest
 
 from bioclip_vector_db_spark.plans.registry import ORACLES, QUERIES, load_all_plans
 from bioclip_vector_db_spark.streaming import events as ev
@@ -175,3 +176,34 @@ def test_footer_schema_inference_matches_batch_reader(spark, sf_dir, tmp_path):
     pq.write_table(pa.table({"a": pa.array([1], type=pa.int64())}), str(tmp_path / "m1.parquet"))
     pq.write_table(pa.table({"a": pa.array(["x"])}), str(tmp_path / "m2.parquet"))
     assert infer_events_schema(spark, str(tmp_path), "m*.parquet") is None
+
+
+@pytest.mark.parametrize(
+    "unit,tz", [("ns", "UTC"), ("ns", None), ("us", "UTC")]
+)
+def test_footer_schema_inference_timestamp_units(spark, tmp_path, unit, tz):
+    """Zone-aware NANOS must follow the nanosAsLong path like naive NANOS:
+    Spark types TIMESTAMP(NANOS, isAdjustedToUTC=*) as LONG under the
+    events confs, so the footer inferrer may answer only that (or None)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bioclip_vector_db_spark.sources.catalog import (
+        infer_events_schema,
+        set_events_confs,
+    )
+
+    set_events_confs(spark)
+    pq.write_table(
+        pa.table(
+            {
+                "ts": pa.array(
+                    [1_700_000_000_000_000], type=pa.timestamp("us", tz=tz)
+                ).cast(pa.timestamp(unit, tz=tz)),
+                "v": pa.array([1], type=pa.int64()),
+            }
+        ),
+        str(tmp_path / "ev.parquet"),
+    )
+    fast = infer_events_schema(spark, str(tmp_path), "*.parquet")
+    assert fast is None or fast == spark.read.parquet(str(tmp_path)).schema

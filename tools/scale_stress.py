@@ -713,82 +713,6 @@ def main() -> None:
                     assign_disagree=n_emb - n_agree,
                 )
 
-            if "dist_engine" in ops:
-                # r14 verdict item 1: A/B the Arrow-native stages
-                # (mapInArrow route-explode + applyInArrow cogroup GEMM)
-                # against the pandas originals at the same decade —
-                # fixed probing (margin=None) so the comparison sees the
-                # full probes x row fan-in, the regime where the
-                # per-row boxing bound binds. Parity is gated at full
-                # strength: every (cid, csim) pair byte-identical.
-                from pyspark.sql import types as T_
-                from bioclip_vector_db_spark.operators import knn_routed
-                from bioclip_vector_db_spark.operators.knn_routed import (
-                    routed_best_centroid_distributed,
-                )
-
-                k_de = max(8, -(-n_emb // 64))
-                cent = emb.filter(F.col("vec_id") < k_de).select(
-                    F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-                )
-
-                def de_assign(engine):
-                    stage: dict = {}
-                    knn_routed._INSTRUMENT = stage
-                    try:
-                        t0 = time.perf_counter()
-                        a = transient_persist(
-                            routed_best_centroid_distributed(
-                                emb,
-                                cent,
-                                id_col="cid",
-                                cvec_col="cvec",
-                                vec_col="embedding",
-                                similarity=True,
-                                out_field=T_.StructField("cid", T_.LongType()),
-                                score_field="csim",
-                                probe_margin=None,
-                                engine=engine,
-                            ).select("vec_id", "cid", "csim")
-                        )
-                        a.count()
-                        wall = time.perf_counter() - t0
-                    finally:
-                        knn_routed._INSTRUMENT = None
-                    return a, wall, stage
-
-                a_ar, w_ar, s_ar = de_assign("arrow")
-                a_pd, w_pd, s_pd = de_assign("pandas")
-                n_same = (
-                    a_ar.join(
-                        a_pd.select(
-                            "vec_id",
-                            F.col("cid").alias("cid_p"),
-                            F.col("csim").alias("csim_p"),
-                        ),
-                        "vec_id",
-                    )
-                    .filter(
-                        (F.col("cid") == F.col("cid_p"))
-                        & (F.col("csim") == F.col("csim_p"))
-                    )
-                    .count()
-                )
-                emit(
-                    "dist_engine",
-                    m,
-                    n_emb,
-                    w_ar + w_pd,
-                    k=k_de,
-                    wall_arrow_s=round(w_ar, 2),
-                    wall_pandas_s=round(w_pd, 2),
-                    route_cogroup_arrow_s=round(s_ar.get("route_cogroup_s", 0), 2),
-                    route_cogroup_pandas_s=round(s_pd.get("route_cogroup_s", 0), 2),
-                    cand_rows=s_ar.get("cand_rows"),
-                    byte_identical=bool(n_same == n_emb),
-                    matched=n_same,
-                )
-
             if "dist_skew_route" in ops:
                 # r14 verdict item 3 at real scale: 80% of vectors
                 # blended hard toward ONE anchor so they all route to
@@ -1023,50 +947,6 @@ def main() -> None:
                     wall_flat_s=round(t_flat, 2),
                     wall_routed_s=round(t_routed, 2),
                     agree_pct=round(100.0 * n_agree / max(n_emb, 1), 2),
-                )
-
-            if "assign_engine" in ops:
-                # r15 verdict item 1 Done-criteria: same-day A/B of the
-                # blocked-BLAS assignment kernel's two engines at stress
-                # nlist. Both engines call the same _best_centroid_core,
-                # so results must be IDENTICAL rows (checked via an
-                # anti-join count, no driver collect); walls attribute
-                # the Arrow row-boxing cut for the flat kernel.
-                from bioclip_vector_db_spark.operators.knn_numpy import (
-                    assign_partitions_numpy,
-                )
-
-                nlist = max(8, math.ceil(n_emb / 64))
-                cent = emb.filter(F.col("vec_id") < nlist).select(
-                    F.col("vec_id").cast("int").alias("partition_id"),
-                    F.col("embedding").alias("centroid"),
-                ).localCheckpoint()
-
-                def run_assign(engine):
-                    t0 = time.perf_counter()
-                    out = transient_persist(
-                        assign_partitions_numpy(emb, cent, engine=engine)
-                    )
-                    n = out.count()
-                    return out, n, time.perf_counter() - t0
-
-                out_ar, n_ar, w_ar = run_assign("arrow")
-                out_pd, n_pd, w_pd = run_assign("pandas")
-                n_diff = (
-                    out_ar.select("vec_id", "partition_id")
-                    .exceptAll(out_pd.select("vec_id", "partition_id"))
-                    .count()
-                )
-                emit(
-                    "assign_engine",
-                    m,
-                    n_emb,
-                    w_ar + w_pd,
-                    nlist=nlist,
-                    wall_arrow_s=round(w_ar, 2),
-                    wall_pandas_s=round(w_pd, 2),
-                    rows=n_ar,
-                    identical=bool(n_ar == n_pd and n_diff == 0),
                 )
 
             if "knn_brute" in ops:
