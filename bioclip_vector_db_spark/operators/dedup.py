@@ -2269,377 +2269,91 @@ def q_dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_K_MIN = 8
 SEMDEDUP_TARGET_CLUSTER = 64
 SEMDEDUP_TAU = 0.3
-#: Decide-tail depth cap auto-engaged on the APPROXIMATE (routed) tiers:
-#: each vector is compared only against its cluster's top-CAP exemplars
-#: (rank <= CAP) instead of EVERY better-ranked member. The k =
-#: ceil(n/TARGET_CLUSTER) contract bounds expected depth at ~64, so 4x
-#: contract depth leaves the cap inert on any well-clustered corpus
-#: (exact parity whenever cluster depth <= CAP+1 — every better-ranked
-#: member of a depth-(CAP+1) cluster has rank <= CAP); a SKEWED corpus
-#: that piles a hot cluster far past contract depth gets the pair join
-#: linearized from O(depth^2) to O(depth * CAP) per cluster, with a
-#: ONE-SIDED decision change: capped decide can only UNDER-remove
-#: (removed_capped is a subset of removed_exact), never spuriously drop
-#: a unique (r13 verdict item 1 — the last super-linear term anywhere in
-#: the engine, measured 4.07x/doubling merge_tail at the M=512 ladder's
-#: seed-saturated deep-cluster regime, SCALING.md section 2.1).
+#: Decide-tail depth cap on the APPROXIMATE (routed) tiers: each vector
+#: is compared only against its cluster's top-CAP exemplars (rank <= CAP)
+#: instead of EVERY better-ranked member. The k = ceil(n/TARGET_CLUSTER)
+#: contract bounds expected depth at ~64, so 4x contract depth leaves the
+#: cap inert on any well-clustered corpus (exact parity whenever cluster
+#: depth <= CAP+1); a SKEWED corpus that piles a hot cluster far past
+#: contract depth gets the pair join linearized from O(depth^2) to
+#: O(depth * CAP) per cluster, with a ONE-SIDED decision change: capped
+#: decide can only UNDER-remove (removed_capped is a subset of
+#: removed_exact), never spuriously drop a unique (SCALING.md section 2.1
+#: measured the uncapped tail at 4.07x/doubling in a deep-cluster regime).
 SEMDEDUP_DECIDE_CAP = 4 * SEMDEDUP_TARGET_CLUSTER
 
-#: decide_kernel='auto' crossover (optimization round 16): the arrow
-#: cogroup decide engages on routed tiers only when the corpus (known
-#: n, or k x target-cluster estimate) is at least this many rows. Below
-#: it the expr pair join is cheaper than the cogroup's two extra Python
-#: stages (measured: the 8.5k-row eval corpus pays ~1 s for the arrow
-#: stages where the pair join is ~0.1 s); above it the GEMM decide's
-#: measured ladder advantage (5.6x at n~1e6, 28x at n~8.4e6) dominates.
-#: The bound sits an order of magnitude below the smallest decade where
-#: that advantage was measured.
+#: Decide-kernel crossover on the routed tiers: the arrow cogroup decide
+#: runs when the corpus (counted n, or the seed rule's k x target-cluster
+#: estimate) is at least this many rows. Below it the expr pair join is
+#: cheaper than the cogroup's two extra Python stages (measured: the
+#: 8.5k-row eval corpus pays ~1 s for the arrow stages where the pair join
+#: is ~0.1 s); above it the GEMM decide's measured ladder advantage (5.6x
+#: at n~1e6, 28x at n~8.4e6) dominates. The bound sits an order of
+#: magnitude below the smallest decade where that advantage was measured.
 DECIDE_ARROW_MIN_ROWS = 100_000
 
 
-def semantic_dedup(
-    vectors: DataFrame,
-    *,
-    k: "int | None" = None,
-    threshold: float = SEMDEDUP_TAU,
-    centroids: "DataFrame | None" = None,
-    kernel: str = "auto",
-    routed: "bool | str" = "auto",
-    decide_cap: "int | str | None" = "auto",
-    routed_payload: str = "f64",
-    routed_probe_margin: "float | str | None" = "auto",
-    decide_kernel: str = "auto",
-) -> DataFrame:
-    """Cluster-partitioned semantic dedup over an embedding corpus — the
-    public SemDeDup method (Abbas et al. 2023, arXiv:2303.09540): assign
-    every vector to its nearest centroid, form candidate pairs ONLY within
-    a cluster, and drop every vector that has a closer-to-centroid
-    neighbor above the cosine threshold.
-
-    **BEHAVIOR CHANGE (r15)**: ``routed_probe_margin`` defaults to
-    ``'auto'`` — when the DISTRIBUTED routed tier engages (k above
-    knn_routed.DISTRIBUTED_K_THRESHOLD, or an explicit
-    ``routed='distributed'``), assignment now prunes probed groups by a
-    workload-CALIBRATED routing-score margin instead of always shipping
-    the fixed probes x fan-out. The pruning is one-sided (the best-routed
-    group is always probed) and its keep/drop drift is gated on fixtures
-    (<= 2% drift, <= 1% spurious; eval row ``semantic_dedup_routed_eval``
-    stays oracle-exact), but results under the distributed tier are no
-    longer bit-stable against pre-r15 outputs, and per-miss csim loss is
-    unbounded on adversarial geometries. Callers that need the old
-    fixed-probing results pin ``routed_probe_margin=None``; the in-memory
-    tiers (every oracle-gated SF) are unaffected by this knob.
-
-    Semantics (deterministic, order-free):
-    - assignment: argmax rounded cosine to the centroid table, ties to the
-      lowest centroid id;
-    - exemplar rank: within a cluster, by similarity-to-centroid DESC then
-      vec_id ASC (row_number — no ties);
-    - a vector is REMOVED iff some same-cluster vector with a better
-      (lower) rank is within ``threshold`` cosine — per qualifying pair,
-      the worse-ranked member is marked; survivors are ``kept = true``.
-
-    Returns one row per input vector: (vec_id, cluster_id, rank, kept).
-
-    Scale shape for 100 TB: the centroid table collapses to one broadcast
-    row of (cid, cvec) structs and each vector folds over it with
-    array_max INSIDE the scan — no n x k row expansion exists anywhere
-    (the round-9 fix; SCALING.md section 2.1: the old crossJoin +
-    vec_id-window form shuffled n x k rows with their embedding payload).
-    The only shuffle keys are cluster_id (rank window, pair join) — both
-    O(n) rows. The within-cluster
-    pair join is quadratic in CLUSTER size, not corpus size — SemDeDup's
-    contract is k grows with the corpus, and the default ENFORCES it:
-    k = max(8, ceil(n / SEMDEDUP_TARGET_CLUSTER)), so expected cluster
-    cardinality stays ~64 and total pair work stays linear in n at every
-    scale (the registered gate carries the same rule, not a fixture-sized
-    constant). No stage is all-pairs over the corpus (plan-guarded in
-    tests/test_plans.py).
-
-    ``kernel``: the fold above is ``'expr'`` — but because k GROWS with n,
-    assignment COMPUTE is n x k x dim = O(n^2 d / TARGET) interpreted
-    multiply-adds (HOFs never enter codegen), and the M=8/16 stress
-    decades showed it dominating the whole pipeline once k reaches the
-    hundreds. ``'numpy'`` scores each Arrow batch as blocked BLAS GEMMs
-    (knn_numpy.argmax_centroid_numpy) — same round-9-then-argmax winners,
-    ties to the smallest cid; ``'auto'`` switches at
-    LARGE_NLIST_THRESHOLD like assign_partitions. The registered gate
-    stays on the expr fold at every tested SF (k < 1024 everywhere the
-    oracle runs); BLAS summation order can differ from the fold in the
-    last ulp, so like every numpy kernel here it backs the library scale
-    path, not the hash-exact oracle row.
-
-    ``routed`` (numpy kernel only): even as blocked BLAS the FLAT n x k
-    GEMM stays O(n^2 d / 64) under the k = ceil(n/64) contract — the r10
-    verdict's one remaining scale-killer, empirically quadratic-regime at
-    the M=32 stress decade. Above knn_numpy.ROUTED_K_THRESHOLD centroids
-    (default ``'auto'``) the numpy kernel therefore assigns TWO-TIER:
-    group the centroid table into ~sqrt(8k) super-centroids (driver-side
-    deterministic mini k-means) and GEMM each vector only against its
-    top-8 routed groups' members — O(n sqrt(k) d). The routed assignment
-    is APPROXIMATE in general (a vector's true argmax centroid can live
-    outside its probed groups); on SemDeDup's intended inputs — TRAINED
-    centroids, i.e. k-means means of the data being assigned — routing
-    recall is ~1.0, gated by tests/test_semantic_routing.py on
-    planted-cluster data. Be explicit about the default: with no
-    ``centroids`` argument the SEED RULE stands in (first-k raw corpus
-    rows, which exists so the oracle has an exact SQL twin), and routing
-    recall against raw-row centroids tracks the corpus's intrinsic
-    clusterability rather than the trained-centroid guarantee — on the
-    deliberately structureless 64-d stress corpus the measured effect
-    was a 0.16% keep/drop drift vs the flat kernel at M=32
-    (SCALING.md §2.1), small because a boundary vector that lands in a
-    runner-up cluster is deduped against THAT cluster's members instead.
-    Every oracle-gated query runs k < ROUTED_K_THRESHOLD and stays
-    byte-exact; pass ``routed=False`` to force the flat exact GEMM at any
-    k.
-
-    ``routed='distributed'`` (auto above knn_routed.
-    DISTRIBUTED_K_THRESHOLD when k is known numerically): the r11 routed
-    kernel still COLLECTED the k x d centroid table to the driver — at
-    the k = n/64 contract's 100-TB point (k ~ 1.6e9, ~6 TB) that
-    collect is itself the blocker. The distributed tier
-    (operators/knn_routed.py) keeps the centroid table a DataFrame end
-    to end: only a capped router sample is collected, centroids are
-    grouped map-side against the broadcast router, and the bottom-tier
-    argbest is a routed-group cogroup GEMM keyed on group id. Same
-    O(n sqrt(8k) d) FLOPs; adds an O(8 n d)-byte linear shuffle the
-    in-memory tiers don't have — the price of removing the last
-    super-linear driver term. Gated alongside the in-memory tier in
-    tests/test_semantic_routing.py (recall, determinism,
-    salt-invariance, capped-collect, end-to-end keep/drop).
-
-    ``decide_cap``: bounds the decide tail's within-cluster pair join,
-    which is quadratic in CLUSTER DEPTH — linear in n only while the
-    corpus honors the k = ceil(n/64) contract, and a skewed real corpus
-    won't (r13 verdict item 1). ``'auto'`` (default) engages
-    SEMDEDUP_DECIDE_CAP (= 4x contract depth) exactly when the RESOLVED
-    assignment is a routed tier — the approximate kernels that actually
-    run at the scales where skew bites — and stays exact (None) on the
-    flat kernels, so every oracle-gated query and the advertised-exact
-    ``routed=False`` GEMM are untouched. An explicit int engages the cap
-    on any kernel; ``None`` forces the exact all-pairs tail anywhere.
-    The cap is EXACT for every cluster of depth <= cap+1 and strictly
-    one-sided beyond (under-removal only — see _semantic_dedup_decide);
-    per-cluster decide work falls from O(depth^2) to O(depth * cap).
-
-    ``routed_payload`` / ``routed_probe_margin``: pass-throughs to the
-    distributed tier's shuffle levers (float32 payload encoding and
-    adaptive probing — knn_routed.routed_best_centroid_distributed has
-    the contracts and measured trade-offs); the payload defaults off,
-    the probe margin defaults to ``'auto'`` (calibrated from the router
-    sample, r14 verdict item 2; ``None`` opts out); both are ignored by
-    every other kernel.
-
-    ``decide_kernel`` (r15 verdict item 2 — the merge-tail lever): the
-    keep/drop DECISION over the ranked clusters. ``'expr'`` is the
-    original pair-join form: the a x b equi-join on cid materializes one
-    row PER QUALIFYING ORDERED PAIR carrying BOTH 512-d embedding
-    payloads through the join and scores each with the interpreted
-    higher-order dot fold — pair count is the intrinsic work, but this
-    form also pays pair-row materialization and per-pair interpreted
-    arithmetic. ``'arrow'`` runs the identical exists-form decision as a
-    per-cluster cogroup GEMM (``applyInArrow``): each cluster's rows
-    shuffle ONCE (no pair rows exist anywhere), the witness side is
-    depth-capped exactly like the expr cap path, and the threshold test
-    is one tiled round-9 BLAS product — the same rebuild the routed
-    assignment tier got in r15. Same decision rule, same round-9 scale;
-    BLAS summation order can differ from the fold in the last ulp, so
-    like every numpy-family kernel it backs the approximate/scale tiers,
-    not the hash-exact oracle rows. ``'auto'`` engages 'arrow' exactly
-    where decide_cap='auto' engages the cap — on the approximate routed
-    tiers — and keeps 'expr' on the advertised-exact paths, so every
-    oracle-gated plan below ROUTED_K_THRESHOLD is byte-unchanged.
-    Removed-set equality with the expr form is gated per fixture
-    (tests/test_semantic_dedup_cap.py).
-
-    Producing the centroids at scale: the seed rule here exists for the
-    exact SQL twin; production callers pass
-    ``centroids=indexing.train_kmeans_centroids(vectors, k,
-    train_fraction=...)`` — Lloyd iterations are themselves n x k, so at
-    large n the trainer fits on a seeded SAMPLE (the statistically sound
-    version of the reference's first-50*nlist prefix) and only the
-    one-pass ASSIGNMENT — this function's routed kernel — touches every
-    row."""
-    v = vectors.select(
+def _semdedup_vectors(vectors: DataFrame) -> DataFrame:
+    """The ``(vec_id, embedding array<double>)`` projection every
+    assignment tier reads."""
+    return vectors.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    n_vec = None
-    if centroids is None:
-        if k is None:
-            # One scalar count — small-by-contract driver round trip; the
-            # oracle computes the identical k with a scalar subquery.
-            n_vec = v.count()
-            k = max(SEMDEDUP_K_MIN, -(-n_vec // SEMDEDUP_TARGET_CLUSTER))
-        centroids = v.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-        )
-        n_cents = k
-    else:
-        n_cents = None
-    if routed == "distributed":
-        # The distributed tier IS a numpy-family kernel (cogroup GEMMs);
-        # a kernel='expr' request alongside it would be contradictory.
-        kernel = "numpy"
-    if kernel == "auto":
-        from .knn import _pick_kernel
-        from .knn_numpy import LARGE_NLIST_THRESHOLD
 
-        if n_cents is not None:
-            # k is known numerically — no count job needed to resolve;
-            # same boundary as _pick_kernel's probe (> threshold).
-            kernel = "numpy" if n_cents > LARGE_NLIST_THRESHOLD else "expr"
-        else:
-            kernel = _pick_kernel("auto", centroids)
-    if kernel == "numpy":
-        from .knn_numpy import ROUTED_K_THRESHOLD, argmax_centroid_numpy
-        from .knn_routed import DISTRIBUTED_K_THRESHOLD
 
-        if routed == "auto" and n_cents is not None:
-            # k is known numerically (seed-centroid rule) — resolve the
-            # routing decision without the limit().count() probe job.
-            # Past DISTRIBUTED_K_THRESHOLD even the ROUTED kernel's
-            # driver-side collect of the k x d table is the scale
-            # problem — escalate to the distributed bottom tier
-            # (knn_routed.py), which collects only a capped router
-            # sample.
-            if n_cents > DISTRIBUTED_K_THRESHOLD:
-                routed = "distributed"
-            else:
-                routed = n_cents > ROUTED_K_THRESHOLD
-            if routed:
-                # Auto-routing is engaging over SEED-RULE centroids
-                # (first-k raw corpus rows), where the trained-centroid
-                # ~1.0 routing-recall guarantee explicitly does not
-                # apply — results can diverge from the exact flat fold
-                # (measured 0.16% keep/drop drift on a structureless
-                # corpus). Make the exactness downgrade caller-visible
-                # instead of a docstring-only signal (r11 ADVICE).
-                import warnings
+def _seed_centroids(v: DataFrame, k: int) -> DataFrame:
+    """Seed rule: the corpus rows with ``vec_id < k`` stand in as the
+    ``(cid, cvec)`` centroid table, so the whole pipeline has an exact SQL
+    twin."""
+    return v.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
+    )
 
-                warnings.warn(
-                    "semantic_dedup: k exceeds ROUTED_K_THRESHOLD with "
-                    "default seed-rule centroids — assignment switches to "
-                    "the APPROXIMATE two-tier routed kernel, whose "
-                    "trained-centroid recall guarantee does not cover raw "
-                    "seed rows (measured keep/drop drift ~0.16% on an "
-                    "unstructured corpus). Pass routed=False for the exact "
-                    "flat GEMM, or supply trained centroids "
-                    "(indexing.train_kmeans_centroids) for gated recall.",
-                    stacklevel=2,
-                )
-        # n_cents (known numerically under the seed rule) doubles as the
-        # distributed tier's router-sizing hint, skipping its O(k)
-        # count job; n_vec (when the seed rule already counted the
-        # corpus) likewise feeds its group_salts auto-sizing. Both are
-        # ignored by the collect-based tiers.
-        resolved: dict = {}
-        assigned = argmax_centroid_numpy(
+
+def _assign_centroids(
+    v: DataFrame,
+    centroids: DataFrame,
+    tier: str,
+    *,
+    n_cents: "int | None" = None,
+    n_vec: "int | None" = None,
+    collected: "tuple | None" = None,
+) -> DataFrame:
+    """``(vec_id, embedding, cid, csim)``: each vector's argmax rounded
+    cosine centroid, ties to the lowest cid, by the named tier:
+
+    - ``'expr'``: the exact broadcast fold below (every oracle-gated plan);
+    - ``'flat'``: the exact blocked GEMM (knn_numpy, BLAS summation order);
+    - ``'routed'``: the in-memory two-tier kernel (approximate);
+    - ``'distributed'``: knn_routed's tier, no driver-resident table.
+
+    ``n_cents``/``n_vec`` are the distributed tier's sizing hints;
+    ``collected`` is a centroid matrix the caller already holds."""
+    if tier != "expr":
+        from .knn_numpy import argmax_centroid_numpy
+
+        routed = {"flat": False, "routed": True, "distributed": "distributed"}[tier]
+        return argmax_centroid_numpy(
             v,
             centroids,
             routed=routed,
             n_centroids=n_cents,
             n_vectors=n_vec,
-            routed_payload=routed_payload,
-            routed_probe_margin=routed_probe_margin,
-            resolved_out=resolved,
-        )
-        if decide_cap == "auto":
-            # Engage on the APPROXIMATE tiers only: the routed tiers are
-            # both where skew-prone scale lives and already
-            # non-hash-exact, so the one-sided cap changes no
-            # advertised-exact result. Read the tier argmax_centroid_numpy
-            # ACTUALLY chose (resolved_out) rather than re-deriving it
-            # with a separate limit().count() probe — the probe was a
-            # second evaluation of the caller's centroid plan, and for a
-            # nondeterministic plan the two resolutions could disagree,
-            # capping a run that took the exact flat kernel (r14 ADVICE).
-            decide_cap = SEMDEDUP_DECIDE_CAP if resolved.get("routed") else None
-        if _DECIDE_INSTRUMENT is not None:
-            # Pin the assignment MERGE term (the distributed tier's
-            # global struct-merge + join-back; the in-memory tiers' map
-            # stage) separately from the decide tail: with the routed
-            # instrument active the candidate table is already
-            # persisted, so this count executes exactly the merge.
-            assigned = transient_persist(assigned)
-            _t0 = time.perf_counter()
-            _DECIDE_INSTRUMENT["assign_rows"] = assigned.count()
-            _DECIDE_INSTRUMENT["assign_merge_s"] = time.perf_counter() - _t0
-        if decide_kernel == "auto":
-            # Same engagement rule as the cap — the routed tiers are both
-            # where the pair volume lives and already non-hash-exact, so
-            # the GEMM decide changes no advertised-exact result — now
-            # additionally SCALE-GATED (optimization round 16): the arrow
-            # cogroup decide adds two Python stages whose fixed cost
-            # (~0.5 s each at local fixture scale) exceeds the whole expr
-            # pair join below ~1e5 rows, while at the M>=256 ladder
-            # decades (n >= 1e6) it is 5.6-28x faster and the only kernel
-            # that survives M=2048 under ladder memory pressure
-            # (SCALE_STRESS decide_ab). Engage 'arrow' only when the
-            # known corpus size (or its k-contract estimate) clears
-            # DECIDE_ARROW_MIN_ROWS; with no size signal at all, keep
-            # 'arrow' — an explicitly routed caller without hints is the
-            # at-scale library path. Both kernels compute the identical
-            # removed set (gated in tests/test_semantic_dedup_cap.py), so
-            # this flips no result anywhere.
-            if resolved.get("routed"):
-                if n_vec is not None:
-                    big = n_vec >= DECIDE_ARROW_MIN_ROWS
-                elif n_cents is not None:
-                    # ESTIMATE, valid only under the k ~ n/64 seed
-                    # contract: a caller passing a small explicit k over
-                    # a large corpus would land on 'expr' at a scale
-                    # where the arrow kernel is 5.6-28x faster (correct
-                    # results, severe perf cliff) — make the estimate
-                    # visible so at-scale misconfiguration has a signal
-                    # (r16 ADVICE).
-                    big = (
-                        n_cents * SEMDEDUP_TARGET_CLUSTER
-                        >= DECIDE_ARROW_MIN_ROWS
-                    )
-                    if not big:
-                        import logging
-
-                        logging.getLogger(__name__).info(
-                            "semantic_dedup decide_kernel=auto picked 'expr' "
-                            "from the k-contract ESTIMATE (k=%d * %d < %d); "
-                            "pass n_vectors or decide_kernel='arrow' if the "
-                            "corpus is actually large",
-                            n_cents,
-                            SEMDEDUP_TARGET_CLUSTER,
-                            DECIDE_ARROW_MIN_ROWS,
-                        )
-                else:
-                    big = True
-                decide_kernel = "arrow" if big else "expr"
-            else:
-                decide_kernel = "expr"
-        return _semantic_dedup_decide(
-            assigned,
-            threshold,
-            depth_cap=decide_cap,
-            kernel=decide_kernel,
-            n_hint=n_vec,
-            k_hint=n_cents,
+            _collected=collected,
         )
     # Assignment argmax INSIDE the scan, zero row expansion — the same
-    # collapsed-struct fold knn.assign_partitions uses (knn.py O19): the
-    # centroid table becomes ONE row holding an array of (cid, cvec)
-    # structs, broadcast, and array_max picks the best centroid per
-    # vector in a single projection. The original form materialized the
-    # n x k crossJoin rows and argmaxed them through a row_number window
-    # partitioned by vec_id — shuffling all n x k rows WITH the embedding
-    # payload, the superlinearity the M=8/16 stress decades caught
-    # (SCALING.md section 2.1). Lexicographic struct max over
-    # (csim, -cid) = highest csim, ties to lowest cid — exactly the old
-    # window's (csim DESC, cid ASC) with cid unique so no full ties; csim
-    # is rounded to 9 dp BEFORE the comparison, same as the oracle.
-    # Empty-in/empty-out guard: an EMPTY centroid table (an empty corpus,
-    # or seed derivation against non-0-based vec_ids) must yield an empty
-    # result like the pre-fold crossJoin form did — without this filter
-    # the single collect_list row holds an empty array, every vector
-    # joins it, array_max(empty) = NULL, and the function would silently
-    # return the whole corpus kept=true under a NULL cluster.
+    # collapsed-struct fold knn.assign_partitions uses: the centroid table
+    # becomes ONE row holding an array of (cid, cvec) structs, broadcast,
+    # and array_max picks the best centroid per vector in a single
+    # projection (an n x k crossJoin + vec_id window would shuffle all
+    # n x k rows WITH the embedding payload, SCALING.md section 2.1).
+    # Lexicographic struct max over (csim, -cid) = highest csim, ties to
+    # lowest cid; csim is rounded to 9 dp BEFORE the comparison, same as
+    # the oracle. An EMPTY centroid table (an empty corpus, or seed
+    # derivation against non-0-based vec_ids) must yield an empty result:
+    # without the size filter every vector joins an empty array,
+    # array_max(empty) = NULL, and the whole corpus would come back
+    # kept=true under a NULL cluster.
     cents1 = centroids.groupBy().agg(
         F.collect_list(F.struct(F.col("cid"), F.col("cvec"))).alias("_cents")
     ).filter(F.size("_cents") > 0)
@@ -2653,7 +2367,7 @@ def semantic_dedup(
             ),
         )
     )
-    assigned = (
+    return (
         v.join(F.broadcast(cents1))
         .withColumn("_best", best)
         .select(
@@ -2663,26 +2377,160 @@ def semantic_dedup(
             F.col("_best.csim").alias("csim"),
         )
     )
-    # The expr kernel is the flat exact path — 'auto' resolves to None /
-    # 'expr' here so the oracle-gated rows keep their byte-identical
-    # plan; explicit values still engage for callers who want them.
+
+
+def semantic_dedup(
+    vectors: DataFrame,
+    *,
+    k: "int | None" = None,
+    threshold: float = SEMDEDUP_TAU,
+    centroids: "DataFrame | None" = None,
+) -> DataFrame:
+    """Cluster-partitioned semantic dedup over an embedding corpus — the
+    public SemDeDup method (Abbas et al. 2023, arXiv:2303.09540): assign
+    every vector to its nearest centroid, form candidate pairs ONLY within
+    a cluster, and drop every vector that has a closer-to-centroid
+    neighbor above the cosine threshold.
+
+    Semantics (deterministic, order-free):
+    - assignment: argmax rounded cosine to the centroid table, ties to the
+      lowest centroid id;
+    - exemplar rank: within a cluster, by similarity-to-centroid DESC then
+      vec_id ASC (row_number — no ties);
+    - a vector is REMOVED iff some same-cluster vector with a better
+      (lower) rank is within ``threshold`` cosine — per qualifying pair,
+      the worse-ranked member is marked; survivors are ``kept = true``.
+
+    Returns one row per input vector: (vec_id, cluster_id, rank, kept).
+
+    Centroids: without ``centroids`` the SEED RULE stands in — the first
+    k corpus rows by vec_id, with k = ``k`` or max(8, ceil(n / 64)) from
+    one count, so expected cluster cardinality stays ~64 and the
+    within-cluster pair work stays linear in n at every scale. Production
+    callers pass ``centroids=indexing.train_kmeans_centroids(...)``
+    (``cid``, ``cvec``); that table is collected once.
+
+    The assignment tier follows from the centroid count alone
+    (LARGE_NLIST_THRESHOLD = 1024, knn_routed.DISTRIBUTED_K_THRESHOLD =
+    1e6):
+
+    ======================  ===============  ========  ================
+    centroids               assignment       cap       decide
+    ======================  ===============  ========  ================
+    seed, k <= 1024         expr fold        none      expr
+    seed, 1024 < k <= 1e6   routed, memory   256       by size (below)
+    seed, k > 1e6           distributed      256       by size
+    supplied, <= 1024 rows  expr fold        none      expr
+    supplied, > 1024 rows   routed, memory   256       arrow
+    ======================  ===============  ========  ================
+
+    - *expr fold*: exact, the plan of every oracle-gated query; no n x k
+      row expansion anywhere.
+    - *routed, memory* (knn_numpy): ~sqrt(8k) super-centroid groups,
+      each vector scored against its top-8 groups' members, O(n sqrt(k)
+      d) instead of the flat O(n k d). APPROXIMATE: recall ~1.0 on
+      trained centroids (tests/test_semantic_routing.py); over seed rows
+      it tracks the corpus's clusterability, so the seed rule warns.
+    - *distributed* (knn_routed): the same routing with the centroid
+      table kept a DataFrame end to end and a calibrated probe margin.
+    - *cap*: SEMDEDUP_DECIDE_CAP, one-sided (see _semantic_dedup_decide).
+    - *decide by size*: ``'arrow'`` (per-cluster cogroup GEMM, same
+      removed set) when the counted n, or the seed rule's k x 64
+      estimate, reaches DECIDE_ARROW_MIN_ROWS; ``'expr'`` below.
+
+    Scale shape: the only shuffle keys are cluster_id (rank window, pair
+    join), both O(n) rows; no stage is all-pairs over the corpus
+    (plan-guarded in tests/test_plans.py)."""
+    from .knn_numpy import LARGE_NLIST_THRESHOLD, _collect_centroids
+    from .knn_routed import DISTRIBUTED_K_THRESHOLD
+
+    v = _semdedup_vectors(vectors)
+    n_vec = collected = None
+    if centroids is None:
+        if k is None:
+            # One scalar count — small-by-contract driver round trip; the
+            # oracle computes the identical k with a scalar subquery.
+            n_vec = v.count()
+            k = max(SEMDEDUP_K_MIN, -(-n_vec // SEMDEDUP_TARGET_CLUSTER))
+        centroids = _seed_centroids(v, k)
+        if k <= LARGE_NLIST_THRESHOLD:
+            tier = "expr"
+        else:
+            tier = "routed" if k <= DISTRIBUTED_K_THRESHOLD else "distributed"
+            import warnings
+
+            warnings.warn(
+                "semantic_dedup: k exceeds LARGE_NLIST_THRESHOLD with default "
+                "seed-rule centroids — assignment switches to an APPROXIMATE "
+                "routed tier, whose trained-centroid recall guarantee does not "
+                "cover raw seed rows (measured keep/drop drift ~0.16% on an "
+                "unstructured corpus). Supply trained centroids "
+                "(indexing.train_kmeans_centroids) for gated recall.",
+                stacklevel=2,
+            )
+    else:
+        collected = _collect_centroids(centroids, "cid", "cvec")
+        # The caller's k is ignored here, and the sizing hints and the
+        # k x 64 decide estimate stay seed-rule only.
+        k = None
+        tier = "routed" if len(collected[0]) > LARGE_NLIST_THRESHOLD else "expr"
+    assigned = _assign_centroids(
+        v, centroids, tier, n_cents=k, n_vec=n_vec, collected=collected
+    )
+    return _decide_for_tier(assigned, threshold, tier, n_vec=n_vec, k=k)
+
+
+def _decide_for_tier(
+    assigned: DataFrame,
+    threshold: float,
+    tier: str,
+    *,
+    n_vec: "int | None" = None,
+    k: "int | None" = None,
+) -> DataFrame:
+    """semantic_dedup's decide tail for an assignment tier: the exact
+    tiers ('expr', 'flat') get the uncapped 'expr' decide; the routed
+    tiers get SEMDEDUP_DECIDE_CAP and the 'arrow' decide when the counted
+    ``n_vec``, or else the seed rule's ``k`` x TARGET_CLUSTER estimate,
+    reaches DECIDE_ARROW_MIN_ROWS — or when neither is known (supplied
+    centroids)."""
+    if tier in ("expr", "flat"):
+        return _semantic_dedup_decide(assigned, threshold)
+    if n_vec is not None:
+        arrow = n_vec >= DECIDE_ARROW_MIN_ROWS
+    elif k is not None:
+        # The ESTIMATE holds only under the seed contract: a small
+        # explicit k over a large corpus lands on 'expr' where 'arrow' is
+        # much faster (same results), so say so.
+        arrow = k * SEMDEDUP_TARGET_CLUSTER >= DECIDE_ARROW_MIN_ROWS
+        if not arrow:
+            import logging
+
+            logging.getLogger(__name__).info(
+                "semantic_dedup picked the 'expr' decide from the k-contract "
+                "ESTIMATE (k=%d * %d < %d)",
+                k,
+                SEMDEDUP_TARGET_CLUSTER,
+                DECIDE_ARROW_MIN_ROWS,
+            )
+    else:
+        arrow = True
     return _semantic_dedup_decide(
         assigned,
         threshold,
-        depth_cap=None if decide_cap == "auto" else decide_cap,
-        kernel="expr" if decide_kernel == "auto" else decide_kernel,
+        depth_cap=SEMDEDUP_DECIDE_CAP,
+        kernel="arrow" if arrow else "expr",
         n_hint=n_vec,
-        k_hint=n_cents,
+        k_hint=k,
     )
 
 
 #: Opt-in stage-wall sink for the SemDeDup tail (tools/scale_stress.py
-#: dist_decompose leg; r15 verdict item 2 — decompose merge_tail): when a
-#: dict is installed here, semantic_dedup's decide tail records per-stage
-#: driver walls and row counts into it and force-materializes between
-#: stages so the assignment-merge, rank window, pair/decide work, and
-#: final join are separable. None (default) = zero overhead, no extra
-#: action, identical plan.
+#: dist_decompose leg): when a dict is installed here,
+#: _semantic_dedup_decide records per-stage driver walls and row counts
+#: into it and force-materializes between stages so the rank window,
+#: pair/decide work, and final join are separable. None (default) = zero
+#: overhead, no extra action, identical plan.
 _DECIDE_INSTRUMENT: "dict | None" = None
 
 #: Auto salt sizing for the arrow decide's per-(cluster, salt) cogroup
@@ -2986,9 +2834,10 @@ FROM ranked r LEFT JOIN removed rm ON rm.vec_id = r.vec_id
 #: first BASE fixture vectors (dimension-roll per copy — a rotation
 #: keeps within-copy geometry exact and makes cross-copy dots
 #: incoherent), interleaved ids so the seed rule picks every copy's
-#: anchors. n = BASE*REP = 8,500 and k = EVAL_K = 520 >
-#: ROUTED_K_THRESHOLD at EVERY sf (the corpus is sf-independent by
-#: construction), so the approximate kernels genuinely engage.
+#: anchors. n = BASE*REP = 8,500 and k = EVAL_K = 520 at EVERY sf (the
+#: corpus is sf-independent by construction); the approximate tiers are
+#: named explicitly, since the seed rule keeps k <= 1024 on the exact
+#: fold.
 SEMDEDUP_EVAL_BASE = 500
 SEMDEDUP_EVAL_REP = 17
 SEMDEDUP_EVAL_K = 520
@@ -3030,23 +2879,18 @@ SELECT (SELECT count(*) * {SEMDEDUP_EVAL_REP} FROM embeddings
 
 @register("semantic_dedup_routed_eval", oracle=_SEMDEDUP_ROUTED_EVAL_ORACLE)
 def q_semantic_dedup_routed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2 [W]: the routed (approximate) assignment path's contract,
-    enforced where the DRIVER's harness sees it — r11 verdict item 6:
-    the routed kernel was the one substantial code path no queries()
-    entry exercised (approximate + BLAS can't be hash-exact row-wise,
-    so it backs the library, not an oracle row). Mirroring the
-    knn_recall_eval pattern, this row asserts the approximation BOUND
-    in-plan instead of the rows: build a deterministic 8,500-vector
-    corpus (17 dimension-rotations of the first 500 fixture vectors —
-    rotations preserve within-copy geometry exactly), run semantic_dedup
-    at k=520 (> ROUTED_K_THRESHOLD, so routing genuinely engages) under
-    the flat exact kernel, the in-memory two-tier routed kernel, AND the
-    DISTRIBUTED routed tier (r12 verdict item 1: the tier that actually
-    runs at 100 TB — router sampling, map-side centroid grouping, salted
-    cogroup GEMM, struct-merge global argbest — previously had no
-    queries() entry, so the driver's CORRECTNESS check never executed
-    its plumbing), and emit one summary row whose booleans encode the
-    gated bounds:
+    """X2 [W]: the routed (approximate) assignment tiers' contract,
+    enforced where the DRIVER's harness sees it: approximate + BLAS
+    can't be hash-exact row-wise, so, mirroring the knn_recall_eval
+    pattern, this row asserts the approximation BOUND in-plan instead of
+    the rows. Build a deterministic 8,500-vector corpus (17
+    dimension-rotations of the first 500 fixture vectors — rotations
+    preserve within-copy geometry exactly), seed k=520 centroids, assign
+    with the flat exact GEMM, the in-memory two-tier routed kernel AND
+    the DISTRIBUTED routed tier (router sampling, map-side centroid
+    grouping, salted cogroup GEMM, struct-merge global argmax), decide
+    each with semantic_dedup's tail for that tier, and emit one summary
+    row whose booleans encode the gated bounds:
 
     - in-memory keep/drop drift <= 6% (measured 4.27% on this corpus —
       shallow ~16-deep cells, same regime as the trained-centroid
@@ -3055,7 +2899,7 @@ def q_semantic_dedup_routed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
       overwhelmingly KEEP extra rows rather than drop uniques);
     - distributed-tier drift <= 6% / spurious <= 1% (measured 4.34% /
       0.24% — same regime: the tiers share the router family and differ
-      only in WHERE the bottom-tier argbest runs).
+      only in WHERE the bottom-tier argmax runs).
 
     The DuckDB twin emits the expected constants, so any recall
     regression past a bound flips a boolean and fails the driver's
@@ -3063,15 +2907,16 @@ def q_semantic_dedup_routed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiers is harness-visible, not pytest-only."""
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = transient_persist(_semantic_eval_corpus(emb))
-    flat = semantic_dedup(
-        corpus, k=SEMDEDUP_EVAL_K, kernel="numpy", routed=False
-    ).select("vec_id", F.col("kept").alias("kept_flat"))
-    routed = semantic_dedup(
-        corpus, k=SEMDEDUP_EVAL_K, kernel="numpy", routed=True
-    ).select("vec_id", F.col("kept").alias("kept_routed"))
-    dist = semantic_dedup(
-        corpus, k=SEMDEDUP_EVAL_K, kernel="numpy", routed="distributed"
-    ).select("vec_id", F.col("kept").alias("kept_dist"))
+
+    def kept(tier):
+        v = _semdedup_vectors(corpus)
+        k = SEMDEDUP_EVAL_K
+        assigned = _assign_centroids(v, _seed_centroids(v, k), tier, n_cents=k)
+        return _decide_for_tier(assigned, SEMDEDUP_TAU, tier, k=k)
+
+    flat = kept("flat").select("vec_id", F.col("kept").alias("kept_flat"))
+    routed = kept("routed").select("vec_id", F.col("kept").alias("kept_routed"))
+    dist = kept("distributed").select("vec_id", F.col("kept").alias("kept_dist"))
     j = flat.join(routed, "vec_id").join(dist, "vec_id")
     n = F.count(F.lit(1))
 

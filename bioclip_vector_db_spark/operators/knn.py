@@ -194,11 +194,8 @@ def assign_partitions(
     BLAS GEMMs instead. ``'auto'`` switches on LARGE_NLIST_THRESHOLD;
     both kernels round distances to 9 decimals before the argmin and break
     ties toward the smallest pid, so they pick identical winners at any
-    nlist. An APPROXIMATE O(n sqrt(nlist) d) two-tier kernel exists for
-    structured corpora as an explicit opt-in
-    (``knn_numpy.assign_partitions_numpy(..., routed=True)``) — see its
-    docstring for the measured reason it is NOT the auto default here
-    even though SemDeDup's assignment routes automatically.
+    nlist. Assignment never routes two-tier the way SemDeDup's does: the
+    IVF layout is a persisted artifact whose search recall it fixes.
     """
     if _pick_kernel(kernel, centroids) == "numpy":
         from .knn_numpy import assign_partitions_numpy

@@ -221,40 +221,18 @@ def assign_partitions_numpy(
     vec_col: str = "embedding",
     pid_col: str = "partition_id",
     centroid_vec_col: str = "centroid",
-    routed: "bool | str" = "auto",
 ) -> DataFrame:
     """O19 nearest-centroid assignment as a blocked GEMM — the large-nlist
     kernel behind ``knn.assign_partitions(kernel='numpy'|'auto')``.
 
     Round-9-then-argmin distances, ties to the smallest pid — identical
     winners to the expression fold; see _blocked_best_centroid for the
-    shared core. Output is the input plus ``partition_id``.
-
-    ``routed``: ``True`` runs the same two-tier kernel as
-    argmax_centroid_numpy (_routed_best_centroid, O(N sqrt(nlist) d) vs
-    the flat O(N nlist d)) — but unlike SemDeDup, ``'auto'`` here stays
-    EXACT-FLAT at every nlist. Measured reason (tools/scale_stress.py
-    ``assign`` leg, r11): on the unstructured 64-d stress corpus routed
-    assignment agrees with the exact argmin for only 73%/64%/55%/48% of
-    vectors at nlist=250/500/1000/2000 — mean-based routing has no signal
-    on structureless data, and an IVF index layout (a PERSISTED artifact
-    whose per-query search recall it directly determines) should not
-    silently degrade with data structure. The cost asymmetry also
-    differs: under the reference's nlist = floor(10*sqrt(N)) contract
-    (/root/reference/src/bioclip_vector_db/storage/storage_impl.py:78-82,
-    nlist=316,227 at N=1e9) flat assignment is O(N^1.5 d) but
-    embarrassingly parallel and far lighter per vector than SemDeDup's
-    k = n/64 contract at the same N (10*sqrt(N) vs N/64 centroids:
-    ~50x at N=1e9), so flat remains runnable where SemDeDup's flat
-    GEMM is not. Callers with structured corpora
-    (k-means-trained centroids over real embeddings — routing recall
-    ~100% there, tests/test_semantic_routing.py) opt in with
-    ``routed=True`` for the sqrt(nlist) speedup (measured 2.3x at
-    nlist=2000, growing with nlist)."""
-    if routed == "auto":
-        routed = False
-    core = _routed_best_centroid if routed else _blocked_best_centroid
-    return core(
+    shared core. Output is the input plus ``partition_id``. Always
+    exact-flat: an IVF layout is a persisted artifact whose search recall
+    it determines, and the two-tier routed kernel agreed with the exact
+    argmin on only 48-73% of an unstructured 64-d corpus (SCALING.md
+    §2.1)."""
+    return _blocked_best_centroid(
         vectors,
         centroids,
         id_col=pid_col,
@@ -264,22 +242,6 @@ def assign_partitions_numpy(
         out_field=T.StructField(pid_col, T.IntegerType()),
     )
 
-
-#: Above this many centroids a FLAT n x k GEMM assignment is itself the
-#: scale problem: with SemDeDup's k = ceil(n/64) contract the flat kernel
-#: is O(n^2 d / 64) — the r10 verdict's one scale-killer, empirically
-#: confirmed quadratic-regime by the M=32 stress decade
-#: (SCALE_STRESS.json: 3.24s -> 10.01s for a 2x input). Past this
-#: threshold argmax_centroid_numpy routes each vector through
-#: ~sqrt(ROUTE_PROBES * k) super-centroids and GEMMs only against the
-#: probed groups' members — O(n sqrt(k) d) total, the engine's own O22
-#: leader-routing trick (knn.py:118) applied to the centroid table
-#: itself. The routed assignment is APPROXIMATE (the nearest
-#: super-centroid's group need not contain the true argmax centroid);
-#: recall is gated on structured data by tests/test_semantic_routing.py,
-#: and every oracle-gated query stays on the exact expr fold (k < this
-#: threshold at all tested SFs).
-ROUTED_K_THRESHOLD = 512
 
 #: Super-centroid groups probed per vector. Fixed probes + g =
 #: sqrt(probes * k) groups minimizes per-vector work g + probes * k / g
@@ -430,26 +392,22 @@ def _routed_best_core(
     bS: "np.ndarray",
     bmem: "list[np.ndarray]",
     p: int,
-    similarity: bool,
 ):
-    """Numeric core of the two-tier routed argbest. Tiled routing scores
+    """Numeric core of the two-tier routed argmax. Tiled routing scores
     + one-pass top->rows inversion: per batch this is O(b sqrt(k) d)
     GEMM + O(b p log(b p)) sort, never O(b g) per-group scans or a whole
-    b x g tile (r11 ADVICE). Returns
-    (best_id int64[b], best_v float64[b])."""
+    b x g tile. Returns (best_id int64[b], best_v float64[b])."""
     b = emb.shape[0]
     top = _tiled_top_groups(emb, bS, p)  # b x p group ids
-    best_v = np.full(b, -np.inf if similarity else np.inf)
+    best_v = np.full(b, -np.inf)
     best_id = np.full(b, np.iinfo(np.int64).max, dtype=np.int64)
     for j, rows_idx in _invert_top_to_rows(top):
         mem = bmem[j]
         blk = emb[rows_idx] @ bC[mem].T  # hits x |group|
-        if not similarity:
-            blk = 1.0 - blk
         np.round(blk, 9, out=blk)
-        # first extremum = smallest id within the group (members ascend
+        # first maximum = smallest id within the group (members ascend
         # by id)
-        jj = blk.argmax(axis=1) if similarity else blk.argmin(axis=1)
+        jj = blk.argmax(axis=1)
         v = blk[np.arange(len(rows_idx)), jj]
         cand = bids[mem[jj]]
         cur_v = best_v[rows_idx]
@@ -457,8 +415,7 @@ def _routed_best_core(
         # Groups are NOT id-ordered, so cross-group ties need the
         # explicit smallest-id rule the flat kernel gets for free from
         # ascending-id blocks.
-        better = (v > cur_v) if similarity else (v < cur_v)
-        upd = better | ((v == cur_v) & (cand < cur_id))
+        upd = (v > cur_v) | ((v == cur_v) & (cand < cur_id))
         tgt = rows_idx[upd]
         best_v[tgt] = v[upd]
         best_id[tgt] = cand[upd]
@@ -472,25 +429,20 @@ def _routed_best_centroid(
     id_col: str,
     cvec_col: str,
     vec_col: str,
-    similarity: bool,
     out_field: "T.StructField",
     score_field: "str | None" = None,
     probes: int = ROUTE_PROBES,
     _collected: "tuple | None" = None,
 ) -> DataFrame:
-    """Two-tier argbest: route each vector to its top-``probes``
-    super-centroid groups (one b x g GEMM), then argbest only against the
+    """Two-tier argmax: route each vector to its top-``probes``
+    super-centroid groups (one b x g GEMM), then argmax only against the
     routed groups' members — O(n sqrt(k) d) where the flat kernel is
     O(n k d). Same 9-dp-round-then-compare and smallest-id tiebreak as
     _blocked_best_centroid, applied over the PROBED candidate set; the
     result equals the flat kernel's whenever the true best centroid's
     group is among the probed ones (recall-gated for structured inputs —
     SemDeDup's centroids are k-means means of the data being assigned, so
-    each vector's best group dominates the routing scores).
-
-    Distance mode (``similarity=False``) scores 1 - dot exactly like the
-    flat kernel; routing itself always probes by RAW dot to the group
-    means (monotone with 1 - dot, so both modes route identically)."""
+    each vector's best group dominates the routing scores)."""
     ids, cmat = (
         _collected
         if _collected is not None
@@ -516,9 +468,7 @@ def _routed_best_centroid(
             if not rb.num_rows:
                 continue
             emb = _list_matrix(rb.column(vec_idx))
-            best_id, best_v = _routed_best_core(
-                emb, bids, bC, bS, bmem, p, similarity
-            )
+            best_id, best_v = _routed_best_core(emb, bids, bC, bS, bmem, p)
             extras = [pa.array(best_id.astype(out_np_type))]
             if score_field is not None:
                 extras.append(pa.array(best_v, type=pa.float64()))
@@ -534,64 +484,36 @@ def argmax_centroid_numpy(
     vec_col: str = "embedding",
     cid_col: str = "cid",
     cvec_col: str = "cvec",
-    routed: "bool | str" = "auto",
+    routed: "bool | str" = False,
     n_centroids: "int | None" = None,
     n_vectors: "int | None" = None,
-    routed_payload: str = "f64",
-    routed_probe_margin: "float | str | None" = "auto",
-    resolved_out: "dict | None" = None,
+    _collected: "tuple | None" = None,
 ) -> DataFrame:
     """Best-centroid argmax (similarity form of assign_partitions_numpy):
-    blocked ``E @ C.T`` GEMMs with a running (best_csim, best_cid) argmax —
-    the large-k kernel behind ``dedup.semantic_dedup(kernel='numpy')``,
-    where assignment cost is n x k x dim and the interpreted expression
-    fold dominates the whole pipeline once k grows with the corpus.
+    the numpy assignment tiers behind ``dedup.semantic_dedup``, where
+    assignment cost is n x k x dim and the interpreted expression fold
+    dominates the whole pipeline once k grows with the corpus.
 
     Round-9-then-argmax similarities, ties to the smallest cid —
     identical winners to the expression fold's lexicographic (csim, -cid)
-    struct max; see _blocked_best_centroid for the shared core. Emits
-    ``csim`` as well as ``cid`` because SemDeDup ranks exemplars by it
-    downstream. Empty centroid table -> empty output, matching the
-    expression fold's guard.
+    struct max. Emits ``csim`` as well as ``cid`` because SemDeDup ranks
+    exemplars by it downstream. Empty centroid table -> empty output,
+    matching the expression fold's guard.
 
-    ``routed``: ``True`` forces two-tier super-centroid routing
-    (_routed_best_centroid — O(n sqrt(k) d), approximate), ``False``
-    forces the flat exact GEMM, ``'auto'`` (default) routes when the
-    centroid table exceeds ROUTED_K_THRESHOLD — above it the flat
-    kernel's O(n k d) is the SemDeDup scale-killer the r10 verdict named
-    (k grows with n by contract, so flat assignment is O(n^2 d / 64)).
-    ``'distributed'`` additionally removes the centroids-fit-on-the-
-    driver bound both other tiers share (this function's collect):
-    knn_routed.routed_best_centroid_distributed keeps the centroid table
-    a DataFrame end to end and collects only a capped router sample —
-    required above ~DISTRIBUTED_K_THRESHOLD centroids, where the k x d
-    collect itself is the scale problem; needs ``vectors`` to carry a
-    unique ``vec_id`` column (the distributed merge's key). ``'auto'``
-    does NOT escalate here on its own — it must collect the table to
-    count it, which is exactly what the distributed tier avoids; callers
-    who know k is past the bound say so (semantic_dedup's auto does,
-    from its seed-rule k). ``n_vectors`` (distributed tier only) is the
-    corpus-size hint that lets its group_salts auto-sizing skip a
-    count() job — like n_centroids, a positive-only sizing hint, never
-    trusted for correctness. ``routed_payload``: distributed tier only —
-    'f32' ships the routed-explode vector payload as float32 (halved
-    shuffle bytes, ~1e-7 dot perturbation; knn_routed docstring), 'f64'
-    (default) keeps exact doubles; ignored by the in-memory tiers, which
-    have no shuffle. ``routed_probe_margin``: distributed tier only —
-    adaptive probing (ship a vector only to probed groups within this
-    round-9 routing-score margin of its best; knn_routed docstring);
-    'auto' (default) calibrates the margin from the router sample, None
-    opts out to the fixed probes x fan-out.
-    ``resolved_out``: when a dict is passed, this function records the
-    CONCRETE tier it chose under key ``'routed'`` (False / True /
-    'distributed') — so callers whose own behavior branches on whether
-    routing engaged (semantic_dedup's decide_cap='auto') read the SAME
-    decision this function acted on, instead of re-deriving it from a
-    second evaluation of the centroid plan that a nondeterministic plan
-    could answer differently (r14 ADVICE)."""
+    ``routed`` names the tier:
+    - ``False``: the flat exact blocked GEMM (_blocked_best_centroid),
+      O(n k d) — quadratic under SemDeDup's k = ceil(n/64) contract;
+    - ``True``: two-tier super-centroid routing (_routed_best_centroid),
+      O(n sqrt(k) d), approximate;
+    - ``'distributed'``: knn_routed.routed_best_centroid_distributed,
+      which never collects the k x d table (both other tiers do) and
+      needs a unique ``vec_id`` column. ``n_centroids``/``n_vectors``
+      are its positive-only sizing hints, never trusted for correctness.
+
+    ``_collected``: the ``(ids, matrix)`` pair of _collect_centroids when
+    the caller already holds it, so the in-memory tiers do not evaluate
+    the centroid plan a second time."""
     if routed == "distributed":
-        if resolved_out is not None:
-            resolved_out["routed"] = "distributed"
         from .knn_routed import routed_best_centroid_distributed
 
         return routed_best_centroid_distributed(
@@ -600,36 +522,22 @@ def argmax_centroid_numpy(
             id_col=cid_col,
             cvec_col=cvec_col,
             vec_col=vec_col,
-            similarity=True,
             out_field=T.StructField(cid_col, T.LongType()),
             score_field="csim",
             n_centroids=n_centroids,
             n_vectors=n_vectors,
-            payload=routed_payload,
-            probe_margin=routed_probe_margin,
         )
-    collected = None
-    if routed == "auto":
-        # Both kernels collect the centroid table anyway (it IS the GEMM
-        # operand) — resolve the routing decision from that one collect
-        # instead of an extra limit().count() job that would evaluate the
-        # caller's centroid plan a second time (r11 review finding).
-        collected = _collect_centroids(centroids, cid_col, cvec_col)
-        routed = len(collected[0]) > ROUTED_K_THRESHOLD
-    if resolved_out is not None:
-        resolved_out["routed"] = routed
-    core = _routed_best_centroid if routed else _blocked_best_centroid
-    return core(
-        vectors,
-        centroids,
+    kw = dict(
         id_col=cid_col,
         cvec_col=cvec_col,
         vec_col=vec_col,
-        similarity=True,
         out_field=T.StructField(cid_col, T.LongType()),
         score_field="csim",
-        _collected=collected,
+        _collected=_collected,
     )
+    if routed:
+        return _routed_best_centroid(vectors, centroids, **kw)
+    return _blocked_best_centroid(vectors, centroids, similarity=True, **kw)
 
 
 def route_queries_numpy(

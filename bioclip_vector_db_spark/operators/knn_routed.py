@@ -43,7 +43,7 @@ not have — O(probes * n * d) bytes for the routed vector explode and
 O(salts * k * d) for the member side. That shuffle is LINEAR in n (the
 flat kernel's collect was the super-linear driver term), which is the
 trade that removes the driver bound; engage this tier only above it
-(DISTRIBUTED_K_THRESHOLD, or explicitly with routed="distributed").
+(semantic_dedup's seed rule picks it past DISTRIBUTED_K_THRESHOLD).
 
 Approximation contract: same class as the in-memory routed kernel —
 the probed-group union need not contain the true argbest centroid;
@@ -85,9 +85,8 @@ from .knn_numpy import (
 #: Above this many centroids argmax_centroid_numpy's driver-collect tiers
 #: (flat AND in-memory-routed both broadcast the full k x d table) give
 #: way to this module: 1M rows x 512-d doubles is ~4 GB collected — the
-#: practical edge of broadcast-variable territory. semantic_dedup's
-#: ``routed='auto'`` escalates here when k is known numerically; callers
-#: with an explicit centroid DataFrame opt in with routed="distributed".
+#: practical edge of broadcast-variable territory. semantic_dedup's seed
+#: rule escalates here from its numeric k.
 DISTRIBUTED_K_THRESHOLD = 1_000_000
 
 #: Centroid rows sampled (hash-strided, deterministic) to build the
@@ -459,17 +458,15 @@ def routed_best_centroid_distributed(
     cvec_col: str,
     vec_col: str,
     vec_id_col: str = "vec_id",
-    similarity: bool = True,
     out_field: "T.StructField",
     score_field: "str | None" = None,
     probes: int = ROUTE_PROBES,
     group_salts: "int | None" = None,
     n_centroids: "int | None" = None,
     n_vectors: "int | None" = None,
-    payload: str = "f64",
     probe_margin: "float | str | None" = "auto",
 ) -> DataFrame:
-    """Two-tier argbest with a DISTRIBUTED bottom tier (module docstring
+    """Two-tier argmax with a DISTRIBUTED bottom tier (module docstring
     has the full shape). Requires ``vec_id_col`` to be unique per input
     row — the global merge keys on it and the result is joined back by
     it (the in-memory kernels are pure map stages and need no key; the
@@ -505,30 +502,13 @@ def routed_best_centroid_distributed(
     the per-group argbest is computed per salt and the global
     struct-merge is associative, and over-salting is measured free.
 
-    ``payload``: element width of the vector payload through the
-    routed-explode shuffle — the tier's dominant cost term is MOVING
-    the probes x-replicated vectors through the cogroup exchange
-    (shuffle/serialization-bound, not compute-bound; SCALING.md §2.1),
-    and p x payload is the information floor, but each element need not
-    be 8 bytes. ``'f64'`` (default) ships exact doubles — bit-identical
-    scoring to the in-memory tiers. ``'f32'`` (opt-in, r13 verdict item
-    4) ships float32 and upcasts inside the cogroup GEMM: halves the
-    shuffle bytes at a ~1e-7 relative perturbation of each dot — scores
-    still round to 9 dp under the same total-order tie rule, so salt/
-    batch-shape/tiling invariance is untouched (the gated properties
-    never depended on WHICH doubles are scored), but results may drift
-    from the f64 tiers in the 8th-9th decimal of a near-tie. Candidate
-    ROUTING always stays f64 map-side (the router never ships); only
-    the cogroup payload narrows.
-
     ``probe_margin`` (r13 verdict item 5; default-on r14 item 2): ship a
     vector only to probed groups whose ROUTING score is within this
     margin of its best group's (round-9 scores, so the pruning inherits
-    the family's tile/batch-shape invariance). The dist_payload stress
-    leg showed the cogroup term is ROW-boxing-bound on local[*] (f32
-    halves the bytes for a ~flat wall), so cutting the replicated ROW
-    count is the lever that moves the local wall — most vectors' best
-    group wins by a wide margin and the trailing probes are insurance.
+    the family's tile/batch-shape invariance). The cogroup term is
+    ROW-boxing-bound on local[*], so cutting the replicated ROW count is
+    the lever that moves the local wall — most vectors' best group wins
+    by a wide margin and the trailing probes are insurance.
     ``'auto'`` (default) CALIBRATES the margin from a capped
     hash-strided sample of the WORKLOAD vectors
     (_calibrate_probe_margin: the 99.5% quantile of each sampled
@@ -546,8 +526,6 @@ def routed_best_centroid_distributed(
     """
     from ..plans.registry import transient_persist
 
-    if payload not in ("f64", "f32"):
-        raise ValueError(f"payload must be 'f64' or 'f32', got {payload!r}")
     if probe_margin is not None and probe_margin != "auto":
         if isinstance(probe_margin, str) or not probe_margin >= 0:
             raise ValueError(
@@ -730,7 +708,6 @@ def routed_best_centroid_distributed(
         inst["max_group_salts"] = (
             int(salts_arr.max()) if salts_arr is not None else n_salts
         )
-        inst["payload"] = payload
     bc_salts = spark.sparkContext.broadcast(salts_arr)
 
     # -- vectors -> top-p live groups, exploded map-side ------------------
@@ -738,14 +715,11 @@ def routed_best_centroid_distributed(
     routed_schema = T.StructType(
         [
             vid_field,
-            T.StructField(vec_col, T.ArrayType(T.FloatType()))
-            if payload == "f32"
-            else next(f for f in vectors.schema.fields if f.name == vec_col),
+            next(f for f in vectors.schema.fields if f.name == vec_col),
             T.StructField("_rt_gid", T.IntegerType()),
             T.StructField("_rt_salt", T.IntegerType()),
         ]
     )
-    narrow = payload == "f32"
 
     def _route_core(emb, vids, S_live, blive, p):
         """Numeric routing core: top-p live groups per row, optional
@@ -809,45 +783,24 @@ def routed_best_centroid_distributed(
             row_idx, vids_r, gids_r = _route_core(emb, vids, S_live, blive, p)
             salts_r = _salt_of(vids_r, gids_r)
             d = max(1, emb.shape[1])
-            # Emit in slices whose exploded values stay under int32 list
-            # offsets (r15 ADVICE: an int32 arange * d silently WRAPS once
-            # len(row_idx) * d exceeds 2^31, feeding ListArray.from_arrays
-            # corrupt non-monotonic offsets — and the wide path's take()
-            # hits the same bound in its output ListArray). One slice in
-            # any realistic batch (d=512 -> ~4.2M exploded rows/slice);
-            # the loop is the overflow guard, not a hot path.
+            # Emit in slices whose gathered values stay under int32 list
+            # offsets: take() builds its output ListArray with int32
+            # offsets, which overflow once len(row_idx) * d exceeds 2^31.
+            # One slice in any realistic batch (d=512 -> ~4.2M exploded
+            # rows/slice); the loop is the overflow guard, not a hot path.
             step = max(1, (2**31 - 64) // d)
             for s0 in range(0, len(row_idx), step):
                 sl = slice(s0, s0 + step)
                 ri = row_idx[sl]
                 take = pa.array(ri, type=pa.int64())
-                if narrow:
-                    # Narrow ONCE here (routing above always scores f64,
-                    # so f32 -> f64 -> f32 round-trips exactly); the
-                    # shipped list is built straight from the gathered
-                    # values buffer — uniform width d, offsets are an
-                    # arange (int64-computed, cast down only after the
-                    # slice bound guarantees it fits).
-                    vals32 = emb.astype(np.float32)[ri].ravel()
-                    offsets = pa.array(
-                        (np.arange(len(ri) + 1, dtype=np.int64) * d).astype(
-                            np.int32
-                        )
-                    )
-                    ship = pa.ListArray.from_arrays(offsets, pa.array(vals32))
-                else:
-                    # f64 payload = passthrough: gather the ORIGINAL list
-                    # rows (exact input values AND element type), zero
-                    # Python boxing.
-                    ship = _pa_cast(vec_arr, routed_arrow.field(1).type).take(
-                        take
-                    )
                 yield pa.RecordBatch.from_arrays(
                     [
                         _pa_cast(
                             rb.column(i_vid), routed_arrow.field(0).type
                         ).take(take),
-                        _pa_cast(ship, routed_arrow.field(1).type),
+                        # The ORIGINAL list rows (exact input values AND
+                        # element type), gathered with zero Python boxing.
+                        _pa_cast(vec_arr, routed_arrow.field(1).type).take(take),
                         pa.array(gids_r[sl].astype(np.int32), type=pa.int32()),
                         pa.array(salts_r[sl], type=pa.int32()),
                     ],
@@ -954,10 +907,8 @@ def routed_best_centroid_distributed(
         out_v = np.empty(n_rows, dtype=np.float64)
         for s in range(0, n_rows, rblock):
             blk = E[s : s + rblock] @ C.T
-            if not similarity:
-                blk = 1.0 - blk
             np.round(blk, 9, out=blk)
-            j = blk.argmax(axis=1) if similarity else blk.argmin(axis=1)
+            j = blk.argmax(axis=1)
             out_j[s : s + rblock] = j
             out_v[s : s + rblock] = blk[np.arange(blk.shape[0]), j]
         vids = (
@@ -986,35 +937,20 @@ def routed_best_centroid_distributed(
         inst["cand_rows"] = cands.count()
         inst["route_cogroup_s"] = time.perf_counter() - t0
 
-    # -- global argbest per vector: struct merge, ties to smallest id ----
-    if similarity:
-        best = cands.groupBy("_rt_vid").agg(
-            F.max(
-                F.struct(
-                    F.col("_rt_score").alias("s"),
-                    (-F.col("_rt_cand")).alias("nid"),
-                )
-            ).alias("_rt_best")
-        )
-        best = best.select(
-            F.col("_rt_vid"),
-            (-F.col("_rt_best.nid")).alias("_rt_out"),
-            F.col("_rt_best.s").alias("_rt_sc"),
-        )
-    else:
-        best = cands.groupBy("_rt_vid").agg(
-            F.min(
-                F.struct(
-                    F.col("_rt_score").alias("s"),
-                    F.col("_rt_cand").alias("id"),
-                )
-            ).alias("_rt_best")
-        )
-        best = best.select(
-            F.col("_rt_vid"),
-            F.col("_rt_best.id").alias("_rt_out"),
-            F.col("_rt_best.s").alias("_rt_sc"),
-        )
+    # -- global argmax per vector: struct merge, ties to smallest id ----
+    best = cands.groupBy("_rt_vid").agg(
+        F.max(
+            F.struct(
+                F.col("_rt_score").alias("s"),
+                (-F.col("_rt_cand")).alias("nid"),
+            )
+        ).alias("_rt_best")
+    )
+    best = best.select(
+        F.col("_rt_vid"),
+        (-F.col("_rt_best.nid")).alias("_rt_out"),
+        F.col("_rt_best.s").alias("_rt_sc"),
+    )
 
     out_cols = [F.col(f.name) for f in vectors.schema.fields] + [
         F.col("_rt_out").cast(out_field.dataType).alias(out_field.name)

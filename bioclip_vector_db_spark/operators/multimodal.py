@@ -316,9 +316,21 @@ def payload_ahash(
     ``extra``: additional named expressions over the input row (e.g. a
     payload fingerprint) computed in the SAME projection — the caller
     would otherwise need a corpus self-join to re-attach the payload
-    (exactly the join this form deletes)."""
+    (exactly the join this form deletes). A key may not reuse a column
+    this function selects (``doc_id``, ``ahash``, ``_mean``, ``text_col``)
+    nor contain a dot or a backtick, which the second projection would
+    read as a nested path or a broken quote; such keys raise
+    ValueError."""
     if "`" in text_col:
         raise ValueError("payload_ahash: text_col must not contain backticks")
+    extra = extra or {}
+    reserved = {"doc_id", "ahash", "_mean", text_col}
+    for name in extra:
+        if name in reserved or "." in name or "`" in name:
+            raise ValueError(
+                f"payload_ahash: extra key {name!r} is reserved or contains "
+                "a dot or backtick"
+            )
     bs = [
         f"ascii(substr(`{text_col}`, {i}, 1))" for i in range(1, PHASH_BYTES + 1)
     ]
@@ -328,7 +340,6 @@ def payload_ahash(
         + ", ".join(f"CASE WHEN {b} >= `_mean` THEN '1' ELSE '0' END" for b in bs)
         + ")"
     )
-    extra = extra or {}
     stage1 = df.filter(F.length(text_col) >= PHASH_BYTES).select(
         "doc_id",
         F.col(text_col),

@@ -8,6 +8,7 @@ predicate pushdown, column pruning, and partition pruning for free.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -143,7 +144,13 @@ def infer_events_schema(spark: SparkSession, sf_dir: str, glob_pat: str):
                     return None
             fields.append(T.StructField(af.name, spark_t, True))
         return T.StructType(fields)
-    except Exception:
+    except Exception as exc:
+        logging.getLogger(__name__).debug(
+            "infer_events_schema(%s): footer read failed, falling back to "
+            "Spark's own inference: %r",
+            sf_dir,
+            exc,
+        )
         return None
 
 

@@ -54,14 +54,6 @@ def test_assign_partitions_engines_identical(spark, sf_dir):
     _check(lambda e: assign_partitions_numpy(e, cents), _emb(spark, sf_dir))
 
 
-def test_assign_partitions_routed_engines_identical(spark, sf_dir):
-    cents = knn.fixture_centroids(spark, sf_dir)
-    _check(
-        lambda e: assign_partitions_numpy(e, cents, routed=True),
-        _emb(spark, sf_dir),
-    )
-
-
 def test_argmax_centroid_engines_identical(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     cents = knn.fixture_centroids(spark, sf_dir).select(

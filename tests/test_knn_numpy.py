@@ -137,13 +137,7 @@ def test_assign_kernels_agree_with_tied_centroids(spark, sf_dir, monkeypatch):
     flat numpy kernel must resolve every all-duplicate argmin tie exactly
     like the expr fold — to the smallest pid (expr: lexicographic (d, pid)
     fold; numpy: first-occurrence argmin over pid-ascending blocks with
-    strict-improvement updates). k is above ROUTED_K_THRESHOLD here, so
-    the flat kernel is pinned explicitly via routed=False (the facade's
-    kernel='numpy' would auto-route at this k — r11); the ROUTED kernel
-    gets the weaker contract it can honor on all-duplicate geometry:
-    the same argmin DISTANCE CLASS (every winner is some twin of the expr
-    winner), since the globally-smallest twin may live outside the probed
-    groups."""
+    strict-improvement updates)."""
     monkeypatch.setattr(knn_numpy, "_TILE_ELEMS", 2048)
     emb = load_table(spark, sf_dir, "embeddings").limit(64)
     tied = _tied_centroids(spark)
@@ -155,24 +149,13 @@ def test_assign_kernels_agree_with_tied_centroids(spark, sf_dir, monkeypatch):
     }
     got = {
         r.vec_id: r.partition_id
-        for r in knn_numpy.assign_partitions_numpy(emb, tied, routed=False)
+        for r in knn_numpy.assign_partitions_numpy(emb, tied)
         .select("vec_id", "partition_id")
         .collect()
     }
     assert got == want and len(got) == 64
     # Ties must land on the first duplicate block: every winner < n_distinct.
     assert all(pid < 8 for pid in got.values())
-    # Routed kernel on the same geometry: winner may be any twin (pid
-    # congruent mod n_distinct == same distance class), never a
-    # different class.
-    routed = {
-        r.vec_id: r.partition_id
-        for r in knn_numpy.assign_partitions_numpy(emb, tied, routed=True)
-        .select("vec_id", "partition_id")
-        .collect()
-    }
-    assert set(routed) == set(want)
-    assert all(routed[v] % 8 == want[v] % 8 for v in want)
 
 
 def test_pq_encode_kernels_agree_with_tied_codebooks(spark, sf_dir):
@@ -275,45 +258,56 @@ def test_numpy_kernel_emits_bounded_candidates(spark, sf_dir):
     assert n_parts >= 1  # sanity: plan executed over real partitions
 
 
+def _semdedup_tier(emb, k, tier):
+    """Seed-rule semantic_dedup with the assignment tier named (its
+    private steps: seed centroids -> assignment -> exact decide)."""
+    from bioclip_vector_db_spark.operators import dedup
+
+    v = dedup._semdedup_vectors(emb)
+    assigned = dedup._assign_centroids(v, dedup._seed_centroids(v, k), tier)
+    return dedup._semantic_dedup_decide(assigned, dedup.SEMDEDUP_TAU)
+
+
 def test_semantic_dedup_numpy_kernel_matches_expr(spark, sf_dir):
-    """The blocked-GEMM assignment (dedup.semantic_dedup(kernel='numpy'))
-    must reproduce the expression fold's full decision table — same
-    clusters, same exemplar ranks, same keep/drop — on the fixture, where
-    round-9 similarities make both kernels' winners identical. The numpy
-    path is the large-k scale route (assignment compute is n x k x dim
-    and k grows with the corpus), so its tail must be the SAME shared
+    """The blocked-GEMM assignment tier ('flat') must reproduce the
+    expression fold's full decision table — same clusters, same exemplar
+    ranks, same keep/drop — on the fixture, where round-9 similarities
+    make both kernels' winners identical. Both run the SAME shared
     _semantic_dedup_decide, not a reimplementation."""
     from bioclip_vector_db_spark.operators import dedup
 
     emb = load_table(spark, sf_dir, "embeddings")
     expr = {
         (r.vec_id, r.cluster_id, r.rank, r.kept)
-        for r in dedup.semantic_dedup(emb, kernel="expr").collect()
+        for r in dedup.semantic_dedup(emb).collect()
     }
-    via_numpy = {
-        (r.vec_id, r.cluster_id, r.rank, r.kept)
-        for r in dedup.semantic_dedup(emb, kernel="numpy").collect()
-    }
-    assert expr == via_numpy
+    k = max(dedup.SEMDEDUP_K_MIN, -(-emb.count() // dedup.SEMDEDUP_TARGET_CLUSTER))
+    flat = _semdedup_tier(emb, k, "flat")
+    assert expr == {(r.vec_id, r.cluster_id, r.rank, r.kept) for r in flat.collect()}
     # And the numpy plan really is the map-side kernel: no broadcast
     # centroid fold, one Arrow map stage, no n x k expansion anywhere.
-    plan = dedup.semantic_dedup(emb, kernel="numpy")._jdf.queryExecution().executedPlan().toString()
+    plan = flat._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan
     assert "array_max" not in plan
 
 
 def test_semantic_dedup_auto_kernel_resolves_by_k(spark, sf_dir):
-    """auto = expr below the threshold (the oracle-gated regime at every
-    tested SF) and numpy above — resolved numerically from k with NO
-    count job when the seed-centroid rule is in effect."""
+    """The expression fold at and below LARGE_NLIST_THRESHOLD (the
+    oracle-gated regime at every tested SF) and an Arrow map kernel
+    above — resolved numerically from k with NO count job when the
+    seed-centroid rule is in effect."""
+    import warnings
+
     from bioclip_vector_db_spark.operators import dedup
     from bioclip_vector_db_spark.operators.knn_numpy import LARGE_NLIST_THRESHOLD
 
     emb = load_table(spark, sf_dir, "embeddings")
-    small = dedup.semantic_dedup(emb, k=8, kernel="auto")
+    small = dedup.semantic_dedup(emb, k=LARGE_NLIST_THRESHOLD)
     plan_small = small._jdf.queryExecution().executedPlan().toString()
     assert "array_max" in plan_small and "MapInArrow" not in plan_small
-    big = dedup.semantic_dedup(emb, k=LARGE_NLIST_THRESHOLD + 1, kernel="auto")
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", UserWarning)
+        big = dedup.semantic_dedup(emb, k=LARGE_NLIST_THRESHOLD + 1)
     plan_big = big._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan_big and "array_max" not in plan_big
 
@@ -321,16 +315,16 @@ def test_semantic_dedup_auto_kernel_resolves_by_k(spark, sf_dir):
 def test_semantic_dedup_empty_centroids_is_empty_out(spark, sf_dir):
     """A corpus whose vec_ids never satisfy the 0-based seed rule (e.g.
     externally assigned ids starting at 10^6) derives ZERO centroids —
-    both kernels must return an EMPTY decision table (the pre-fold
-    crossJoin behavior), never the whole corpus kept=true under a NULL
-    cluster (the silent no-op the round-9 review caught)."""
+    every assignment tier must return an EMPTY decision table, never the
+    whole corpus kept=true under a NULL cluster."""
     from bioclip_vector_db_spark.operators import dedup
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
     )
-    assert dedup.semantic_dedup(emb, k=8, kernel="expr").count() == 0
-    assert dedup.semantic_dedup(emb, k=8, kernel="numpy").count() == 0
+    assert dedup.semantic_dedup(emb, k=8).count() == 0
+    for tier in ("flat", "routed", "distributed"):
+        assert _semdedup_tier(emb, 8, tier).count() == 0, tier
 
 
 def test_knn_join_numpy_query_cap_fails_loud(spark, sf_dir, monkeypatch):

@@ -52,3 +52,22 @@ def test_binary_file_scan(spark, tmp_path):
     rows = sorted(df.select("path", "length", "content").collect(), key=lambda r: r.path)
     assert [r.length for r in rows] == [10, 11, 12]
     assert bytes(rows[2].content) == bytes([2]) * 12
+
+
+def test_payload_ahash_rejects_colliding_extra_keys(spark):
+    """``extra`` keys share the projections with the hash's own columns:
+    ``_mean`` would make the bit cases ambiguous, ``ahash``/``doc_id``/the
+    text column would duplicate an output column, and a dotted name is
+    re-selected as a nested path. Each must fail loudly at build time;
+    a plain key still rides along."""
+    import hashlib
+
+    import pytest
+
+    df = spark.createDataFrame([(1, "x" * 80)], "doc_id long, text string")
+    for bad in ("doc_id", "ahash", "_mean", "text", "a.b", "a`b"):
+        with pytest.raises(ValueError, match="extra key"):
+            mm_ops.payload_ahash(df, extra={bad: F.lit(1)})
+    row = mm_ops.payload_ahash(df, extra={"fp": F.md5("text")}).collect()[0]
+    assert row.doc_id == 1 and len(row.ahash) == mm_ops.PHASH_BYTES
+    assert row.fp == hashlib.md5(b"x" * 80).hexdigest()

@@ -16,8 +16,10 @@ exemplars, with two gated properties:
   removed_exact — skew can only make the cap keep extra rows, never
   spuriously drop a unique.
 
-The auto policy engages the cap exactly on the routed (approximate)
-tiers and leaves every advertised-exact path untouched.
+semantic_dedup engages the cap exactly on the routed (approximate)
+tiers and leaves every exact path untouched; the gates below call its
+private steps (_assign_centroids on the exact fold, then
+_semantic_dedup_decide) to set the cap and decide kernel directly.
 """
 
 import numpy as np
@@ -27,6 +29,10 @@ from pyspark.sql import functions as F
 import bioclip_vector_db_spark.operators.dedup as dd
 from bioclip_vector_db_spark.operators.dedup import (
     SEMDEDUP_DECIDE_CAP,
+    _assign_centroids,
+    _seed_centroids,
+    _semantic_dedup_decide,
+    _semdedup_vectors,
     semantic_dedup,
 )
 
@@ -66,15 +72,20 @@ def crafted(spark):
     return corpus, cents
 
 
-def _run(corpus, cents, cap):
+def _assigned(corpus, cents=None):
+    """The exact fold's assignment over ``cents`` (default: the seed
+    rule's k=8)."""
+    v = _semdedup_vectors(corpus)
+    if cents is None:
+        cents = _seed_centroids(v, 8)
+    return _assign_centroids(v, cents, "expr")
+
+
+def _run(corpus, cents, cap, kernel="expr", threshold=0.5):
     return {
         r["vec_id"]: (r["cluster_id"], r["rank"], r["kept"])
-        for r in semantic_dedup(
-            corpus,
-            centroids=cents,
-            kernel="expr",
-            threshold=0.5,
-            decide_cap=cap,
+        for r in _semantic_dedup_decide(
+            _assigned(corpus, cents), threshold, depth_cap=cap, kernel=kernel
         ).collect()
     }
 
@@ -130,12 +141,8 @@ def test_cap_subset_property_random_corpus(spark):
     )
 
     def run(cap):
-        return {
-            r["vec_id"]: r["kept"]
-            for r in semantic_dedup(
-                corpus, kernel="expr", threshold=0.2, decide_cap=cap
-            ).collect()
-        }
+        rows = _run(corpus, None, cap, threshold=0.2)
+        return {v: kept for v, (_, _, kept) in rows.items()}
 
     exact = run(None)
     assert run(240) == exact  # cap >= depth: parity
@@ -147,21 +154,32 @@ def test_cap_subset_property_random_corpus(spark):
 
 
 def test_auto_policy_engages_on_routed_tiers_only(spark, monkeypatch):
-    """'auto' must resolve to SEMDEDUP_DECIDE_CAP exactly when the
-    RESOLVED assignment tier is approximate (in-memory routed or
-    distributed) and to None on every advertised-exact path (expr fold,
-    flat numpy GEMM, and the explicit-centroids routed='auto' probe at
-    k <= ROUTED_K_THRESHOLD). Spied at the decide call — no
-    materialization needed, the tail is built eagerly."""
+    """semantic_dedup's tier rule resolves the cap to SEMDEDUP_DECIDE_CAP
+    exactly when the assignment tier is approximate (in-memory routed or
+    distributed) and to None on the exact fold, and picks the decide
+    kernel by size on the routed tiers: 'arrow' when the counted n or
+    the seed rule's k x 64 estimate reaches DECIDE_ARROW_MIN_ROWS, or
+    when centroids are supplied. Thresholds are lowered so the routed
+    tiers engage at fixture scale; spied at the assignment and decide
+    calls — no materialization needed, the tail is built eagerly."""
+    import warnings
+
+    from bioclip_vector_db_spark.operators import knn_numpy, knn_routed
+
     seen = []
-    kernels = []
-    real = dd._semantic_dedup_decide
+    real_assign = dd._assign_centroids
+    real_decide = dd._semantic_dedup_decide
+    tiers = []
+
+    def spy_assign(v, centroids, tier, **kw):
+        tiers.append(tier)
+        return real_assign(v, centroids, tier, **kw)
 
     def spy(assigned, threshold, depth_cap=None, kernel="expr", **kw):
-        seen.append(depth_cap)
-        kernels.append(kernel)
-        return real(assigned, threshold, depth_cap=depth_cap, kernel=kernel, **kw)
+        seen.append((tiers[-1], depth_cap, kernel))
+        return real_decide(assigned, threshold, depth_cap=depth_cap, kernel=kernel, **kw)
 
+    monkeypatch.setattr(dd, "_assign_centroids", spy_assign)
     monkeypatch.setattr(dd, "_semantic_dedup_decide", spy)
     rng = np.random.default_rng(3)
     corpus = spark.createDataFrame(
@@ -172,69 +190,52 @@ def test_auto_policy_engages_on_routed_tiers_only(spark, monkeypatch):
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
     )
 
-    semantic_dedup(corpus)  # expr default
-    semantic_dedup(corpus, k=8, kernel="numpy", routed=False)  # flat GEMM
-    semantic_dedup(corpus, centroids=cents, kernel="numpy")  # probe: k=8
-    assert seen == [None, None, None]
-    # decide_kernel='auto' follows the same policy: expr on exact paths.
-    assert kernels == ["expr", "expr", "expr"]
+    semantic_dedup(corpus)  # seed rule, counted k = 8
+    semantic_dedup(corpus, centroids=cents)  # supplied, 8 rows
+    assert seen == [("expr", None, "expr")] * 2
 
     seen.clear()
-    kernels.clear()
-    semantic_dedup(corpus, k=8, kernel="numpy", routed=True)
-    semantic_dedup(corpus, k=8, kernel="numpy", routed="distributed")
-    assert seen == [SEMDEDUP_DECIDE_CAP, SEMDEDUP_DECIDE_CAP]
-    # On the approximate routed tiers decide_kernel='auto' is additionally
-    # SCALE-GATED (r16 optimization): k_hint=8 estimates the corpus far
-    # below DECIDE_ARROW_MIN_ROWS, so the cheap expr pair join runs.
-    assert kernels == ["expr", "expr"]
+    monkeypatch.setattr(knn_numpy, "LARGE_NLIST_THRESHOLD", 4)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", UserWarning)
+        semantic_dedup(corpus)  # counted n = 64
+        semantic_dedup(corpus, k=8)  # estimate 8 x 64
+        monkeypatch.setattr(knn_routed, "DISTRIBUTED_K_THRESHOLD", 6)
+        semantic_dedup(corpus, k=8)
+        # Both size signals sit far below DECIDE_ARROW_MIN_ROWS: the
+        # cheap expr pair join runs.
+        assert seen == [
+            ("routed", SEMDEDUP_DECIDE_CAP, "expr"),
+            ("routed", SEMDEDUP_DECIDE_CAP, "expr"),
+            ("distributed", SEMDEDUP_DECIDE_CAP, "expr"),
+        ]
 
-    seen.clear()
-    kernels.clear()
-    # Above the crossover the same routed tiers take the arrow cogroup
-    # decide — exercised by shrinking the bound rather than building a
-    # 1e5-row corpus (the policy reads the module constant at call time).
-    monkeypatch.setattr(dd, "DECIDE_ARROW_MIN_ROWS", 1)
-    semantic_dedup(corpus, k=8, kernel="numpy", routed=True)
-    semantic_dedup(corpus, k=8, kernel="numpy", routed="distributed")
-    # A routed caller with NO size signal (explicit centroids) is the
-    # at-scale library path — arrow engages regardless of the bound.
-    monkeypatch.setattr(dd, "DECIDE_ARROW_MIN_ROWS", 100_000)
-    semantic_dedup(corpus, centroids=cents, kernel="numpy", routed=True)
-    assert kernels == ["arrow", "arrow", "arrow"]
-    assert seen == [SEMDEDUP_DECIDE_CAP] * 3
-
-    seen.clear()  # explicit values override the policy in both directions
-    semantic_dedup(corpus, k=8, kernel="numpy", routed=True, decide_cap=None)
-    semantic_dedup(corpus, decide_cap=5)
-    assert seen == [None, 5]
+        seen.clear()
+        # Above the crossover the same routed tiers take the arrow
+        # cogroup decide — exercised by shrinking the bound rather than
+        # building a 1e5-row corpus.
+        monkeypatch.setattr(dd, "DECIDE_ARROW_MIN_ROWS", 64)
+        semantic_dedup(corpus)
+        semantic_dedup(corpus, k=8)
+        monkeypatch.setattr(dd, "DECIDE_ARROW_MIN_ROWS", 100_000)
+        # Supplied centroids carry no size signal: arrow regardless.
+        semantic_dedup(corpus, centroids=cents)
+    assert seen == [
+        ("distributed", SEMDEDUP_DECIDE_CAP, "arrow"),
+        ("distributed", SEMDEDUP_DECIDE_CAP, "arrow"),
+        ("routed", SEMDEDUP_DECIDE_CAP, "arrow"),
+    ]
 
 
 def test_cap_validates(spark, crafted):
     corpus, cents = crafted
     with pytest.raises(ValueError, match="depth_cap"):
-        semantic_dedup(
-            corpus, centroids=cents, kernel="expr", decide_cap=0
-        ).collect()
+        _run(corpus, cents, 0)
 
 
 # ---------------------------------------------------------------------------
 # arrow cogroup decide (r15 verdict item 2)
 # ---------------------------------------------------------------------------
-
-
-def _run_kernel(corpus, cents, cap, kernel):
-    return {
-        r["vec_id"]: (r["cluster_id"], r["rank"], r["kept"])
-        for r in semantic_dedup(
-            corpus,
-            centroids=cents,
-            kernel="expr",
-            threshold=0.5,
-            decide_cap=cap,
-            decide_kernel=kernel,
-        ).collect()
-    }
 
 
 def test_arrow_decide_identical_on_crafted(crafted):
@@ -243,7 +244,7 @@ def test_arrow_decide_identical_on_crafted(crafted):
     witness visible)."""
     corpus, cents = crafted
     for cap in (None, 2, 3):
-        assert _run_kernel(corpus, cents, cap, "arrow") == _run_kernel(
+        assert _run(corpus, cents, cap, "arrow") == _run(
             corpus, cents, cap, "expr"
         ), f"cap={cap}"
 
@@ -260,16 +261,7 @@ def test_arrow_decide_identical_on_random_corpus(spark):
     )
 
     def run(cap, kernel):
-        return {
-            r["vec_id"]: r["kept"]
-            for r in semantic_dedup(
-                corpus,
-                kernel="expr",
-                threshold=0.2,
-                decide_cap=cap,
-                decide_kernel=kernel,
-            ).collect()
-        }
+        return _run(corpus, None, cap, kernel, threshold=0.2)
 
     for cap in (None, 2, 240):
         assert run(cap, "arrow") == run(cap, "expr"), f"cap={cap}"
@@ -291,49 +283,14 @@ def test_arrow_decide_salt_invariance(spark, monkeypatch):
     cents = corpus.limit(4).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
     )
-    assigned_args = dict(
-        centroids=cents, kernel="expr", threshold=0.2, decide_kernel="arrow"
-    )
+    assigned_df = _assigned(corpus, cents)
     base = {
         r["vec_id"]: (r["cluster_id"], r["rank"], r["kept"])
-        for r in semantic_dedup(corpus, **assigned_args).collect()
+        for r in _semantic_dedup_decide(assigned_df, 0.2, kernel="arrow").collect()
     }
-    # hints flow only through the non-centroids path; exercise salting
-    # directly at the decide layer instead.
+    # The (n, k) hints size the salts; shrink the per-task target so the
+    # fixture's ~60-deep clusters split.
     monkeypatch.setattr(dd, "_DECIDE_TARGET_ROWS_PER_TASK", 8)
-    from bioclip_vector_db_spark.operators.dedup import _semantic_dedup_decide
-
-    # Rebuild the assigned table the same way semantic_dedup does.
-    v = corpus.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    from bioclip_vector_db_spark.functions.vector import dot_product
-
-    cents1 = cents.groupBy().agg(
-        F.collect_list(F.struct(F.col("cid"), F.col("cvec"))).alias("_cents")
-    ).filter(F.size("_cents") > 0)
-    best = F.array_max(
-        F.transform(
-            F.col("_cents"),
-            lambda x: F.struct(
-                F.round(dot_product(F.col("embedding"), x["cvec"]), 9).alias(
-                    "csim"
-                ),
-                (-x["cid"]).alias("nc"),
-                x["cid"].alias("cid"),
-            ),
-        )
-    )
-    assigned_df = (
-        v.join(F.broadcast(cents1))
-        .withColumn("_best", best)
-        .select(
-            "vec_id",
-            "embedding",
-            F.col("_best.cid").alias("cid"),
-            F.col("_best.csim").alias("csim"),
-        )
-    )
     salted = _semantic_dedup_decide(
         assigned_df, 0.2, kernel="arrow", n_hint=240, k_hint=4
     )

@@ -16,10 +16,15 @@ three claims the docstrings make:
   negligible amount of similarity;
 - DETERMINISM: no RNG anywhere (strided k-means init), same input ->
   identical output, run to run;
-- EXACT-PATH INTEGRITY: the flat kernel stays the default below
-  ROUTED_K_THRESHOLD (every oracle-gated query's regime) and stays
-  reachable at any k via routed=False; tie semantics (round-9 then
-  smallest cid) hold across group boundaries in the routed kernel too.
+- EXACT-PATH INTEGRITY: semantic_dedup stays on the exact expression
+  fold up to LARGE_NLIST_THRESHOLD centroids (every oracle-gated query's
+  regime); tie semantics (round-9 then smallest cid) hold across group
+  boundaries in the routed kernels too.
+
+semantic_dedup picks its tier from the centroid count alone, so the gates
+that compare tiers on one corpus call its private steps directly: seed
+(or supplied) centroids -> _assign_centroids for a named tier ->
+its decide tail (_decide_for_tier).
 """
 
 from __future__ import annotations
@@ -31,8 +36,14 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from bioclip_vector_db_spark.operators.dedup import (
+    SEMDEDUP_TAU,
+    _assign_centroids,
+    _decide_for_tier,
+    _seed_centroids,
+    _semdedup_vectors,
+)
 from bioclip_vector_db_spark.operators.knn_numpy import (
-    ROUTED_K_THRESHOLD,
     _super_centroids,
     argmax_centroid_numpy,
 )
@@ -41,8 +52,7 @@ from bioclip_vector_db_spark.operators.knn_numpy import (
 def _planted(spark, K=600, D=256, N=3000, noise=0.05, seed=0):
     """K unit centroids + N vectors each centroid-plus-noise — the
     structured regime SemDeDup actually runs in (its centroids are k-means
-    means of the corpus being assigned). K > ROUTED_K_THRESHOLD so
-    routed='auto' engages.
+    means of the corpus being assigned).
 
     D=256, not the 64-d test fixtures: mean-based routing reliability
     scales ~ sqrt(D / group_size) against the max of ~g noise scores, so
@@ -53,7 +63,6 @@ def _planted(spark, K=600, D=256, N=3000, noise=0.05, seed=0):
     The gate therefore runs at a realistic dimension; the low-d
     unstructured regime is measured, not gated, by the stress instrument
     (SCALING.md adjudicates the recall trade there)."""
-    assert K > ROUTED_K_THRESHOLD
     rng = np.random.RandomState(seed)
     C = rng.randn(K, D)
     C /= np.linalg.norm(C, axis=1, keepdims=True)
@@ -74,10 +83,45 @@ def _collect_assign(df):
     return {r["vec_id"]: (r["cid"], r["csim"]) for r in df.collect()}
 
 
+def _dist(vecs, cents, **kw):
+    """The distributed tier called directly, for its internal knobs
+    (fixed probing is the reference its margin is gated against)."""
+    from pyspark.sql import types as T
+
+    from bioclip_vector_db_spark.operators import knn_routed
+
+    return knn_routed.routed_best_centroid_distributed(
+        vecs,
+        cents,
+        id_col="cid",
+        cvec_col="cvec",
+        vec_col="embedding",
+        out_field=T.StructField("cid", T.LongType()),
+        score_field="csim",
+        **kw,
+    )
+
+
+def _decisions(assigned, tier, k=None):
+    """semantic_dedup's decide tail for ``tier`` over an assignment ->
+    {vec_id: (cluster_id, kept)}."""
+    return {
+        r.vec_id: (r.cluster_id, r.kept)
+        for r in _decide_for_tier(assigned, SEMDEDUP_TAU, tier, k=k).collect()
+    }
+
+
+def _seed_tier(emb, k, tier):
+    """Seed-rule semantic_dedup with the assignment tier named."""
+    v = _semdedup_vectors(emb)
+    assigned = _assign_centroids(v, _seed_centroids(v, k), tier, n_cents=k)
+    return _decisions(assigned, tier, k)
+
+
 def test_routed_assignment_recall_on_structured_data(spark):
     cents, vecs = _planted(spark)
     flat = _collect_assign(argmax_centroid_numpy(vecs, cents, routed=False))
-    routed = _collect_assign(argmax_centroid_numpy(vecs, cents, routed="auto"))
+    routed = _collect_assign(argmax_centroid_numpy(vecs, cents, routed=True))
     assert set(flat) == set(routed)
     n = len(flat)
     agree = sum(1 for k in flat if flat[k][0] == routed[k][0])
@@ -139,14 +183,26 @@ def test_routed_cross_group_tie_breaks_to_smallest_cid(spark):
 
 
 def test_routed_auto_threshold_and_flat_default(spark):
-    """auto routes above ROUTED_K_THRESHOLD and stays flat at/below it —
-    the oracle-gated regime never sees the approximate kernel."""
-    cents, vecs = _planted(spark, K=ROUTED_K_THRESHOLD + 8, N=400)
-    small = cents.limit(ROUTED_K_THRESHOLD)
-    # Exact-regime check: auto == flat, bit-identical, at k <= threshold.
-    a = _collect_assign(argmax_centroid_numpy(vecs, small, routed="auto"))
-    b = _collect_assign(argmax_centroid_numpy(vecs, small, routed=False))
-    assert a == b
+    """semantic_dedup with supplied centroids routes only ABOVE
+    LARGE_NLIST_THRESHOLD rows: at the threshold it runs the exact
+    expression fold (no Arrow stage) with the exact tail, row-identical
+    to the flat GEMM; one row more and the plan is the in-memory routed
+    tier's map stage. The oracle-gated regime never sees the
+    approximate kernel."""
+    from bioclip_vector_db_spark.operators.dedup import semantic_dedup
+    from bioclip_vector_db_spark.operators.knn_numpy import LARGE_NLIST_THRESHOLD
+
+    cents, vecs = _planted(spark, K=LARGE_NLIST_THRESHOLD + 1, D=32, N=100)
+    small = cents.filter(f"cid < {LARGE_NLIST_THRESHOLD}")
+    at = semantic_dedup(vecs, centroids=small)
+    plan = at._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" not in plan and "array_max" in plan
+    v = _semdedup_vectors(vecs)
+    flat = _decisions(_assign_centroids(v, small, "flat"), "flat")
+    assert {r.vec_id: (r.cluster_id, r.kept) for r in at.collect()} == flat
+    above = semantic_dedup(vecs, centroids=cents)
+    plan = above._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "array_max" not in plan
 
 
 def test_trained_centroid_drift_gate_on_real_fixture(spark, sf_dir, monkeypatch):
@@ -155,7 +211,7 @@ def test_trained_centroid_drift_gate_on_real_fixture(spark, sf_dir, monkeypatch)
     (90% assignment agreement at k=520 over the sf0.1 64-d fixture)
     lived only as SCALING.md prose. This gate enforces the approximate
     path's contract on the third data regime — REAL fixture embeddings
-    with TRAINED centroids at k > ROUTED_K_THRESHOLD — for BOTH
+    with TRAINED centroids at k = 520 — for BOTH
     approximate tiers (in-memory routed and distributed):
 
     Bounds are set from MEASURED values on this exact configuration
@@ -178,7 +234,6 @@ def test_trained_centroid_drift_gate_on_real_fixture(spark, sf_dir, monkeypatch)
     """
     import os
 
-    from bioclip_vector_db_spark.operators.dedup import semantic_dedup
     from bioclip_vector_db_spark.operators.indexing import (
         train_kmeans_centroids,
     )
@@ -193,7 +248,7 @@ def test_trained_centroid_drift_gate_on_real_fixture(spark, sf_dir, monkeypatch)
     emb = load_table(spark, sf01, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    k = ROUTED_K_THRESHOLD + 8  # 520 > threshold on n=2,000 real vectors
+    k = 520  # on n=2,000 real vectors
     cents = (
         train_kmeans_centroids(emb, k, max_iter=8)
         .select(
@@ -203,16 +258,14 @@ def test_trained_centroid_drift_gate_on_real_fixture(spark, sf_dir, monkeypatch)
         .localCheckpoint()  # pin ONE training result for all three runs
     )
 
-    def decisions(routed):
-        return {
-            r.vec_id: (r.cluster_id, r.kept)
-            for r in semantic_dedup(
-                emb, centroids=cents, kernel="numpy", routed=routed
-            ).collect()
-        }
+    v = _semdedup_vectors(emb)
 
-    flat = decisions(False)
-    for tier in (True, "distributed"):
+    def decisions(tier):
+        # Supplied centroids: the routed tiers' tail is capped, arrow.
+        return _decisions(_assign_centroids(v, cents, tier), tier)
+
+    flat = decisions("flat")
+    for tier in ("routed", "distributed"):
         approx = decisions(tier)
         assert set(flat) == set(approx)
         n = len(flat)
@@ -325,11 +378,7 @@ def test_distributed_routed_recall_on_structured_data(spark):
     n = len(flat)
 
     # -- fixed probing: the strict per-miss contract --------------------
-    dist = _collect_assign(
-        argmax_centroid_numpy(
-            vecs, cents, routed="distributed", routed_probe_margin=None
-        )
-    )
+    dist = _collect_assign(_dist(vecs, cents, probe_margin=None))
     assert set(flat) == set(dist)
     agree = sum(1 for k in flat if flat[k][0] == dist[k][0])
     assert agree / n >= 0.99, f"distributed routing recall {agree}/{n}"
@@ -375,7 +424,6 @@ def test_distributed_routed_is_deterministic_and_salt_invariant(spark):
                 id_col="cid",
                 cvec_col="cvec",
                 vec_col="embedding",
-                similarity=True,
                 out_field=T.StructField("cid", T.LongType()),
                 score_field="csim",
                 group_salts=salts,
@@ -571,7 +619,6 @@ def test_distributed_fuzz_internal_consistency(spark, seed, K, D, N, salts):
         id_col="cid",
         cvec_col="cvec",
         vec_col="embedding",
-        similarity=True,
         out_field=T.StructField("cid", T.LongType()),
         score_field="csim",
         group_salts=salts,
@@ -638,13 +685,16 @@ def test_distributed_empty_inputs(spark):
 
 
 def test_semantic_dedup_auto_escalates_to_distributed(spark, monkeypatch):
-    """Wiring gate for the auto tier ladder: above DISTRIBUTED_K_THRESHOLD
-    (unreachable at test scale, so the threshold is lowered) a
-    seed-rule semantic_dedup must route through the DISTRIBUTED kernel
-    — not the collect-based in-memory one — and still emit the
-    exactness-downgrade warning. Pinned with a spy so a future refactor
-    that silently reverts auto to the collecting tier fails here."""
-    from bioclip_vector_db_spark.operators import knn_routed
+    """Wiring gate for the seed-rule tier ladder: k <= LARGE_NLIST_THRESHOLD
+    stays on the expression fold, above it the in-memory routed kernel
+    runs, and above DISTRIBUTED_K_THRESHOLD the DISTRIBUTED kernel — not
+    the collect-based in-memory one — with the exactness-downgrade
+    warning on both routed tiers. Both thresholds are lowered (the real
+    ones are unreachable at test scale) and the kernels spied, so a
+    refactor that silently reverts to the collecting tier fails here."""
+    import warnings
+
+    from bioclip_vector_db_spark.operators import knn_numpy, knn_routed
     from bioclip_vector_db_spark.operators.dedup import semantic_dedup
 
     rng = np.random.RandomState(17)
@@ -653,38 +703,48 @@ def test_semantic_dedup_auto_escalates_to_distributed(spark, monkeypatch):
         [(int(i), V[i].tolist()) for i in range(120)],
         "vec_id long, embedding array<double>",
     )
-    called = {}
-    real = knn_routed.routed_best_centroid_distributed
+    called = []
+    real_dist = knn_routed.routed_best_centroid_distributed
+    real_mem = knn_numpy._routed_best_centroid
 
-    def spy(*a, **kw):
-        called["distributed"] = True
-        return real(*a, **kw)
+    def spy_dist(*a, **kw):
+        called.append("distributed")
+        return real_dist(*a, **kw)
 
+    def spy_mem(*a, **kw):
+        called.append("routed")
+        return real_mem(*a, **kw)
+
+    monkeypatch.setattr(knn_numpy, "LARGE_NLIST_THRESHOLD", 16)
     monkeypatch.setattr(knn_routed, "DISTRIBUTED_K_THRESHOLD", 32)
-    monkeypatch.setattr(knn_routed, "routed_best_centroid_distributed", spy)
+    monkeypatch.setattr(knn_routed, "routed_best_centroid_distributed", spy_dist)
+    monkeypatch.setattr(knn_numpy, "_routed_best_centroid", spy_mem)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        assert semantic_dedup(emb, k=16).count() == 120
+    assert called == []
     with pytest.warns(UserWarning, match="seed-rule centroids"):
-        n = semantic_dedup(emb, k=40, kernel="numpy", routed="auto").count()
-    assert n == 120
-    assert called.get("distributed"), (
-        "auto above DISTRIBUTED_K_THRESHOLD did not take the distributed tier"
+        assert semantic_dedup(emb, k=24).count() == 120
+    assert called == ["routed"]
+    with pytest.warns(UserWarning, match="seed-rule centroids"):
+        assert semantic_dedup(emb, k=40).count() == 120
+    assert called == ["routed", "distributed"], (
+        "k above DISTRIBUTED_K_THRESHOLD did not take the distributed tier"
     )
 
 
 def test_semantic_dedup_distributed_matches_flat_on_structured_corpus(spark):
     """End-to-end SemDeDup keep/drop under the distributed tier vs the
     flat exact kernel on a structured corpus — the operator-level gate,
-    mirroring the in-memory tier's, split by probing mode since the
-    r14-item-2 calibrated-margin default:
+    mirroring the in-memory tier's, split by probing mode:
 
-    - FIXED probing (routed_probe_margin=None): keep/drop IDENTICAL (the
+    - FIXED probing (probe_margin=None): keep/drop IDENTICAL (the
       insurance probes make every routing near-miss land in-cluster on
       this corpus);
-    - CALIBRATED margin (the default): bounded drift — a pruned-probe
-      miss strands a vector alone in a runner-up cluster, flipping its
-      decision conservatively (kept). Bounds from measurement on this
-      exact corpus, then margined."""
-    from bioclip_vector_db_spark.operators.dedup import semantic_dedup
-
+    - CALIBRATED margin (the tier's default): bounded drift — a
+      pruned-probe miss strands a vector alone in a runner-up cluster,
+      flipping its decision conservatively (kept). Bounds from
+      measurement on this exact corpus, then margined."""
     rng = np.random.RandomState(3)
     K, D, per = 530, 128, 3
     C = rng.randn(K, D)
@@ -697,22 +757,21 @@ def test_semantic_dedup_distributed_matches_flat_on_structured_corpus(spark):
             vid += 1
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    def decisions(**kw):
-        return {
-            r.vec_id: (r.cluster_id, r.kept)
-            for r in semantic_dedup(emb, k=K, kernel="numpy", **kw).collect()
-        }
-
-    flat = decisions(routed=False)
+    flat = _seed_tier(emb, K, "flat")
     n = len(flat)
 
-    dist_fixed = decisions(routed="distributed", routed_probe_margin=None)
+    v = _semdedup_vectors(emb)
+    dist_fixed = _decisions(
+        _dist(v, _seed_centroids(v, K), n_centroids=K, probe_margin=None),
+        "distributed",
+        K,
+    )
     assert set(flat) == set(dist_fixed)
     assert all(flat[k][1] == dist_fixed[k][1] for k in flat), "keep/drop diverged"
     agree = sum(1 for k in flat if flat[k][0] == dist_fixed[k][0])
     assert agree / n >= 0.995
 
-    dist_auto = decisions(routed="distributed")
+    dist_auto = _seed_tier(emb, K, "distributed")
     assert set(flat) == set(dist_auto)
     drift = sum(1 for k in flat if flat[k][1] != dist_auto[k][1])
     assert drift / n <= 0.02, f"calibrated-margin drift {drift}/{n}"
@@ -763,15 +822,14 @@ def test_tiled_routing_matches_untiled_and_inversion_is_total():
 
 
 def test_semantic_dedup_warns_on_seedrule_auto_routing(spark):
-    """r11 ADVICE: auto-routing over default seed-rule centroids is an
-    exactness downgrade the caller must SEE — semantic_dedup emits a
-    UserWarning naming the escape hatches; forcing routed=False stays
-    silent (no downgrade happened)."""
+    """Routing over default seed-rule centroids is an exactness downgrade
+    the caller must SEE — semantic_dedup emits a UserWarning naming the
+    escape hatch once k passes LARGE_NLIST_THRESHOLD; the exact fold
+    (k at the threshold) and supplied centroids stay silent."""
     import warnings
 
-    import pytest
-
     from bioclip_vector_db_spark.operators.dedup import semantic_dedup
+    from bioclip_vector_db_spark.operators.knn_numpy import LARGE_NLIST_THRESHOLD
 
     rng = np.random.RandomState(11)
     V = rng.randn(60, 16)
@@ -780,14 +838,12 @@ def test_semantic_dedup_warns_on_seedrule_auto_routing(spark):
         "vec_id long, embedding array<double>",
     )
     with pytest.warns(UserWarning, match="seed-rule centroids"):
-        semantic_dedup(
-            emb, k=ROUTED_K_THRESHOLD + 8, kernel="numpy", routed="auto"
-        ).count()
+        semantic_dedup(emb, k=LARGE_NLIST_THRESHOLD + 1).count()
+    cents = _seed_centroids(_semdedup_vectors(emb), 8)
     with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        semantic_dedup(
-            emb, k=ROUTED_K_THRESHOLD + 8, kernel="numpy", routed=False
-        ).count()
+        warnings.simplefilter("error", UserWarning)
+        semantic_dedup(emb, k=LARGE_NLIST_THRESHOLD).count()
+        semantic_dedup(emb, centroids=cents).count()
 
 
 def test_routed_empty_centroids_empty_out(spark):
@@ -802,8 +858,6 @@ def test_semantic_dedup_routed_matches_flat_on_structured_corpus(spark):
     structured corpus — the operator-level form of the recall gate.
     Seed-rule centroids (first k rows) ARE cluster exemplars here because
     the corpus is built as k planted blobs appearing exemplar-first."""
-    from bioclip_vector_db_spark.operators.dedup import semantic_dedup
-
     rng = np.random.RandomState(3)
     K, D, per = 530, 128, 3
     C = rng.randn(K, D)
@@ -820,14 +874,8 @@ def test_semantic_dedup_routed_matches_flat_on_structured_corpus(spark):
             rows.append((int(vid), v.tolist()))
             vid += 1
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    flat = {
-        r.vec_id: (r.cluster_id, r.kept)
-        for r in semantic_dedup(emb, k=K, kernel="numpy", routed=False).collect()
-    }
-    routed = {
-        r.vec_id: (r.cluster_id, r.kept)
-        for r in semantic_dedup(emb, k=K, kernel="numpy", routed="auto").collect()
-    }
+    flat = _seed_tier(emb, K, "flat")
+    routed = _seed_tier(emb, K, "routed")
     assert set(flat) == set(routed)
     n = len(flat)
     # The operator's OUTPUT is the keep/drop decision: it must be
@@ -958,7 +1006,6 @@ def test_auto_salts_engage_and_match_salts_one(spark, monkeypatch):
                 id_col="cid",
                 cvec_col="cvec",
                 vec_col="embedding",
-                similarity=True,
                 out_field=T.StructField("cid", T.LongType()),
                 score_field="csim",
                 group_salts=salts,
@@ -980,124 +1027,8 @@ def test_auto_salts_engage_and_match_salts_one(spark, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# f32 payload encoding (r13 verdict item 4): the routed-explode shuffle is
-# the tier's dominant cost and p x payload its information floor — but each
-# element need not be 8 bytes. Opt-in float32 halves the shuffle bytes; the
-# gates pin that the ~1e-7 dot perturbation stays behind round-9 in practice
-# and that every structural invariant (salts, determinism) survives.
-# ---------------------------------------------------------------------------
-
-
-def test_distributed_f32_payload_parity(spark):
-    """f32 payload vs the default f64 on the planted corpus: assignment
-    agreement >= 99.9% (a flip needs two candidates within ~1e-7 of each
-    other AFTER round-9 — a near-tie), scores within 1e-6, and the
-    result is deterministic run-to-run (measured: identical on this
-    fixture)."""
-    from pyspark.sql import types as T
-
-    from bioclip_vector_db_spark.operators import knn_routed
-
-    cents, vecs = _planted(spark)
-    f64 = _collect_assign(
-        argmax_centroid_numpy(vecs, cents, routed="distributed")
-    )
-    f32 = _collect_assign(
-        argmax_centroid_numpy(
-            vecs, cents, routed="distributed", routed_payload="f32"
-        )
-    )
-    assert set(f64) == set(f32)
-    n = len(f64)
-    agree = sum(1 for k in f64 if f64[k][0] == f32[k][0])
-    assert agree / n >= 0.999, f"f32 payload agreement {agree}/{n}"
-    assert max(abs(f64[k][1] - f32[k][1]) for k in f64) <= 1e-6
-    again = _collect_assign(
-        argmax_centroid_numpy(
-            vecs, cents, routed="distributed", routed_payload="f32"
-        )
-    )
-    assert f32 == again
-
-    with pytest.raises(ValueError, match="payload"):
-        knn_routed.routed_best_centroid_distributed(
-            vecs,
-            cents,
-            id_col="cid",
-            cvec_col="cvec",
-            vec_col="embedding",
-            similarity=True,
-            out_field=T.StructField("cid", T.LongType()),
-            payload="f16",
-        )
-
-
-def test_distributed_f32_payload_salt_invariance(spark):
-    """The salt-invariance contract must hold under the narrowed payload
-    too: per-group argbest is computed per salt and the struct-merge is
-    associative — neither depends on element width, and the f32
-    narrowing happens BEFORE salting (one cast per vector, not per
-    replica), so salted and unsalted runs score identical float32
-    payloads."""
-    from pyspark.sql import types as T
-
-    from bioclip_vector_db_spark.operators import knn_routed
-
-    cents, vecs = _planted(spark, K=520, N=700)
-
-    def run(salts):
-        return _collect_assign(
-            knn_routed.routed_best_centroid_distributed(
-                vecs,
-                cents,
-                id_col="cid",
-                cvec_col="cvec",
-                vec_col="embedding",
-                similarity=True,
-                out_field=T.StructField("cid", T.LongType()),
-                score_field="csim",
-                group_salts=salts,
-                payload="f32",
-            )
-        )
-
-    a = run(1)
-    assert a == run(8)
-
-
-def test_semantic_dedup_f32_payload_end_to_end(spark):
-    """semantic_dedup(routed='distributed', routed_payload='f32') end to
-    end on the planted corpus: keep/drop decisions vs the f64 distributed
-    run must stay inside a 0.5% drift bound (measured: identical on this
-    fixture — planted dups dot at ~1.0 and uniques at ~noise, nowhere
-    near the 9th decimal)."""
-    from bioclip_vector_db_spark.operators.dedup import semantic_dedup
-
-    cents, vecs = _planted(spark, K=520, N=1500)
-
-    def decisions(payload):
-        return {
-            r.vec_id: r.kept
-            for r in semantic_dedup(
-                vecs,
-                centroids=cents,
-                kernel="numpy",
-                routed="distributed",
-                routed_payload=payload,
-            ).collect()
-        }
-
-    f64 = decisions("f64")
-    f32 = decisions("f32")
-    assert set(f64) == set(f32)
-    drift = sum(1 for k in f64 if f64[k] != f32[k])
-    assert drift / len(f64) <= 0.005, f"f32 keep/drop drift {drift}/{len(f64)}"
-
-
-# ---------------------------------------------------------------------------
-# Adaptive probing (r13 verdict item 5): the dist_payload stress leg showed
-# the cogroup term is ROW-boxing-bound on local[*] (f32 halves the bytes for
-# a ~flat wall), so the lever that moves the wall is the replicated ROW
+# Adaptive probing (r13 verdict item 5): the cogroup term is ROW-boxing-bound
+# on local[*], so the lever that moves the wall is the replicated ROW
 # count. probe_margin ships a vector only to probed groups within a round-9
 # routing-score margin of its best. Bounds set from measurement
 # (2026-08-16): planted corpus — margin=0.2 IDENTICAL to fixed probing at
@@ -1124,7 +1055,6 @@ def _run_margin(spark, vecs, cents, margin, salts=None):
                 id_col="cid",
                 cvec_col="cvec",
                 vec_col="embedding",
-                similarity=True,
                 out_field=T.StructField("cid", T.LongType()),
                 score_field="csim",
                 probe_margin=margin,
@@ -1179,7 +1109,6 @@ def test_distributed_adaptive_probing_salt_invariance_and_validation(spark):
             id_col="cid",
             cvec_col="cvec",
             vec_col="embedding",
-            similarity=True,
             out_field=T.StructField("cid", T.LongType()),
             probe_margin=-0.1,
         )
@@ -1215,7 +1144,7 @@ def test_distributed_adaptive_probing_total_under_nan_embedding(spark):
 # ---------------------------------------------------------------------------
 
 
-def _run_distributed(spark, vecs, cents, payload="f64", margin=None, salts=None):
+def _run_distributed(spark, vecs, cents, margin=None, salts=None):
     from pyspark.sql import types as T
 
     from bioclip_vector_db_spark.operators import knn_routed
@@ -1230,10 +1159,8 @@ def _run_distributed(spark, vecs, cents, payload="f64", margin=None, salts=None)
                 id_col="cid",
                 cvec_col="cvec",
                 vec_col="embedding",
-                similarity=True,
                 out_field=T.StructField("cid", T.LongType()),
                 score_field="csim",
-                payload=payload,
                 probe_margin=margin,
                 group_salts=salts,
             )
@@ -1338,7 +1265,6 @@ def test_distributed_hot_group_max_fanin_bounded(spark, monkeypatch):
                     id_col="cid",
                     cvec_col="cvec",
                     vec_col="embedding",
-                    similarity=True,
                     out_field=T.StructField("cid", T.LongType()),
                     score_field="csim",
                     probe_margin=None,  # fixed probing = max fan-in

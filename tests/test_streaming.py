@@ -207,3 +207,19 @@ def test_footer_schema_inference_timestamp_units(spark, tmp_path, unit, tz):
     )
     fast = infer_events_schema(spark, str(tmp_path), "*.parquet")
     assert fast is None or fast == spark.read.parquet(str(tmp_path)).schema
+
+
+def test_footer_schema_inference_logs_its_fallback(spark, tmp_path, caplog):
+    """An unreadable footer sends the caller to the batch reader, and the
+    reason is logged at debug level instead of being swallowed."""
+    import logging
+
+    from bioclip_vector_db_spark.sources.catalog import infer_events_schema
+
+    (tmp_path / "ev.parquet").write_bytes(b"not a parquet file")
+    with caplog.at_level(logging.DEBUG, logger="bioclip_vector_db_spark.sources.catalog"):
+        assert infer_events_schema(spark, str(tmp_path), "*.parquet") is None
+    assert any(
+        "falling back" in r.getMessage() and r.levelno == logging.DEBUG
+        for r in caplog.records
+    )

@@ -147,6 +147,32 @@ def build_corpora(
     return emb_path, doc_path
 
 
+def seed_assign(emb, tier: str, *, k: "int | None" = None, n: "int | None" = None):
+    """Seed-rule SemDeDup assignment with the tier NAMED ('flat',
+    'routed', 'distributed') — semantic_dedup picks its tier from k alone,
+    so legs that pin one call its private steps. k defaults to the
+    operator's own max(K_MIN, ceil(n / TARGET_CLUSTER)). Returns
+    (assigned, k)."""
+    from bioclip_vector_db_spark.operators import dedup as D
+
+    if k is None:
+        k = max(D.SEMDEDUP_K_MIN, -(-n // D.SEMDEDUP_TARGET_CLUSTER))
+    v = D._semdedup_vectors(emb)
+    assigned = D._assign_centroids(
+        v, D._seed_centroids(v, k), tier, n_cents=k, n_vec=n
+    )
+    return assigned, k
+
+
+def seed_tier(emb, tier: str, *, k=None, n=None):
+    """semantic_dedup with the tier named: seed_assign, then the
+    operator's own decide tail for that tier."""
+    from bioclip_vector_db_spark.operators import dedup as D
+
+    assigned, k = seed_assign(emb, tier, k=k, n=n)
+    return D._decide_for_tier(assigned, D.SEMDEDUP_TAU, tier, n_vec=n, k=k)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--m", nargs="+", type=int, default=[1, 2, 4])
@@ -282,31 +308,24 @@ def main() -> None:
                 )
 
             if "semantic_dedup_numpy" in ops:
-                # The numpy assignment kernel at the same scale: k grows
+                # The numpy assignment kernels at the same scale: k grows
                 # with n, so the expr fold's n x k x dim interpreted
-                # compute is the superlinear term this kernel removes —
-                # and above ROUTED_K_THRESHOLD (k > 512, i.e. M >= 32
-                # here) the kernel further routes two-tier, cutting the
-                # flat GEMM's O(n^2 d / 64) to O(n sqrt(k) d) (the r10
-                # verdict's scale-killer fix). The record self-documents
-                # which regime each row ran in (routed_assignment), and
-                # keeps the removed count so the routed rows' decision
-                # drift vs the flat rows is adjudicable.
-                from bioclip_vector_db_spark.operators.dedup import (
-                    SEMDEDUP_K_MIN,
-                    SEMDEDUP_TARGET_CLUSTER,
-                )
+                # compute is the superlinear term they remove. Up to
+                # LARGE_NLIST_THRESHOLD centroids this runs the flat
+                # exact GEMM; above it the in-memory two-tier routed
+                # kernel, cutting the flat O(n^2 d / 64) to
+                # O(n sqrt(k) d). The record self-documents which regime
+                # each row ran in (routed_assignment), and keeps the
+                # removed count so the routed rows' decision drift vs
+                # the flat rows is adjudicable.
                 from bioclip_vector_db_spark.operators.knn_numpy import (
-                    ROUTED_K_THRESHOLD,
+                    LARGE_NLIST_THRESHOLD,
                 )
 
-                # Derive k exactly as the operator does — a hardcoded
-                # copy would let the record's routed_assignment field
-                # drift from the kernel that actually ran if the
-                # operator's constants are ever tuned.
-                k_sd = max(SEMDEDUP_K_MIN, -(-n_emb // SEMDEDUP_TARGET_CLUSTER))
+                k_sd = max(D.SEMDEDUP_K_MIN, -(-n_emb // D.SEMDEDUP_TARGET_CLUSTER))
+                tier = "routed" if k_sd > LARGE_NLIST_THRESHOLD else "flat"
                 t0 = time.perf_counter()
-                sd = transient_persist(semantic_dedup(emb, kernel="numpy"))
+                sd = transient_persist(seed_tier(emb, tier, n=n_emb))
                 n_out = sd.count()
                 n_removed = sd.filter(~F.col("kept")).count()
                 emit(
@@ -317,27 +336,24 @@ def main() -> None:
                     out_rows=n_out,
                     removed=n_removed,
                     k=k_sd,
-                    routed_assignment=k_sd > ROUTED_K_THRESHOLD,
+                    routed_assignment=tier == "routed",
                 )
 
             if "semantic_dedup_dist" in ops:
-                # r12: the DISTRIBUTED bottom tier at the same scale as
-                # the semantic_dedup_numpy decades — same O(n sqrt(8k) d)
+                # The DISTRIBUTED bottom tier at the same scale as the
+                # semantic_dedup_numpy decades — same O(n sqrt(8k) d)
                 # FLOPs as the in-memory routed kernel, but the centroid
                 # table is never collected (only the capped router
                 # sample is), at the price of a linear O(8 n d)-byte
                 # routed-explode shuffle. Removed-count recorded so
                 # decision drift vs the flat/routed rows is adjudicable
                 # from the record.
-                from bioclip_vector_db_spark.operators.dedup import (
-                    SEMDEDUP_K_MIN,
-                    SEMDEDUP_TARGET_CLUSTER,
-                )
-
-                k_sd = max(SEMDEDUP_K_MIN, -(-n_emb // SEMDEDUP_TARGET_CLUSTER))
                 t0 = time.perf_counter()
+                assigned, k_sd = seed_assign(emb, "distributed", n=n_emb)
                 sd = transient_persist(
-                    semantic_dedup(emb, kernel="numpy", routed="distributed")
+                    D._decide_for_tier(
+                        assigned, D.SEMDEDUP_TAU, "distributed", n_vec=n_emb, k=k_sd
+                    )
                 )
                 n_out = sd.count()
                 n_removed = sd.filter(~F.col("kept")).count()
@@ -375,7 +391,6 @@ def main() -> None:
                         id_col="cid",
                         cvec_col="cvec",
                         vec_col="embedding",
-                        similarity=True,
                         out_field=T_.StructField("cid", T_.LongType()),
                         group_salts=salts,
                     ).select("vec_id", "cid")
@@ -421,20 +436,30 @@ def main() -> None:
                 # merge; total wall is therefore a hair above the
                 # uninstrumented leg's).
                 from bioclip_vector_db_spark.operators import knn_routed
-                from bioclip_vector_db_spark.operators.dedup import (
-                    SEMDEDUP_K_MIN,
-                    SEMDEDUP_TARGET_CLUSTER,
-                )
 
-                k_sd = max(SEMDEDUP_K_MIN, -(-n_emb // SEMDEDUP_TARGET_CLUSTER))
                 stage: dict = {}
                 tail: dict = {}
                 knn_routed._INSTRUMENT = stage
                 D._DECIDE_INSTRUMENT = tail
                 try:
                     t0 = time.perf_counter()
+                    assigned, k_sd = seed_assign(emb, "distributed", n=n_emb)
+                    # Pin the assignment MERGE term (global struct-merge +
+                    # join-back) separately from the decide tail: the
+                    # candidate table is already persisted by the
+                    # instrument, so this count executes exactly the merge.
+                    assigned = transient_persist(assigned)
+                    t1 = time.perf_counter()
+                    tail["assign_rows"] = assigned.count()
+                    tail["assign_merge_s"] = time.perf_counter() - t1
                     sd = transient_persist(
-                        semantic_dedup(emb, kernel="numpy", routed="distributed")
+                        D._decide_for_tier(
+                            assigned,
+                            D.SEMDEDUP_TAU,
+                            "distributed",
+                            n_vec=n_emb,
+                            k=k_sd,
+                        )
                     )
                     n_out = sd.count()
                     wall = time.perf_counter() - t0
@@ -481,33 +506,12 @@ def main() -> None:
                 # removed sets must be identical; walls attribute the cut.
                 from bioclip_vector_db_spark.operators.dedup import (
                     SEMDEDUP_DECIDE_CAP,
-                    SEMDEDUP_K_MIN,
-                    SEMDEDUP_TARGET_CLUSTER,
                     SEMDEDUP_TAU,
                     _semantic_dedup_decide,
                 )
-                from bioclip_vector_db_spark.operators.knn_numpy import (
-                    argmax_centroid_numpy,
-                )
 
-                k_sd = max(SEMDEDUP_K_MIN, -(-n_emb // SEMDEDUP_TARGET_CLUSTER))
-                vv = emb.select(
-                    "vec_id",
-                    F.col("embedding").cast("array<double>").alias("embedding"),
-                )
-                cents = vv.filter(F.col("vec_id") < k_sd).select(
-                    F.col("vec_id").alias("cid"),
-                    F.col("embedding").alias("cvec"),
-                )
-                assigned = transient_persist(
-                    argmax_centroid_numpy(
-                        vv,
-                        cents,
-                        routed="distributed",
-                        n_centroids=k_sd,
-                        n_vectors=n_emb,
-                    )
-                )
+                assigned, k_sd = seed_assign(emb, "distributed", n=n_emb)
+                assigned = transient_persist(assigned)
                 assigned.count()  # pin assignment untimed
 
                 def run_decide(kern):
@@ -583,7 +587,7 @@ def main() -> None:
                 # broken) so cluster depth = n/64 grows with M — the
                 # regime a skewed real corpus produces and the ladder's
                 # seed-saturated tail only brushes. With the decide cap
-                # (auto on the routed tiers, 256 = 4x contract depth)
+                # (on the routed tiers, 256 = 4x contract depth)
                 # per-cluster pair work is O(depth * 256), so the capped
                 # wall must double per doubling while the EXACT twin's
                 # pair join doubles its per-pair count TWICE per
@@ -596,11 +600,7 @@ def main() -> None:
                 )
 
                 t0 = time.perf_counter()
-                sd_c = transient_persist(
-                    semantic_dedup(
-                        emb, k=64, kernel="numpy", routed="distributed"
-                    )
-                )
+                sd_c = transient_persist(seed_tier(emb, "distributed", k=64))
                 n_out = sd_c.count()
                 wall_c = time.perf_counter() - t0
                 rem_c = sd_c.filter(~F.col("kept"))
@@ -608,14 +608,9 @@ def main() -> None:
                 extra = {}
                 if m == max(args.m):
                     t0 = time.perf_counter()
+                    assigned, _ = seed_assign(emb, "distributed", k=64)
                     sd_e = transient_persist(
-                        semantic_dedup(
-                            emb,
-                            k=64,
-                            kernel="numpy",
-                            routed="distributed",
-                            decide_cap=None,
-                        )
+                        D._semantic_dedup_decide(assigned, D.SEMDEDUP_TAU)
                     )
                     sd_e.count()
                     wall_e = time.perf_counter() - t0
@@ -644,73 +639,6 @@ def main() -> None:
                     depth=n_emb // 64,
                     decide_cap=SEMDEDUP_DECIDE_CAP,
                     **extra,
-                )
-
-            if "dist_payload" in ops:
-                # r13 verdict item 4: the routed-explode shuffle ships
-                # each vector probes x as float64 — the tier's dominant,
-                # shuffle/serialization-bound term. Measure the opt-in
-                # f32 payload against the default at the same decade:
-                # per-term walls both ways (the instrument pins
-                # route_cogroup_s separately) plus ASSIGNMENT
-                # disagreement, so the byte/wall cut and its drift price
-                # land in one record.
-                from pyspark.sql import types as T_
-                from bioclip_vector_db_spark.operators import knn_routed
-                from bioclip_vector_db_spark.operators.knn_routed import (
-                    routed_best_centroid_distributed,
-                )
-
-                k_dp = max(8, -(-n_emb // 64))
-                cent = emb.filter(F.col("vec_id") < k_dp).select(
-                    F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-                )
-
-                def dp_assign(payload):
-                    stage: dict = {}
-                    knn_routed._INSTRUMENT = stage
-                    try:
-                        t0 = time.perf_counter()
-                        a = transient_persist(
-                            routed_best_centroid_distributed(
-                                emb,
-                                cent,
-                                id_col="cid",
-                                cvec_col="cvec",
-                                vec_col="embedding",
-                                similarity=True,
-                                out_field=T_.StructField("cid", T_.LongType()),
-                                payload=payload,
-                            ).select("vec_id", "cid")
-                        )
-                        a.count()
-                        wall = time.perf_counter() - t0
-                    finally:
-                        knn_routed._INSTRUMENT = None
-                    return a, wall, stage
-
-                a64, w64, s64 = dp_assign("f64")
-                a32, w32, s32 = dp_assign("f32")
-                n_agree = (
-                    a64.join(
-                        a32.select("vec_id", F.col("cid").alias("cid32")),
-                        "vec_id",
-                    )
-                    .filter(F.col("cid") == F.col("cid32"))
-                    .count()
-                )
-                emit(
-                    "dist_payload",
-                    m,
-                    n_emb,
-                    w64 + w32,
-                    k=k_dp,
-                    wall_f64_s=round(w64, 2),
-                    wall_f32_s=round(w32, 2),
-                    route_cogroup_f64_s=round(s64.get("route_cogroup_s", 0), 2),
-                    route_cogroup_f32_s=round(s32.get("route_cogroup_s", 0), 2),
-                    assign_agree=n_agree,
-                    assign_disagree=n_emb - n_agree,
                 )
 
             if "dist_skew_route" in ops:
@@ -768,7 +696,6 @@ def main() -> None:
                             id_col="cid",
                             cvec_col="cvec",
                             vec_col="embedding",
-                            similarity=True,
                             out_field=T_.StructField("cid", T_.LongType()),
                             probe_margin=None,  # fixed probing = max fan-in
                         ).select("vec_id", "cid")
@@ -899,13 +826,11 @@ def main() -> None:
                 )
 
             if "assign" in ops:
-                # r10 verdict item 6: assign_partitions has the same
-                # n x k GEMM shape as SemDeDup assignment (k = nlist,
-                # grown with the corpus by the index contract). Measure
-                # the flat exact kernel against the two-tier routed one
-                # at the SAME seed-centroid table and record their
-                # agreement — the routed kernel's IVF recall trade, on
-                # the worst-case (unstructured 64-d) corpus.
+                # assign_partitions has the same n x k GEMM shape as
+                # SemDeDup assignment (k = nlist, grown with the corpus by
+                # the index contract): time the flat exact kernel at a
+                # seed-centroid table on the worst-case (unstructured
+                # 64-d) corpus.
                 from bioclip_vector_db_spark.operators.knn_numpy import (
                     assign_partitions_numpy,
                 )
@@ -916,38 +841,10 @@ def main() -> None:
                     F.col("embedding").alias("centroid"),
                 ).localCheckpoint()
                 t0 = time.perf_counter()
-                flat = transient_persist(
-                    assign_partitions_numpy(emb, cent, routed=False)
-                )
+                flat = transient_persist(assign_partitions_numpy(emb, cent))
                 flat.count()
                 t_flat = time.perf_counter() - t0
-                t0 = time.perf_counter()
-                routed = transient_persist(
-                    assign_partitions_numpy(emb, cent, routed=True)
-                )
-                routed.count()
-                t_routed = time.perf_counter() - t0
-                n_agree = (
-                    flat.select("vec_id", "partition_id")
-                    .join(
-                        routed.select(
-                            "vec_id", F.col("partition_id").alias("rpid")
-                        ),
-                        "vec_id",
-                    )
-                    .filter(F.col("partition_id") == F.col("rpid"))
-                    .count()
-                )
-                emit(
-                    "assign",
-                    m,
-                    n_emb,
-                    t_flat + t_routed,
-                    nlist=nlist,
-                    wall_flat_s=round(t_flat, 2),
-                    wall_routed_s=round(t_routed, 2),
-                    agree_pct=round(100.0 * n_agree / max(n_emb, 1), 2),
-                )
+                emit("assign", m, n_emb, t_flat, nlist=nlist, wall_flat_s=round(t_flat, 2))
 
             if "knn_brute" in ops:
                 queries = emb.filter(F.col("vec_id") % 97 == 0).select(
