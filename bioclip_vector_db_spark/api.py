@@ -88,13 +88,20 @@ class VectorSearchEngine:
             self.centroids, "partition_id", "centroid"
         )
         seed_kernel_choice(self.centroids, len(self._centroid_ids))
-        self._read_grown_tables()
+        self.corpus = spark.read.parquet(f"{index_dir}/corpus")
+        self.id_mapping = spark.read.parquet(f"{index_dir}/id_mapping")
 
     def _read_grown_tables(self) -> None:
-        """(Re-)read the two tables appends grow: a parquet read lists its
-        files once, so rows appended later need a new read."""
-        self.corpus = self.spark.read.parquet(f"{self.index_dir}/corpus")
-        self.id_mapping = self.spark.read.parquet(f"{self.index_dir}/id_mapping")
+        """Re-read the two tables appends grow: a parquet read lists its
+        files once, so rows appended later need a new read. Appends never
+        change a table's schema, so the re-read takes the one inferred at
+        open and runs no footer-inference job."""
+        self.corpus = self.spark.read.schema(self.corpus.schema).parquet(
+            f"{self.index_dir}/corpus"
+        )
+        self.id_mapping = self.spark.read.schema(self.id_mapping.schema).parquet(
+            f"{self.index_dir}/id_mapping"
+        )
 
     # -- search (POST /search analog) ------------------------------------
 

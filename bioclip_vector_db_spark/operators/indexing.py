@@ -21,11 +21,14 @@ Reference semantics re-expressed (file:line in /root/reference):
   metadata_storage.py:103-199) -> hash joins; implements the reference's
   unimplemented ``batch_get_original_id`` stub (metadata_storage.py:175-177).
 
-Scale: the whole build is one job — scan -> (embed UDF) -> broadcast-join
-centroids -> window faiss_id -> write.partitionBy(partition_id). The only
-shuffles are the k-means fit sample and the per-partition window; the
-id_mapping sidecar is co-partitioned with the vectors so O25 remaps are
-shuffle-free joins at serve time.
+Scale: the build evaluates its input once — scan -> (embed UDF) into one
+persist whose filling count gives N — then fits k-means on it, assigns
+(broadcast centroids, map-side argmin), numbers faiss ids with the
+per-partition window, and writes corpus and id_mapping with
+write.partitionBy(partition_id). The only shuffles are the k-means fit
+sample and the per-partition window; the id_mapping sidecar is
+co-partitioned with the vectors so O25 remaps are shuffle-free joins at
+serve time.
 """
 
 from __future__ import annotations
@@ -43,6 +46,7 @@ from .knn import (
     assign_partitions,
     assigned_corpus,
     fixture_centroids,
+    seed_kernel_choice,
 )
 
 # ---------------------------------------------------------------------------
@@ -72,9 +76,15 @@ def train_kmeans_centroids(
     TODO admits a shuffle is missing, vector_db.py:73); we use a seeded
     random sample, which is the statistically sound version. Cosine distance
     matches the reference's inner-product space over normalized vectors.
+
+    The table is a JVM local relation built from an Arrow table, so no
+    action on it starts a Python worker, and its ``kernel='auto'`` choice
+    is seeded from the fitted center count: assigning against it runs no
+    count probe. The fit's feature cache is released before this returns.
     """
+    import pyarrow as pa
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     train = vectors if train_fraction is None else vectors.sample(train_fraction, seed=seed)
     feats = train.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
@@ -85,13 +95,21 @@ def train_kmeans_centroids(
     # re-reading the source every iteration.
     n = train.count()
     feats = feats.repartition(max(1, n // 50_000)).cache()
-    model = KMeans(
-        k=k, seed=seed, maxIter=max_iter, distanceMeasure="cosine", initMode=init_mode
-    ).fit(feats)
-    spark = vectors.sparkSession
-    centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    return spark.createDataFrame(
-        centers,
+    try:
+        model = KMeans(
+            k=k, seed=seed, maxIter=max_iter, distanceMeasure="cosine", initMode=init_mode
+        ).fit(feats)
+    finally:
+        feats.unpersist()
+    centers = [c.tolist() for c in model.clusterCenters()]
+    table = pa.table(
+        {
+            "partition_id": pa.array(range(len(centers)), pa.int32()),
+            "centroid": pa.array(centers, pa.list_(pa.float64())),
+        }
+    )
+    cent = vectors.sparkSession.createDataFrame(
+        table,
         T.StructType(
             [
                 T.StructField("partition_id", T.IntegerType(), False),
@@ -99,6 +117,8 @@ def train_kmeans_centroids(
             ]
         ),
     )
+    seed_kernel_choice(cent, len(centers))
+    return cent
 
 
 def with_faiss_ids(assigned: DataFrame, order_col: str = "vec_id") -> DataFrame:
@@ -123,6 +143,18 @@ def build_id_mapping(assigned: DataFrame) -> DataFrame:
     )
 
 
+def _read_written(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Read a table written with ``partitionBy("partition_id")`` under the
+    schema its writer held, laid out as ``spark.read.parquet`` infers it
+    (partition column last, every field nullable) but with no footer job;
+    the partition column keeps the writer's type."""
+    fields = [f for f in schema.fields if f.name != "partition_id"]
+    fields += [f for f in schema.fields if f.name == "partition_id"]
+    return spark.read.schema(
+        T.StructType([T.StructField(f.name, f.dataType, True) for f in fields])
+    ).parquet(path)
+
+
 def build_index(
     vectors: DataFrame,
     output_dir: str,
@@ -131,7 +163,7 @@ def build_index(
     seed: int = 42,
     centroids: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """The full offline build (entry point 1, SURVEY.md §3.1) as one job:
+    """The full offline build (entry point 1, SURVEY.md §3.1):
     train -> assign -> faiss ids -> partitioned writes.
 
     Pass ``centroids`` to build against an EXISTING leader table (no
@@ -140,8 +172,19 @@ def build_index(
 
     Writes three tables under ``output_dir``: ``corpus`` (partitioned by
     partition_id — the IVF layout; O3/O4), ``centroids`` (the leader index;
-    O5), ``id_mapping`` (the sidecar; O6). Returns the DataFrames plus
-    build metrics.
+    O5), ``id_mapping`` (the sidecar; O6). Returns reads of the written
+    ``corpus`` and ``id_mapping``, the centroid table, and build metrics.
+
+    ``vectors`` is evaluated once: unless the caller already cached it,
+    it is persisted, the count that fills the persist gives ``n``, and the
+    k-means fit, the assignment and the corpus write all read that one
+    materialization (the reference embeds each record once and fills its
+    train buffer from the same stream, vector_db.py:102-118,
+    storage_impl.py:103-105). The persist is released right after the
+    corpus write, and the corpus persist after the id_mapping write; a
+    caller's own persist of ``vectors`` is left as it was. The
+    ``kernel='auto'`` choice is seeded from the fitted center count, or
+    from one count of supplied ``centroids``, so no count probe runs.
 
     O16/O31 (the reference's running insert counter and @timer decorator,
     storage_interface.py:22-24, neighborhood_server.py:31-52) map to
@@ -150,45 +193,60 @@ def build_index(
     """
     import time
 
+    from pyspark import StorageLevel
     from pyspark.sql import Observation
 
+    spark = vectors.sparkSession
     t0 = time.perf_counter()
-    n = vectors.count()
-    if centroids is not None:
-        cent = centroids
-        k = k or cent.count()
-    else:
-        k = k or derive_nlist(n)
-        cent = train_kmeans_centroids(vectors, k, seed=seed)
-    t_train = time.perf_counter()
-    assigned = assign_partitions(vectors, cent)
-    # Persist: the corpus lineage (assignment argmin + faiss-id window over
-    # every vector) feeds BOTH writes below — without this the most
-    # expensive stage of the build runs twice.
-    corpus = with_faiss_ids(assigned).persist()
-    obs = Observation("build_counts")
-    corpus_obs = corpus.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_records"),
-        # DISTINCT aggregates are disallowed in observed metrics; the HLL
-        # sketch is the monitoring-grade equivalent (exact for tiny k).
-        F.approx_count_distinct("partition_id").alias("n_partitions_used"),
-    )
-    id_mapping = corpus.select(
-        "partition_id",
-        "faiss_id",
-        F.col("vec_id").cast("string").alias("original_id"),
-        F.to_json(F.struct("label")).alias("metadata"),
-        F.current_timestamp().alias("created_at"),
-    )
-    corpus_obs.write.mode("overwrite").partitionBy("partition_id").parquet(
-        f"{output_dir}/corpus"
-    )
-    t_corpus = time.perf_counter()
-    cent.write.mode("overwrite").parquet(f"{output_dir}/centroids")
-    id_mapping.write.mode("overwrite").partitionBy("partition_id").parquet(
-        f"{output_dir}/id_mapping"
-    )
+    owned = vectors.storageLevel == StorageLevel.NONE
+    if owned:
+        vectors.persist()
+    try:
+        n = vectors.count()
+        if centroids is not None:
+            cent = centroids
+            n_cent = cent.count()
+            seed_kernel_choice(cent, n_cent)
+            k = k or n_cent
+        else:
+            k = k or derive_nlist(n)
+            cent = train_kmeans_centroids(vectors, k, seed=seed)
+        t_train = time.perf_counter()
+        # Persist: the corpus lineage (assignment argmin + faiss-id window
+        # over every vector) feeds BOTH table writes below.
+        corpus = with_faiss_ids(assign_partitions(vectors, cent)).persist()
+        try:
+            obs = Observation("build_counts")
+            corpus_obs = corpus.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_records"),
+                # DISTINCT aggregates are disallowed in observed metrics; the
+                # HLL sketch is the monitoring-grade equivalent (exact for
+                # tiny k).
+                F.approx_count_distinct("partition_id").alias("n_partitions_used"),
+            )
+            id_mapping = corpus.select(
+                "partition_id",
+                "faiss_id",
+                F.col("vec_id").cast("string").alias("original_id"),
+                F.to_json(F.struct("label")).alias("metadata"),
+                F.current_timestamp().alias("created_at"),
+            )
+            corpus_obs.write.mode("overwrite").partitionBy("partition_id").parquet(
+                f"{output_dir}/corpus"
+            )
+            t_corpus = time.perf_counter()
+            if owned:
+                vectors.unpersist()
+            cent.write.mode("overwrite").parquet(f"{output_dir}/centroids")
+            id_mapping.write.mode("overwrite").partitionBy("partition_id").parquet(
+                f"{output_dir}/id_mapping"
+            )
+        finally:
+            corpus.unpersist()
+    finally:
+        if owned:
+            vectors.unpersist()
     metrics = {
         **obs.get,
         "n_input": n,
@@ -198,9 +256,9 @@ def build_index(
         "total_sec": round(time.perf_counter() - t0, 3),
     }
     return {
-        "corpus": corpus,
+        "corpus": _read_written(spark, f"{output_dir}/corpus", corpus.schema),
         "centroids": cent,
-        "id_mapping": id_mapping,
+        "id_mapping": _read_written(spark, f"{output_dir}/id_mapping", id_mapping.schema),
         "metrics": metrics,
     }
 
@@ -387,6 +445,24 @@ def _store_append_state(
     _PIDS_CACHE[index_dir] = pids
 
 
+def _run_concurrently(spark: SparkSession, fns: list) -> list:
+    """Run each zero-argument callable on a thread of its own; return
+    their results in order. Each thread inherits the caller's Spark local
+    properties (job group, scheduler pool, description) and session tags,
+    so ``cancelJobGroup`` — and a streaming query's ``stop()``, which
+    cancels its run's job group — reaches these jobs too."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    if isinstance(wrap, SparkSession):  # pinned-thread mode off: no wrapper to apply
+        wrap = lambda fn: fn  # noqa: E731
+    with ThreadPoolExecutor(len(fns)) as pool:
+        futures = [pool.submit(wrap(fn)) for fn in fns]
+        return [f.result() for f in futures]
+
+
 @_single_writer
 def append_to_index(
     spark: SparkSession,
@@ -526,10 +602,7 @@ def append_to_index(
         writes.append(
             lambda: centroids.write.mode("overwrite").parquet(f"{index_dir}/centroids")
         )
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(len(writes)) as pool:
-        results = [f.result() for f in [pool.submit(w) for w in writes]]
+    results = _run_concurrently(spark, writes)
     if use_obs:
         counts = obs.get  # resolved: the corpus write completed above
         batch_next = {
@@ -732,23 +805,17 @@ def delete_ids(
         # Both tables are eagerly checkpointed and independent of each
         # other — run the two dynamic-partition overwrites concurrently,
         # the same pattern append_to_index uses for its table writes.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(2) as pool:
-            futs = [
-                pool.submit(
-                    lambda: rewritten.write.mode("overwrite")
-                    .partitionBy("partition_id")
-                    .parquet(f"{index_dir}/corpus")
-                ),
-                pool.submit(
-                    lambda: new_mapping.write.mode("overwrite")
-                    .partitionBy("partition_id")
-                    .parquet(f"{index_dir}/id_mapping")
-                ),
-            ]
-            for f in futs:
-                f.result()
+        _run_concurrently(
+            spark,
+            [
+                lambda: rewritten.write.mode("overwrite")
+                .partitionBy("partition_id")
+                .parquet(f"{index_dir}/corpus"),
+                lambda: new_mapping.write.mode("overwrite")
+                .partitionBy("partition_id")
+                .parquet(f"{index_dir}/id_mapping"),
+            ],
+        )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     kept_parts = set(part_counts)
@@ -777,12 +844,9 @@ def delete_ids(
             }
 
         # Independent read-back jobs — overlap them like the writes above.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(2) as pool:
-            c_fut = pool.submit(_disk_counts, "corpus")
-            m_fut = pool.submit(_disk_counts, "id_mapping")
-            c_counts, m_counts = c_fut.result(), m_fut.result()
+        c_counts, m_counts = _run_concurrently(
+            spark, [lambda: _disk_counts("corpus"), lambda: _disk_counts("id_mapping")]
+        )
         if c_counts != m_counts:
             bad = {
                 p: (c_counts.get(p), m_counts.get(p))

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import nd_ctes_sql as _nd_ctes_sql
-from ..operators.indexing import ASSIGNED_CTE, append_to_index
+from ..operators.indexing import ASSIGNED_CTE, _run_concurrently, append_to_index
 from ..operators.knn import fixture_centroids
 from ..plans.registry import register
 
@@ -372,17 +372,13 @@ def stream_near_dup_ingest(
         # append_to_index's table writes). Crash-consistency is unchanged
         # in kind: any table may land first, and a replayed batch rewrites
         # exactly its own partitions.
-        from concurrent.futures import ThreadPoolExecutor
-
         writes = [
             lambda: _write_batch_partition(batch, _batch_id, docs_path),
             lambda: _write_batch_partition(buckets_b, _batch_id, buckets_path),
         ]
         if stored_buckets_pre is not None:
             writes.append(_write_pairs)
-        with ThreadPoolExecutor(len(writes)) as pool:
-            for f in [pool.submit(w) for w in writes]:
-                f.result()
+        _run_concurrently(batch.sparkSession, writes)
         # Per-batch persists are dead once the batch commits; release
         # them eagerly instead of leaning on LRU eviction across a
         # long-running stream.

@@ -279,3 +279,23 @@ def test_search_runs_in_two_jobs(spark, sf_dir, tmp_path):
     assert got == VectorSearchEngine(spark, d).search(q450, top_n=5, nprobe=3).collect()
     assert got[0].id == "450"
     assert _jobs_of(spark, "api-grown-search", lambda: grown.search(q450, top_n=5, nprobe=3).collect()) <= 2
+
+
+def test_grown_engine_rereads_without_a_job(spark, sf_dir, tmp_path):
+    """Appends never change a table's schema: the grown engine re-reads
+    corpus and id_mapping with the schemas from open (no footer-inference
+    job) and searches like a freshly opened engine."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    d = str(tmp_path / "index")
+    build_index(emb.filter(F.col("vec_id") < 300), d, centroids=fixture_centroids(spark, sf_dir))
+    grown = VectorSearchEngine(spark, d).add_batch(emb.filter(F.col("vec_id") >= 300))
+    assert _jobs_of(spark, "api-reread", grown._read_grown_tables) == 0
+    fresh = VectorSearchEngine(spark, d)
+    assert grown.corpus.schema == fresh.corpus.schema
+    assert grown.id_mapping.schema == fresh.id_mapping.schema
+    for vid in (3, 420):
+        q = list(emb.filter(F.col("vec_id") == vid).collect()[0].embedding)
+        got = grown.search(q, top_n=5, nprobe=3).collect()
+        assert got == fresh.search(q, top_n=5, nprobe=3).collect()
+        assert got[0].id == str(vid)
+    assert grown.query("420").count() == 1

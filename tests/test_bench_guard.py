@@ -34,6 +34,8 @@ def test_bench_strict_fails_on_regression(tmp_path):
         "SPARK_GRAFT_BENCH_ONLY": "taxon_parse",
         "SPARK_GRAFT_BENCH_FLOOR": "0",
         "SPARK_GRAFT_CPUS": "8",
+        # Keep the run record out of the committed BENCH_LAST.json.
+        "SPARK_GRAFT_BENCH_JSON": str(tmp_path / "bench_last.json"),
     }
     proc = subprocess.run(
         [sys.executable, os.path.join(os.path.dirname(bench.__file__), "bench.py")],

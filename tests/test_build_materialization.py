@@ -1,0 +1,156 @@
+"""build_index evaluates its input once and leaves the session's cache as
+it found it.
+
+The build tests' input carries a counting pandas UDF whose output is
+filtered on (like ingest's ``embedding IS NOT NULL``), so no action can
+prune it. It is nondeterministic like ingest's embed call, so the
+optimizer does not inline it into the filter: each evaluation of the
+input adds exactly its row count to the accumulator. The count that fills
+the build's persist, the k-means fit, the assignment and the corpus write
+must together evaluate it once, and no ``kernel='auto'`` count probe
+(``limit(LARGE_NLIST_THRESHOLD + 1).count()``) may run.
+"""
+
+from __future__ import annotations
+
+import pandas as pd
+import pytest
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
+
+from bioclip_vector_db_spark import pipeline
+from bioclip_vector_db_spark.operators import embedding, knn
+from bioclip_vector_db_spark.operators.indexing import append_to_index, build_index
+from bioclip_vector_db_spark.operators.knn_numpy import LARGE_NLIST_THRESHOLD
+from bioclip_vector_db_spark.sources.catalog import load_table
+from tests.test_ingest_e2e import _make_shards
+
+
+def _counted(spark, df: DataFrame):
+    """``df`` with its embedding passed through a UDF that counts the rows
+    it sees, filtered on that UDF's output; returns (frame, accumulator)."""
+    acc = spark.sparkContext.accumulator(0)
+
+    @pandas_udf(T.ArrayType(T.DoubleType()))
+    def passthrough(v: pd.Series) -> pd.Series:
+        acc.add(len(v))
+        return v
+
+    passthrough = passthrough.asNondeterministic()
+    out = df.withColumn("embedding", passthrough("embedding")).filter(
+        F.col("embedding").isNotNull()
+    )
+    return out, acc
+
+
+@pytest.fixture
+def probes(monkeypatch):
+    """Records every ``limit(LARGE_NLIST_THRESHOLD + 1)`` call — the kernel
+    probe — with the kernel memo emptied, so no choice memoized by an
+    earlier test can hide one."""
+    monkeypatch.setattr(knn, "_KERNEL_CACHE", {})
+    seen = []
+    limit = ClassicDataFrame.limit
+
+    def spy(self, num):
+        if num == LARGE_NLIST_THRESHOLD + 1:
+            seen.append(num)
+        return limit(self, num)
+
+    monkeypatch.setattr(ClassicDataFrame, "limit", spy)
+    return seen
+
+
+@pytest.mark.parametrize("case", ["k_given", "k_derived", "supplied"])
+def test_build_evaluates_input_once(spark, sf_dir, tmp_path, probes, case):
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
+    vectors, acc = _counted(spark, emb)
+    kwargs = {
+        "k_given": {"k": 3},
+        "k_derived": {},
+        "supplied": {"centroids": knn.fixture_centroids(spark, sf_dir)},
+    }[case]
+    out = str(tmp_path / "index")
+    built = build_index(vectors, out, **kwargs)
+    assert acc.value == 200
+    assert built["metrics"]["n_input"] == built["metrics"]["n_records"] == 200
+    assert probes == []
+    # The returned tables are reads of the written ones, typed as a plain
+    # read infers them.
+    for table in ("corpus", "id_mapping"):
+        assert built[table].schema == spark.read.parquet(f"{out}/{table}").schema
+        assert built[table].count() == 200
+
+
+def test_build_leaves_the_cache_as_it_found_it(spark, sf_dir, tmp_path):
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    vectors = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 150)
+    build_index(vectors, str(tmp_path / "index"), k=3)
+    assert set(jsc.getPersistentRDDs().keys()) == before
+    assert vectors.storageLevel == StorageLevel.NONE
+
+
+def test_build_keeps_the_callers_persist(spark, sf_dir, tmp_path):
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 150)
+    vectors, acc = _counted(spark, emb)
+    vectors.persist()
+    try:
+        assert vectors.count() == 150
+        build_index(vectors, str(tmp_path / "index"), k=3)
+        assert vectors.is_cached and vectors.storageLevel != StorageLevel.NONE
+        # The build read the caller's materialization, not the source.
+        assert acc.value == 150
+        assert vectors.count() == 150 and acc.value == 150
+    finally:
+        vectors.unpersist()
+
+
+def test_ingest_embeds_each_sample_once(spark, tmp_path, monkeypatch, probes):
+    """The stand-in embed UDF is deterministic, like the real one: ingest
+    neither re-runs it per build action nor lets the optimizer copy it
+    into the null filter."""
+    acc = spark.sparkContext.accumulator(0)
+
+    @pandas_udf(T.ArrayType(T.DoubleType()))
+    def counting_embed(texts: pd.Series) -> pd.Series:
+        acc.add(len(texts))
+        return texts.map(lambda t: None if t is None else embedding._md5_embed(t))
+
+    monkeypatch.setattr(embedding, "embed_text_udf", counting_embed)
+    shard_dir = tmp_path / "shards"
+    shard_dir.mkdir()
+    _make_shards(shard_dir, n_samples=24)
+    built = pipeline.ingest_webdataset(spark, str(shard_dir), str(tmp_path / "index"), k=2)
+    assert built["metrics"]["n_records"] == 24
+    assert acc.value == 24
+    assert probes == []
+
+
+def test_append_writes_keep_the_callers_job_group(spark, sf_dir, tmp_path):
+    """The concurrent table writes run on threads of their own; they must
+    carry the caller's job group, or ``cancelJobGroup`` (and a streaming
+    query's ``stop()``) cannot reach them."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = knn.fixture_centroids(spark, sf_dir)
+    d = str(tmp_path / "index")
+    append_to_index(spark, d, emb.filter(F.col("vec_id") < 50), cents)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("append-keeps-group", "append")
+    try:
+        append_to_index(
+            spark, d, emb.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 100)), cents
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert len(tracker.getJobIdsForGroup("append-keeps-group")) >= 2
+    assert spark.read.parquet(f"{d}/corpus").count() == 100
