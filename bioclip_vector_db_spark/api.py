@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.vector import PARITY_SCALE, cosine_distance, lit_array
-from .operators.knn import ivf_search, seed_kernel_choice
+from .operators.knn import ivf_search
 from .operators.knn_numpy import _collect_centroids
 
 #: The reference's request/limit defaults (neighborhood_server.py:312,
@@ -87,7 +87,6 @@ class VectorSearchEngine:
         self._centroid_ids, self._centroid_matrix = _collect_centroids(
             self.centroids, "partition_id", "centroid"
         )
-        seed_kernel_choice(self.centroids, len(self._centroid_ids))
         self.corpus = spark.read.parquet(f"{index_dir}/corpus")
         self.id_mapping = spark.read.parquet(f"{index_dir}/id_mapping")
 
@@ -159,10 +158,11 @@ class VectorSearchEngine:
     def search_batch(self, queries: DataFrame, top_n: int = DEFAULT_TOP_N, nprobe: int = DEFAULT_NPROBE) -> DataFrame:
         """X3: the same search lifted to a query table. Routing stays a
         distributed plan (``knn.ivf_search``): the query table has no size
-        bound, so it is never collected to the driver."""
+        bound, so it is never collected to the driver. The centroid count
+        held since open picks the routing kernel."""
         return ivf_search(
             queries, self.corpus, self.centroids, nprobe=nprobe, top_n=top_n,
-            global_limit=GLOBAL_MAX_NEIGHBORS,
+            global_limit=GLOBAL_MAX_NEIGHBORS, nlist=len(self._centroid_ids),
         )
 
     def search_radius(self, queries: DataFrame, radius: float) -> DataFrame:
@@ -219,11 +219,11 @@ class VectorSearchEngine:
         EXISTING centroids (no re-fit — the reference never retrains its
         quantizer after the initial fit either, storage_impl.py:103-111),
         given faiss_ids continuing each partition's dense sequence (O20),
-        and appended as new per-partition files. Cost is O(|batch|) plus
-        one tiny max-per-partition aggregate over the stored corpus —
-        independent of corpus size at the write layer, since
-        ``partitionBy`` append only creates files under the touched
-        partition directories.
+        and appended as new per-partition files. The writes are
+        O(|batch|): ``partitionBy`` append only creates files under the
+        touched partition directories. The existence check is not: its
+        anti-join reads the ``vec_id`` column of the whole stored corpus,
+        so an append's read cost grows with the index.
 
         Equivalence contract (tests/test_api.py): with centroids fixed and
         batch ids above the stored ids, append-then-search ==

@@ -86,34 +86,6 @@ N_BANDS = 2
 ROWS_PER_BAND = N_HASHES // N_BANDS
 
 
-def candidate_probability(jaccard: float, n_hashes: int, n_bands: int) -> float:
-    """The MinHash-LSH S-curve: probability that a pair with the given
-    Jaccard similarity shares at least one band,
-    ``1 - (1 - j^(K/B))^B`` with K hashes in B bands."""
-    rows = n_hashes // n_bands
-    return 1.0 - (1.0 - jaccard**rows) ** n_bands
-
-
-def choose_bands(
-    n_hashes: int, target_jaccard: float, target_recall: float = 0.9
-) -> int:
-    """Smallest band count B (dividing K) whose S-curve reaches
-    ``target_recall`` at ``target_jaccard`` — the way a real pipeline
-    derives (K, B) from its dedup threshold instead of hardcoding them.
-    Smallest B = widest bands = smallest candidate buckets, so this picks
-    the CHEAPEST configuration meeting the recall target; raises when
-    even B=K (1-row bands) cannot reach it (raise K)."""
-    for b in range(1, n_hashes + 1):
-        if n_hashes % b:
-            continue
-        if candidate_probability(target_jaccard, n_hashes, b) >= target_recall:
-            return b
-    raise ValueError(
-        f"K={n_hashes} cannot reach recall {target_recall} at j={target_jaccard}; "
-        "increase n_hashes"
-    )
-
-
 def doc_shingles(
     df: DataFrame,
     *,

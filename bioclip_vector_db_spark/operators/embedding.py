@@ -70,8 +70,14 @@ def pseudo_embedding_sql(text: Column) -> Column:
 
 def embed_documents(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
     """Attach the embedding column — the Spark restatement of the
-    reference's embed-then-store ingest stage."""
-    return docs.withColumn("embedding", embed_text_udf(F.col(text_col)))
+    reference's embed-then-store ingest stage. The embed UDF runs once per
+    row whatever filters the caller puts on the column."""
+    # A nondeterministic no-op over the UDF's output stops the optimizer
+    # from copying the deterministic embed call into a filter on the
+    # column (a caller's null check, or the one inferred from a
+    # posexplode), which would embed every row twice.
+    emb = embed_text_udf(F.col(text_col))
+    return docs.withColumn("embedding", F.when(F.spark_partition_id() >= 0, emb))
 
 
 _EMBED_ORACLE = f"""

@@ -46,7 +46,6 @@ from .knn import (
     assign_partitions,
     assigned_corpus,
     fixture_centroids,
-    seed_kernel_choice,
 )
 
 # ---------------------------------------------------------------------------
@@ -78,10 +77,21 @@ def train_kmeans_centroids(
     matches the reference's inner-product space over normalized vectors.
 
     The table is a JVM local relation built from an Arrow table, so no
-    action on it starts a Python worker, and its ``kernel='auto'`` choice
-    is seeded from the fitted center count: assigning against it runs no
-    count probe. The fit's feature cache is released before this returns.
+    action on it starts a Python worker. The fit's feature cache is
+    released before this returns.
     """
+    return _kmeans_centroids(
+        vectors, k, vec_col=vec_col, seed=seed, train_fraction=train_fraction,
+        max_iter=max_iter, init_mode=init_mode,
+    )[0]
+
+
+def _kmeans_centroids(
+    vectors: DataFrame, k: int, *, vec_col: str = "embedding", seed: int = 42,
+    train_fraction: float | None = None, max_iter: int = 20, init_mode: str = "k-means||",
+) -> tuple[DataFrame, int]:
+    """train_kmeans_centroids' table and its row count, the fitted center
+    count (at most ``k``)."""
     import pyarrow as pa
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -117,8 +127,7 @@ def train_kmeans_centroids(
             ]
         ),
     )
-    seed_kernel_choice(cent, len(centers))
-    return cent
+    return cent, len(centers)
 
 
 def with_faiss_ids(assigned: DataFrame, order_col: str = "vec_id") -> DataFrame:
@@ -183,8 +192,8 @@ def build_index(
     storage_impl.py:103-105). The persist is released right after the
     corpus write, and the corpus persist after the id_mapping write; a
     caller's own persist of ``vectors`` is left as it was. The
-    ``kernel='auto'`` choice is seeded from the fitted center count, or
-    from one count of supplied ``centroids``, so no count probe runs.
+    assignment kernel is picked from the fitted center count, or from one
+    count of supplied ``centroids``.
 
     O16/O31 (the reference's running insert counter and @timer decorator,
     storage_interface.py:22-24, neighborhood_server.py:31-52) map to
@@ -205,16 +214,15 @@ def build_index(
         n = vectors.count()
         if centroids is not None:
             cent = centroids
-            n_cent = cent.count()
-            seed_kernel_choice(cent, n_cent)
-            k = k or n_cent
+            nlist = cent.count()
+            k = k or nlist
         else:
             k = k or derive_nlist(n)
-            cent = train_kmeans_centroids(vectors, k, seed=seed)
+            cent, nlist = _kmeans_centroids(vectors, k, seed=seed)
         t_train = time.perf_counter()
         # Persist: the corpus lineage (assignment argmin + faiss-id window
         # over every vector) feeds BOTH table writes below.
-        corpus = with_faiss_ids(assign_partitions(vectors, cent)).persist()
+        corpus = with_faiss_ids(assign_partitions(vectors, cent, nlist=nlist)).persist()
         try:
             obs = Observation("build_counts")
             corpus_obs = corpus.observe(
@@ -518,7 +526,7 @@ def append_to_index(
                 .collect()
             }
     _invalidate_next_ids(index_dir)  # restored only on success
-    assigned = assign_partitions(batch, centroids)
+    assigned = assign_partitions(batch, centroids, nlist=len(pids))
     w = Window.partitionBy("partition_id").orderBy(F.col("vec_id").asc())
     rows = assigned.withColumn("_rn", (F.row_number().over(w) - 1).cast("bigint"))
     if next_map:
@@ -860,45 +868,6 @@ def delete_ids(
                 "the same delete_ids call to converge both tables"
             )
     return {"n_deleted": int(n_before - n_after), "partitions_rewritten": len(touched)}
-
-
-def write_bucketed_index(
-    spark: SparkSession,
-    corpus: DataFrame,
-    id_mapping: DataFrame,
-    *,
-    database: str = "bvds_bucketed",
-    n_buckets: int = 8,
-) -> tuple[str, str]:
-    """Persist corpus and id_mapping as tables BUCKETED on the join key
-    ``(partition_id, faiss_id)`` — the cluster-deployment layout that
-    makes the O25 remap join (and any hit->metadata lookup) co-located:
-    both sides are pre-hashed into the same bucket files at write time,
-    so the join plans with ZERO Exchange on either side. On a 100-TB
-    corpus this converts the serving path's one remaining corpus-sized
-    shuffle into a bucket-local merge — paid once at index-build time,
-    amortized over every search.
-
-    Spark bucketing requires the table catalog (``saveAsTable``); plain
-    ``.parquet(path)`` writes cannot carry bucket metadata. Returns the
-    two table names. The partitioned-directory layout written by
-    build_index stays the serving default — bucketing is the documented
-    cluster tuning (README 'what we'd tune'), here made real and
-    plan-tested (tests/test_plans.py) instead of speculated.
-    """
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-    names = []
-    for name, df in (("corpus_bkt", corpus), ("id_mapping_bkt", id_mapping)):
-        full = f"{database}.{name}"
-        spark.sql(f"DROP TABLE IF EXISTS {full}")
-        (
-            df.write.bucketBy(n_buckets, "partition_id", "faiss_id")
-            .sortBy("partition_id", "faiss_id")
-            .format("parquet")
-            .saveAsTable(full)
-        )
-        names.append(full)
-    return names[0], names[1]
 
 
 # ---------------------------------------------------------------------------

@@ -71,22 +71,8 @@ def knn_join(
     )
 
 
-#: Memoized kernel choices, keyed by (session id, semantic hash of the
-#: centroid table's analyzed plan): the probe below fires a Spark job, and
-#: before memoization EVERY route/assign/PQ-encode call with
-#: kernel='auto' paid that driver action again — one extra job per
-#: ivf_search even on the cached 10-row fixture centroids. The semantic
-#: hash is a driver-side plan hash (no job), identical for re-built
-#: DataFrames over the same plan, so repeated calls probe once per
-#: distinct centroid table per session. Caveat (documented trade):
-#: centroid tables are build artifacts, immutable within a session; a
-#: path whose FILES are swapped mid-session across the nlist threshold
-#: would reuse the stale choice — both kernels stay correct either way,
-#: only the small/large heuristic lags.
-_KERNEL_CACHE: dict[tuple[int, int], str] = {}
-
-#: Collapsed 1-row centroid tables for assign_partitions, keyed like
-#: _KERNEL_CACHE — per-micro-batch plan reconstruction is driver latency.
+#: Collapsed 1-row centroid tables for assign_partitions, keyed by
+#: _plan_key — per-micro-batch plan reconstruction is driver latency.
 _CENTS_CACHE: dict[tuple[int, int], "DataFrame"] = {}
 
 
@@ -96,55 +82,33 @@ def _plan_key(df: DataFrame) -> tuple[int, int]:
     return (id(df.sparkSession), df._jdf.queryExecution().analyzed().semanticHash())
 
 
-def _kernel_for(nlist: int) -> str:
+def _use_gemm(nlist: int | None) -> bool:
+    """The nearest-centroid kernel rule: the blocked GEMM
+    (knn_numpy) when the caller holds a centroid count above
+    LARGE_NLIST_THRESHOLD, else the expression fold. Never counts: a
+    caller that does not pass ``nlist`` gets the fold. Both kernels pick
+    the same winners, so a wrong count changes speed, never an answer."""
     from .knn_numpy import LARGE_NLIST_THRESHOLD
 
-    return "numpy" if nlist > LARGE_NLIST_THRESHOLD else "expr"
-
-
-def seed_kernel_choice(centroids: DataFrame, nlist: int) -> None:
-    """Record the ``kernel='auto'`` choice for a centroid table whose row
-    count the caller already holds (api.VectorSearchEngine collects the
-    table when it opens), so no probe job ever runs for it."""
-    _KERNEL_CACHE[_plan_key(centroids)] = _kernel_for(nlist)
-
-
-def _pick_kernel(kernel: str, centroids: DataFrame) -> str:
-    """Resolve ``kernel='auto'`` by probing the centroid count: small-k
-    stays on the Catalyst expression path (codegen-adjacent, exact oracle
-    parity); above LARGE_NLIST_THRESHOLD the blocked-BLAS mapInPandas
-    kernel takes over — at the reference's nlist=31,622 x 512-d the
-    interpreted HOF fold is the engine's real 100-TB bottleneck. The probe
-    is a LIMIT k+1 count — O(threshold) work off a table that is tiny by
-    construction — memoized per (session, centroid plan) so a serving
-    session pays it once, not per query (see _KERNEL_CACHE)."""
-    if kernel != "auto":
-        return kernel
-    key = _plan_key(centroids)
-    choice = _KERNEL_CACHE.get(key)
-    if choice is None:
-        from .knn_numpy import LARGE_NLIST_THRESHOLD
-
-        choice = _kernel_for(centroids.limit(LARGE_NLIST_THRESHOLD + 1).count())
-        _KERNEL_CACHE[key] = choice
-    return choice
+    return nlist is not None and nlist > LARGE_NLIST_THRESHOLD
 
 
 def route_queries(
-    queries: DataFrame, centroids: DataFrame, nprobe: int, *, kernel: str = "auto"
+    queries: DataFrame, centroids: DataFrame, nprobe: int, *, nlist: int | None = None
 ) -> DataFrame:
     """O22: pick the ``nprobe`` nearest centroids per query vector.
 
     ``centroids`` is ``(partition_id, centroid)`` — nlist rows. Returns
     ``(query_id, qv, partition_id, probe_rank)``.
 
-    ``kernel``: ``'expr'`` joins the broadcast centroid table and window-
-    ranks (each query expands to nlist scored rows — ideal while nlist is
-    small); ``'numpy'`` runs the blocked-GEMM top-nprobe kernel
-    (knn_numpy.route_queries_numpy) with no row expansion and no window;
-    ``'auto'`` switches on LARGE_NLIST_THRESHOLD.
+    ``nlist``: the centroid count, when the caller holds it. Above
+    LARGE_NLIST_THRESHOLD the blocked-GEMM top-nprobe kernel
+    (knn_numpy.route_queries_numpy) runs, with no row expansion and no
+    window; otherwise the broadcast centroid table is joined and window-
+    ranked (each query expands to nlist scored rows — ideal while nlist
+    is small). Both rank by round-9 distance, ties to the smaller pid.
     """
-    if _pick_kernel(kernel, centroids) == "numpy":
+    if _use_gemm(nlist):
         from .knn_numpy import route_queries_numpy
 
         return route_queries_numpy(queries, centroids, nprobe)
@@ -162,7 +126,7 @@ def route_queries(
 
 
 def assign_partitions(
-    vectors: DataFrame, centroids: DataFrame, *, kernel: str = "auto"
+    vectors: DataFrame, centroids: DataFrame, *, nlist: int | None = None
 ) -> DataFrame:
     """O19: nearest-centroid (k=1) assignment of every corpus vector.
 
@@ -186,25 +150,24 @@ def assign_partitions(
     On a real lakehouse this output is materialized via
     ``write.partitionBy``, making O23's pruning a storage-level operation.
 
-    ``kernel``: this expression fold is ``'expr'`` — ideal while nlist is
-    small (fixture k=10: plan-asserted no window, no row expansion). HOFs
-    are interpreted, so at large nlist the fold costs nlist x dim
-    interpreted multiply-adds PER ROW; ``'numpy'``
-    (knn_numpy.assign_partitions_numpy) scores each Arrow batch as blocked
-    BLAS GEMMs instead. ``'auto'`` switches on LARGE_NLIST_THRESHOLD;
-    both kernels round distances to 9 decimals before the argmin and break
-    ties toward the smallest pid, so they pick identical winners at any
-    nlist. Assignment never routes two-tier the way SemDeDup's does: the
-    IVF layout is a persisted artifact whose search recall it fixes.
+    ``nlist``: the centroid count, when the caller holds it. HOFs are
+    interpreted, so at large nlist this fold costs nlist x dim
+    interpreted multiply-adds PER ROW; above LARGE_NLIST_THRESHOLD
+    knn_numpy.assign_partitions_numpy scores each Arrow batch as blocked
+    BLAS GEMMs instead. Both kernels round distances to 9 decimals before
+    the argmin and break ties toward the smallest pid, so they pick
+    identical winners at any nlist. Assignment never routes two-tier the
+    way SemDeDup's does: the IVF layout is a persisted artifact whose
+    search recall it fixes.
     """
-    if _pick_kernel(kernel, centroids) == "numpy":
+    if _use_gemm(nlist):
         from .knn_numpy import assign_partitions_numpy
 
         return assign_partitions_numpy(vectors, centroids)
     # The collapsed 1-row centroid table is memoized per (session,
-    # centroid plan) like the kernel choice: a streaming ingest calls
-    # this once per micro-batch with the SAME centroids, and rebuilding
-    # the agg plan is pure driver-side py4j latency on the batch path.
+    # centroid plan): a streaming ingest calls this once per micro-batch
+    # with the SAME centroids, and rebuilding the agg plan is pure
+    # driver-side py4j latency on the batch path.
     ckey = _plan_key(centroids)
     cents = _CENTS_CACHE.get(ckey)
     if cents is None:
@@ -241,6 +204,7 @@ def ivf_search(
     top_n: int = 10,
     global_limit: int = 100,
     loaded_partitions: str | None = None,
+    nlist: int | None = None,
 ) -> DataFrame:
     """Two-tier scatter-gather search: O22 routing -> O23 pruning -> O24
     per-partition top-n -> O27/O28 merge with a global per-query limit.
@@ -255,8 +219,10 @@ def ivf_search(
     ``self._indexes``, silently skipping the rest
     (neighborhood_server.py:208-225). That intersection is a broadcast
     semi-join of the routed probes against the expanded spec.
+
+    ``nlist``: the centroid count, forwarded to ``route_queries``.
     """
-    routed = route_queries(queries, centroids, nprobe)
+    routed = route_queries(queries, centroids, nprobe, nlist=nlist)
     if loaded_partitions is not None:
         from .relational import expand_partition_spec_df
 

@@ -58,7 +58,8 @@ _CAND_SCHEMA = T.StructType(
 #: (/root/reference/src/bioclip_vector_db/storage/storage_impl.py:78-82;
 #: nlist=31,622 at N=1e7, 316,227 at N=1e9) is ~16M interpreted ops per
 #: 512-d vector already at N=1e7, plus a >100 MB single-row broadcast
-#: struct. knn.assign_partitions / knn.route_queries switch kernels here.
+#: struct. knn.assign_partitions / knn.route_queries switch kernels here,
+#: on the centroid count their caller passes.
 LARGE_NLIST_THRESHOLD = 1024
 
 #: Cap on the centroid-block size of the scoring GEMM: the b x cblock
@@ -223,7 +224,8 @@ def assign_partitions_numpy(
     centroid_vec_col: str = "centroid",
 ) -> DataFrame:
     """O19 nearest-centroid assignment as a blocked GEMM — the large-nlist
-    kernel behind ``knn.assign_partitions(kernel='numpy'|'auto')``.
+    kernel ``knn.assign_partitions`` runs when its caller passes ``nlist``
+    above LARGE_NLIST_THRESHOLD.
 
     Round-9-then-argmin distances, ties to the smallest pid — identical
     winners to the expression fold; see _blocked_best_centroid for the
@@ -551,7 +553,8 @@ def route_queries_numpy(
     centroid_vec_col: str = "centroid",
 ) -> DataFrame:
     """O22 top-``nprobe`` centroid routing as a blocked GEMM — the
-    large-nlist kernel behind ``knn.route_queries(kernel='numpy'|'auto')``.
+    large-nlist kernel ``knn.route_queries`` runs when its caller passes
+    ``nlist`` above LARGE_NLIST_THRESHOLD.
 
     The expression form expands each query to nlist scored rows and window-
     ranks them; here each Arrow batch keeps a per-block top-nprobe candidate
@@ -732,8 +735,8 @@ def pq_encode_numpy(
     sub_dim: int,
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """PQ encoding as blocked GEMMs — the large-codebook kernel behind
-    ``quantization.pq_encode(kernel='numpy'|'auto')``.
+    """PQ encoding as blocked GEMMs — the large-codebook twin of
+    ``quantization.pq_encode``'s expression fold, called directly.
 
     Per Arrow batch and subspace, squared-L2 to every code is one
     ``sub @ csub.T`` BLAS call plus row/col norms; distances are rounded

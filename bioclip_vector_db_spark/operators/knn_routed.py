@@ -627,16 +627,15 @@ def routed_best_centroid_distributed(
         inst["member_group_s"] = time.perf_counter() - t0
     bc_live = spark.sparkContext.broadcast(live)
 
-    # Margin calibration runs AFTER the live-group collect (r15 ADVICE:
-    # the gap quantile must be measured in the regime the margin governs
-    # — top-p over S[live], not the full router matrix) and is memoized
-    # per (session, vector plan, centroid plan, k, probes): a serving
-    # session re-running semantic_dedup over the same corpus (api.py's
-    # pattern) pays the sample collect + driver GEMMs once, not per call
-    # (r15 verdict item 6). Same staleness contract as knn._KERNEL_CACHE:
-    # the key is the canonicalized PLAN, so rewriting the files behind an
-    # identical plan within one session would serve a stale margin —
-    # sizing/pruning only, never correctness of what IS scored.
+    # Margin calibration runs AFTER the live-group collect: the gap
+    # quantile must be measured in the regime the margin governs — top-p
+    # over S[live], not the full router matrix. It is memoized per
+    # (session, vector plan, centroid plan, k, probes), so a session
+    # re-running semantic_dedup over the same corpus pays the sample
+    # collect + driver GEMMs once, not per call. The key is the
+    # canonicalized PLAN: rewriting the files behind an identical plan
+    # within one session serves a stale margin — sizing/pruning only,
+    # never correctness of what IS scored.
     vec_sample: "np.ndarray | None" = None
     if probe_margin == "auto":
         mkey = (

@@ -187,60 +187,10 @@ def pq_codebooks(vectors: DataFrame) -> DataFrame:
     )
 
 
-def pq_train(
-    vectors: DataFrame,
-    n_codes: int = 16,
-    *,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """REAL PQ training: per-subspace k-means (the FAISS ``PQ{m}x{b}``
-    trainer), assembled into the same ``(code, mean_vec)`` schema the
-    rest of the PQ stack consumes — code c's subspace-s centroid lives at
-    slice s of row c, so encode/LUT slice exactly as with the fixture
-    codebooks. Seed-dependent like kmeans_train (no SQL oracle; recall
-    and shape are pytest-gated) — the [Q] gates stay on the deterministic
-    per-label stand-in, which exercises the identical mechanism.
-
-    Why this matters: a stand-in codebook with one code per cluster
-    cannot rank WITHIN a cluster (every member encodes identically);
-    trained sub-codebooks give n_codes^m distinct reconstructions.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = vectors.sparkSession
-    per_sub: list[list[list[float]]] = []
-    feats_base = vectors.select(F.col(vec_col).cast("array<double>").alias("v"))
-    # Tiny iterative fits: coalesce like train_kmeans_centroids so each
-    # KMeans iteration is one dense task, not 32 empty ones.
-    feats_base = feats_base.coalesce(max(1, feats_base.sparkSession.sparkContext.defaultParallelism // 8)).cache()
-    for s in range(PQ_M):
-        lo = s * PQ_SUB_DIM + 1
-        feats = feats_base.select(
-            array_to_vector(F.slice(F.col("v"), lo, PQ_SUB_DIM)).alias("features")
-        )
-        model = KMeans(k=n_codes, seed=seed + s, maxIter=10, initMode="random").fit(feats)
-        per_sub.append([[float(x) for x in c] for c in model.clusterCenters()])
-    rows = [
-        (c, [x for s in range(PQ_M) for x in per_sub[s][c]]) for c in range(n_codes)
-    ]
-    return spark.createDataFrame(
-        rows,
-        T.StructType(
-            [
-                T.StructField("code", T.IntegerType(), False),
-                T.StructField("mean_vec", T.ArrayType(T.DoubleType()), False),
-            ]
-        ),
-    )
-
-
 def pq_encode(
     corpus: DataFrame,
     codebooks: DataFrame,
     *,
-    kernel: str = "auto",
     m: int = PQ_M,
     sub_dim: int = PQ_SUB_DIM,
 ) -> DataFrame:
@@ -249,19 +199,12 @@ def pq_encode(
     Same shape as assign_partitions' collapsed-argmin: the codebook table
     (codes x dim doubles — KBs) collapses to ONE broadcast row and each
     subspace's argmin is an ``array_min`` over a scored struct array —
-    map-side, zero row expansion, no shuffle. At the fixture's 10 codes
-    this is the small-k regime where the expression path wins; above
-    LARGE_NLIST_THRESHOLD codes, ``kernel='auto'`` switches to the
-    blocked-BLAS mapInPandas encoder (knn_numpy.pq_encode_numpy) exactly
-    as centroid assignment does — kernels are round-9-argmin equal
-    (tests/test_quantization.py pins code equality).
+    map-side, zero row expansion, no shuffle. A PQ codebook holds at most
+    a few hundred codes (FAISS's PQ{m}x8 has 256), where this fold is the
+    right kernel; knn_numpy.pq_encode_numpy is the blocked-GEMM encoder
+    for larger books, called directly (the two assign identical codes —
+    round-9 argmin, ties to the smallest code).
     """
-    from .knn import _pick_kernel
-
-    if _pick_kernel(kernel, codebooks) == "numpy":
-        from .knn_numpy import pq_encode_numpy
-
-        return pq_encode_numpy(corpus, codebooks, m=m, sub_dim=sub_dim)
     cb = F.broadcast(
         codebooks.agg(
             F.array_sort(F.collect_list(F.struct("code", "mean_vec"))).alias("cb")
@@ -299,7 +242,6 @@ def pq_adc_search(
     k: int = 10,
     m: int = PQ_M,
     sub_dim: int = PQ_SUB_DIM,
-    adc_kernel: str = "auto",
 ) -> DataFrame:
     """Top-``k`` per query by asymmetric distance: the query stays fp32,
     corpus rows are just their ``m`` codes, and the distance is the sum of
@@ -309,9 +251,7 @@ def pq_adc_search(
     instead of dim floats (64x here); the scan never touches raw vectors.
     """
     rows = encoded.crossJoin(F.broadcast(queries.select("query_id")))
-    scored = adc_score(
-        rows, adc_lut(queries, codebooks, m=m, sub_dim=sub_dim), m=m, kernel=adc_kernel
-    ).select(
+    scored = adc_score(rows, adc_lut(queries, codebooks, m=m, sub_dim=sub_dim), m=m).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         "adc_distance",
@@ -373,9 +313,7 @@ def adc_lut(
 ADC_WIDE_MAX_M = 16
 
 
-def adc_score(
-    rows: DataFrame, lut: DataFrame, *, m: int = PQ_M, kernel: str = "auto"
-) -> DataFrame:
+def adc_score(rows: DataFrame, lut: DataFrame, *, m: int = PQ_M) -> DataFrame:
     """Attach ``adc_distance`` to rows carrying ``query_id`` +
     ``pq_code_0..m-1``: m broadcast hash joins against the LUT (codegen'd
     lookups, no per-row vector math), summed in fixed subspace order
@@ -384,14 +322,12 @@ def adc_score(
     scoring against the codebook directly, so flat-PQ and IVF-PQ share
     one metric.
 
-    ``kernel='auto'`` resolves by m: the wide join form up to
-    ADC_WIDE_MAX_M (codegen'd, zero Python), the gather kernel above it
-    (see _adc_score_gather — same collected-LUT doubles, same left fold,
-    so the two kernels agree bit-for-bit on the terms; pinned by
+    ``m`` picks the kernel: the wide join form up to ADC_WIDE_MAX_M
+    (codegen'd, zero Python), the gather kernel above it (see
+    _adc_score_gather — same collected-LUT doubles, same left fold, so the
+    two kernels agree bit-for-bit on the terms; pinned by
     tests/test_quantization.py)."""
-    if kernel == "auto":
-        kernel = "gather" if m > ADC_WIDE_MAX_M else "wide"
-    if kernel == "gather":
+    if m > ADC_WIDE_MAX_M:
         return _adc_score_gather(rows, lut, m)
     for s in range(m):
         lut_s = lut.filter(F.col("s") == s).select(

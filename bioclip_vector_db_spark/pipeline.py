@@ -64,13 +64,6 @@ def ingest_webdataset(
         samples = samples.join(existing_ids, "key", "left_anti")  # O12
     parsed = parse_taxon_tags(samples, "tag")  # O8
     embedded = embed_documents(parsed, text_col="raw_tag")  # O9 (stub kernel)
-    # A nondeterministic no-op on the embedding stops the optimizer from
-    # copying the deterministic embed call into the O13 filter below, which
-    # would embed every sample twice: once for the filter, once for the
-    # column.
-    embedded = embedded.withColumn(
-        "embedding", F.when(F.spark_partition_id() >= 0, F.col("embedding"))
-    )
     clean = embedded.filter(  # O13
         F.col("key").isNotNull() & F.col("embedding").isNotNull()
     )

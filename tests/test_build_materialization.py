@@ -1,5 +1,5 @@
 """build_index evaluates its input once and leaves the session's cache as
-it found it.
+it found it; no path that holds the centroid count runs a count probe.
 
 The build tests' input carries a counting pandas UDF whose output is
 filtered on (like ingest's ``embedding IS NOT NULL``), so no action can
@@ -7,8 +7,11 @@ prune it. It is nondeterministic like ingest's embed call, so the
 optimizer does not inline it into the filter: each evaluation of the
 input adds exactly its row count to the accumulator. The count that fills
 the build's persist, the k-means fit, the assignment and the corpus write
-must together evaluate it once, and no ``kernel='auto'`` count probe
-(``limit(LARGE_NLIST_THRESHOLD + 1).count()``) may run.
+must together evaluate it once, and no centroid-count probe
+(``limit(LARGE_NLIST_THRESHOLD + 1)``) may run.
+
+Above LARGE_NLIST_THRESHOLD centroids the engine, the build and an append
+must reach the blocked-GEMM kernels from the count they hold.
 """
 
 from __future__ import annotations
@@ -23,7 +26,8 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from bioclip_vector_db_spark import pipeline
-from bioclip_vector_db_spark.operators import embedding, knn
+from bioclip_vector_db_spark.api import GLOBAL_MAX_NEIGHBORS, VectorSearchEngine
+from bioclip_vector_db_spark.operators import embedding, indexing, knn
 from bioclip_vector_db_spark.operators.indexing import append_to_index, build_index
 from bioclip_vector_db_spark.operators.knn_numpy import LARGE_NLIST_THRESHOLD
 from bioclip_vector_db_spark.sources.catalog import load_table
@@ -49,10 +53,8 @@ def _counted(spark, df: DataFrame):
 
 @pytest.fixture
 def probes(monkeypatch):
-    """Records every ``limit(LARGE_NLIST_THRESHOLD + 1)`` call — the kernel
-    probe — with the kernel memo emptied, so no choice memoized by an
-    earlier test can hide one."""
-    monkeypatch.setattr(knn, "_KERNEL_CACHE", {})
+    """Records every ``limit(LARGE_NLIST_THRESHOLD + 1)`` call — the
+    centroid-count probe."""
     seen = []
     limit = ClassicDataFrame.limit
 
@@ -153,4 +155,81 @@ def test_append_writes_keep_the_callers_job_group(spark, sf_dir, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
     assert len(tracker.getJobIdsForGroup("append-keeps-group")) >= 2
+    assert spark.read.parquet(f"{d}/corpus").count() == 100
+
+
+#: Above the kernel threshold: the engine, the build and an append must
+#: pick the blocked-GEMM kernels from the count they hold.
+_BIG_NLIST = LARGE_NLIST_THRESHOLD + 76
+
+
+def _big_centroids(spark, phase=0.0, dim=64):
+    """A synthetic leader table of _BIG_NLIST centroids; each ``phase``
+    gives a table no other test has used."""
+    return spark.range(_BIG_NLIST).select(
+        F.col("id").cast("int").alias("partition_id"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(dim - 1)),
+            lambda i: F.sin(F.col("id") * (i.cast("double") + 1.0) + phase),
+        ).alias("centroid"),
+    )
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture
+def assign_plans(monkeypatch):
+    """The executed plan of every assignment ``append_to_index`` makes."""
+    plans = []
+    real = indexing.assign_partitions
+
+    def spy(*args, **kwargs):
+        out = real(*args, **kwargs)
+        plans.append(_plan(out))
+        return out
+
+    monkeypatch.setattr(indexing, "assign_partitions", spy)
+    return plans
+
+
+def test_large_index_serves_through_the_gemm_kernels(
+    spark, sf_dir, tmp_path, probes, assign_plans
+):
+    emb = load_table(spark, sf_dir, "embeddings")
+    out = str(tmp_path / "index")
+    build_index(emb, out, centroids=_big_centroids(spark))
+    engine = VectorSearchEngine(spark, out)
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    got = engine.search_batch(queries, top_n=5, nprobe=3)
+    assert "MapInArrow" in _plan(got)
+    want = knn.ivf_search(
+        queries, engine.corpus, engine.centroids, nprobe=3, top_n=5,
+        global_limit=GLOBAL_MAX_NEIGHBORS,
+    )
+    assert "MapInArrow" not in _plan(want)
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows == sorted(tuple(r) for r in want.collect())
+    # Each query is in the corpus, so its first probe finds at least itself.
+    assert {r[0] for r in rows} == set(range(8))
+    fresh = emb.filter(F.col("vec_id") < 8).withColumn("vec_id", F.col("vec_id") + 10_000)
+    engine.add_batch(fresh)
+    # The build's assignment, then the append's.
+    assert len(assign_plans) == 2 and all("MapInArrow" in p for p in assign_plans)
+    assert probes == []
+
+
+def test_append_against_unseen_centroids_runs_no_probe(
+    spark, sf_dir, tmp_path, probes, assign_plans
+):
+    """A centroid table no engine opened and no build fitted: the append
+    picks the kernel from the partition ids it collects anyway."""
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 100)
+    d = str(tmp_path / "index")
+    append_to_index(spark, d, emb, _big_centroids(spark, phase=0.5))
+    assert len(assign_plans) == 1 and "MapInArrow" in assign_plans[0]
+    assert probes == []
     assert spark.read.parquet(f"{d}/corpus").count() == 100

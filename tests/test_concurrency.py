@@ -15,9 +15,9 @@ have never been exercised under real contention:
   its in-flight `ranked` table mid-collect. Each thread here calls
   release after its query exactly like tools/check_correctness.py does
   per query;
-- ``knn._DERIVED_CACHE`` / ``knn._CENTS_CACHE`` / ``knn._KERNEL_CACHE``:
-  two threads may race to build the same derived table / collapsed
-  centroid row / kernel probe — last write wins, both values equivalent;
+- ``knn._DERIVED_CACHE`` / ``knn._CENTS_CACHE``: two threads may race
+  to build the same derived table / collapsed centroid row — last write
+  wins, both values equivalent;
 - Spark itself: concurrent job submission on one session is supported.
 
 The gate runs a diverse query set serially (ground truth), then twice

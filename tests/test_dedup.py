@@ -306,32 +306,6 @@ def test_remove_duplicate_spans_keeps_first_occurrence(spark):
     assert got[4] == (5, 0, "clean tokens only here ok")
 
 
-def test_choose_bands_s_curve():
-    """choose_bands picks the cheapest (widest-band) configuration whose
-    S-curve meets the recall target, and the probability model matches a
-    brute-force evaluation of 1-(1-j^(K/B))^B."""
-    from bioclip_vector_db_spark.operators.dedup import (
-        candidate_probability,
-        choose_bands,
-    )
-
-    assert abs(candidate_probability(0.8, 6, 2) - (1 - (1 - 0.8**3) ** 2)) < 1e-12
-    # Recall is monotone in B (more, narrower bands).
-    probs = [candidate_probability(0.5, 12, b) for b in (1, 2, 3, 4, 6, 12)]
-    assert probs == sorted(probs)
-    b = choose_bands(12, 0.8, 0.9)
-    assert 12 % b == 0
-    assert candidate_probability(0.8, 12, b) >= 0.9
-    # Every coarser (cheaper) divisor must miss the target.
-    for cand in range(1, b):
-        if 12 % cand == 0:
-            assert candidate_probability(0.8, 12, cand) < 0.9
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        choose_bands(2, 0.1, 0.999)  # unreachable even with 1-row bands
-
-
 def test_bloom_prefilter_matches_anti_join_and_bounds_fp(spark, sf_dir):
     """The bloom prefilter must be EXACTLY equivalent to the plain
     anti-join on is_new (no false negatives by construction — every

@@ -1,7 +1,8 @@
 """The BLAS kernels must be rank-identical to the Catalyst expression
-kernels (same logical plan, different inner loop), and the ``auto`` kernel
-switch must route large-nlist assignment/routing onto blocked GEMMs —
-never a per-row interpreted fold over >LARGE_NLIST_THRESHOLD centroids."""
+kernels (same logical plan, different inner loop), and a caller-held
+centroid count above LARGE_NLIST_THRESHOLD must route assignment/routing
+onto blocked GEMMs — never a per-row interpreted fold over that many
+centroids."""
 
 from __future__ import annotations
 
@@ -60,13 +61,13 @@ def test_assign_kernels_agree(spark, sf_dir):
     cents = knn.fixture_centroids(spark, sf_dir)
     want = {
         r.vec_id: r.partition_id
-        for r in knn.assign_partitions(emb, cents, kernel="expr")
+        for r in knn.assign_partitions(emb, cents)
         .select("vec_id", "partition_id")
         .collect()
     }
     got = {
         r.vec_id: r.partition_id
-        for r in knn.assign_partitions(emb, cents, kernel="numpy")
+        for r in knn_numpy.assign_partitions_numpy(emb, cents)
         .select("vec_id", "partition_id")
         .collect()
     }
@@ -84,11 +85,11 @@ def test_route_kernels_agree_at_large_nlist(spark, sf_dir, monkeypatch):
     big = _big_centroids(spark)
     want = {
         (r.query_id, r.probe_rank): r.partition_id
-        for r in knn.route_queries(queries, big, 5, kernel="expr").collect()
+        for r in knn.route_queries(queries, big, 5).collect()
     }
     got = {
         (r.query_id, r.probe_rank): r.partition_id
-        for r in knn.route_queries(queries, big, 5, kernel="numpy").collect()
+        for r in knn_numpy.route_queries_numpy(queries, big, 5).collect()
     }
     assert got == want and len(got) == 8 * 5
 
@@ -123,11 +124,11 @@ def test_route_kernels_agree_with_tied_centroids(spark, sf_dir, monkeypatch):
     tied = _tied_centroids(spark)
     want = {
         (r.query_id, r.probe_rank): r.partition_id
-        for r in knn.route_queries(queries, tied, 5, kernel="expr").collect()
+        for r in knn.route_queries(queries, tied, 5).collect()
     }
     got = {
         (r.query_id, r.probe_rank): r.partition_id
-        for r in knn.route_queries(queries, tied, 5, kernel="numpy").collect()
+        for r in knn_numpy.route_queries_numpy(queries, tied, 5).collect()
     }
     assert got == want and len(got) == 8 * 5
 
@@ -143,7 +144,7 @@ def test_assign_kernels_agree_with_tied_centroids(spark, sf_dir, monkeypatch):
     tied = _tied_centroids(spark)
     want = {
         r.vec_id: r.partition_id
-        for r in knn.assign_partitions(emb, tied, kernel="expr")
+        for r in knn.assign_partitions(emb, tied)
         .select("vec_id", "partition_id")
         .collect()
     }
@@ -164,9 +165,8 @@ def test_pq_encode_kernels_agree_with_tied_codebooks(spark, sf_dir):
     codes, so every subspace argmin ties across ~k/8 duplicate codes.
     Both kernels must resolve to the smallest code (expr: lexicographic
     array_min over (d, code) structs; numpy: first-occurrence argmin over
-    the code-sorted book) — and 'auto' must route this size onto the
-    mapInPandas GEMM encoder."""
-    from bioclip_vector_db_spark.operators.quantization import PQ_M, pq_encode
+    the code-sorted book)."""
+    from bioclip_vector_db_spark.operators.quantization import PQ_M, PQ_SUB_DIM, pq_encode
 
     k = LARGE_NLIST_THRESHOLD + 176
     tied_books = spark.range(k).select(
@@ -182,59 +182,43 @@ def test_pq_encode_kernels_agree_with_tied_codebooks(spark, sf_dir):
     cols = ["vec_id"] + [f"pq_code_{s}" for s in range(PQ_M)]
     expr = {
         r[0]: tuple(r[1:])
-        for r in pq_encode(emb, tied_books, kernel="expr").select(*cols).collect()
+        for r in pq_encode(emb, tied_books).select(*cols).collect()
     }
-    auto = pq_encode(emb, tied_books)  # auto -> numpy at this size
-    assert "MapInArrow" in _plan(auto)  # r16: the numpy kernels run Arrow-native
-    blas = {r[0]: tuple(r[1:]) for r in auto.select(*cols).collect()}
+    gemm = knn_numpy.pq_encode_numpy(emb, tied_books, m=PQ_M, sub_dim=PQ_SUB_DIM)
+    assert "MapInArrow" in _plan(gemm)
+    blas = {r[0]: tuple(r[1:]) for r in gemm.select(*cols).collect()}
     assert blas == expr and len(blas) == 64
     # Every tie must land in the first duplicate block of the codebook.
     assert all(c < 8 for codes in blas.values() for c in codes)
 
 
-def test_pick_kernel_probe_memoized(spark, sf_dir):
-    """kernel='auto' must fire its LIMIT-count probe job once per distinct
-    centroid table per session — not once per route/assign/search call —
-    and must recognize a re-built DataFrame over the same plan as the
-    same table (semantic plan hash, no job)."""
-    knn._KERNEL_CACHE.clear()
-    tracker = spark.sparkContext.statusTracker()
-    assert knn._pick_kernel("auto", _big_centroids(spark)) == "numpy"
-    n_jobs = len(tracker.getJobIdsForGroup())
-    assert knn._pick_kernel("auto", _big_centroids(spark)) == "numpy"
-    assert knn._pick_kernel("auto", _big_centroids(spark)) == "numpy"
-    assert len(tracker.getJobIdsForGroup()) == n_jobs
-    # A semantically different table is a fresh probe (exactly one more).
-    assert knn._pick_kernel("auto", knn.fixture_centroids(spark, sf_dir)) == "expr"
-    n_jobs2 = len(tracker.getJobIdsForGroup())
-    assert n_jobs2 > n_jobs
-    assert knn._pick_kernel("auto", knn.fixture_centroids(spark, sf_dir)) == "expr"
-    assert len(tracker.getJobIdsForGroup()) == n_jobs2
-
-
 def test_auto_assignment_uses_blas_at_large_nlist(spark, sf_dir):
-    """kernel='auto' must put large-nlist assignment on the blocked-GEMM
-    map stage (mapInArrow since r16) — no interpreted per-row fold, no
-    broadcast-nested-loop join — while small-k assignment stays on the
-    expression path."""
+    """A caller-held nlist above the threshold must put assignment on the
+    blocked-GEMM map stage (mapInArrow) — no interpreted per-row fold, no
+    broadcast-nested-loop join — while small-k assignment, or a caller
+    that passes no count, stays on the expression path."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    out = knn.assign_partitions(emb, _big_centroids(spark))
+    big = _big_centroids(spark)
+    out = knn.assign_partitions(emb, big, nlist=LARGE_NLIST_THRESHOLD + 176)
     plan = _plan(out)
     assert "MapInArrow" in plan
     assert "BroadcastNestedLoopJoin" not in plan and "Window" not in plan
     assert out.count() == emb.count()
-    small = knn.assign_partitions(emb, knn.fixture_centroids(spark, sf_dir))
+    small = knn.assign_partitions(emb, knn.fixture_centroids(spark, sf_dir), nlist=10)
     assert "MapInArrow" not in _plan(small)
+    assert "MapInArrow" not in _plan(knn.assign_partitions(emb, big))
 
 
 def test_auto_routing_uses_blas_at_large_nlist(spark, sf_dir):
-    """kernel='auto' routing above the threshold: one Arrow map stage,
-    no window, no row expansion; exactly nprobe ranked rows per query."""
+    """Routing with a caller-held nlist above the threshold: one Arrow map
+    stage, no window, no row expansion; exactly nprobe ranked rows per
+    query."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    out = knn.route_queries(queries, _big_centroids(spark), 3)
+    big = _big_centroids(spark)
+    out = knn.route_queries(queries, big, 3, nlist=LARGE_NLIST_THRESHOLD + 176)
     plan = _plan(out)
     assert "MapInArrow" in plan and "Window" not in plan
     rows = out.collect()

@@ -150,45 +150,13 @@ def test_pivot_is_single_aggregation(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
-def test_bucketed_remap_join_has_no_exchange(spark, sf_dir):
-    """The cluster layout: corpus and id_mapping bucketed on the join key
-    (partition_id, faiss_id) must make the O25 remap join exchange-free —
-    both sides read pre-hashed bucket files, no shuffle of either table.
-    This is the 'bucketing makes the remap join co-located' tuning from
-    the README, asserted on a real plan instead of speculated."""
-    from bioclip_vector_db_spark.operators.indexing import (
-        build_id_mapping,
-        write_bucketed_index,
-    )
-    from bioclip_vector_db_spark.operators.knn import assigned_corpus
-
-    corpus = assigned_corpus(spark, sf_dir).select(
-        "partition_id", "vec_id", "embedding"
-    )
-    mapping = build_id_mapping(assigned_corpus(spark, sf_dir))
-    corpus_with_fid = mapping.select("partition_id", "faiss_id", "original_id")
-    t_corpus, t_map = write_bucketed_index(
-        spark, corpus_with_fid, mapping, n_buckets=4
-    )
-    try:
-        a = spark.table(t_corpus).select("partition_id", "faiss_id")
-        joined = a.join(spark.table(t_map), ["partition_id", "faiss_id"]).select(
-            "partition_id", "faiss_id", "original_id", "metadata"
-        )
-        # Disable broadcast so the join strategy question is real: a
-        # co-located sort-merge join over bucket files, not an exchange.
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = _plan(joined)
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        assert joined.count() == mapping.count()
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t_corpus}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_map}")
+def test_embedding_udf_runs_once_per_document(spark, sf_dir):
+    """The filter Spark infers from ``posexplode`` (non-empty, non-null
+    embedding) must not get its own copy of the embed UDF: the executed
+    plan embeds each document once."""
+    df = QUERIES["embedding_udf_stub"](spark, sf_dir)
+    df.collect()
+    assert _plan(df).count("ArrowEvalPython") == 1
 
 
 def test_tfidf_dfreq_join_is_unhinted(spark, sf_dir):

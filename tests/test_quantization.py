@@ -114,8 +114,10 @@ def test_ivf_pq_prunes_to_probed_partitions(spark, sf_dir):
 def test_pq_encode_kernels_agree(spark, sf_dir):
     """Expression and blocked-BLAS PQ encoders must assign IDENTICAL codes
     (round-9-before-argmin, ties to smallest code, in both)."""
+    from bioclip_vector_db_spark.operators.knn_numpy import pq_encode_numpy
     from bioclip_vector_db_spark.operators.quantization import (
         PQ_M,
+        PQ_SUB_DIM,
         pq_codebooks,
         pq_encode,
     )
@@ -124,52 +126,17 @@ def test_pq_encode_kernels_agree(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     cb = pq_codebooks(emb)
     cols = ["vec_id"] + [f"pq_code_{s}" for s in range(PQ_M)]
-    expr = {r[0]: tuple(r[1:]) for r in pq_encode(emb, cb, kernel="expr").select(*cols).collect()}
-    blas = {r[0]: tuple(r[1:]) for r in pq_encode(emb, cb, kernel="numpy").select(*cols).collect()}
+    blas_df = pq_encode_numpy(emb, cb, m=PQ_M, sub_dim=PQ_SUB_DIM)
+    expr = {r[0]: tuple(r[1:]) for r in pq_encode(emb, cb).select(*cols).collect()}
+    blas = {r[0]: tuple(r[1:]) for r in blas_df.select(*cols).collect()}
     assert expr == blas
-
-
-def test_pq_recall_floor_with_trained_codebooks(spark, sf_dir):
-    """Quantization-loss sanity on REAL (per-subspace k-means) codebooks:
-    ADC top-10 must recover a meaningful fraction of the exact top-10.
-    The deterministic per-label stand-in cannot rank within a cluster
-    (every member encodes identically — measured recall ~0.04, i.e.
-    tiebreak-random), which is exactly why pq_train exists. Measured
-    curve on the fixture (seed 42): 16 codes -> 0.14, 32 -> 0.22,
-    64 -> 0.24, 128 -> 0.36 — the expected PQ size/recall tradeoff on
-    high-noise vectors; the floor sits at half the 64-code point."""
-    from bioclip_vector_db_spark.operators.knn import knn_join
-    from bioclip_vector_db_spark.operators.quantization import (
-        pq_adc_search,
-        pq_encode,
-        pq_train,
-    )
-    from bioclip_vector_db_spark.sources.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    corpus = emb.filter(F.col("vec_id") >= 5)
-    cb = pq_train(emb, n_codes=64)
-    encoded = pq_encode(corpus.select("vec_id", "embedding"), cb)
-    approx = {
-        (r.query_id, r.neighbor_id)
-        for r in pq_adc_search(queries, encoded, cb, k=10).collect()
-    }
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in knn_join(queries, corpus, k=10).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.12, f"PQ recall@10 collapsed: {recall:.2f}"
 
 
 def test_adc_gather_kernel_matches_wide(spark, sf_dir):
     """The gather kernel folds the SAME collected LUT doubles in the SAME
     left-to-right subspace order as the wide join form, so the two must
-    agree on every (query, neighbor, adc_distance, rank) row — pinned
-    here at m=8 where the wide form is still cheap to plan."""
+    agree on every (query, neighbor, adc_distance) row — pinned here at
+    m=8 where the wide form is still cheap to plan."""
     from bioclip_vector_db_spark.operators import quantization as pq
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -180,19 +147,14 @@ def test_adc_gather_kernel_matches_wide(spark, sf_dir):
     enc = pq.pq_encode(emb.filter(F.col("vec_id") >= 5), cb, m=8, sub_dim=8).select(
         "vec_id", *[f"pq_code_{s}" for s in range(8)]
     )
-    wide = {
-        tuple(r)
-        for r in pq.pq_adc_search(
-            queries, enc, cb, k=7, m=8, sub_dim=8, adc_kernel="wide"
-        ).collect()
-    }
+    rows = enc.crossJoin(queries.select("query_id"))
+    lut = pq.adc_lut(queries, cb, m=8, sub_dim=8)
+    cols = ["query_id", "vec_id", "adc_distance"]
+    wide = {tuple(r) for r in pq.adc_score(rows, lut, m=8).select(*cols).collect()}
     gathered = {
-        tuple(r)
-        for r in pq.pq_adc_search(
-            queries, enc, cb, k=7, m=8, sub_dim=8, adc_kernel="gather"
-        ).collect()
+        tuple(r) for r in pq._adc_score_gather(rows, lut, 8).select(*cols).collect()
     }
-    assert wide == gathered
+    assert wide == gathered and len(wide) == 5 * enc.count()
 
 
 def test_adc_gather_kernel_scales_to_pq64(spark, sf_dir):
@@ -206,6 +168,7 @@ def test_adc_gather_kernel_scales_to_pq64(spark, sf_dir):
     import numpy as np
 
     from bioclip_vector_db_spark.operators import quantization as pq
+    from bioclip_vector_db_spark.operators.knn_numpy import pq_encode_numpy
 
     m, sub_dim, k = 64, 1, 5
     emb = load_table(spark, sf_dir, "embeddings")
@@ -215,8 +178,8 @@ def test_adc_gather_kernel_scales_to_pq64(spark, sf_dir):
     )
     # Encode via the numpy kernel: the expr encoder is ALSO a 64-fold
     # plan (one argmin projection per subspace) — same Catalyst wall.
-    enc = pq.pq_encode(
-        emb.filter(F.col("vec_id") >= 5), cb, kernel="numpy", m=m, sub_dim=sub_dim
+    enc = pq_encode_numpy(
+        emb.filter(F.col("vec_id") >= 5), cb, m=m, sub_dim=sub_dim
     ).select("vec_id", *[f"pq_code_{s}" for s in range(m)])
     got = sorted(
         tuple(r)
@@ -284,7 +247,7 @@ def test_adc_gather_unknown_query_id_fails_loud(spark):
     lut, rows = _tiny_lut_and_rows(spark)
     bad = rows.withColumn("query_id", F.lit(99).cast("long"))
     with pytest.raises(Exception, match="no rows in the ADC LUT"):
-        qz.adc_score(bad, lut, m=4, kernel="gather").collect()
+        qz._adc_score_gather(bad, lut, 4).collect()
 
 
 def test_adc_gather_unknown_code_fails_loud(spark):
@@ -296,11 +259,9 @@ def test_adc_gather_unknown_code_fails_loud(spark):
 
     lut, rows = _tiny_lut_and_rows(spark)
     with pytest.raises(Exception, match="not present in the ADC LUT"):
-        qz.adc_score(
-            rows.withColumn("pq_code_2", F.lit(7)), lut, m=4, kernel="gather"
-        ).collect()
+        qz._adc_score_gather(rows.withColumn("pq_code_2", F.lit(7)), lut, 4).collect()
     # Sanity: the untampered rows still score (guards reject misuse, not use).
-    got = qz.adc_score(rows, lut, m=4, kernel="gather").collect()
+    got = qz._adc_score_gather(rows, lut, 4).collect()
     assert len(got) == 1 and got[0]["adc_distance"] is not None
 
 
@@ -318,10 +279,10 @@ def test_adc_gather_missing_lut_cell_fails_loud(spark):
     holey = lut.filter(~((F.col("s") == 2) & (F.col("code") == 1)))
     bad = rows.withColumn("pq_code_2", F.lit(1))
     with pytest.raises(Exception, match="no entry for .query_id, subspace, code"):
-        qz.adc_score(bad, holey, m=4, kernel="gather").collect()
+        qz._adc_score_gather(bad, holey, 4).collect()
     # Sanity: the untampered rows still score against the holey LUT when
     # they never touch the missing cell.
-    got = qz.adc_score(rows, holey, m=4, kernel="gather").collect()
+    got = qz._adc_score_gather(rows, holey, 4).collect()
     assert len(got) == 1 and got[0]["adc_distance"] is not None
 
 
@@ -345,9 +306,9 @@ def test_adc_gather_stored_nan_diagnosed_distinctly(spark):
     )
     bad = rows.withColumn("pq_code_2", F.lit(1))
     with pytest.raises(Exception, match="stored NaN distance"):
-        qz.adc_score(bad, poisoned, m=4, kernel="gather").collect()
+        qz._adc_score_gather(bad, poisoned, 4).collect()
     # Rows never touching the poisoned cell still score normally.
-    got = qz.adc_score(rows, poisoned, m=4, kernel="gather").collect()
+    got = qz._adc_score_gather(rows, poisoned, 4).collect()
     assert len(got) == 1 and got[0]["adc_distance"] is not None
 
 
@@ -375,7 +336,7 @@ def test_adc_gather_inf_cancellation_diagnosed(spark):
     # +inf cell too, so the fold is finite + finite + inf + (-inf) = NaN.
     bad = rows.withColumn("pq_code_2", F.lit(1))
     with pytest.raises(Exception, match="cancel in the subspace fold"):
-        qz.adc_score(bad, noisy, m=4, kernel="gather").collect()
+        qz._adc_score_gather(bad, noisy, 4).collect()
 
 
 def test_adc_gather_mixed_causes_report_in_one_error(spark):
@@ -411,7 +372,7 @@ def test_adc_gather_mixed_causes_report_in_one_error(spark):
         "pq_code_2 int, pq_code_3 int",
     ).coalesce(1)
     with pytest.raises(Exception) as ei:
-        qz.adc_score(rows2, tampered, m=4, kernel="gather").collect()
+        qz._adc_score_gather(rows2, tampered, 4).collect()
     msg = str(ei.value)
     assert "different codebooks" in msg
     assert "cancel in the subspace fold" in msg
@@ -456,7 +417,7 @@ def test_adc_gather_cause_past_offender_window_still_reported(spark):
         "pq_code_2 int, pq_code_3 int",
     ).coalesce(1)
     with pytest.raises(Exception) as ei:
-        qz.adc_score(rows2, tampered, m=4, kernel="gather").collect()
+        qz._adc_score_gather(rows2, tampered, 4).collect()
     msg = str(ei.value)
     assert "different codebooks" in msg, msg
     assert "cancel in the subspace fold" in msg, msg

@@ -731,10 +731,10 @@ def main() -> None:
                 # top-10 for 5 queries. Both stages are map-side linear
                 # scans whose plan size is constant in m; wall must grow
                 # ~linearly in n.
+                from bioclip_vector_db_spark.operators.knn_numpy import pq_encode_numpy
                 from bioclip_vector_db_spark.operators.quantization import (
                     pq_adc_search,
                     pq_codebooks,
-                    pq_encode,
                 )
 
                 t0 = time.perf_counter()
@@ -748,9 +748,8 @@ def main() -> None:
                     F.col("vec_id").alias("query_id"),
                     F.col("embedding").alias("qv"),
                 )
-                enc = pq_encode(
-                    emb.filter(F.col("vec_id") >= 5), cb,
-                    kernel="numpy", m=64, sub_dim=1,
+                enc = pq_encode_numpy(
+                    emb.filter(F.col("vec_id") >= 5), cb, m=64, sub_dim=1
                 ).select("vec_id", *[f"pq_code_{s}" for s in range(64)])
                 out = pq_adc_search(queries, enc, cb, k=10, m=64, sub_dim=1)
                 n_out = out.count()
@@ -798,14 +797,14 @@ def main() -> None:
                 cent = train_kmeans_centroids(emb, nlist, max_iter=5).localCheckpoint()
                 t_train = time.perf_counter() - t0
                 # assign_partitions keeps the input columns (embedding included)
-                assigned = transient_persist(assign_partitions(emb, cent))
+                assigned = transient_persist(assign_partitions(emb, cent, nlist=nlist))
                 assigned.count()
                 queries = emb.filter(F.col("vec_id") % 97 == 0).select(
                     F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
                 )
                 n_q = queries.count()
                 t0 = time.perf_counter()
-                routed = route_queries(queries, cent, nprobe=3)
+                routed = route_queries(queries, cent, nprobe=3, nlist=nlist)
                 scored = assigned.join(
                     routed.select("query_id", "qv", "partition_id"), "partition_id"
                 ).select(
