@@ -34,12 +34,12 @@ from __future__ import annotations
 
 import hashlib
 import math
-import time
 
 import numpy as np
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.vector import dot_product, lit_array
 from ..plans.registry import register, transient_persist
@@ -2292,7 +2292,8 @@ def _assign_centroids(
     collected: "tuple | None" = None,
 ) -> DataFrame:
     """``(vec_id, embedding, cid, csim)``: each vector's argmax rounded
-    cosine centroid, ties to the lowest cid, by the named tier:
+    cosine centroid, ties to the lowest cid, by the named tier — the one
+    place a tier name becomes a kernel:
 
     - ``'expr'``: the exact broadcast fold below (every oracle-gated plan);
     - ``'flat'``: the exact blocked GEMM (knn_numpy, BLAS summation order);
@@ -2300,19 +2301,36 @@ def _assign_centroids(
     - ``'distributed'``: knn_routed's tier, no driver-resident table.
 
     ``n_cents``/``n_vec`` are the distributed tier's sizing hints;
-    ``collected`` is a centroid matrix the caller already holds."""
-    if tier != "expr":
-        from .knn_numpy import argmax_centroid_numpy
+    ``collected`` is the ``(ids, matrix)`` pair of the centroid table
+    when the caller already holds it (the in-memory tiers collect it
+    otherwise)."""
+    if tier == "distributed":
+        from .knn_routed import routed_best_centroid_distributed
 
-        routed = {"flat": False, "routed": True, "distributed": "distributed"}[tier]
-        return argmax_centroid_numpy(
-            v,
-            centroids,
-            routed=routed,
-            n_centroids=n_cents,
-            n_vectors=n_vec,
-            _collected=collected,
+        return routed_best_centroid_distributed(
+            v, centroids, n_centroids=n_cents, n_vectors=n_vec
         )
+    if tier in ("flat", "routed"):
+        from .knn_numpy import (
+            _blocked_best_centroid,
+            _collect_centroids,
+            _routed_best_centroid,
+        )
+
+        if collected is None:
+            collected = _collect_centroids(centroids, "cid", "cvec")
+        if tier == "routed":
+            return _routed_best_centroid(v, collected)
+        return _blocked_best_centroid(
+            v,
+            collected,
+            vec_col="embedding",
+            similarity=True,
+            out_field=T.StructField("cid", T.LongType()),
+            score_field="csim",
+        )
+    if tier != "expr":
+        raise ValueError(f"unknown assignment tier {tier!r}")
     # Assignment argmax INSIDE the scan, zero row expansion — the same
     # collapsed-struct fold knn.assign_partitions uses: the centroid table
     # becomes ONE row holding an array of (cid, cvec) structs, broadcast,
@@ -2497,14 +2515,6 @@ def _decide_for_tier(
     )
 
 
-#: Opt-in stage-wall sink for the SemDeDup tail (tools/scale_stress.py
-#: dist_decompose leg): when a dict is installed here,
-#: _semantic_dedup_decide records per-stage driver walls and row counts
-#: into it and force-materializes between stages so the rank window,
-#: pair/decide work, and final join are separable. None (default) = zero
-#: overhead, no extra action, identical plan.
-_DECIDE_INSTRUMENT: "dict | None" = None
-
 #: Auto salt sizing for the arrow decide's per-(cluster, salt) cogroup
 #: key: the applyInArrow full-key materialization bound is the same one
 #: the routed assignment tier sizes to (knn_routed.
@@ -2521,11 +2531,11 @@ def _decide_removed_arrow(
     n_hint: "int | None",
     k_hint: "int | None",
 ) -> DataFrame:
-    """Exists-form removal decision as a per-cluster cogroup GEMM (r15
-    verdict item 2): a vector is removed iff SOME better-ranked
-    same-cluster member scores round-9 dot > threshold against it —
-    exactly _semantic_dedup_decide's rule (rank is a strict total order,
-    so the pair form and the exists form name the same removed set).
+    """Exists-form removal decision as a per-cluster cogroup GEMM: a
+    vector is removed iff SOME better-ranked same-cluster member scores
+    round-9 dot > threshold against it — exactly _semantic_dedup_decide's
+    rule (rank is a strict total order, so the pair form and the exists
+    form name the same removed set).
 
     Shape: the a-side (every ranked row) and the witness side (rows with
     rank <= depth_cap when capped, all rows when exact) cogroup on
@@ -2588,12 +2598,9 @@ def _decide_removed_arrow(
 
     def decide(left: pa.Table, right: pa.Table) -> pa.Table:
         if not left.num_rows or not right.num_rows:
-            # witness-only keys decide nothing; a-only keys impossible
-            # (the witness side is a filter of the same ranked table,
-            # and rank 1 always survives any cap) except under a cap
-            # with salts where a salt replica can meet an empty... no:
-            # witnesses replicate to EVERY salt, so a live cluster has
-            # witnesses in every key. Guard stays for empty-input calls.
+            # Witness-only keys decide nothing. A-only keys cannot occur:
+            # rank 1 survives any cap and witnesses replicate to every
+            # salt, so only an empty input reaches this guard.
             return out_arrow.empty_table()
         A = _list_matrix(left.column("embedding"))
         a_rank = (
@@ -2648,9 +2655,9 @@ def _semantic_dedup_decide(
     all-pairs form: every unordered within-cluster pair over the cosine
     threshold marks its worse-ranked member removed. The pair join is
     quadratic in CLUSTER depth — linear in n only under SemDeDup's
-    k = ceil(n/64) contract, and a skewed real corpus won't honor a
-    contract (r13 verdict item 1: merge_tail 4.07x/doubling at the
-    M=512 ladder's deep-cluster regime).
+    k = ceil(n/64) contract, which a skewed real corpus need not honor
+    (SCALING.md §2.1 measured 4.07x/doubling in a deep-cluster
+    regime).
 
     ``depth_cap=R`` prunes the BETTER-RANKED comparison side to each
     cluster's top-R exemplars before the join, using the equivalent
@@ -2673,15 +2680,10 @@ def _semantic_dedup_decide(
     the arrow kernel's salting; sizing-only, never correctness."""
     if kernel not in ("expr", "arrow"):
         raise ValueError(f"decide kernel must be 'expr' or 'arrow', got {kernel!r}")
-    inst = _DECIDE_INSTRUMENT
     rw = Window.partitionBy("cid").orderBy(F.col("csim").desc(), F.col("vec_id").asc())
     ranked = transient_persist(
         assigned.withColumn("rank", F.row_number().over(rw).cast("bigint"))
     )
-    if inst is not None:
-        t0 = time.perf_counter()
-        inst["rank_rows"] = ranked.count()
-        inst["rank_s"] = time.perf_counter() - t0
     if kernel == "arrow":
         if depth_cap is not None and depth_cap < 1:
             raise ValueError(
@@ -2690,12 +2692,6 @@ def _semantic_dedup_decide(
         removed = _decide_removed_arrow(
             ranked, threshold, depth_cap, n_hint, k_hint
         )
-        if inst is not None:
-            removed = transient_persist(removed)
-            t0 = time.perf_counter()
-            inst["removed_rows"] = removed.count()
-            inst["decide_s"] = time.perf_counter() - t0
-            inst["decide_kernel"] = kernel
         return ranked.join(removed, "vec_id", "left").select(
             "vec_id",
             F.col("cid").cast("bigint").alias("cluster_id"),
@@ -2744,12 +2740,6 @@ def _semantic_dedup_decide(
             .distinct()
             .withColumn("_removed", F.lit(True))
         )
-    if inst is not None:
-        removed = transient_persist(removed)
-        t0 = time.perf_counter()
-        inst["removed_rows"] = removed.count()
-        inst["decide_s"] = time.perf_counter() - t0
-        inst["decide_kernel"] = kernel
     return ranked.join(removed, "vec_id", "left").select(
         "vec_id",
         F.col("cid").cast("bigint").alias("cluster_id"),

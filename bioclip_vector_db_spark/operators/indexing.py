@@ -89,9 +89,12 @@ def train_kmeans_centroids(
 def _kmeans_centroids(
     vectors: DataFrame, k: int, *, vec_col: str = "embedding", seed: int = 42,
     train_fraction: float | None = None, max_iter: int = 20, init_mode: str = "k-means||",
+    n_rows: int | None = None,
 ) -> tuple[DataFrame, int]:
     """train_kmeans_centroids' table and its row count, the fitted center
-    count (at most ``k``)."""
+    count (at most ``k``). ``n_rows`` is the row count of ``vectors`` when
+    the caller holds it; it sizes the fit without a count job unless
+    ``train_fraction`` samples a different train set."""
     import pyarrow as pa
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -103,7 +106,7 @@ def _kmeans_centroids(
     # shuffle partitions pays 20x32 task-scheduling latency for no work.
     # ~50k rows per partition keeps iterations dense; caching avoids
     # re-reading the source every iteration.
-    n = train.count()
+    n = n_rows if n_rows is not None and train_fraction is None else train.count()
     feats = feats.repartition(max(1, n // 50_000)).cache()
     try:
         model = KMeans(
@@ -218,7 +221,7 @@ def build_index(
             k = k or nlist
         else:
             k = k or derive_nlist(n)
-            cent, nlist = _kmeans_centroids(vectors, k, seed=seed)
+            cent, nlist = _kmeans_centroids(vectors, k, seed=seed, n_rows=n)
         t_train = time.perf_counter()
         # Persist: the corpus lineage (assignment argmin + faiss-id window
         # over every vector) feeds BOTH table writes below.

@@ -159,60 +159,74 @@ def _best_centroid_core(
     return best_id, best_v
 
 
-def _blocked_best_centroid(
+def _append_best_centroid(
     vectors: DataFrame,
-    centroids: DataFrame,
+    ids: "np.ndarray",
+    payload: tuple,
+    core,
     *,
-    id_col: str,
-    cvec_col: str,
     vec_col: str,
-    similarity: bool,
     out_field: "T.StructField",
-    score_field: "str | None" = None,
-    _collected: "tuple | None" = None,
+    score_field: "str | None",
 ) -> DataFrame:
-    """Shared blocked-GEMM argbest core behind assign_partitions_numpy
-    (argmin cosine distance) and argmax_centroid_numpy (argmax dot
-    similarity): collect + broadcast the id-sorted centroid matrix, score
-    each Arrow batch as ``E @ C_block.T`` BLAS calls with a running
-    (best_score, best_id) update across centroid blocks. Scores are
-    rounded to 9 decimals BEFORE comparison — exactly like the expression
-    kernels — and ties break toward the smallest id: blocks ascend by id,
-    within a block arg{min,max} takes the FIRST extremum, and cross-block
-    updates require a strict improvement. Map-side only: no join, no
-    shuffle, no row expansion. Empty centroid table -> empty output
-    (empty-in/empty-out; without it every row would get id 0 and an
-    infinite score — silently wrong)."""
-    ids, cmat = (
-        _collected
-        if _collected is not None
-        else _collect_centroids(centroids, id_col, cvec_col)
-    )
+    """The one ``mapInArrow`` wrapper of the in-memory argbest kernels:
+    the input rows pass through untouched, plus ``out_field`` (the best
+    centroid id) and, when named, ``score_field`` (its round-9 score),
+    where ``core(emb, *payload)`` returns ``(best_id, best_v)`` for one
+    Arrow batch's matrix. ``payload`` is broadcast once. An empty
+    centroid table gives an empty output: without that guard every row
+    would get id 0 and an infinite score."""
     fields = list(vectors.schema.fields) + [out_field]
     if score_field is not None:
         fields.append(T.StructField(score_field, T.DoubleType()))
     out_schema = T.StructType(fields)
     if len(ids) == 0:
         return vectors.sparkSession.createDataFrame([], out_schema)
-    bc = vectors.sparkSession.sparkContext.broadcast((ids, cmat))
+    bc = vectors.sparkSession.sparkContext.broadcast(payload)
     out_np_type = np.int32 if isinstance(out_field.dataType, T.IntegerType) else np.int64
-
     out_arrow = to_arrow_schema(out_schema)
     vec_idx = [f.name for f in vectors.schema.fields].index(vec_col)
 
     def score_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bids, bC = bc.value
+        args = bc.value
         for rb in batches:
             if not rb.num_rows:
                 continue
-            emb = _list_matrix(rb.column(vec_idx))
-            best_id, best_v = _best_centroid_core(emb, bids, bC, similarity)
+            best_id, best_v = core(_list_matrix(rb.column(vec_idx)), *args)
             extras = [pa.array(best_id.astype(out_np_type))]
             if score_field is not None:
                 extras.append(pa.array(best_v, type=pa.float64()))
             yield _rb_append(rb, out_arrow, extras)
 
     return vectors.mapInArrow(score_arrow, out_schema)
+
+
+def _blocked_best_centroid(
+    vectors: DataFrame,
+    collected: tuple,
+    *,
+    vec_col: str,
+    similarity: bool,
+    out_field: "T.StructField",
+    score_field: "str | None" = None,
+) -> DataFrame:
+    """Flat exact argbest against the ``(ids, matrix)`` pair of
+    _collect_centroids: argmin cosine distance (assign_partitions_numpy)
+    or argmax dot similarity (SemDeDup's 'flat' tier). Each Arrow batch
+    is scored by _best_centroid_core: scores round to 9 decimals before
+    comparison, exactly like the expression kernels, and ties break
+    toward the smallest id. Map-side only: no join, no shuffle, no row
+    expansion."""
+    ids, cmat = collected
+    return _append_best_centroid(
+        vectors,
+        ids,
+        (ids, cmat),
+        lambda emb, bids, bC: _best_centroid_core(emb, bids, bC, similarity),
+        vec_col=vec_col,
+        out_field=out_field,
+        score_field=score_field,
+    )
 
 
 def assign_partitions_numpy(
@@ -236,9 +250,7 @@ def assign_partitions_numpy(
     §2.1)."""
     return _blocked_best_centroid(
         vectors,
-        centroids,
-        id_col=pid_col,
-        cvec_col=centroid_vec_col,
+        _collect_centroids(centroids, pid_col, centroid_vec_col),
         vec_col=vec_col,
         similarity=False,
         out_field=T.StructField(pid_col, T.IntegerType()),
@@ -257,11 +269,9 @@ ROUTE_PROBES = 8
 _SUPER_KMEANS_ITERS = 8
 
 
-def _super_centroids(
-    cmat: "np.ndarray", probes: int = ROUTE_PROBES, g: "int | None" = None
-):
+def _super_centroids(cmat: "np.ndarray", g: "int | None" = None):
     """Deterministic driver-side grouping of the (id-sorted) centroid
-    matrix into g = ceil(sqrt(probes * k)) groups: Lloyd's k-means with
+    matrix into g = ceil(sqrt(ROUTE_PROBES * k)) groups: Lloyd's k-means with
     evenly-strided init (no RNG — same input, same groups, so routed
     results are reproducible run-to-run). Returns (S, members): the
     non-empty groups' mean matrix g' x d and, per group, the ascending
@@ -279,7 +289,7 @@ def _super_centroids(
     imposes on the flat kernel (the distributed tier bounds it by the
     sample cap instead)."""
     k = cmat.shape[0]
-    g = min(k, max(2, g if g is not None else math.ceil(math.sqrt(probes * k))))
+    g = min(k, max(2, g if g is not None else math.ceil(math.sqrt(ROUTE_PROBES * k))))
     S = cmat[np.linspace(0, k - 1, g).astype(np.int64)].copy()
     assign = None
     for _ in range(_SUPER_KMEANS_ITERS):
@@ -424,122 +434,32 @@ def _routed_best_core(
     return best_id, best_v
 
 
-def _routed_best_centroid(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str,
-    cvec_col: str,
-    vec_col: str,
-    out_field: "T.StructField",
-    score_field: "str | None" = None,
-    probes: int = ROUTE_PROBES,
-    _collected: "tuple | None" = None,
-) -> DataFrame:
-    """Two-tier argmax: route each vector to its top-``probes``
-    super-centroid groups (one b x g GEMM), then argmax only against the
-    routed groups' members — O(n sqrt(k) d) where the flat kernel is
-    O(n k d). Same 9-dp-round-then-compare and smallest-id tiebreak as
-    _blocked_best_centroid, applied over the PROBED candidate set; the
-    result equals the flat kernel's whenever the true best centroid's
-    group is among the probed ones (recall-gated for structured inputs —
-    SemDeDup's centroids are k-means means of the data being assigned, so
-    each vector's best group dominates the routing scores)."""
-    ids, cmat = (
-        _collected
-        if _collected is not None
-        else _collect_centroids(centroids, id_col, cvec_col)
-    )
-    fields = list(vectors.schema.fields) + [out_field]
-    if score_field is not None:
-        fields.append(T.StructField(score_field, T.DoubleType()))
-    out_schema = T.StructType(fields)
-    if len(ids) == 0:
-        return vectors.sparkSession.createDataFrame([], out_schema)
-    S, members = _super_centroids(cmat, probes)
-    bc = vectors.sparkSession.sparkContext.broadcast((ids, cmat, S, members))
-    out_np_type = np.int32 if isinstance(out_field.dataType, T.IntegerType) else np.int64
-
-    out_arrow = to_arrow_schema(out_schema)
-    vec_idx = [f.name for f in vectors.schema.fields].index(vec_col)
-
-    def score_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bids, bC, bS, bmem = bc.value
-        p = min(probes, bS.shape[0])
-        for rb in batches:
-            if not rb.num_rows:
-                continue
-            emb = _list_matrix(rb.column(vec_idx))
-            best_id, best_v = _routed_best_core(emb, bids, bC, bS, bmem, p)
-            extras = [pa.array(best_id.astype(out_np_type))]
-            if score_field is not None:
-                extras.append(pa.array(best_v, type=pa.float64()))
-            yield _rb_append(rb, out_arrow, extras)
-
-    return vectors.mapInArrow(score_arrow, out_schema)
-
-
-def argmax_centroid_numpy(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    cid_col: str = "cid",
-    cvec_col: str = "cvec",
-    routed: "bool | str" = False,
-    n_centroids: "int | None" = None,
-    n_vectors: "int | None" = None,
-    _collected: "tuple | None" = None,
-) -> DataFrame:
-    """Best-centroid argmax (similarity form of assign_partitions_numpy):
-    the numpy assignment tiers behind ``dedup.semantic_dedup``, where
-    assignment cost is n x k x dim and the interpreted expression fold
-    dominates the whole pipeline once k grows with the corpus.
-
-    Round-9-then-argmax similarities, ties to the smallest cid —
-    identical winners to the expression fold's lexicographic (csim, -cid)
-    struct max. Emits ``csim`` as well as ``cid`` because SemDeDup ranks
-    exemplars by it downstream. Empty centroid table -> empty output,
-    matching the expression fold's guard.
-
-    ``routed`` names the tier:
-    - ``False``: the flat exact blocked GEMM (_blocked_best_centroid),
-      O(n k d) — quadratic under SemDeDup's k = ceil(n/64) contract;
-    - ``True``: two-tier super-centroid routing (_routed_best_centroid),
-      O(n sqrt(k) d), approximate;
-    - ``'distributed'``: knn_routed.routed_best_centroid_distributed,
-      which never collects the k x d table (both other tiers do) and
-      needs a unique ``vec_id`` column. ``n_centroids``/``n_vectors``
-      are its positive-only sizing hints, never trusted for correctness.
-
-    ``_collected``: the ``(ids, matrix)`` pair of _collect_centroids when
-    the caller already holds it, so the in-memory tiers do not evaluate
-    the centroid plan a second time."""
-    if routed == "distributed":
-        from .knn_routed import routed_best_centroid_distributed
-
-        return routed_best_centroid_distributed(
-            vectors,
-            centroids,
-            id_col=cid_col,
-            cvec_col=cvec_col,
-            vec_col=vec_col,
-            out_field=T.StructField(cid_col, T.LongType()),
-            score_field="csim",
-            n_centroids=n_centroids,
-            n_vectors=n_vectors,
-        )
-    kw = dict(
-        id_col=cid_col,
-        cvec_col=cvec_col,
-        vec_col=vec_col,
-        out_field=T.StructField(cid_col, T.LongType()),
+def _routed_best_centroid(vectors: DataFrame, collected: tuple) -> DataFrame:
+    """SemDeDup's in-memory 'routed' tier over the ``(ids, matrix)`` pair
+    of _collect_centroids: route each ``embedding`` to its
+    top-ROUTE_PROBES super-centroid groups (one b x g GEMM), then take
+    the argmax only against the routed groups' members — O(n sqrt(k) d)
+    where the flat kernel is O(n k d). Appends ``cid`` and ``csim`` with
+    the flat kernel's round-9-then-compare and smallest-id rules, applied
+    over the PROBED candidate set: the result equals the flat kernel's
+    whenever the true best centroid's group is probed (recall-gated on
+    structured inputs — SemDeDup's centroids are k-means means of the
+    data being assigned, so each vector's best group dominates the
+    routing scores)."""
+    ids, cmat = collected
+    # An empty table never reaches the core (empty in, empty out).
+    groups = _super_centroids(cmat) if len(ids) else (None, None)
+    return _append_best_centroid(
+        vectors,
+        ids,
+        (ids, cmat, *groups),
+        lambda emb, bids, bC, bS, bmem: _routed_best_core(
+            emb, bids, bC, bS, bmem, ROUTE_PROBES
+        ),
+        vec_col="embedding",
+        out_field=T.StructField("cid", T.LongType()),
         score_field="csim",
-        _collected=_collected,
     )
-    if routed:
-        return _routed_best_centroid(vectors, centroids, **kw)
-    return _blocked_best_centroid(vectors, centroids, similarity=True, **kw)
 
 
 def route_queries_numpy(

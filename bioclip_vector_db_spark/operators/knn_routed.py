@@ -1,41 +1,43 @@
 """Distributed two-tier routed centroid assignment — no driver-resident
 centroid table.
 
-The r11 routed kernel (knn_numpy._routed_best_centroid) removed the
-O(n^2 d / 64) flat-assignment wall under SemDeDup's k = ceil(n/64)
-contract, but kept `_collect_centroids`' centroids-fit-on-the-driver
-bound: the full bottom-tier k x d matrix is collected and broadcast. At
-the contract's 100-TB point (n = 1e11 -> k ~ 1.6e9, ~6 TB at 512-d)
-that table fits NO driver — the r11 verdict's one named engineering
-frontier. This module removes the bound:
+The in-memory routed kernel (knn_numpy._routed_best_centroid) assigns in
+O(n sqrt(k) d) but collects and broadcasts the full k x d centroid
+table. Under SemDeDup's k = ceil(n/64) contract that table outgrows any
+driver (n = 1e11 -> k ~ 1.6e9, ~6 TB at 512-d). This tier removes the
+bound:
 
 - only the ROUTER is driver-resident: g = min(sample,
-  ceil(sqrt(probes*k))) normalized group means built from a
+  ceil(sqrt(ROUTE_PROBES*k))) normalized group means built from a
   hash-strided SAMPLE of the centroid table (<= _ROUTER_SAMPLE_CAP
   rows collected — a constant, never O(k)). Because g is bounded by
-  the sample, the router broadcast is CAP-bounded too: <= cap x d =
+  the sample, the router broadcast is bounded too: <= cap x d =
   268 MB at 512-d, at ANY k — and the cap costs little even at the
   extreme contract point (k = 1.6e9: capped g = 65,536 vs the
   unbounded optimum sqrt(8k) = 113k gives 65,536 + 8*(k/g) ~ 261k
   dots/vector vs the optimal 2*sqrt(8k) ~ 226k — a 15% FLOPs
   deviation, not a regime change);
 - the bottom tier stays a DataFrame: each centroid row is assigned to
-  its router group MAP-SIDE (tiled argmax against the broadcast
-  router), giving a (group_id, cid, cvec) table that is shuffled by
-  group_id — never collected;
-- each vector routes map-side to its top-``probes`` LIVE groups (groups
-  that actually own >= 1 centroid — the live-id list is a <= g-row
-  collect), pruned by the calibrated probe margin (default; r14 item
-  2), is exploded to the surviving rows, and the per-group argbest is
-  a cogroup GEMM between the routed vectors and the group's member
-  centroids ((group id, salt) as the equi-join key — salts sized
-  per group from the sampled routing distribution so the MAX key stays
-  near the per-task target, r14 item 3);
+  its router group MAP-SIDE (argmax against the broadcast router),
+  giving a (group_id, cid, cvec) table that is shuffled by group_id —
+  never collected;
+- each vector routes map-side to its top-ROUTE_PROBES LIVE groups
+  (groups that own >= 1 centroid), pruned by a probe margin calibrated
+  from the data, is exploded to the surviving rows, and the per-group
+  argbest is a cogroup GEMM between the routed vectors and the group's
+  member centroids, keyed on (group id, salt) — salts sized per group
+  from the sampled routing distribution so the MAX key stays near the
+  per-task target;
 - all three Python stages run Arrow-native (``mapInArrow`` /
   ``cogroup().applyInArrow``): the vector values buffer feeds the GEMM
   operand directly, with no per-row Python object boxing;
-- the global argbest is one groupBy(vec_id) struct-min/max over n x p
+- the global argbest is one groupBy(vec_id) struct-max over the
   candidate rows (no embedding payload), joined back to the input.
+
+The work is split in two steps. _decide_route runs the driver-side
+decisions (router, live groups, margin, per-group salts) and returns
+them as one _Route record; _assign_routed builds the plan that consumes
+it. Nothing else is settable: every decision derives from the data.
 
 Cost model vs the in-memory routed kernel: identical GEMM work,
 O(n sqrt(probes*k) d) FLOPs, plus a shuffle the in-memory kernel does
@@ -49,9 +51,9 @@ Approximation contract: same class as the in-memory routed kernel —
 the probed-group union need not contain the true argbest centroid;
 recall is gated on structured data by tests/test_semantic_routing.py
 and the keep/drop drift bound is gated end-to-end on semantic_dedup.
-Deterministic end to end: hash-strided sample, strided-init Lloyd,
-argmax/argpartition over fixed layouts, ties to the smallest id at
-every stage (group assignment, within-group argbest, global merge).
+Deterministic end to end: hash-strided samples, strided-init Lloyd,
+argmax over fixed layouts, ties to the smallest id at every stage
+(group assignment, within-group argbest, global merge).
 
 Reference parity note: the reference loads its whole FAISS index on one
 process (storage_impl.py) — at 100 TB no single process can; this tier
@@ -61,8 +63,8 @@ is the Spark-native answer SCALING.md §2.1 names.
 from __future__ import annotations
 
 import math
-import time
 from collections.abc import Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -82,19 +84,19 @@ from .knn_numpy import (
     _tiled_top_groups,
 )
 
-#: Above this many centroids argmax_centroid_numpy's driver-collect tiers
-#: (flat AND in-memory-routed both broadcast the full k x d table) give
-#: way to this module: 1M rows x 512-d doubles is ~4 GB collected — the
+#: Above this many centroids the driver-collect tiers (flat and
+#: in-memory routed both broadcast the full k x d table) give way to
+#: this module: 1M rows x 512-d doubles is ~4 GB collected — the
 #: practical edge of broadcast-variable territory. semantic_dedup's seed
 #: rule escalates here from its numeric k.
 DISTRIBUTED_K_THRESHOLD = 1_000_000
 
 #: Centroid rows sampled (hash-strided, deterministic) to build the
-#: router. Bounds the ONLY driver-side collect at a constant: the router
-#: needs g = ceil(sqrt(probes*k)) anchors, and cap^2/probes >= k holds to
-#: k ~ 5e8 at this cap; past that the router is built from strided
-#: sample rows directly (every sampled row an anchor) — coarser but
-#: still ~sqrt(k) anchors, and never O(k) driver bytes.
+#: router. Bounds the ONLY driver-side centroid collect at a constant:
+#: the router needs g = ceil(sqrt(ROUTE_PROBES*k)) anchors, and
+#: cap^2/probes >= k holds to k ~ 5e8 at this cap; past that every
+#: sampled row is an anchor — coarser but still ~sqrt(k) anchors, and
+#: never O(k) driver bytes.
 _ROUTER_SAMPLE_CAP = 65_536
 
 #: Driver-side Lloyd refine budget in multiply-adds: sample x g x d x
@@ -103,99 +105,50 @@ _ROUTER_SAMPLE_CAP = 65_536
 #: well inside the refined regime).
 _ROUTER_LLOYD_BUDGET = 2e10
 
-#: Constant mini-budget (multiply-adds) the FALLBACK branch still spends
-#: refining its strided anchors: a few mini-batch Lloyd passes over an
+#: Constant budget (multiply-adds) the strided-anchor FALLBACK still
+#: spends refining its anchors: a few mini-batch Lloyd passes over an
 #: evenly-strided subsample of the router sample, sized so rows x g x d
-#: x passes stays under this bound — independent of n, k, and the main
-#: budget (r13 verdict item 3: the raw-strided-anchor regime's honest
-#: drift bound was 17.6%; spending a bounded extra ~2e9 madds of driver
-#: BLAS on anchor refinement buys most of the refined router's quality
-#: back wherever the subsample covers the sample). Deterministic: the
+#: x passes stays under this bound — independent of n, k and the main
+#: budget. Raw strided anchors drift far more end to end (SCALING.md
+#: §2.1); the bounded refine recovers most of the refined router's
+#: quality wherever the subsample covers the sample. Deterministic: the
 #: subsample is strided, assignment argmax takes the first maximum, and
-#: anchors update to plain means — no RNG anywhere.
+#: anchors update to plain means.
 _ROUTER_FALLBACK_REFINE_MADDS = 2e9
 _ROUTER_FALLBACK_REFINE_PASSES = 2
 
-#: Auto-sizing target for group_salts: MEAN routed-vector fan-in rows
-#: per (group, salt) cogroup key. The binding per-task memory bound is
-#: NOT the tiled score GEMM (_TILE_ELEMS caps that) but the cogroup
-#: itself: the whole key's vector fan-in materializes as one Arrow
-#: table before per_group_arrow runs (r12 ADVICE) — at 512-d float64,
-#: 1e5 rows is ~0.4 GB as the numpy GEMM operand plus the Arrow input
-#: table, ~1 GB/task envelope; well inside a standard 4-8 GB
-#: executor with headroom for skewed (above-mean) groups. Over-salting
-#: is measured FREE (salts=64 row-exact and faster than salts=1,
-#: SCALE_STRESS r12), so erring low on this target only adds keys.
+#: Per-task target for the vector fan-in rows of one (group, salt)
+#: cogroup key. The binding per-task memory bound is the cogroup itself,
+#: not the tiled score GEMM: applyInArrow materializes the key's whole
+#: vector fan-in as one Arrow table before the kernel runs. At 512-d
+#: float64, 1e5 rows is ~0.4 GB as the GEMM operand plus the Arrow input
+#: table, a ~1 GB/task envelope inside a standard 4-8 GB executor.
+#: Results are salt-invariant, so erring low on this target only adds
+#: keys.
 _TARGET_ROWS_PER_GROUP_TASK = 100_000
 
-
-def _auto_salts(n_vectors: int, probes_eff: int, g_live: int) -> int:
-    """ceil(mean fan-in per live group / target rows per task): the
-    derivation the r12 docstring did by hand (100-TB point: n = 1e11,
-    probes = 8, g capped at 65,536 -> 1.22e7 rows/group -> 123 salts)
-    — now computed instead of caller-guessed. This is the BASE (floor)
-    salt count; _group_salt_counts raises individual hot groups above
-    it from the sampled routing distribution (r14 verdict item 3: the
-    per-task OOM bound is the MAX key, and a Zipf-routed corpus can
-    pile one group arbitrarily far above the mean). The gated
-    salt-invariance (and measured free over-salting) means callers
-    needing extra headroom can still pass an explicit larger count."""
-    if g_live <= 0:
-        return 1
-    mean_fan_in = n_vectors * max(1, probes_eff) / g_live
-    return max(1, math.ceil(mean_fan_in / _TARGET_ROWS_PER_GROUP_TASK))
-
-
-def _group_salt_counts(
-    vec_sample: "np.ndarray",
-    S: "np.ndarray",
-    live: "np.ndarray",
-    probes: int,
-    n_vectors: int,
-    base_salts: int,
-) -> "np.ndarray | None":
-    """Per-GROUP salt counts from the sampled routing distribution
-    (r14 verdict item 3). Mean-based sizing bounds the MEAN cogroup key,
-    but the per-task memory bound is the MAX key: a corpus whose hot
-    region is under-represented by its centroids routes a large share
-    of vectors to ONE group, and fan_hot/salts_mean = share * g_live /
-    probes is unbounded. The calibration vector sample (cap 4,096,
-    already hash-strided and deterministic) measures each live group's
-    routed share directly — a group hot enough to matter is by
-    definition high-share, so the sample sees it: estimated fan-in
-    fan_g = share_g * n * p, and its salt count is raised to
-    ceil(fan_g / target) wherever that exceeds the mean-based base.
-
-    Honest residual: a group whose true share is below sampling
-    resolution (~1/|sample| ~ 0.02%) keeps the base count, so its max
-    key is bounded by ~n * 0.0002 * p / base — at the 100-TB contract
-    point (n = 1e11, base 123) that is ~1.3e6 rows, 13x target; the
-    instrument's max_key_rows makes any such residual visible rather
-    than silent. Returns None (uniform base) when the sample is too
-    small to estimate shares."""
-    if vec_sample.size == 0 or len(vec_sample) < 64 or len(live) == 0:
-        return None
-    p = min(probes, len(live))
-    S_live = S[live]
-    idx = _tiled_top_groups(vec_sample, S_live, p)  # rows x p live-indices
-    top_gids = live[idx].ravel()
-    counts = np.bincount(top_gids, minlength=int(live.max()) + 1)
-    # share over (row, probe) pairs -> estimated unpruned fan-in rows.
-    est_fan = counts.astype(np.float64) * (n_vectors * p / max(1, idx.size))
-    per_group = np.ceil(est_fan / _TARGET_ROWS_PER_GROUP_TASK).astype(np.int64)
-    salts = np.maximum(per_group, base_salts)
-    if salts.max() <= base_salts:
-        return None  # nothing above the floor — keep the uniform plan
-    return salts
-
-#: Opt-in stage-wall sink (tools/scale_stress.py `dist_decompose` leg):
-#: when a dict is installed here, routed_best_centroid_distributed
-#: records per-stage driver walls into it and FORCE-MATERIALIZES the
-#: candidate table so the routed-explode-shuffle + cogroup-GEMM term is
-#: separable from the global merge (r12 verdict item 5: attribute the
-#: M=256 decade's 2.50x/doubling). None (default) = zero overhead, no
-#: extra action, identical plan.
-_INSTRUMENT: "dict | None" = None
+#: The probe margin is the (1 - _CALIBRATE_TARGET_MISS) quantile of the
+#: winner-group routing-score gap over a sample of the ACTUAL vectors —
+#: the smallest margin predicted to route all but that fraction of the
+#: workload to its true winner's group. 0.5% predicted routing miss sits
+#: 12x inside the 6% end-to-end drift bound the eval row gates (routing
+#: misses also overwhelmingly KEEP extra rows rather than drop uniques).
+_CALIBRATE_TARGET_MISS = 0.005
+#: Floor on the calibrated margin: a quantile over a finite sample must
+#: not degenerate to ties-only probing when the sampled gaps all read 0
+#: (strongly clustered data routes its whole sample to rank-0). 0.02 on
+#: the round-9 cosine scale is 10x under the margin measured
+#: decision-identical to fixed probing on the planted corpus (0.2;
+#: SCALING.md §2.1).
+_CALIBRATE_MARGIN_FLOOR = 0.02
+#: Vector rows sampled (hash-strided, deterministic) as calibration
+#: queries; bounds the collect at a constant (~16 MB at 512-d) at ANY
+#: corpus size.
+_CALIBRATE_VECTOR_SAMPLE_CAP = 4096
+#: Driver-BLAS budget (multiply-adds) for the calibration GEMMs; caps
+#: the query subset so calibration stays a bounded driver-side cost at
+#: any sample/router size (<= a few seconds of dgemm at the caps).
+_CALIBRATE_MADDS_BUDGET = 2e10
 
 _CAND_SCHEMA = T.StructType(
     [
@@ -204,11 +157,72 @@ _CAND_SCHEMA = T.StructType(
         T.StructField("_rt_score", T.DoubleType()),
     ]
 )
+_CAND_ARROW = to_arrow_schema(_CAND_SCHEMA)
 
 
-def _sample_router_matrix(
-    centroids: DataFrame, id_col: str, cvec_col: str, k: int
+@dataclass(frozen=True, eq=False)
+class _Route:
+    """The driver-side decisions of one distributed assignment — every
+    input the plan takes besides the two tables:
+
+    - ``router``: the g x d unit-normalized routing anchors;
+    - ``live``: ascending ids of the groups that own >= 1 centroid (the
+      only groups a vector is routed to, so no vector is left without
+      candidates);
+    - ``margin``: the probe margin on the round-9 routing scale, or
+      None for fixed top-ROUTE_PROBES probing;
+    - ``salts``: cogroup salt count per group id (int64[g], >= 1);
+    - ``members``: the persisted ``(_rt_gid, cid, cvec)`` table, every
+      centroid tagged with its router group."""
+
+    router: np.ndarray
+    live: np.ndarray
+    margin: "float | None"
+    salts: np.ndarray
+    members: DataFrame
+
+
+def _auto_salts(n_vectors: int, probes_eff: int, g_live: int) -> int:
+    """ceil(mean fan-in per live group / _TARGET_ROWS_PER_GROUP_TASK):
+    the base (floor) salt count of every group. At the 100-TB point
+    (n = 1e11, probes = 8, g capped at 65,536) this is 123 salts."""
+    if g_live <= 0:
+        return 1
+    mean_fan_in = n_vectors * max(1, probes_eff) / g_live
+    return max(1, math.ceil(mean_fan_in / _TARGET_ROWS_PER_GROUP_TASK))
+
+
+def _group_salt_counts(
+    vec_sample: "np.ndarray", S: "np.ndarray", live: "np.ndarray", n_vectors: int
 ) -> "np.ndarray":
+    """Salt count per group id: the _auto_salts base, raised for hot
+    groups from the sampled routing distribution. The per-task memory
+    bound is the MAX cogroup key, and a corpus whose hot region is
+    under-represented by its centroids routes a large share of vectors
+    to ONE group, so a mean-based count alone leaves that key unbounded.
+    Each live group's routed share in the (<= 4,096-row) calibration
+    sample estimates its unpruned fan-in share * n * p, and its salt
+    count is raised to ceil(fan-in / target) wherever that exceeds the
+    base.
+
+    Residual: a group whose true share is below sampling resolution
+    (~1/|sample| ~ 0.02%) keeps the base count, so its max key is
+    bounded by ~n * 0.0002 * p / base — at the 100-TB point (n = 1e11,
+    base 123) ~1.3e6 rows, 13x target. Samples under 64 rows keep the
+    uniform base."""
+    p = min(ROUTE_PROBES, len(live))
+    salts = np.full(S.shape[0], _auto_salts(n_vectors, p, len(live)), dtype=np.int64)
+    if len(vec_sample) < 64 or len(live) == 0:
+        return salts
+    idx = _tiled_top_groups(vec_sample, S[live], p)  # rows x p live-indices
+    counts = np.bincount(live[idx].ravel(), minlength=S.shape[0])
+    est_fan = counts * (n_vectors * p / idx.size)
+    return np.maximum(
+        salts, np.ceil(est_fan / _TARGET_ROWS_PER_GROUP_TASK).astype(np.int64)
+    )
+
+
+def _sample_router_matrix(centroids: DataFrame, k: int) -> "np.ndarray":
     """Deterministic <= _ROUTER_SAMPLE_CAP-row sample of centroid vectors
     (hash-strided on the id so the sample is a property of the DATA, not
     of partitioning or row order; id-sorted-then-limited so the result
@@ -216,53 +230,45 @@ def _sample_router_matrix(
     collect in this module that touches centroid VECTORS — bounded by
     the cap, never by k."""
     stride = max(1, math.ceil(k / _ROUTER_SAMPLE_CAP))
-    samp = centroids.select(id_col, cvec_col)
+    samp = centroids.select("cid", "cvec")
     if stride > 1:
-        samp = samp.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0
-        )
-    rows = samp.orderBy(id_col).limit(_ROUTER_SAMPLE_CAP).collect()
+        samp = samp.filter(F.pmod(F.xxhash64(F.col("cid")), F.lit(stride)) == 0)
+    rows = samp.orderBy("cid").limit(_ROUTER_SAMPLE_CAP).collect()
     if not rows:
-        # Degenerate hash-stride miss (possible only for tiny k with a
-        # pathological id set): fall back to the first cap rows rather
-        # than crash the router build — still deterministic, still
-        # capped.
+        # A hash stride can miss every id of a small pathological id
+        # set: the first cap rows keep the router deterministic and
+        # capped instead of failing.
         rows = (
-            centroids.select(id_col, cvec_col)
-            .orderBy(id_col)
+            centroids.select("cid", "cvec")
+            .orderBy("cid")
             .limit(_ROUTER_SAMPLE_CAP)
             .collect()
         )
     return np.array([r[1] for r in rows], dtype=np.float64)
 
 
-def _build_router(sample: "np.ndarray", k: int, probes: int) -> "np.ndarray":
-    """g ~ ceil(sqrt(probes*k)) unit-normalized routing anchors from the
-    sample: Lloyd-refined via _super_centroids when the driver FLOPs
-    budget allows (same strided init / oversize split / normalization as
-    the in-memory tier); otherwise strided sample rows refined by a
-    CONSTANT-cost mini-batch Lloyd (r13 verdict item 3 — raw strided
-    anchors measured 17.6% end-to-end keep/drop drift on the forced-
-    fallback fixture; two bounded passes over a strided subsample recover
-    most of the refined router's quality whenever the subsample budget
-    covers a useful fraction of the sample, and cost nothing that scales
-    with n or k)."""
+def _build_router(sample: "np.ndarray", k: int) -> "np.ndarray":
+    """g ~ ceil(sqrt(ROUTE_PROBES*k)) unit-normalized routing anchors
+    from the sample: Lloyd-refined via _super_centroids when the driver
+    FLOPs budget allows (same strided init / oversize split /
+    normalization as the in-memory tier); otherwise strided sample rows
+    refined by a constant-cost mini-batch Lloyd
+    (_ROUTER_FALLBACK_REFINE_MADDS), which costs nothing that scales
+    with n or k."""
     s, d = sample.shape
-    g = min(s, max(2, math.ceil(math.sqrt(probes * k))))
+    g = min(s, max(2, math.ceil(math.sqrt(ROUTE_PROBES * k))))
     if s * g * d * _SUPER_KMEANS_ITERS <= _ROUTER_LLOYD_BUDGET:
-        S, _ = _super_centroids(sample, probes, g=g)
+        S, _ = _super_centroids(sample, g=g)
         return S
     S = sample[np.linspace(0, s - 1, g).astype(np.int64)].copy()
     passes = _ROUTER_FALLBACK_REFINE_PASSES
     rows = int(_ROUTER_FALLBACK_REFINE_MADDS // max(1, g * d * passes))
     if rows >= 2:
-        # Evenly-strided mini-batch (deterministic, covers the sample's
-        # id-sorted span); assignment scores use the same argmin-
-        # Euclidean-as-argmax form as _super_centroids. Anchors that win
-        # no mini-batch rows keep their strided init — with rows << g
-        # (the extreme-k regime) most anchors are untouched and the
-        # refine degrades back toward the raw strided router instead of
-        # degenerating.
+        # Evenly-strided mini-batch over the id-sorted sample; the
+        # assignment is _super_centroids' argmin-Euclidean-as-argmax.
+        # Anchors that win no mini-batch rows keep their strided init,
+        # so with rows << g the refine degrades toward the raw strided
+        # router instead of degenerating.
         mb = sample[np.linspace(0, s - 1, min(s, rows)).astype(np.int64)]
         for _ in range(passes):
             scores = mb @ S.T - 0.5 * (S * S).sum(axis=1)
@@ -273,141 +279,67 @@ def _build_router(sample: "np.ndarray", k: int, probes: int) -> "np.ndarray":
     return S / np.where(norms < 1e-12, 1.0, norms)
 
 
-#: Calibration targets for probe_margin='auto' (r14 verdict item 2).
-#: The margin is the (1 - _CALIBRATE_TARGET_MISS) quantile of the
-#: winner-group routing-score gap over a sample of the ACTUAL vectors —
-#: i.e. the smallest margin predicted to route all but that fraction of
-#: the workload to its true winner's group. 0.5% predicted routing miss
-#: sits 12x inside the 6% end-to-end drift bound the eval row gates
-#: (routing misses also overwhelmingly KEEP extra rows rather than drop
-#: uniques, so keep/drop drift runs well under the routing miss rate).
-_CALIBRATE_TARGET_MISS = 0.005
-#: Floor on the calibrated margin: a capped quantile over a finite
-#: sample must not degenerate to ties-only probing when the sampled
-#: gaps all read 0 (strongly clustered data routes its whole sample to
-#: rank-0). 0.02 on the round-9 cosine scale is 10x under the margin
-#: measured DECISION-IDENTICAL to fixed probing on the planted corpus
-#: (0.2; SCALING.md §2.1).
-_CALIBRATE_MARGIN_FLOOR = 0.02
-#: Vector rows sampled (hash-strided, deterministic — same discipline
-#: as _ROUTER_SAMPLE_CAP) as calibration queries; bounds the collect at
-#: a constant (~16 MB at 512-d) at ANY corpus size.
-_CALIBRATE_VECTOR_SAMPLE_CAP = 4096
-#: Driver-BLAS budget (multiply-adds) for the calibration GEMMs; caps
-#: the query subset so calibration stays a bounded driver-side cost at
-#: any sample/router size (<= a few seconds of dgemm at the caps).
-_CALIBRATE_MADDS_BUDGET = 2e10
-
-#: Memoized margin calibrations: (session id, vector-plan semanticHash,
-#: centroid-plan semanticHash, k, probes) -> (router signature,
-#: vec_sample, margin). The signature (digest of S + live) guards the
-#: one input the plan key cannot see — the ROUTER is also a function of
-#: module tunables (sample cap, Lloyd budgets), so a same-plan call
-#: under different knobs must recalibrate (it still reuses the cached
-#: vec_sample: the sample depends only on the vector plan, and the
-#: Spark collect is the cost the cache exists to skip). Small FIFO —
-#: each entry is <= cap x d floats (~16 MB at 512-d), and a serving
-#: session cycles few distinct corpora.
-_MARGIN_CACHE: "dict[tuple, tuple]" = {}
-_MARGIN_CACHE_MAX = 16
-
-
-def _router_sig(S: "np.ndarray", live: "np.ndarray") -> bytes:
-    """Cheap deterministic digest of the built router (anchor matrix +
-    live-group ids): ~0.2 s at the 268 MB router cap, negligible next to
-    the calibration it guards."""
-    import hashlib
-
-    h = hashlib.blake2b(digest_size=16)
-    h.update(repr((S.shape, S.dtype.str, live.shape, live.dtype.str)).encode())
-    h.update(np.ascontiguousarray(S))
-    h.update(np.ascontiguousarray(live))
-    return h.digest()
-
-
-def _sample_vector_matrix(
-    vectors: DataFrame, vec_id_col: str, vec_col: str, n: int
-) -> "np.ndarray":
+def _sample_vector_matrix(vectors: DataFrame, n: int) -> "np.ndarray":
     """Deterministic <= _CALIBRATE_VECTOR_SAMPLE_CAP-row sample of the
     WORKLOAD vectors (hash-strided on vec_id, id-sorted-then-limited —
-    the same data-property sampling discipline as _sample_router_matrix).
-    One bounded extra job over the vector plan; callers with expensive
-    computed lineage opt out by pinning probe_margin to a float or
-    None."""
+    the same data-property sampling as _sample_router_matrix). One
+    bounded job over the vector plan."""
     stride = max(1, math.ceil(n / _CALIBRATE_VECTOR_SAMPLE_CAP))
-    samp = vectors.select(vec_id_col, vec_col)
+    samp = vectors.select("vec_id", "embedding")
     if stride > 1:
-        samp = samp.filter(
-            F.pmod(F.xxhash64(F.col(vec_id_col)), F.lit(stride)) == 0
-        )
-    rows = (
-        samp.orderBy(vec_id_col).limit(_CALIBRATE_VECTOR_SAMPLE_CAP).collect()
-    )
+        samp = samp.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(stride)) == 0)
+    rows = samp.orderBy("vec_id").limit(_CALIBRATE_VECTOR_SAMPLE_CAP).collect()
     if not rows:
         return np.empty((0, 0), dtype=np.float64)
     return np.array([r[1] for r in rows], dtype=np.float64)
 
 
-def _calibrate_probe_margin(
+def _calibrate_margin(
     vec_sample: "np.ndarray",
     cent_sample: "np.ndarray",
     S: "np.ndarray",
-    probes: int,
-    live: "np.ndarray | None" = None,
+    live: "np.ndarray",
 ) -> "float | None":
-    """Data-derived probe margin (r14 verdict item 2) — driver-side,
-    deterministic, madds-bounded.
+    """Data-derived probe margin — driver-side, deterministic,
+    madds-bounded.
 
     The question the margin answers: when a vector's true argmax
     centroid lives in a probed runner-up group, how far does that
     group's routing score trail the best group's? Calibration measures
     exactly that on a capped sample of the REAL workload: each sampled
     vector's winner is found against the centroid sample (the full
-    table when k <= the router cap — the regime of every gated
-    fixture; a sqrt-ish strided subset beyond, where the in-sample
-    winner still reflects the ambiguity structure), and the winner-
-    group's routing-score gap to the vector's best group is collected
-    on the selector's own round-9 scale. The margin is the
+    table when k <= the router cap; a strided subset beyond, where the
+    in-sample winner still reflects the ambiguity structure), and the
+    winner-group's routing-score gap to the vector's best group is
+    collected on the selector's own round-9 scale. The margin is the
     (1 - _CALIBRATE_TARGET_MISS) quantile of those gaps, rounded UP
     onto the round-9 grid, floored at _CALIBRATE_MARGIN_FLOOR.
 
-    Synthetic calibration queries were measured and rejected: centroid-
-    sample rows with self excluded, and toward-neighbor mixtures, both
-    overstate ambiguity (midpoints between random centroids produce
-    winner-gaps no real clustered vector exhibits — a planted-fixture
-    calibration read 0.485 where the workload quantile reads ~0.05,
-    erasing the row cut this feature exists for).
+    Synthetic calibration queries (centroid-sample rows with self
+    excluded, toward-neighbor mixtures) overstate ambiguity: midpoints
+    between random centroids produce winner-gaps no real clustered
+    vector exhibits, and erase the row cut the margin exists for.
 
-    Returns None (= fixed probing) when pruning cannot help: probes
-    covers every router group, or the samples are too small for a
+    Returns None (= fixed probing) when pruning cannot help: the probes
+    cover every live group, or the samples are too small for a
     quantile. Vectors whose winner group is OUTSIDE the fixed top-p set
     are excluded — fixed probing misses those too; the margin decides
     which of the fixed probes to drop, so its contract is relative to
     fixed probing, not to exactness.
 
-    ``live`` (r15 ADVICE): production routing selects top-p and applies
-    the margin over LIVE groups only (``_route_core`` scores S[live]) —
-    when dead groups exist they can outrank a winner's group in the FULL
-    matrix, excluding exactly the large-gap queries from the quantile
-    population (margin under-estimate) or inflating each row's max
-    (over-estimate). Gaps and in-probe membership are therefore measured
-    against S[live] with the winner group mapped into live-index space;
-    a winner's group is live by construction (it owns that centroid),
-    the guard below only protects against a caller passing mismatched
-    tables. None keeps the full-matrix behavior (every group live)."""
+    Routing selects top-p and applies the margin over LIVE groups only,
+    so gaps and in-probe membership are measured against S[live]: a
+    dead group could otherwise outrank a winner's group and skew the
+    quantile population. Winner groups are assigned against the FULL
+    router, as _group_members assigns them."""
     if vec_sample.size == 0 or cent_sample.size == 0:
         return None
     s, d = cent_sample.shape
-    # Winner-group assignment below uses the FULL router (that is what
-    # assign_groups_arrow does); the gap statistics use the LIVE-group
-    # view (that is what _route_core scores).
     grp_full = _best_centroid_core(
         cent_sample, np.arange(S.shape[0]), S, similarity=True
     )[0]
-    if live is None:
-        live = np.arange(S.shape[0], dtype=np.int64)
     g = len(live)
-    p = min(probes, g)
+    p = min(ROUTE_PROBES, g)
     if p >= g or len(vec_sample) < 64:
         return None
     live_pos = np.full(S.shape[0], -1, dtype=np.int64)
@@ -421,12 +353,12 @@ def _calibrate_probe_margin(
         )
     )
     q = vec_sample[np.linspace(0, len(vec_sample) - 1, n_q).astype(np.int64)]
-    # Winner (among the centroid sample) per query — the family's
-    # tiled round-9 / first-max / strict-cross-block-improvement argbest.
+    # Winner among the centroid sample per query, by the family's
+    # round-9 / first-max / smallest-id argbest.
     best_j = _best_centroid_core(q, np.arange(s), cent_sample, similarity=True)[0]
     wg = grp[best_j]
-    # A winner's group is live by construction; drop any -1 defensively
-    # (mismatched caller tables) rather than let it index column -1.
+    # A winner's group owns that centroid, so it is live; -1 can only
+    # come from a sampled centroid outside the grouped table.
     ok = wg >= 0
     q, wg, n_q = q[ok], wg[ok], int(ok.sum())
     if n_q < 64:
@@ -450,144 +382,15 @@ def _calibrate_probe_margin(
     return max(m, _CALIBRATE_MARGIN_FLOOR)
 
 
-def routed_best_centroid_distributed(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str,
-    cvec_col: str,
-    vec_col: str,
-    vec_id_col: str = "vec_id",
-    out_field: "T.StructField",
-    score_field: "str | None" = None,
-    probes: int = ROUTE_PROBES,
-    group_salts: "int | None" = None,
-    n_centroids: "int | None" = None,
-    n_vectors: "int | None" = None,
-    probe_margin: "float | str | None" = "auto",
-) -> DataFrame:
-    """Two-tier argmax with a DISTRIBUTED bottom tier (module docstring
-    has the full shape). Requires ``vec_id_col`` to be unique per input
-    row — the global merge keys on it and the result is joined back by
-    it (the in-memory kernels are pure map stages and need no key; the
-    distributed tier's cogroup does).
-
-    ``n_centroids``: the centroid count when the caller knows it
-    (semantic_dedup's seed rule derives k numerically) — skips the
-    one remaining full-table job this tier would otherwise run (the
-    ``count()`` that sizes the router), leaving NO O(k) action before
-    the map-side grouping pass itself. Trusted as a sizing hint only
-    when POSITIVE: a wrong positive value skews g, never correctness
-    (grouping and argbest read the real table); a hint <= 0 is treated
-    as UNKNOWN and falls back to the count — trusting it would either
-    short-circuit a non-empty table to an empty result (0) or feed
-    sqrt a negative (r12 ADVICE).
-
-    ``group_salts``: splits each routed group's VECTOR rows across this
-    many cogroup keys, replicating the group's member centroids per salt
-    — the standard hot-key treatment for large per-group fan-in. The
-    binding per-task memory bound is the cogroup ``applyInArrow``
-    full-key materialization (each key's entire vector fan-in lands in
-    one Arrow table BEFORE the tiled GEMM runs — the _TILE_ELEMS tiling
-    bounds only the score matrix), so keys are sized for
-    ~_TARGET_ROWS_PER_GROUP_TASK (1e5) fan-in rows, not the ~10M a
-    GEMM-only bound would allow (r12 ADVICE). ``None`` (default)
-    AUTO-SIZES: salts = ceil((n * probes / g_live) /
-    _TARGET_ROWS_PER_GROUP_TASK) — at the 100-TB contract point
-    (n = 1e11, probes = 8, g capped at 65,536) that derives ~123 salts
-    with no caller arithmetic; ``n_vectors`` skips the one count() job
-    the auto-size otherwise runs (metadata-only over scan-backed plans;
-    a full lineage re-execution over computed ones — pass the hint or
-    an explicit salt count there). Results are salt-invariant (gated):
-    the per-group argbest is computed per salt and the global
-    struct-merge is associative, and over-salting is measured free.
-
-    ``probe_margin`` (r13 verdict item 5; default-on r14 item 2): ship a
-    vector only to probed groups whose ROUTING score is within this
-    margin of its best group's (round-9 scores, so the pruning inherits
-    the family's tile/batch-shape invariance). The cogroup term is
-    ROW-boxing-bound on local[*], so cutting the replicated ROW count is
-    the lever that moves the local wall — most vectors' best group wins
-    by a wide margin and the trailing probes are insurance.
-    ``'auto'`` (default) CALIBRATES the margin from a capped
-    hash-strided sample of the WORKLOAD vectors
-    (_calibrate_probe_margin: the 99.5% quantile of each sampled
-    vector's winner-group routing-score gap — deterministic,
-    driver-side, madds-bounded); ``None`` opts out to the fixed
-    probes x fan-out; a float pins it. The pruned probe set
-    is always a SUBSET of the fixed one and always contains the
-    best-routed group, so quality degrades one-sidedly: the true argmax
-    centroid can only be missed when it lives in a pruned runner-up
-    group whose routing score trailed by more than the margin — drift
-    measured and gated in tests/test_semantic_routing.py, and the
-    calibrated default is inside the oracle-gated
-    semantic_dedup_routed_eval bounds (drift <= 6%, spurious <= 1%).
-
-    """
-    from ..plans.registry import transient_persist
-
-    if probe_margin is not None and probe_margin != "auto":
-        if isinstance(probe_margin, str) or not probe_margin >= 0:
-            raise ValueError(
-                "probe_margin must be 'auto', None, or a non-negative "
-                f"float, got {probe_margin!r}"
-            )
-    spark = vectors.sparkSession
-    fields = list(vectors.schema.fields) + [out_field]
-    if score_field is not None:
-        fields.append(T.StructField(score_field, T.DoubleType()))
-    out_schema = T.StructType(fields)
-    # Persist the (projected) centroid plan ONCE: the count below, the
-    # router-sample collect, and the members build would otherwise each
-    # re-execute the caller's full centroid lineage — 3x the cost of an
-    # expensive plan (an uncheckpointed k-means output, a filter over
-    # the whole corpus) at exactly the scale this tier targets.
-    inst = _INSTRUMENT
-    centroids = transient_persist(centroids.select(id_col, cvec_col))
-    k = (
-        n_centroids
-        if n_centroids is not None and n_centroids > 0
-        else centroids.count()
+def _group_members(centroids: DataFrame, S: "np.ndarray") -> DataFrame:
+    """``(_rt_gid, cid, cvec)``: every centroid row tagged map-side with
+    its best router group (first maximum = smallest group id); the id
+    and vector columns pass through untouched. Never collected."""
+    bc_router = centroids.sparkSession.sparkContext.broadcast(S)
+    schema = T.StructType(
+        [T.StructField("_rt_gid", T.IntegerType())] + list(centroids.schema.fields)
     )
-    if k == 0:
-        return spark.createDataFrame([], out_schema)
-
-    t0 = time.perf_counter()
-    sample = _sample_router_matrix(centroids, id_col, cvec_col, k)
-    if inst is not None:
-        inst["router_sample_s"] = time.perf_counter() - t0
-    if len(sample) == 0:
-        # A nonzero n_centroids HINT over an actually-empty table: the
-        # sample discovers the truth — empty-in/empty-out, not a crash.
-        return spark.createDataFrame([], out_schema)
-    t0 = time.perf_counter()
-    S = _build_router(sample, k, probes)
-    if inst is not None:
-        inst["router_build_s"] = time.perf_counter() - t0
-        inst["g"] = int(S.shape[0])
-    # One n resolution shared by margin calibration (vector-sample
-    # stride) and group_salts auto-sizing — a positive caller hint skips
-    # the count() job entirely (sizing-only: wrong never breaks
-    # correctness, the grouping and argbest read the real tables).
-    _n_vec_cache = [n_vectors if n_vectors is not None and n_vectors > 0 else None]
-
-    def _n_vec() -> int:
-        if _n_vec_cache[0] is None:
-            _n_vec_cache[0] = vectors.count()
-        return _n_vec_cache[0]
-
-    bc_router = spark.sparkContext.broadcast(S)
-
-    # -- bottom tier: centroid -> group, map-side, never collected -------
-    grouped_schema = T.StructType(
-        [
-            T.StructField("_rt_gid", T.IntegerType()),
-            next(f for f in centroids.schema.fields if f.name == id_col),
-            next(f for f in centroids.schema.fields if f.name == cvec_col),
-        ]
-    )
-
-    grouped_arrow = to_arrow_schema(grouped_schema)
+    arrow = to_arrow_schema(schema)
 
     def assign_groups_arrow(
         batches: Iterator[pa.RecordBatch],
@@ -596,347 +399,213 @@ def routed_best_centroid_distributed(
         for rb in batches:
             if not rb.num_rows:
                 continue
-            i_id = rb.schema.get_field_index(id_col)
-            i_cv = rb.schema.get_field_index(cvec_col)
-            emb = _list_matrix(rb.column(i_cv))
+            i_id = rb.schema.get_field_index("cid")
+            i_cv = rb.schema.get_field_index("cvec")
             gid = _best_centroid_core(
-                emb, np.arange(bS.shape[0]), bS, similarity=True
+                _list_matrix(rb.column(i_cv)), np.arange(bS.shape[0]), bS, similarity=True
             )[0]
-            # id and vector columns pass through UNTOUCHED.
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(gid.astype(np.int32), type=pa.int32()),
-                    _pa_cast(rb.column(i_id), grouped_arrow.field(1).type),
-                    _pa_cast(rb.column(i_cv), grouped_arrow.field(2).type),
+                    _pa_cast(rb.column(i_id), arrow.field(1).type),
+                    _pa_cast(rb.column(i_cv), arrow.field(2).type),
                 ],
-                schema=grouped_arrow,
+                schema=arrow,
             )
 
-    members = transient_persist(
-        centroids.mapInArrow(assign_groups_arrow, grouped_schema)
-    )
-    # Live-group ids: <= g scalars — vectors route only over groups that
-    # own >= 1 centroid, so every probe lands on a member-bearing cogroup
-    # key and no vector can end up candidate-less.
-    t0 = time.perf_counter()
+    return centroids.mapInArrow(assign_groups_arrow, schema)
+
+
+def _decide_route(
+    vectors: DataFrame,
+    centroids: DataFrame,
+    n_centroids: "int | None" = None,
+    n_vectors: "int | None" = None,
+) -> "_Route | None":
+    """The driver-side step: router, live groups, calibrated margin and
+    per-group salts over ``vectors`` (``vec_id``, ``embedding``) and
+    ``centroids`` (``cid``, ``cvec``). None when the centroid table is
+    empty. Runs one count per table unless its positive hint is given,
+    the capped router-sample collect, the live-group collect (<= g
+    scalars) and the capped vector-sample collect; each call calibrates
+    from its own sample, so a rewritten input is always seen."""
+    from ..plans.registry import transient_persist
+
+    # Persisted once: the count, the router sample and the member
+    # grouping would otherwise each re-run the caller's centroid lineage.
+    centroids = transient_persist(centroids.select("cid", "cvec"))
+    # Hints are sizing-only and trusted only when positive: a wrong
+    # positive value skews g or the salt counts, never an answer (the
+    # grouping and argbest read the real tables).
+    k = n_centroids if n_centroids is not None and n_centroids > 0 else centroids.count()
+    if k == 0:
+        return None
+    sample = _sample_router_matrix(centroids, k)
+    if len(sample) == 0:
+        return None  # a positive hint over an empty table
+    S = _build_router(sample, k)
+    members = transient_persist(_group_members(centroids, S))
     live = np.array(
         sorted(r[0] for r in members.select("_rt_gid").distinct().collect()),
         dtype=np.int64,
     )
-    if inst is not None:
-        inst["member_group_s"] = time.perf_counter() - t0
-    bc_live = spark.sparkContext.broadcast(live)
+    n = n_vectors if n_vectors is not None and n_vectors > 0 else vectors.count()
+    vec_sample = _sample_vector_matrix(vectors, n)
+    return _Route(
+        router=S,
+        live=live,
+        margin=_calibrate_margin(vec_sample, sample, S, live),
+        salts=_group_salt_counts(vec_sample, S, live, n),
+        members=members,
+    )
 
-    # Margin calibration runs AFTER the live-group collect: the gap
-    # quantile must be measured in the regime the margin governs — top-p
-    # over S[live], not the full router matrix. It is memoized per
-    # (session, vector plan, centroid plan, k, probes), so a session
-    # re-running semantic_dedup over the same corpus pays the sample
-    # collect + driver GEMMs once, not per call. The key is the
-    # canonicalized PLAN: rewriting the files behind an identical plan
-    # within one session serves a stale margin — sizing/pruning only,
-    # never correctness of what IS scored.
-    vec_sample: "np.ndarray | None" = None
-    if probe_margin == "auto":
-        mkey = (
-            id(spark),
-            vectors._jdf.queryExecution().analyzed().semanticHash(),
-            centroids._jdf.queryExecution().analyzed().semanticHash(),
-            int(k),
-            int(probes),
-            # The cached vec_sample is a function of this cap too — a
-            # runtime-retuned cap must not serve the old sample size.
-            int(_CALIBRATE_VECTOR_SAMPLE_CAP),
-        )
-        hit = _MARGIN_CACHE.get(mkey)
-        sig = _router_sig(S, live)
-        if hit is not None and hit[0] == sig:
-            vec_sample, probe_margin = hit[1], hit[2]
-            if inst is not None:
-                inst["margin_calibrate_s"] = 0.0
-                inst["margin_cache_hit"] = True
-        else:
-            t0 = time.perf_counter()
-            if hit is not None:
-                # Same plans, different router (a tunable changed): the
-                # vector sample is still valid — recalibrate only the
-                # driver-side quantile, skip the Spark collect.
-                vec_sample = hit[1]
-            else:
-                vec_sample = _sample_vector_matrix(
-                    vectors, vec_id_col, vec_col, _n_vec()
-                )
-            probe_margin = _calibrate_probe_margin(
-                vec_sample, sample, S, probes, live=live
-            )
-            if len(_MARGIN_CACHE) >= _MARGIN_CACHE_MAX:
-                _MARGIN_CACHE.pop(next(iter(_MARGIN_CACHE)))
-            _MARGIN_CACHE[mkey] = (sig, vec_sample, probe_margin)
-            if inst is not None:
-                inst["margin_calibrate_s"] = time.perf_counter() - t0
-                inst["margin_cache_hit"] = False
-    if inst is not None:
-        inst["probe_margin"] = probe_margin
 
-    salts_arr: "np.ndarray | None" = None
-    if group_salts is None:
-        # Auto-sizing needs n. count() prunes every column, so over a
-        # parquet-backed plan this is a footer-metadata job, not a data
-        # scan; over COMPUTED lineage it is one extra lineage execution —
-        # callers with an expensive upstream plan should pass n_vectors
-        # (semantic_dedup's seed-rule path does) or an explicit
-        # group_salts to skip it (r13 review). _n_vec caches, so the
-        # margin calibration above and this block share one resolution.
-        n_salts = _auto_salts(_n_vec(), min(probes, len(live)), len(live))
-        # Per-GROUP escalation above the mean-based floor (r14 verdict
-        # item 3): the sampled routing distribution raises hot groups'
-        # salt counts so the MAX cogroup key stays near the per-task
-        # target, not just the mean. Reuses the margin calibration's
-        # vector sample; collected here when margin was pinned/off.
-        if vec_sample is None:
-            vec_sample = _sample_vector_matrix(
-                vectors, vec_id_col, vec_col, _n_vec()
-            )
-        salts_arr = _group_salt_counts(
-            vec_sample, S, live, probes, _n_vec(), n_salts
-        )
-    else:
-        n_salts = max(1, int(group_salts))
-    if inst is not None:
-        inst["salts"] = n_salts
-        inst["max_group_salts"] = (
-            int(salts_arr.max()) if salts_arr is not None else n_salts
-        )
-    bc_salts = spark.sparkContext.broadcast(salts_arr)
+def _route_rows(
+    emb: "np.ndarray",
+    vids: "np.ndarray",
+    S_live: "np.ndarray",
+    live: "np.ndarray",
+    salts: "np.ndarray",
+    margin: "float | None",
+):
+    """One batch's routing: each row's top-ROUTE_PROBES live groups,
+    pruned to those whose round-9 routing score is within ``margin`` of
+    the row's best. Returns the exploded ``(row index, group id, salt)``
+    arrays; the salt of a row is its vec_id modulo its group's count.
 
-    # -- vectors -> top-p live groups, exploded map-side ------------------
-    vid_field = next(f for f in vectors.schema.fields if f.name == vec_id_col)
-    routed_schema = T.StructType(
+    The pruned set is a subset of the fixed one and always holds the
+    best-routed group (column 0 of the selector's total order), kept
+    unconditionally: a NaN embedding fails every margin comparison and
+    would otherwise vanish from the output."""
+    idx = _tiled_top_groups(emb, S_live, ROUTE_PROBES)  # b x p, best-first
+    b, p = idx.shape
+    row_idx = np.repeat(np.arange(b), p)
+    gids = live[idx].ravel()
+    if margin is not None:
+        sc = np.einsum("bd,bpd->bp", emb, S_live[idx])
+        np.round(sc, 9, out=sc)
+        keep = sc >= sc.max(axis=1, keepdims=True) - margin
+        keep[:, 0] = True
+        row_idx, gids = row_idx[keep.ravel()], gids[keep.ravel()]
+    return row_idx, gids, (vids[row_idx] % salts[gids]).astype(np.int32)
+
+
+def _route_vectors(vectors: DataFrame, route: _Route) -> DataFrame:
+    """``(vec_id, embedding, _rt_gid, _rt_salt)``: one row per vector and
+    probed group that survives the margin — the cogroup's left side.
+    Counting it gives the candidate count; grouping it by
+    ``(_rt_gid, _rt_salt)`` gives the per-key fan-in."""
+    bc = vectors.sparkSession.sparkContext.broadcast(
+        (route.router[route.live], route.live, route.salts)
+    )
+    margin = route.margin
+    schema = T.StructType(
         [
-            vid_field,
-            next(f for f in vectors.schema.fields if f.name == vec_col),
+            next(f for f in vectors.schema.fields if f.name == "vec_id"),
+            next(f for f in vectors.schema.fields if f.name == "embedding"),
             T.StructField("_rt_gid", T.IntegerType()),
             T.StructField("_rt_salt", T.IntegerType()),
         ]
     )
-
-    def _route_core(emb, vids, S_live, blive, p):
-        """Numeric routing core: top-p live groups per row, optional
-        margin pruning, returns the exploded (row_idx, vids_r, gids_r)
-        index arrays."""
-        b = emb.shape[0]
-        idx = _tiled_top_groups(emb, S_live, p)  # b x p, best-first
-        top = blive[idx]  # b x p live gids
-        flat = None
-        if probe_margin is not None:
-            # Re-score the selected groups (b x p gather-GEMM — tiny
-            # next to the routing pass) on the SAME round-9 scale the
-            # selector used, and keep only probes within the margin
-            # of the row's best. Column 0 is the best by the
-            # selector's total order, so every row keeps >= 1 probe
-            # and no vector can end up candidate-less.
-            sc = np.einsum("bd,bpd->bp", emb, S_live[idx])
-            np.round(sc, 9, out=sc)
-            keep2d = sc >= sc.max(axis=1, keepdims=True) - probe_margin
-            # Column 0 is kept UNCONDITIONALLY, not just by the
-            # margin inequality: a NaN embedding scores NaN against
-            # every anchor, every >= comparison reads False, and the
-            # row would silently VANISH from the output (the global
-            # merge inner-joins on surviving candidates) — where
-            # fixed probing still ships it. Totality is the margin
-            # contract ("always contains the best-routed group"),
-            # so enforce it structurally (r14 self-review).
-            keep2d[:, 0] = True
-            flat = keep2d.ravel()
-        row_idx = np.repeat(np.arange(b), p)
-        vids_r = np.repeat(vids, p)
-        gids_r = top.ravel()
-        if flat is not None:
-            row_idx, vids_r, gids_r = row_idx[flat], vids_r[flat], gids_r[flat]
-        return row_idx, vids_r, gids_r
-
-    def _salt_of(vids_r: "np.ndarray", gids_r: "np.ndarray") -> "np.ndarray":
-        """Salt id per exploded row: uniform (vid % n_salts) unless the
-        per-group escalation produced an array — then each row's modulus
-        is ITS group's salt count (hot groups split across more keys)."""
-        sarr = bc_salts.value
-        if sarr is None:
-            return (vids_r % n_salts).astype(np.int32)
-        return (vids_r % sarr[gids_r]).astype(np.int32)
-
-    routed_arrow = to_arrow_schema(routed_schema)
+    arrow = to_arrow_schema(schema)
 
     def route_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        bS = bc_router.value
-        blive = bc_live.value
-        S_live = bS[blive]
-        p = min(probes, len(blive))
+        S_live, live, salts = bc.value
         for rb in batches:
             if not rb.num_rows:
                 continue
-            i_vid = rb.schema.get_field_index(vec_id_col)
-            i_vec = rb.schema.get_field_index(vec_col)
-            vec_arr = rb.column(i_vec)
+            vid_arr = _pa_cast(rb.column(0), arrow.field(0).type)
+            vec_arr = _pa_cast(rb.column(1), arrow.field(1).type)
             emb = _list_matrix(vec_arr)
-            vids = rb.column(i_vid).to_numpy(zero_copy_only=False)
-            row_idx, vids_r, gids_r = _route_core(emb, vids, S_live, blive, p)
-            salts_r = _salt_of(vids_r, gids_r)
-            d = max(1, emb.shape[1])
+            vids = vid_arr.to_numpy(zero_copy_only=False)
+            row_idx, gids, salt = _route_rows(emb, vids, S_live, live, salts, margin)
             # Emit in slices whose gathered values stay under int32 list
             # offsets: take() builds its output ListArray with int32
             # offsets, which overflow once len(row_idx) * d exceeds 2^31.
             # One slice in any realistic batch (d=512 -> ~4.2M exploded
-            # rows/slice); the loop is the overflow guard, not a hot path.
-            step = max(1, (2**31 - 64) // d)
+            # rows/slice).
+            step = max(1, (2**31 - 64) // max(1, emb.shape[1]))
             for s0 in range(0, len(row_idx), step):
                 sl = slice(s0, s0 + step)
-                ri = row_idx[sl]
-                take = pa.array(ri, type=pa.int64())
+                take = pa.array(row_idx[sl], type=pa.int64())
                 yield pa.RecordBatch.from_arrays(
                     [
-                        _pa_cast(
-                            rb.column(i_vid), routed_arrow.field(0).type
-                        ).take(take),
-                        # The ORIGINAL list rows (exact input values AND
-                        # element type), gathered with zero Python boxing.
-                        _pa_cast(vec_arr, routed_arrow.field(1).type).take(take),
-                        pa.array(gids_r[sl].astype(np.int32), type=pa.int32()),
-                        pa.array(salts_r[sl], type=pa.int32()),
+                        vid_arr.take(take),
+                        # The input list rows, exact values and element
+                        # type, gathered with no Python boxing.
+                        vec_arr.take(take),
+                        pa.array(gids[sl].astype(np.int32), type=pa.int32()),
+                        pa.array(salt[sl], type=pa.int32()),
                     ],
-                    schema=routed_arrow,
+                    schema=arrow,
                 )
 
-    routed_v = vectors.select(vec_id_col, vec_col).mapInArrow(
-        route_arrow, routed_schema
-    )
-    if inst is not None:
-        # Diagnostics-only fan-in audit (r14 verdict item 3): the
-        # per-task memory bound is the MAX (group, salt) key's vector
-        # fan-in — measure it instead of trusting the sizing estimate.
-        # Audited from a payload-FREE projection that re-runs the route
-        # pass, NOT by persisting routed_v: caching the exploded vector
-        # payload multiplies the corpus by probes AND by deserialized-
-        # object overhead (measured 3.6 GiB per partition at the M=1024
-        # stress decade — enough to starve the block manager and crash
-        # a python worker; r15 self-debug). One extra routing execution
-        # is the honest price of a diagnostics mode.
-        t0 = time.perf_counter()
-        fan = (
-            routed_v.select("_rt_gid", "_rt_salt")
-            .groupBy("_rt_gid", "_rt_salt")
-            .count()
-            .agg(
-                F.max("count").alias("mx"), F.avg("count").alias("mean")
-            )
-            .collect()[0]
-        )
-        inst["max_key_rows"] = int(fan["mx"]) if fan["mx"] is not None else 0
-        inst["mean_key_rows"] = (
-            float(fan["mean"]) if fan["mean"] is not None else 0.0
-        )
-        inst["fanin_audit_s"] = time.perf_counter() - t0
+    return vectors.select("vec_id", "embedding").mapInArrow(route_arrow, schema)
 
-    if salts_arr is not None:
-        # Per-group replication: each group's members are replicated by
-        # ITS salt count — a <= g-row broadcast-joined (gid, count)
-        # table, exploded by sequence(). Only hot groups pay extra
-        # member copies; the uniform path below replicates EVERY group
-        # by the global count.
-        salt_rows = [
-            (int(gid), int(salts_arr[gid])) for gid in live.tolist()
-        ]
+
+def _per_group_best(left: pa.Table, right: pa.Table) -> pa.Table:
+    """Argbest of one (group, salt) cogroup key: every routed vector
+    (``left``) against the key's member centroids (``right``), by
+    _best_centroid_core over the id-sorted members — round-9 scores,
+    first maximum = smallest cid, score tiles bounded by _TILE_ELEMS.
+    The key's whole vector fan-in is already materialized by
+    applyInArrow; _TARGET_ROWS_PER_GROUP_TASK sizes the salts to bound
+    it."""
+    if not left.num_rows or not right.num_rows:
+        # Right-only keys: a group/salt no vector probed. Left-only keys
+        # cannot occur: vectors route over live groups, and every salt
+        # replica of a live group has members.
+        return _CAND_ARROW.empty_table()
+    cids = right.column("cid").to_numpy(zero_copy_only=False).astype(np.int64)
+    order = np.argsort(cids, kind="stable")
+    best_id, best_v = _best_centroid_core(
+        _list_matrix(left.column("embedding")),
+        cids[order],
+        _list_matrix(right.column("cvec"))[order],
+        similarity=True,
+    )
+    vids = left.column("vec_id").to_numpy(zero_copy_only=False).astype(np.int64)
+    return pa.Table.from_arrays(
+        [
+            pa.array(vids, type=pa.int64()),
+            pa.array(best_id, type=pa.int64()),
+            pa.array(best_v, type=pa.float64()),
+        ],
+        schema=_CAND_ARROW,
+    )
+
+
+def _assign_routed(vectors: DataFrame, route: _Route) -> DataFrame:
+    """The plan that consumes a _Route: routed vectors cogroup with the
+    member centroids on (group, salt), then one struct-max per vec_id
+    (highest score, ties to the smallest cid) joined back to the input
+    rows as ``cid`` and ``csim``."""
+    spark = vectors.sparkSession
+    if bool((route.salts[route.live] == 1).all()):
+        member_side = route.members.withColumn("_rt_salt", F.lit(0))
+    else:
+        # Each group's members are replicated by ITS salt count through a
+        # <= g-row broadcast (gid, count) table and sequence(), so the
+        # plan stays O(1) in the salt counts and only hot groups pay
+        # extra member copies.
         salt_df = spark.createDataFrame(
-            salt_rows, "_rt_gid int, _rt_ns int"
+            [(int(gid), int(route.salts[gid])) for gid in route.live.tolist()],
+            "_rt_gid int, _rt_ns int",
         )
         member_side = (
-            members.join(F.broadcast(salt_df), "_rt_gid")
+            route.members.join(F.broadcast(salt_df), "_rt_gid")
             .withColumn(
-                "_rt_salt",
-                F.explode(F.sequence(F.lit(0), F.col("_rt_ns") - 1)),
+                "_rt_salt", F.explode(F.sequence(F.lit(0), F.col("_rt_ns") - 1))
             )
             .drop("_rt_ns")
-            .select("_rt_gid", id_col, cvec_col, "_rt_salt")
+            .select("_rt_gid", "cid", "cvec", "_rt_salt")
         )
-    elif n_salts > 1:
-        # sequence(), not array(lit(0)..lit(n-1)): the auto-derived salt
-        # count is data-sized (hundreds at the 100-TB point, unbounded
-        # for small-g/huge-n calls), and an array of one literal
-        # expression node PER SALT makes driver-side plan construction
-        # and analysis scale with it — sequence keeps the plan O(1) in
-        # n_salts (r13 review).
-        member_side = members.withColumn(
-            "_rt_salt",
-            F.explode(F.sequence(F.lit(0), F.lit(int(n_salts - 1)))),
-        )
-    else:
-        member_side = members.withColumn("_rt_salt", F.lit(0))
-
-    # -- per-group argbest: cogroup GEMM keyed on (group, salt) ----------
-    # Captured at PLAN-BUILD time (driver-side): executor Python workers
-    # re-import modules, so a closure capture is both cheaper than a
-    # per-call import and the only way tests can pin the tiling path.
-    from .knn_numpy import _TILE_ELEMS as _tile_elems
-
-    cand_arrow = to_arrow_schema(_CAND_SCHEMA)
-
-    def per_group_arrow(left: pa.Table, right: pa.Table) -> pa.Table:
-        if not left.num_rows or not right.num_rows:
-            # right-only keys: group/salt no vector probed — no candidates.
-            # left-only keys cannot occur (vectors route over LIVE groups
-            # and every salt replica of a live group has members).
-            return cand_arrow.empty_table()
-        cids = (
-            right.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64)
-        )
-        order = np.argsort(cids, kind="stable")
-        cids = cids[order]
-        C = _list_matrix(right.column(cvec_col))[order]
-        E = _list_matrix(left.column(vec_col))
-        # Tile the score GEMM over VECTOR rows so the score matrix is
-        # bounded by _TILE_ELEMS like every other kernel in the family.
-        # The tiling bounds only the SCORE allocation: the key's whole
-        # vector fan-in (left) is already materialized by applyInArrow
-        # before this function runs — that is the binding per-task memory
-        # term _TARGET_ROWS_PER_GROUP_TASK / auto group_salts size to.
-        # First extremum = smallest cid (members sorted ascending).
-        n_rows = E.shape[0]
-        m = C.shape[0]
-        rblock = max(1, _tile_elems // max(m, 1))
-        out_j = np.empty(n_rows, dtype=np.int64)
-        out_v = np.empty(n_rows, dtype=np.float64)
-        for s in range(0, n_rows, rblock):
-            blk = E[s : s + rblock] @ C.T
-            np.round(blk, 9, out=blk)
-            j = blk.argmax(axis=1)
-            out_j[s : s + rblock] = j
-            out_v[s : s + rblock] = blk[np.arange(blk.shape[0]), j]
-        vids = (
-            left.column(vec_id_col)
-            .to_numpy(zero_copy_only=False)
-            .astype(np.int64)
-        )
-        return pa.Table.from_arrays(
-            [
-                pa.array(vids, type=pa.int64()),
-                pa.array(cids[out_j], type=pa.int64()),
-                pa.array(out_v, type=pa.float64()),
-            ],
-            schema=cand_arrow,
-        )
-
-    grouped = routed_v.groupBy("_rt_gid", "_rt_salt").cogroup(
-        member_side.groupBy("_rt_gid", "_rt_salt")
+    cands = (
+        _route_vectors(vectors, route)
+        .groupBy("_rt_gid", "_rt_salt")
+        .cogroup(member_side.groupBy("_rt_gid", "_rt_salt"))
+        .applyInArrow(_per_group_best, _CAND_SCHEMA)
     )
-    cands = grouped.applyInArrow(per_group_arrow, _CAND_SCHEMA)
-    if inst is not None:
-        # Diagnostics-only materialization: pins the routed-explode
-        # shuffle + cogroup GEMM wall separately from the global merge.
-        cands = transient_persist(cands)
-        t0 = time.perf_counter()
-        inst["cand_rows"] = cands.count()
-        inst["route_cogroup_s"] = time.perf_counter() - t0
-
-    # -- global argmax per vector: struct merge, ties to smallest id ----
     best = cands.groupBy("_rt_vid").agg(
         F.max(
             F.struct(
@@ -950,12 +619,44 @@ def routed_best_centroid_distributed(
         (-F.col("_rt_best.nid")).alias("_rt_out"),
         F.col("_rt_best.s").alias("_rt_sc"),
     )
-
     out_cols = [F.col(f.name) for f in vectors.schema.fields] + [
-        F.col("_rt_out").cast(out_field.dataType).alias(out_field.name)
+        F.col("_rt_out").cast("long").alias("cid"),
+        F.col("_rt_sc").alias("csim"),
     ]
-    if score_field is not None:
-        out_cols.append(F.col("_rt_sc").alias(score_field))
-    return vectors.join(
-        best, vectors[vec_id_col] == best["_rt_vid"], "inner"
-    ).select(*out_cols)
+    return vectors.join(best, vectors["vec_id"] == best["_rt_vid"], "inner").select(
+        *out_cols
+    )
+
+
+def routed_best_centroid_distributed(
+    vectors: DataFrame,
+    centroids: DataFrame,
+    *,
+    n_centroids: "int | None" = None,
+    n_vectors: "int | None" = None,
+) -> DataFrame:
+    """SemDeDup's 'distributed' assignment tier (module docstring has the
+    full shape): ``vectors`` (unique ``vec_id``, ``embedding``) plus
+    ``cid`` and ``csim``, each vector's approximate argmax round-9
+    centroid over ``centroids`` (``cid``, ``cvec``), ties to the
+    smallest cid. ``vec_id`` must be unique: the global merge keys on
+    it and the result is joined back by it.
+
+    ``n_centroids``/``n_vectors`` are the counts when the caller holds
+    them (semantic_dedup's seed rule derives k numerically); each skips
+    one count job. They size the router and the salts only, so a wrong
+    positive value never changes an answer, and a value <= 0 is treated
+    as unknown. Empty centroids give an empty output."""
+    route = _decide_route(vectors, centroids, n_centroids, n_vectors)
+    if route is None:
+        return vectors.sparkSession.createDataFrame(
+            [],
+            T.StructType(
+                list(vectors.schema.fields)
+                + [
+                    T.StructField("cid", T.LongType()),
+                    T.StructField("csim", T.DoubleType()),
+                ]
+            ),
+        )
+    return _assign_routed(vectors, route)

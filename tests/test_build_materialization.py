@@ -88,6 +88,23 @@ def test_build_evaluates_input_once(spark, sf_dir, tmp_path, probes, case):
         assert built[table].count() == 200
 
 
+def test_trained_build_counts_its_input_once(spark, sf_dir, tmp_path, monkeypatch):
+    """The count that fills the build's persist also sizes the k-means
+    fit: a trained build without a train fraction runs one count job,
+    not a second one over the same rows."""
+    counts = []
+    count = ClassicDataFrame.count
+
+    def spy(self):
+        counts.append(self)
+        return count(self)
+
+    monkeypatch.setattr(ClassicDataFrame, "count", spy)
+    vectors = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 150)
+    build_index(vectors, str(tmp_path / "index"), k=3)
+    assert len(counts) == 1
+
+
 def test_build_leaves_the_cache_as_it_found_it(spark, sf_dir, tmp_path):
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())

@@ -15,8 +15,8 @@ import unicodedata
 from pyspark.sql import functions as F
 
 from bioclip_vector_db_spark.operators import knn, text
+from bioclip_vector_db_spark.operators.dedup import _assign_centroids, _semdedup_vectors
 from bioclip_vector_db_spark.operators.knn_numpy import (
-    argmax_centroid_numpy,
     assign_partitions_numpy,
     knn_join_numpy,
     pq_encode_numpy,
@@ -60,8 +60,9 @@ def test_argmax_centroid_engines_identical(spark, sf_dir):
         F.col("partition_id").cast("long").alias("cid"),
         F.col("centroid").alias("cvec"),
     )
-    _check(lambda e: argmax_centroid_numpy(e, cents, routed=False), emb)
-    _check(lambda e: argmax_centroid_numpy(e, cents, routed=True), emb)
+    v = _semdedup_vectors(emb)
+    _check(lambda e: _assign_centroids(e, cents, "flat"), v)
+    _check(lambda e: _assign_centroids(e, cents, "routed"), v)
 
 
 def test_route_queries_engines_identical(spark, sf_dir):
@@ -134,51 +135,39 @@ def test_unicode_clean_engines_identical(spark, sf_dir):
     assert got == {d: _expected_clean(t) for d, t in inputs.items()}
 
 
-def test_margin_calibration_cached_per_plan(spark, sf_dir):
-    """r15 verdict item 6: a second distributed-tier call over the SAME
-    vector/centroid plans must serve the calibrated margin (and its
-    vector sample) from the session cache — no second calibration-sample
-    Spark job — and produce identical results."""
+def test_margin_calibration_follows_rewritten_input(spark, tmp_path):
+    """The distributed tier calibrates its probe margin from each call's
+    own vector sample, so a parquet path overwritten within one session
+    must give the same assignment as a fresh read of the new data. The
+    first data sits right on its centroids (the margin floor); the
+    second sits between centroid pairs, where the calibrated margin is
+    wider. A margin remembered by plan would serve the first data's
+    margin for the second, and the pruned probes would miss winners."""
     import numpy as np
 
-    from bioclip_vector_db_spark.operators import knn_routed
-
     rng = np.random.default_rng(7)
-    K, N, D = 64, 400, 16
-    cents_rows = [(int(i), rng.standard_normal(D).tolist()) for i in range(K)]
-    base = rng.standard_normal((K, D))
-    vec_rows = [
-        (int(i), (base[i % K] + 0.01 * rng.standard_normal(D)).tolist())
-        for i in range(N)
-    ]
-    cents = spark.createDataFrame(cents_rows, "cid long, cvec array<double>")
-    vecs = spark.createDataFrame(vec_rows, "vec_id long, embedding array<double>")
+    K, N, D = 200, 600, 32
+    C = rng.standard_normal((K, D))
+    C /= np.linalg.norm(C, axis=1, keepdims=True)
+    tight = C[np.arange(N) % K] + 0.01 * rng.standard_normal((N, D))
+    pairs = rng.integers(0, K, (N, 2))
+    between = C[pairs[:, 0]] + C[pairs[:, 1]] + 0.05 * rng.standard_normal((N, D))
+    cents = spark.createDataFrame(
+        [(int(i), C[i].tolist()) for i in range(K)], "cid long, cvec array<double>"
+    )
 
-    calls = {"n": 0}
-    orig = knn_routed._sample_vector_matrix
+    def write(mat, path):
+        spark.createDataFrame(
+            [(int(i), mat[i].tolist()) for i in range(N)],
+            "vec_id long, embedding array<double>",
+        ).write.mode("overwrite").parquet(str(path))
 
-    def counting(*a, **k):
-        calls["n"] += 1
-        return orig(*a, **k)
+    def assign(path):
+        vecs = spark.read.parquet(str(path))
+        return _rows(_assign_centroids(vecs, cents, "distributed"))
 
-    knn_routed._MARGIN_CACHE.clear()
-    knn_routed._sample_vector_matrix = counting
-    try:
-        first = _rows(
-            argmax_centroid_numpy(vecs, cents, routed="distributed")
-        )
-        n_after_first = calls["n"]
-        assert n_after_first >= 1
-        second = _rows(
-            argmax_centroid_numpy(vecs, cents, routed="distributed")
-        )
-        # The margin-calibration sample collect must NOT re-run: the
-        # cache also feeds the salt-escalation sample, so the call count
-        # is unchanged.
-        assert calls["n"] == n_after_first, (
-            f"calibration sample re-collected: {calls['n']} vs {n_after_first}"
-        )
-        assert first == second
-    finally:
-        knn_routed._sample_vector_matrix = orig
-        knn_routed._MARGIN_CACHE.clear()
+    write(tight, tmp_path / "v")
+    assert assign(tmp_path / "v")
+    write(between, tmp_path / "v")
+    write(between, tmp_path / "fresh")
+    assert assign(tmp_path / "v") == assign(tmp_path / "fresh")

@@ -29,6 +29,7 @@ its decide tail (_decide_for_tier).
 
 from __future__ import annotations
 
+import dataclasses
 import math
 
 import numpy as np
@@ -43,10 +44,8 @@ from bioclip_vector_db_spark.operators.dedup import (
     _seed_centroids,
     _semdedup_vectors,
 )
-from bioclip_vector_db_spark.operators.knn_numpy import (
-    _super_centroids,
-    argmax_centroid_numpy,
-)
+from bioclip_vector_db_spark.operators import knn_routed
+from bioclip_vector_db_spark.operators.knn_numpy import _super_centroids
 
 
 def _planted(spark, K=600, D=256, N=3000, noise=0.05, seed=0):
@@ -83,23 +82,26 @@ def _collect_assign(df):
     return {r["vec_id"]: (r["cid"], r["csim"]) for r in df.collect()}
 
 
+def _route(vecs, cents, *, n_centroids=None, salts=None, **fields):
+    """The distributed tier's decision record (knn_routed._decide_route)
+    with ``fields`` overridden: ``margin=None`` is fixed probing (the
+    reference the calibrated margin is gated against), a float pins the
+    margin, and ``salts`` sets one uniform salt count for every group."""
+    route = knn_routed._decide_route(vecs, cents, n_centroids)
+    if salts is not None:
+        fields["salts"] = np.full_like(route.salts, salts)
+    return dataclasses.replace(route, **fields)
+
+
 def _dist(vecs, cents, **kw):
-    """The distributed tier called directly, for its internal knobs
-    (fixed probing is the reference its margin is gated against)."""
-    from pyspark.sql import types as T
+    """The distributed tier's plan over an overridden decision record."""
+    return knn_routed._assign_routed(vecs, _route(vecs, cents, **kw))
 
-    from bioclip_vector_db_spark.operators import knn_routed
 
-    return knn_routed.routed_best_centroid_distributed(
-        vecs,
-        cents,
-        id_col="cid",
-        cvec_col="cvec",
-        vec_col="embedding",
-        out_field=T.StructField("cid", T.LongType()),
-        score_field="csim",
-        **kw,
-    )
+def _routed_rows(vecs, route):
+    """Vector rows the route ships to the cogroup — one per (vector,
+    surviving probe), so also the candidate count."""
+    return knn_routed._route_vectors(vecs, route).count()
 
 
 def _decisions(assigned, tier, k=None):
@@ -120,8 +122,8 @@ def _seed_tier(emb, k, tier):
 
 def test_routed_assignment_recall_on_structured_data(spark):
     cents, vecs = _planted(spark)
-    flat = _collect_assign(argmax_centroid_numpy(vecs, cents, routed=False))
-    routed = _collect_assign(argmax_centroid_numpy(vecs, cents, routed=True))
+    flat = _collect_assign(_assign_centroids(vecs, cents, "flat"))
+    routed = _collect_assign(_assign_centroids(vecs, cents, "routed"))
     assert set(flat) == set(routed)
     n = len(flat)
     agree = sum(1 for k in flat if flat[k][0] == routed[k][0])
@@ -140,8 +142,8 @@ def test_routed_assignment_recall_on_structured_data(spark):
 
 def test_routed_assignment_is_deterministic(spark):
     cents, vecs = _planted(spark, K=520, N=1000)
-    a = _collect_assign(argmax_centroid_numpy(vecs, cents, routed=True))
-    b = _collect_assign(argmax_centroid_numpy(vecs, cents, routed=True))
+    a = _collect_assign(_assign_centroids(vecs, cents, "routed"))
+    b = _collect_assign(_assign_centroids(vecs, cents, "routed"))
     assert a == b
 
 
@@ -176,7 +178,7 @@ def test_routed_cross_group_tie_breaks_to_smallest_cid(spark):
         [(int(i), base[i % D].tolist()) for i in range(40)],
         "vec_id long, embedding array<double>",
     )
-    got = _collect_assign(argmax_centroid_numpy(vecs, cents, routed=True))
+    got = _collect_assign(_assign_centroids(vecs, cents, "routed"))
     for vid, (cid, csim) in got.items():
         assert cid == vid % D, f"vec {vid} tied to {cid}, not smallest twin"
         assert csim == 1.0
@@ -359,7 +361,7 @@ def test_distributed_routed_recall_on_structured_data(spark):
     split by probing mode since the r14-item-2 calibrated-margin default
     (the two modes have DIFFERENT miss profiles by design):
 
-    - FIXED probing (probe_margin=None): >= 99% agreement with the exact
+    - FIXED probing (margin None): >= 99% agreement with the exact
       flat argmax, max similarity loss on a miss <= 0.02 (the trailing
       insurance probes catch near-ties), IDENTICAL doubles on agreements.
     - CALIBRATED margin (the default): agreement still >= 99% and the
@@ -374,11 +376,11 @@ def test_distributed_routed_recall_on_structured_data(spark):
       drift-gated end-to-end separately (the eval row + trained gate).
     """
     cents, vecs = _planted(spark)
-    flat = _collect_assign(argmax_centroid_numpy(vecs, cents, routed=False))
+    flat = _collect_assign(_assign_centroids(vecs, cents, "flat"))
     n = len(flat)
 
     # -- fixed probing: the strict per-miss contract --------------------
-    dist = _collect_assign(_dist(vecs, cents, probe_margin=None))
+    dist = _collect_assign(_dist(vecs, cents, margin=None))
     assert set(flat) == set(dist)
     agree = sum(1 for k in flat if flat[k][0] == dist[k][0])
     assert agree / n >= 0.99, f"distributed routing recall {agree}/{n}"
@@ -388,9 +390,7 @@ def test_distributed_routed_recall_on_structured_data(spark):
     )
 
     # -- calibrated margin (default): rate-bounded misses, mean loss ----
-    auto = _collect_assign(
-        argmax_centroid_numpy(vecs, cents, routed="distributed")
-    )
+    auto = _collect_assign(_assign_centroids(vecs, cents, "distributed"))
     assert set(flat) == set(auto)
     agree_a = sum(1 for k in flat if flat[k][0] == auto[k][0])
     assert agree_a / n >= 0.99, f"calibrated-margin recall {agree_a}/{n}"
@@ -404,31 +404,14 @@ def test_distributed_routed_recall_on_structured_data(spark):
 
 def test_distributed_routed_is_deterministic_and_salt_invariant(spark):
     """Same input -> identical output, run to run (hash-strided sample,
-    strided-init Lloyd, no RNG); and group_salts — the hot-group
-    splitting knob for the 100-TB regime — must not change a single row
-    (the per-group argbest is computed per salt and the global
-    struct-merge is associative)."""
-    from pyspark.sql import types as T
-
-    from bioclip_vector_db_spark.operators.knn_routed import (
-        routed_best_centroid_distributed,
-    )
-
+    strided-init Lloyd, no RNG); and the salt counts — the hot-group
+    split for the 100-TB regime — must not change a single row (the
+    per-group argbest is computed per salt and the global struct-merge
+    is associative)."""
     cents, vecs = _planted(spark, K=520, N=800)
 
     def run(salts):
-        return _collect_assign(
-            routed_best_centroid_distributed(
-                vecs,
-                cents,
-                id_col="cid",
-                cvec_col="cvec",
-                vec_col="embedding",
-                out_field=T.StructField("cid", T.LongType()),
-                score_field="csim",
-                group_salts=salts,
-            )
-        )
+        return _collect_assign(_dist(vecs, cents, salts=salts))
 
     a, b, salted = run(1), run(1), run(3)
     assert a == b
@@ -441,8 +424,7 @@ def test_distributed_routed_is_deterministic_and_salt_invariant(spark):
     # Data-sized salt counts (hundreds+ at the 100-TB point) must keep
     # the PLAN constant-size too: the member explode is sequence(), not
     # an array of one literal node per salt whose analysis cost grows
-    # with n_salts (r13 review). 1024 salts would have been a
-    # 1024-literal expression under the old form.
+    # with the salt count.
     assert a == run(1024)
 
 
@@ -459,14 +441,10 @@ def test_distributed_strided_anchor_fallback_keeps_recall(spark, monkeypatch):
     refine. Floor re-set from that measurement with margin; the
     genuinely-uncovered regime (k >> 1e6) is documented, not reachable
     at fixture scale."""
-    from bioclip_vector_db_spark.operators import knn_routed
-
     cents, vecs = _planted(spark)
-    flat = _collect_assign(argmax_centroid_numpy(vecs, cents, routed=False))
+    flat = _collect_assign(_assign_centroids(vecs, cents, "flat"))
     monkeypatch.setattr(knn_routed, "_ROUTER_LLOYD_BUDGET", 0)
-    dist = _collect_assign(
-        argmax_centroid_numpy(vecs, cents, routed="distributed")
-    )
+    dist = _collect_assign(_assign_centroids(vecs, cents, "distributed"))
     assert set(flat) == set(dist)
     agree = sum(1 for k in flat if flat[k][0] == dist[k][0])
     assert agree / len(flat) >= 0.97, (
@@ -476,9 +454,7 @@ def test_distributed_strided_anchor_fallback_keeps_recall(spark, monkeypatch):
     # regime where the subsample covers a negligible sample fraction)
     # must itself stay total and useful: the original coarse floor.
     monkeypatch.setattr(knn_routed, "_ROUTER_FALLBACK_REFINE_MADDS", 0)
-    raw = _collect_assign(
-        argmax_centroid_numpy(vecs, cents, routed="distributed")
-    )
+    raw = _collect_assign(_assign_centroids(vecs, cents, "distributed"))
     assert set(flat) == set(raw)
     agree_raw = sum(1 for k in flat if flat[k][0] == raw[k][0])
     assert agree_raw / len(flat) >= 0.80, (
@@ -497,14 +473,14 @@ def test_distributed_collects_only_a_capped_router_sample(spark, monkeypatch):
     O(k). Pinned by (a) shrinking the cap far below k and asserting the
     collected sample honors it while the pipeline stays correct, and
     (b) asserting the full-table collect helper is never called."""
-    from bioclip_vector_db_spark.operators import knn_numpy, knn_routed
+    from bioclip_vector_db_spark.operators import knn_numpy
 
     cents, vecs = _planted(spark, K=600, N=600)
     seen = {}
     real_sample = knn_routed._sample_router_matrix
 
-    def spy(centroids, id_col, cvec_col, k):
-        out = real_sample(centroids, id_col, cvec_col, k)
+    def spy(centroids, k):
+        out = real_sample(centroids, k)
         seen["rows"] = len(out)
         return out
 
@@ -516,9 +492,7 @@ def test_distributed_collects_only_a_capped_router_sample(spark, monkeypatch):
     monkeypatch.setattr(knn_routed, "_ROUTER_SAMPLE_CAP", 96)
     monkeypatch.setattr(knn_routed, "_sample_router_matrix", spy)
     monkeypatch.setattr(knn_numpy, "_collect_centroids", forbidden)
-    dist = _collect_assign(
-        argmax_centroid_numpy(vecs, cents, routed="distributed")
-    )
+    dist = _collect_assign(_assign_centroids(vecs, cents, "distributed"))
     assert seen["rows"] <= 96 < 600
     assert len(dist) == 600
     # A 6x-coarser router costs recall headroom, not correctness of the
@@ -528,27 +502,44 @@ def test_distributed_collects_only_a_capped_router_sample(spark, monkeypatch):
     )
 
 
-def test_distributed_cogroup_gemm_tiles_without_changing_results(
-    spark, monkeypatch
-):
-    """Round-12 review finding: the cogroup argbest GEMM must tile over
-    vector rows (bounded by _TILE_ELEMS like every kernel in the
-    family) — untiled, |group-vectors| x |group-members| doubles is the
-    allocation that OOMs a task at the design point. Shrinking the tile
-    to a few rows must not change one output row (the tile size is
-    captured at plan-build time precisely so this gate can reach the
-    executor-side code path)."""
+def test_distributed_cogroup_gemm_tiles_without_changing_results(monkeypatch):
+    """The cogroup argbest GEMM must be tiled (bounded by _TILE_ELEMS like
+    every kernel in the family) — untiled, |group-vectors| x
+    |group-members| doubles is the allocation that OOMs a task at the
+    design point. The per-key kernel runs on the driver here, where the
+    tile can be shrunk: a few scores per tile must not change one
+    output, and members arrive unsorted, so the smallest-cid tie rule is
+    checked on planted twins."""
+    import pyarrow as pa
+
     from bioclip_vector_db_spark.operators import knn_numpy
 
-    cents, vecs = _planted(spark, K=520, N=400)
-    base = _collect_assign(
-        argmax_centroid_numpy(vecs, cents, routed="distributed")
+    rng = np.random.RandomState(4)
+    C = rng.randn(40, 16)
+    C[7] = C[31]  # twins: the smaller cid must win
+    cids = rng.permutation(np.arange(100, 140))
+    V = np.concatenate([rng.randn(57, 16), C[31:32]])
+    left = pa.table(
+        {
+            "vec_id": pa.array(np.arange(58), pa.int64()),
+            "embedding": pa.array(V.tolist(), pa.list_(pa.float64())),
+        }
     )
-    monkeypatch.setattr(knn_numpy, "_TILE_ELEMS", 48)  # a few rows/tile
-    tiled = _collect_assign(
-        argmax_centroid_numpy(vecs, cents, routed="distributed")
+    right = pa.table(
+        {
+            "cid": pa.array(cids, pa.int64()),
+            "cvec": pa.array(C.tolist(), pa.list_(pa.float64())),
+        }
     )
-    assert base == tiled
+    base = knn_routed._per_group_best(left, right)
+    monkeypatch.setattr(knn_numpy, "_TILE_ELEMS", 48)  # a few scores/tile
+    assert knn_routed._per_group_best(left, right).equals(base)
+    scores = np.round(V @ C.T, 9)
+    best = scores.max(axis=1)
+    expect = [min(cids[scores[i] == best[i]]) for i in range(58)]
+    assert base.column("_rt_cand").to_pylist() == expect
+    assert base.column("_rt_score").to_pylist() == best.tolist()
+    assert expect[-1] == min(cids[7], cids[31])
 
 
 def test_distributed_cross_group_tie_breaks_to_smallest_cid(spark):
@@ -563,9 +554,7 @@ def test_distributed_cross_group_tie_breaks_to_smallest_cid(spark):
         [(int(i), base[i % D].tolist()) for i in range(40)],
         "vec_id long, embedding array<double>",
     )
-    got = _collect_assign(
-        argmax_centroid_numpy(vecs, cents, routed="distributed")
-    )
+    got = _collect_assign(_assign_centroids(vecs, cents, "distributed"))
     for vid, (cid, csim) in got.items():
         # Either twin's group may be the one probed; when BOTH are in the
         # probed union the winner must be the smaller cid, and the score
@@ -595,12 +584,6 @@ def test_distributed_fuzz_internal_consistency(spark, seed, K, D, N, salts):
     winner must at least be the best WITHIN some probed set, which we
     can't see — but it must never lose to the claimed centroid's own
     recomputation)."""
-    from pyspark.sql import types as T
-
-    from bioclip_vector_db_spark.operators.knn_routed import (
-        routed_best_centroid_distributed,
-    )
-
     rng = np.random.RandomState(seed)
     C = rng.randn(K, D)
     C /= np.linalg.norm(C, axis=1, keepdims=True)
@@ -613,16 +596,7 @@ def test_distributed_fuzz_internal_consistency(spark, seed, K, D, N, salts):
         [(int(i), V[i].tolist()) for i in range(N)],
         "vec_id long, embedding array<double>",
     )
-    rows = routed_best_centroid_distributed(
-        vecs,
-        cents,
-        id_col="cid",
-        cvec_col="cvec",
-        vec_col="embedding",
-        out_field=T.StructField("cid", T.LongType()),
-        score_field="csim",
-        group_salts=salts,
-    ).collect()
+    rows = _dist(vecs, cents, salts=salts).collect()
     assert sorted(r.vec_id for r in rows) == list(range(N)), "not total"
     for r in rows:
         assert 0 <= r.cid < K, f"unknown centroid {r.cid}"
@@ -639,16 +613,12 @@ def test_distributed_invariant_to_arrow_batch_shape(spark):
     change one output row — batch boundaries are an execution detail,
     like the registered-query matrix leg pins for the oracle surface."""
     cents, vecs = _planted(spark, K=520, N=300)
-    base = _collect_assign(
-        argmax_centroid_numpy(vecs, cents, routed="distributed")
-    )
+    base = _collect_assign(_assign_centroids(vecs, cents, "distributed"))
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key, None)
     try:
         spark.conf.set(key, "7")
-        tiny = _collect_assign(
-            argmax_centroid_numpy(vecs, cents, routed="distributed")
-        )
+        tiny = _collect_assign(_assign_centroids(vecs, cents, "distributed"))
     finally:
         if prev is None:
             spark.conf.unset(key)
@@ -659,29 +629,17 @@ def test_distributed_invariant_to_arrow_batch_shape(spark):
 
 def test_distributed_empty_inputs(spark):
     cents, vecs = _planted(spark, K=520, N=50)
+    empty = cents.filter("cid < 0")
+    assert _assign_centroids(vecs, empty, "distributed").count() == 0
     assert (
-        argmax_centroid_numpy(
-            vecs, cents.filter("cid < 0"), routed="distributed"
-        ).count()
-        == 0
-    )
-    assert (
-        argmax_centroid_numpy(
-            vecs.filter("vec_id < 0"), cents, routed="distributed"
-        ).count()
+        _assign_centroids(vecs.filter("vec_id < 0"), cents, "distributed").count()
         == 0
     )
     # A nonzero n_centroids HINT over an actually-empty table: the
     # router sample discovers the truth — empty-out, never a crash in
     # the router build (the hint sizes g, it is not trusted for
     # emptiness).
-    assert (
-        argmax_centroid_numpy(
-            vecs, cents.filter("cid < 0"), routed="distributed",
-            n_centroids=100,
-        ).count()
-        == 0
-    )
+    assert _assign_centroids(vecs, empty, "distributed", n_cents=100).count() == 0
 
 
 def test_semantic_dedup_auto_escalates_to_distributed(spark, monkeypatch):
@@ -738,7 +696,7 @@ def test_semantic_dedup_distributed_matches_flat_on_structured_corpus(spark):
     flat exact kernel on a structured corpus — the operator-level gate,
     mirroring the in-memory tier's, split by probing mode:
 
-    - FIXED probing (probe_margin=None): keep/drop IDENTICAL (the
+    - FIXED probing (margin None): keep/drop IDENTICAL (the
       insurance probes make every routing near-miss land in-cluster on
       this corpus);
     - CALIBRATED margin (the tier's default): bounded drift — a
@@ -762,7 +720,7 @@ def test_semantic_dedup_distributed_matches_flat_on_structured_corpus(spark):
 
     v = _semdedup_vectors(emb)
     dist_fixed = _decisions(
-        _dist(v, _seed_centroids(v, K), n_centroids=K, probe_margin=None),
+        _dist(v, _seed_centroids(v, K), n_centroids=K, margin=None),
         "distributed",
         K,
     )
@@ -849,7 +807,7 @@ def test_semantic_dedup_warns_on_seedrule_auto_routing(spark):
 def test_routed_empty_centroids_empty_out(spark):
     cents, vecs = _planted(spark, K=520, N=50)
     empty = cents.filter("cid < 0")
-    assert argmax_centroid_numpy(vecs, empty, routed=True).count() == 0
+    assert _assign_centroids(vecs, empty, "routed").count() == 0
 
 
 def test_semantic_dedup_routed_matches_flat_on_structured_corpus(spark):
@@ -889,7 +847,7 @@ def test_semantic_dedup_routed_matches_flat_on_structured_corpus(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round 13: tie-stable routing selection + group_salts auto-sizing.
+# Tie-stable routing selection and salt sizing.
 # ---------------------------------------------------------------------------
 
 
@@ -950,12 +908,12 @@ def test_routed_batch_shape_invariant_on_duplicate_heavy_corpus(spark):
         [(int(i), A[i % 20].tolist()) for i in range(120)],
         "vec_id long, embedding array<double>",
     )
-    base = _collect_assign(argmax_centroid_numpy(vecs, cents, routed=True))
+    base = _collect_assign(_assign_centroids(vecs, cents, "routed"))
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key, None)
     try:
         spark.conf.set(key, "7")
-        tiny = _collect_assign(argmax_centroid_numpy(vecs, cents, routed=True))
+        tiny = _collect_assign(_assign_centroids(vecs, cents, "routed"))
     finally:
         if prev is None:
             spark.conf.unset(key)
@@ -967,9 +925,8 @@ def test_routed_batch_shape_invariant_on_duplicate_heavy_corpus(spark):
 
 
 def test_auto_salts_formula_and_default_is_auto():
-    """group_salts auto-sizing (r12 verdict item 2): ceil(mean fan-in
-    per live group / target) with the 100-TB contract point deriving
-    ~123 salts — computed, not caller-guessed."""
+    """The base salt count: ceil(mean fan-in per live group / target),
+    with the 100-TB contract point deriving ~123 salts."""
     import math as m
 
     from bioclip_vector_db_spark.operators.knn_routed import (
@@ -988,142 +945,77 @@ def test_auto_salts_formula_and_default_is_auto():
 
 
 def test_auto_salts_engage_and_match_salts_one(spark, monkeypatch):
-    """Auto-sized salts (group_salts=None, the new default) must be
-    row-identical to the explicit salts=1 run. Shrinking the target
-    forces the auto path to derive >1 salts at test scale — pinned with
-    a spy so the gate proves salting genuinely engaged."""
-    from pyspark.sql import types as T
-
-    from bioclip_vector_db_spark.operators import knn_routed
-
+    """The derived salt counts must be row-identical to one salt per
+    group. Shrinking the per-task target makes the decision step derive
+    more than one salt at test scale, so the gate proves salting
+    genuinely engaged."""
     cents, vecs = _planted(spark, K=520, N=700)
-
-    def run(salts):
-        return _collect_assign(
-            knn_routed.routed_best_centroid_distributed(
-                vecs,
-                cents,
-                id_col="cid",
-                cvec_col="cvec",
-                vec_col="embedding",
-                out_field=T.StructField("cid", T.LongType()),
-                score_field="csim",
-                group_salts=salts,
-            )
-        )
-
-    derived = {}
-    real = knn_routed._auto_salts
-
-    def spy(n, p, g):
-        derived["salts"] = real(n, p, g)
-        return derived["salts"]
-
     monkeypatch.setattr(knn_routed, "_TARGET_ROWS_PER_GROUP_TASK", 50)
-    monkeypatch.setattr(knn_routed, "_auto_salts", spy)
-    auto = run(None)
-    assert derived["salts"] > 1, "auto-sizing never engaged at forced target"
-    assert auto == run(1)
+    route = _route(vecs, cents)
+    assert route.salts[route.live].min() > 1, "salt sizing never engaged"
+    auto = _collect_assign(knn_routed._assign_routed(vecs, route))
+    assert auto == _collect_assign(_dist(vecs, cents, salts=1))
 
 
 # ---------------------------------------------------------------------------
-# Adaptive probing (r13 verdict item 5): the cogroup term is ROW-boxing-bound
-# on local[*], so the lever that moves the wall is the replicated ROW
-# count. probe_margin ships a vector only to probed groups within a round-9
-# routing-score margin of its best. Bounds set from measurement
-# (2026-08-16): planted corpus — margin=0.2 IDENTICAL to fixed probing at
-# 3.42 vs 8.00 probes/vec, margin=0.1 agreement 99.90% at 1.41 probes/vec;
-# real 64-d k=520 trained fixture (the boundary regime) — margin=0.2 drift
-# 0.10% / spurious 0% at a 26% row cut, margin=0.1 drift 3.75% at 3.21
-# probes/vec (recorded in SCALING.md §2.1, gated here on the planted
-# regime).
+# Adaptive probing: the cogroup term is ROW-boxing-bound on local[*], so the
+# lever that moves the wall is the replicated ROW count. The margin ships a
+# vector only to probed groups within a round-9 routing-score margin of its
+# best. Bounds set from measurement: planted corpus — margin 0.2 IDENTICAL
+# to fixed probing at 3.42 vs 8.00 probes/vec, margin 0.1 agreement 99.90%
+# at 1.41 probes/vec; real 64-d k=520 trained fixture (the boundary regime)
+# — margin 0.2 drift 0.10% / spurious 0% at a 26% row cut, margin 0.1 drift
+# 3.75% at 3.21 probes/vec (SCALING.md §2.1; gated here on the planted
+# regime). Each test pins the margin through the decision record.
 # ---------------------------------------------------------------------------
 
 
-def _run_margin(spark, vecs, cents, margin, salts=None):
-    from pyspark.sql import types as T
-
-    from bioclip_vector_db_spark.operators import knn_routed
-
-    stage = {}
-    knn_routed._INSTRUMENT = stage
-    try:
-        out = _collect_assign(
-            knn_routed.routed_best_centroid_distributed(
-                vecs,
-                cents,
-                id_col="cid",
-                cvec_col="cvec",
-                vec_col="embedding",
-                out_field=T.StructField("cid", T.LongType()),
-                score_field="csim",
-                probe_margin=margin,
-                group_salts=salts,
-            )
-        )
-    finally:
-        knn_routed._INSTRUMENT = None
-    return out, stage["cand_rows"]
+def _run_margin(vecs, cents, margin, salts=None):
+    """(assignment, routed row count) under a pinned margin."""
+    route = _route(vecs, cents, margin=margin, salts=salts)
+    out = _collect_assign(knn_routed._assign_routed(vecs, route))
+    return out, _routed_rows(vecs, route)
 
 
 def test_distributed_adaptive_probing_row_cut_and_recall(spark):
     cents, vecs = _planted(spark)
-    fixed, cand_fixed = _run_margin(spark, vecs, cents, None)
+    fixed, cand_fixed = _run_margin(vecs, cents, None)
     n = len(fixed)
     assert cand_fixed == 8 * n  # the fixed fan-out this feature cuts
 
     # margin=0.2: measured IDENTICAL decisions at a >= 2x row cut.
-    m02, cand02 = _run_margin(spark, vecs, cents, 0.2)
+    m02, cand02 = _run_margin(vecs, cents, 0.2)
     assert m02 == fixed
     assert cand02 * 2 <= cand_fixed, f"row cut {cand_fixed}/{cand02} below 2x"
 
     # margin=0.1: >= 4x row cut (measured 5.7x) at >= 99% agreement
     # (measured 99.90%) — the aggressive end stays useful.
-    m01, cand01 = _run_margin(spark, vecs, cents, 0.1)
+    m01, cand01 = _run_margin(vecs, cents, 0.1)
     agree = sum(1 for k in fixed if fixed[k][0] == m01[k][0])
     assert agree / n >= 0.99, f"margin=0.1 agreement {agree}/{n}"
     assert cand01 * 4 <= cand_fixed, f"row cut {cand_fixed}/{cand01} below 4x"
 
     # A margin wider than any score spread must reproduce fixed probing
     # EXACTLY (the pruned set is a subset that converges to the full set).
-    mbig, cand_big = _run_margin(spark, vecs, cents, 1e9)
+    mbig, cand_big = _run_margin(vecs, cents, 1e9)
     assert mbig == fixed and cand_big == cand_fixed
 
 
-def test_distributed_adaptive_probing_salt_invariance_and_validation(spark):
-    import pytest as _pytest
-
-    from pyspark.sql import types as T
-
-    from bioclip_vector_db_spark.operators import knn_routed
-
+def test_distributed_adaptive_probing_salt_invariance(spark):
     cents, vecs = _planted(spark, K=520, N=700)
-    a, _ = _run_margin(spark, vecs, cents, 0.1, salts=1)
-    b, _ = _run_margin(spark, vecs, cents, 0.1, salts=4)
+    a, _ = _run_margin(vecs, cents, 0.1, salts=1)
+    b, _ = _run_margin(vecs, cents, 0.1, salts=4)
     assert a == b  # pruning happens BEFORE salting; argbest is per-salt
-
-    with _pytest.raises(ValueError, match="probe_margin"):
-        knn_routed.routed_best_centroid_distributed(
-            vecs,
-            cents,
-            id_col="cid",
-            cvec_col="cvec",
-            vec_col="embedding",
-            out_field=T.StructField("cid", T.LongType()),
-            probe_margin=-0.1,
-        )
 
 
 def test_distributed_adaptive_probing_total_under_nan_embedding(spark):
-    """r14 self-review: a NaN embedding scores NaN against every routing
-    anchor, so the margin inequality reads False for ALL probes and the
-    row would silently vanish from the output (the global merge
-    inner-joins on surviving candidates) — where fixed probing still
-    ships it. Column 0 of the probe set is kept unconditionally, so the
-    margin path must emit the same vec_id set as fixed probing even with
-    a NaN row planted."""
-    import math as _math
-
+    """A NaN embedding scores NaN against every routing anchor, so the
+    margin inequality reads False for ALL probes and the row would
+    silently vanish from the output (the global merge inner-joins on
+    surviving candidates) — where fixed probing still ships it. Column 0
+    of the probe set is kept unconditionally, so the margin path must
+    emit the same vec_id set as fixed probing even with a NaN row
+    planted, through the Arrow route stage."""
     cents, vecs = _planted(spark, K=520, N=300)
     poisoned = vecs.union(
         spark.createDataFrame(
@@ -1131,107 +1023,47 @@ def test_distributed_adaptive_probing_total_under_nan_embedding(spark):
             "vec_id long, embedding array<double>",
         )
     )
-    fixed, _ = _run_margin(spark, poisoned, cents, None)
-    pruned, _ = _run_margin(spark, poisoned, cents, 0.1)
+    fixed, _ = _run_margin(poisoned, cents, None)
+    pruned, _ = _run_margin(poisoned, cents, 0.1)
     assert set(pruned) == set(fixed)
     assert 999_999 in pruned
-
-
-# ---------------------------------------------------------------------------
-# Distributed tier driven with the instrument installed: the three Python
-# stages are mapInArrow / applyInArrow reading the vector values buffer
-# directly.
-# ---------------------------------------------------------------------------
-
-
-def _run_distributed(spark, vecs, cents, margin=None, salts=None):
-    from pyspark.sql import types as T
-
-    from bioclip_vector_db_spark.operators import knn_routed
-
-    stage = {}
-    knn_routed._INSTRUMENT = stage
-    try:
-        out = _collect_assign(
-            knn_routed.routed_best_centroid_distributed(
-                vecs,
-                cents,
-                id_col="cid",
-                cvec_col="cvec",
-                vec_col="embedding",
-                out_field=T.StructField("cid", T.LongType()),
-                score_field="csim",
-                probe_margin=margin,
-                group_salts=salts,
-            )
-        )
-    finally:
-        knn_routed._INSTRUMENT = None
-    return out, stage
-
-
-def test_distributed_arrow_route_nan_totality(spark):
-    """The structural column-0 keep (NaN totality, r14 self-review) must
-    hold through the Arrow route stage: a NaN row survives margin
-    pruning, and pruned and fixed probing emit the same vec_id set."""
-    cents, vecs = _planted(spark, K=520, N=300)
-    poisoned = vecs.union(
-        spark.createDataFrame(
-            [(999_999, [float("nan")] * 256)],
-            "vec_id long, embedding array<double>",
-        )
-    )
-    pruned, _ = _run_distributed(spark, poisoned, cents, margin=0.1)
-    assert 999_999 in pruned
-    fixed, _ = _run_distributed(spark, poisoned, cents)
-    assert set(pruned) == set(fixed)
 
 
 def test_distributed_probe_margin_auto_calibration(spark):
-    """probe_margin='auto' (the default, r14 verdict item 2) calibrates
-    from a capped strided sample of the WORKLOAD vectors: deterministic
-    (same input -> same margin, run to run), regime-adaptive (the planted
-    corpus's tight clusters calibrate a small margin and a large row cut
-    — measured 0.034 / 7.4x), and always a genuine cut next to fixed
-    probing while staying inside the recall gate above. None remains the
-    opt-out (gated in the adaptive-probing tests: cand_rows == probes*n).
-    """
-    from bioclip_vector_db_spark.operators import knn_routed
-
+    """The decision step calibrates the margin from a capped strided
+    sample of the WORKLOAD vectors: deterministic (same input -> same
+    margin, run to run), regime-adaptive (the planted corpus's tight
+    clusters calibrate a small margin and a large row cut — measured
+    0.034 / 7.4x), and always a genuine cut next to fixed probing while
+    staying inside the recall gate above."""
     cents, vecs = _planted(spark)
-    fixed, st_fixed = _run_distributed(spark, vecs, cents, margin=None)
-    auto1, st1 = _run_distributed(spark, vecs, cents, margin="auto")
-    auto2, st2 = _run_distributed(spark, vecs, cents, margin="auto")
-    # Deterministic: identical calibrated value AND identical rows.
-    assert st1["probe_margin"] == st2["probe_margin"]
-    assert auto1 == auto2
-    # The calibrated margin is a float inside the validation domain,
-    # stamped in the instrument record for stress-leg attribution.
-    assert isinstance(st1["probe_margin"], float)
-    assert st1["probe_margin"] >= knn_routed._CALIBRATE_MARGIN_FLOOR
-    # Regime-adaptive: tight planted clusters must earn a real row cut
-    # (measured 7.4x; gated at 2x so day-to-day fixture tweaks don't
-    # flake the gate).
-    assert st1["cand_rows"] * 2 <= st_fixed["cand_rows"], (
-        f"calibrated cut {st_fixed['cand_rows']}/{st1['cand_rows']} below 2x"
+    r1, r2 = _route(vecs, cents), _route(vecs, cents)
+    assert r1.margin == r2.margin
+    assert isinstance(r1.margin, float)
+    assert r1.margin >= knn_routed._CALIBRATE_MARGIN_FLOOR
+    assert _collect_assign(knn_routed._assign_routed(vecs, r1)) == _collect_assign(
+        knn_routed._assign_routed(vecs, r2)
     )
+    # Regime-adaptive: tight planted clusters must earn a real row cut
+    # (measured 7.4x; gated at 2x so fixture tweaks don't flake it).
+    cut = _routed_rows(vecs, r1)
+    fixed = _routed_rows(vecs, dataclasses.replace(r1, margin=None))
+    assert cut * 2 <= fixed, f"calibrated cut {fixed}/{cut} below 2x"
 
 
 def test_distributed_hot_group_max_fanin_bounded(spark, monkeypatch):
-    """r14 verdict item 3: group_salts auto-sizing bounded the MEAN
-    cogroup key; the per-task OOM bound is the MAX key. Plant the
-    adversarial case — 80% of vectors near ONE centroid while the
-    centroid table under-represents that region (k-means or seed-rule
-    centroids would both spread with the data, so this is strictly
-    worse than anything the auto paths produce) — and gate that the
-    per-group salt escalation, sized from the sampled routing
-    distribution, keeps the measured max (group, salt) fan-in within
-    ~2.5x the per-task target, while results stay byte-identical to
-    the uniform-salt plan (the argbest is per-key and the global merge
-    associative, so salting can never change a row)."""
-    from pyspark.sql import types as T
-
-    from bioclip_vector_db_spark.operators import knn_routed
+    """Mean-based salt sizing bounds the MEAN cogroup key; the per-task
+    OOM bound is the MAX key. Plant the adversarial case — 80% of
+    vectors near ONE centroid while the centroid table under-represents
+    that region (k-means or seed-rule centroids would both spread with
+    the data, so this is strictly worse than anything they produce) —
+    and gate that the per-group salt escalation, sized from the sampled
+    routing distribution, keeps the max (group, salt) fan-in of the
+    routed rows within 2.5x the per-task target under fixed probing
+    (the largest fan-in), while results stay byte-identical to one salt
+    per group (the argbest is per-key and the global merge associative,
+    so salting can never change a row)."""
+    from pyspark.sql import functions as F
 
     target = 100
     monkeypatch.setattr(knn_routed, "_TARGET_ROWS_PER_GROUP_TASK", target)
@@ -1254,35 +1086,25 @@ def test_distributed_hot_group_max_fanin_bounded(spark, monkeypatch):
         "vec_id long, embedding array<double>",
     )
 
-    def run(salts):
-        stage = {}
-        knn_routed._INSTRUMENT = stage
-        try:
-            out = _collect_assign(
-                knn_routed.routed_best_centroid_distributed(
-                    vecs,
-                    cents,
-                    id_col="cid",
-                    cvec_col="cvec",
-                    vec_col="embedding",
-                    out_field=T.StructField("cid", T.LongType()),
-                    score_field="csim",
-                    probe_margin=None,  # fixed probing = max fan-in
-                    group_salts=salts,
-                )
-            )
-        finally:
-            knn_routed._INSTRUMENT = None
-        return out, stage
-
-    auto, st_auto = run(None)
-    # The escalation engaged (hot group raised above the uniform base)
-    # and the MEASURED max key is bounded near the target.
-    assert st_auto["max_group_salts"] > st_auto["salts"], st_auto
-    assert st_auto["max_key_rows"] <= 2.5 * target, (
-        f"max fan-in {st_auto['max_key_rows']} vs target {target} "
-        f"(salts base {st_auto['salts']}, max {st_auto['max_group_salts']})"
+    route = _route(vecs, cents, margin=None)
+    salts = route.salts[route.live]
+    # The escalation engaged: the hot group sits above the uniform base.
+    assert salts.max() > salts.min(), salts
+    max_key = (
+        knn_routed._route_vectors(vecs, route)
+        .groupBy("_rt_gid", "_rt_salt")
+        .count()
+        .agg(F.max("count"))
+        .first()[0]
     )
-    # Salting never changes a row: byte-identical to the single-key plan.
-    uniform, _ = run(1)
+    assert max_key <= 2.5 * target, (
+        f"max fan-in {max_key} vs target {target} "
+        f"(salts base {salts.min()}, max {salts.max()})"
+    )
+    auto = _collect_assign(knn_routed._assign_routed(vecs, route))
+    uniform = _collect_assign(
+        knn_routed._assign_routed(
+            vecs, dataclasses.replace(route, salts=np.ones_like(route.salts))
+        )
+    )
     assert auto == uniform

@@ -63,9 +63,11 @@ replication can't exercise the hot-key defenses, so these PLANT one:
 Usage:
     python tools/scale_stress.py                 # M = 1 2 4
     python tools/scale_stress.py --m 1 2 4 8 --ops mp_join,triangles
-Prints one JSON line per (op, M) and MERGES results into
-SCALE_STRESS.json by (op, m) — extended decades and skew legs from
-separate invocations accumulate instead of clobbering the matrix.
+Prints one JSON line per (op, M) and, when the base is the matrix's
+sf0.1, MERGES results into SCALE_STRESS.json by (op, m) — extended
+decades and skew legs from separate invocations accumulate instead of
+clobbering the matrix. Runs over another base (SPARK_GRAFT_SF_DIR) only
+print.
 """
 
 from __future__ import annotations
@@ -367,138 +369,6 @@ def main() -> None:
                     k=k_sd,
                 )
 
-            if "dist_salted" in ops:
-                # r12 boundary (c): group_salts is the distributed
-                # tier's hot-group knob for extreme-n fan-in; the
-                # invariance gates run at salts <= 16 on small corpora.
-                # This leg measures the WALL cost of heavy salting at
-                # replicated scale (member side replicated per salt)
-                # and asserts exact assignment parity with salts=1.
-                from pyspark.sql import types as T_
-                from bioclip_vector_db_spark.operators.knn_routed import (
-                    routed_best_centroid_distributed,
-                )
-
-                k_sd = max(8, -(-n_emb // 64))
-                cent = emb.filter(F.col("vec_id") < k_sd).select(
-                    F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-                )
-
-                def dist_assign(salts):
-                    return routed_best_centroid_distributed(
-                        emb,
-                        cent,
-                        id_col="cid",
-                        cvec_col="cvec",
-                        vec_col="embedding",
-                        out_field=T_.StructField("cid", T_.LongType()),
-                        group_salts=salts,
-                    ).select("vec_id", "cid")
-
-                t0 = time.perf_counter()
-                a1 = transient_persist(dist_assign(1))
-                a1.count()
-                t_s1 = time.perf_counter() - t0
-                t0 = time.perf_counter()
-                a64 = transient_persist(dist_assign(64))
-                a64.count()
-                t_s64 = time.perf_counter() - t0
-                n_match = (
-                    a1.join(
-                        a64.select("vec_id", F.col("cid").alias("cid64")),
-                        "vec_id",
-                    )
-                    .filter(F.col("cid") == F.col("cid64"))
-                    .count()
-                )
-                emit(
-                    "dist_salted",
-                    m,
-                    n_emb,
-                    t_s1 + t_s64,
-                    k=k_sd,
-                    wall_salts1_s=round(t_s1, 2),
-                    wall_salts64_s=round(t_s64, 2),
-                    rows_match=bool(n_match == n_emb),
-                    matched=n_match,
-                )
-
-            if "dist_decompose" in ops:
-                # r12 verdict item 5: the distributed tier's M=256
-                # doubling read 2.50x — under the 2.83x O(n^1.5) model
-                # but thinning. Attribute the wall to its four terms:
-                # router build (driver sample + Lloyd), map-side member
-                # grouping, routed-explode shuffle + cogroup GEMM, and
-                # the global struct-merge + join-back + decide tail —
-                # via the opt-in knn_routed._INSTRUMENT sink (the
-                # candidate table is force-materialized in this mode,
-                # so `route_cogroup_s` is pinned separately from the
-                # merge; total wall is therefore a hair above the
-                # uninstrumented leg's).
-                from bioclip_vector_db_spark.operators import knn_routed
-
-                stage: dict = {}
-                tail: dict = {}
-                knn_routed._INSTRUMENT = stage
-                D._DECIDE_INSTRUMENT = tail
-                try:
-                    t0 = time.perf_counter()
-                    assigned, k_sd = seed_assign(emb, "distributed", n=n_emb)
-                    # Pin the assignment MERGE term (global struct-merge +
-                    # join-back) separately from the decide tail: the
-                    # candidate table is already persisted by the
-                    # instrument, so this count executes exactly the merge.
-                    assigned = transient_persist(assigned)
-                    t1 = time.perf_counter()
-                    tail["assign_rows"] = assigned.count()
-                    tail["assign_merge_s"] = time.perf_counter() - t1
-                    sd = transient_persist(
-                        D._decide_for_tier(
-                            assigned,
-                            D.SEMDEDUP_TAU,
-                            "distributed",
-                            n_vec=n_emb,
-                            k=k_sd,
-                        )
-                    )
-                    n_out = sd.count()
-                    wall = time.perf_counter() - t0
-                finally:
-                    knn_routed._INSTRUMENT = None
-                    D._DECIDE_INSTRUMENT = None
-                accounted = sum(
-                    v for kk, v in stage.items() if kk.endswith("_s")
-                )
-                # r15 verdict item 2: merge_tail decomposed further by the
-                # dedup-side instrument — assignment merge (global struct-
-                # merge + join-back), rank window, decide (pair/GEMM), and
-                # the residual final join + output.
-                tail_accounted = sum(
-                    v for kk, v in tail.items() if kk.endswith("_s")
-                )
-                emit(
-                    "dist_decompose",
-                    m,
-                    n_emb,
-                    wall,
-                    out_rows=n_out,
-                    k=k_sd,
-                    router_sample_s=round(stage.get("router_sample_s", 0), 2),
-                    router_build_s=round(stage.get("router_build_s", 0), 2),
-                    member_group_s=round(stage.get("member_group_s", 0), 2),
-                    route_cogroup_s=round(stage.get("route_cogroup_s", 0), 2),
-                    merge_tail_s=round(wall - accounted, 2),
-                    assign_merge_s=round(tail.get("assign_merge_s", 0), 2),
-                    rank_s=round(tail.get("rank_s", 0), 2),
-                    decide_s=round(tail.get("decide_s", 0), 2),
-                    final_tail_s=round(wall - accounted - tail_accounted, 2),
-                    decide_kernel=tail.get("decide_kernel"),
-                    removed_rows=tail.get("removed_rows"),
-                    g=stage.get("g"),
-                    salts=stage.get("salts"),
-                    cand_rows=stage.get("cand_rows"),
-                )
-
             if "decide_ab" in ops:
                 # r15 verdict item 2 A/B: the decide tail's expr pair join
                 # vs the arrow cogroup GEMM on the SAME distributed
@@ -642,24 +512,23 @@ def main() -> None:
                 )
 
             if "dist_skew_route" in ops:
-                # r14 verdict item 3 at real scale: 80% of vectors
-                # blended hard toward ONE anchor so they all route to
-                # its group, while the centroid table stays the seed
-                # rule over the ORIGINAL (spread) corpus — the stale-
-                # index adversarial case that under-represents the hot
-                # region (k-means or seed centroids over the skewed
-                # corpus itself would both spread WITH the data). The
-                # per-group salt escalation must keep the measured MAX
-                # (group, salt) fan-in near the per-task target where
-                # mean-based sizing alone would leave hot_share * n
-                # rows in one key.
-                from pyspark.sql import types as T_
-                from bioclip_vector_db_spark.operators import knn_routed
-                from bioclip_vector_db_spark.operators.knn_routed import (
-                    _TARGET_ROWS_PER_GROUP_TASK,
-                    routed_best_centroid_distributed,
-                )
+                # 80% of vectors blended hard toward ONE anchor so they
+                # all route to its group, while the centroid table stays
+                # the seed rule over the ORIGINAL (spread) corpus — the
+                # stale-index case that under-represents the hot region
+                # (k-means or seed centroids over the skewed corpus
+                # itself would both spread WITH the data). The per-group
+                # salt escalation must keep the measured MAX (group,
+                # salt) fan-in near the per-task target where mean-based
+                # sizing alone would leave hot_share * n rows in one key.
+                # Measured on the route step with fixed probing (margin
+                # None, the max fan-in); the assignment then runs on the
+                # same record.
+                import dataclasses
 
+                from bioclip_vector_db_spark.operators import knn_routed
+
+                target = knn_routed._TARGET_ROWS_PER_GROUP_TASK
                 k_sr = max(8, -(-n_emb // 64))
                 cent = emb.filter(F.col("vec_id") < k_sr).select(
                     F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
@@ -685,25 +554,23 @@ def main() -> None:
                     .otherwise(F.col("embedding"))
                     .alias("embedding"),
                 )
-                stage: dict = {}
-                knn_routed._INSTRUMENT = stage
-                try:
-                    t0 = time.perf_counter()
-                    a = transient_persist(
-                        routed_best_centroid_distributed(
-                            hot,
-                            cent,
-                            id_col="cid",
-                            cvec_col="cvec",
-                            vec_col="embedding",
-                            out_field=T_.StructField("cid", T_.LongType()),
-                            probe_margin=None,  # fixed probing = max fan-in
-                        ).select("vec_id", "cid")
-                    )
-                    n_out = a.count()
-                    wall = time.perf_counter() - t0
-                finally:
-                    knn_routed._INSTRUMENT = None
+                t0 = time.perf_counter()
+                route = dataclasses.replace(
+                    knn_routed._decide_route(hot, cent, k_sr, n_emb), margin=None
+                )
+                fan = (
+                    knn_routed._route_vectors(hot, route)
+                    .groupBy("_rt_gid", "_rt_salt")
+                    .count()
+                    .agg(F.max("count").alias("mx"), F.avg("count").alias("mean"))
+                    .collect()[0]
+                )
+                a = transient_persist(
+                    knn_routed._assign_routed(hot, route).select("vec_id", "cid")
+                )
+                n_out = a.count()
+                wall = time.perf_counter() - t0
+                live_salts = route.salts[route.live]
                 emit(
                     "dist_skew_route",
                     m,
@@ -712,15 +579,12 @@ def main() -> None:
                     out_rows=n_out,
                     k=k_sr,
                     hot_share=0.8,
-                    target_rows_per_task=_TARGET_ROWS_PER_GROUP_TASK,
-                    salts_base=stage.get("salts"),
-                    max_group_salts=stage.get("max_group_salts"),
-                    max_key_rows=stage.get("max_key_rows"),
-                    mean_key_rows=round(stage.get("mean_key_rows", 0.0), 1),
-                    bounded_2x_target=bool(
-                        stage.get("max_key_rows", 0)
-                        <= 2 * _TARGET_ROWS_PER_GROUP_TASK
-                    ),
+                    target_rows_per_task=target,
+                    salts_base=int(live_salts.min()),
+                    max_salts=int(live_salts.max()),
+                    max_key_rows=int(fan["mx"]),
+                    mean_key_rows=round(float(fan["mean"]), 1),
+                    bounded_2x_target=bool(fan["mx"] <= 2 * target),
                 )
 
             if "pq64_adc" in ops:
@@ -1081,18 +945,40 @@ def main() -> None:
     _merge_results(results)
 
 
-def _merge_results(results: "list[dict]") -> None:
-    """Merge emitted rows into SCALE_STRESS.json by (op, m). Called after
-    every emit AND at end-of-run — idempotent, last-writer-wins per key."""
-    out_path = os.path.join(REPO, "SCALE_STRESS.json")
+#: The base scale the committed SCALE_STRESS.json matrix is measured on.
+MATRIX_SF = "sf0.1"
+
+
+def _merge_results(
+    results: "list[dict]",
+    out_path: str = os.path.join(REPO, "SCALE_STRESS.json"),
+    sf_dir: str = SF_DIR,
+) -> bool:
+    """Merge emitted rows into the committed matrix by (op, m). Called
+    after every emit AND at end-of-run — idempotent, last-writer-wins
+    per key. Rows are keyed without the base scale, so only a run over
+    the matrix's own base (MATRIX_SF) merges; any other base prints a
+    notice and leaves the file alone. A prior file that cannot be read
+    raises instead of being replaced by this run's rows alone. Returns
+    whether the file was written."""
+    if os.path.basename(os.path.normpath(sf_dir)) != MATRIX_SF:
+        print(
+            f"not merging into {out_path}: base {sf_dir} is not the "
+            f"matrix's {MATRIX_SF}",
+            file=sys.stderr,
+        )
+        return False
     merged: dict[tuple, dict] = {}
     if os.path.exists(out_path):
-        try:
-            with open(out_path) as fh:
-                for rec in json.load(fh):
+        with open(out_path) as fh:
+            try:
+                prior = json.load(fh)
+                for rec in prior:
                     merged[(rec["op"], rec["m"])] = rec
-        except (json.JSONDecodeError, KeyError):
-            pass  # unreadable prior file: start fresh
+            except (json.JSONDecodeError, KeyError, TypeError) as e:
+                raise RuntimeError(
+                    f"{out_path} is unreadable ({e}); fix or move it before merging"
+                ) from e
     for rec in results:
         merged[(rec["op"], rec["m"])] = rec
     with open(out_path, "w") as fh:
@@ -1100,6 +986,7 @@ def _merge_results(results: "list[dict]") -> None:
             sorted(merged.values(), key=lambda r: (r["m"], r["op"])), fh, indent=1
         )
         fh.write("\n")  # stable trailing newline: diffs stay reviewable
+    return True
 
 
 if __name__ == "__main__":
