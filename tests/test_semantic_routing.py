@@ -1029,6 +1029,30 @@ def test_distributed_adaptive_probing_total_under_nan_embedding(spark):
     assert 999_999 in pruned
 
 
+def test_distributed_arrow_route_nan_totality(spark):
+    """The column-0 keep must hold inside the Arrow route stage itself: a
+    NaN row leaves it with exactly one row (its first probe) under a
+    margin, where fixed probing ships it once per probe."""
+    cents, vecs = _planted(spark, K=520, N=300)
+    poisoned = vecs.union(
+        spark.createDataFrame(
+            [(999_999, [float("nan")] * 256)],
+            "vec_id long, embedding array<double>",
+        )
+    )
+
+    def nan_rows(margin):
+        route = _route(poisoned, cents, margin=margin)
+        routed = knn_routed._route_vectors(poisoned, route)
+        probes = min(knn_routed.ROUTE_PROBES, len(route.live))
+        return routed.filter(F.col("vec_id") == 999_999).count(), probes
+
+    pruned, _ = nan_rows(0.1)
+    assert pruned == 1
+    fixed, probes = nan_rows(None)
+    assert fixed == probes
+
+
 def test_distributed_probe_margin_auto_calibration(spark):
     """The decision step calibrates the margin from a capped strided
     sample of the WORKLOAD vectors: deterministic (same input -> same
