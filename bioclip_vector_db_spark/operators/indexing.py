@@ -33,6 +33,8 @@ serve time.
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -167,6 +169,131 @@ def _read_written(spark: SparkSession, path: str, schema: T.StructType) -> DataF
     ).parquet(path)
 
 
+@dataclasses.dataclass(frozen=True)
+class _AppendState:
+    """What the last append to one index dir learned, reused by the next
+    append in this process so its steady state runs no seeding job: the
+    stored corpus schema (the read skips footer inference), each
+    partition's next faiss_id (the id offsets fold in as a literal map)
+    and the centroid count (it picks the assignment kernel).
+
+    Valid only at ``gen``, the ``.write_gen`` stamp it was stored or
+    re-stamped at. _single_writer drops it when the stamp on disk differs
+    (another process or out-of-band actor wrote since) and when a write
+    fails; build_index and delete_ids drop it because they rewrite what it
+    summarises; api.reset drops it through invalidate_append_state. Every
+    write holds the dir's write lock, so one writer per dir stores or
+    reads it at a time."""
+
+    gen: str
+    schema: T.StructType
+    next_ids: dict[int, int]
+    nlist: int
+
+
+#: {index_dir: _AppendState}, named only by the accessor pair below:
+#: staging.logic_token folds the contents of any dict global a function
+#: names, and the durable ingest gate is keyed on append_to_index's token
+#: (regression: tests/test_staging.py
+#: test_append_state_caches_do_not_thrash_gate_token).
+_APPEND_STATE: dict[str, _AppendState] = {}
+
+
+def _append_state(index_dir: str) -> "_AppendState | None":
+    return _APPEND_STATE.get(index_dir)
+
+
+def _set_append_state(index_dir: str, state: "_AppendState | None") -> None:
+    if state is None:
+        _APPEND_STATE.pop(index_dir, None)
+    else:
+        _APPEND_STATE[index_dir] = state
+
+
+def invalidate_append_state(index_dir: str) -> None:
+    """Drop this process's append record for ``index_dir``. Required
+    after out-of-band surgery on the index directory (api.reset, manual
+    partition repair per tests/test_corruption.py) that leaves the
+    ``.write_gen`` stamp in place."""
+    _set_append_state(index_dir, None)
+
+
+def _read_write_gen(index_dir: str) -> str:
+    """On-disk write-generation stamp ("" if never written). Read and
+    written only under the exclusive ``.write_lock``, so a plain text
+    file is race-free."""
+    import os
+
+    try:
+        with open(os.path.join(index_dir, ".write_gen")) as f:
+            return f.read().strip()
+    except FileNotFoundError:
+        return ""
+
+
+def _bump_write_gen(index_dir: str) -> str:
+    """Stamp a fresh random token, not a counter: a counter could repeat
+    after api.reset recreates the directory and validate a stale record."""
+    import os
+    import uuid
+
+    gen = uuid.uuid4().hex
+    with open(os.path.join(index_dir, ".write_gen"), "w") as f:
+        f.write(gen)
+    return gen
+
+
+def _single_writer(fn):
+    """Run a write op ``fn(head, index_dir, ...)`` under the index dir's
+    exclusive cross-process lock and a fresh write generation.
+
+    build_index, append_to_index, delete_ids and compact_index each
+    overwrite or append to the same ``corpus``/``id_mapping``
+    directories; two racing writers could silently lose one side's
+    rewrite. Each therefore holds an advisory lock on
+    ``<index_dir>/.write_lock`` (streaming.staging.process_lock, the
+    primitive the durable stream gates use) for its whole
+    read-modify-write span, blocking until the current writer finishes:
+    concurrent writers equal some serial order (pinned by
+    tests/test_concurrency.py::test_index_writers_serialize). The lock is
+    not reentrant, so no write op may call another, build_index included.
+
+    Under the lock the wrapper checks this process's _AppendState against
+    ``<index_dir>/.write_gen``: a differing stamp means another process
+    (or a build, or out-of-band surgery) wrote since the record was
+    stored, so the record is dropped before ``fn`` can consult it. It then
+    stamps a new generation and re-stamps a still-valid record with it, so
+    every write invalidates every other process's record. A write that
+    raises drops the record; the next append re-seeds from disk (pinned
+    by tests/test_concurrency.py::
+    test_cross_process_write_invalidates_append_cache).
+
+    Readers are not locked: a Spark parquet read lists its files once
+    (snapshot-by-file-listing). Ops on different index dirs never
+    contend."""
+    import functools
+    import os
+
+    @functools.wraps(fn)
+    def wrapper(head, index_dir, *args, **kwargs):
+        from ..streaming.staging import process_lock
+
+        os.makedirs(index_dir, exist_ok=True)
+        with process_lock(os.path.join(index_dir, ".write_lock")):
+            state = _append_state(index_dir)
+            fresh = state is not None and state.gen == _read_write_gen(index_dir)
+            gen = _bump_write_gen(index_dir)
+            _set_append_state(index_dir, dataclasses.replace(state, gen=gen) if fresh else None)
+            try:
+                return fn(head, index_dir, *args, **kwargs)
+            except BaseException:
+                invalidate_append_state(index_dir)
+                raise
+
+    return wrapper
+
+
+@_single_writer
 def build_index(
     vectors: DataFrame,
     output_dir: str,
@@ -202,12 +329,17 @@ def build_index(
     storage_interface.py:22-24, neighborhood_server.py:31-52) map to
     ``df.observe``: counters ride the write job itself — no extra pass —
     and land in ``metrics`` alongside wall-clock timings.
+
+    Runs under ``output_dir``'s write lock and stamps a new write
+    generation (_single_writer), so a rebuild drops every process's
+    append record for the dir.
     """
     import time
 
     from pyspark import StorageLevel
     from pyspark.sql import Observation
 
+    invalidate_append_state(output_dir)
     spark = vectors.sparkSession
     t0 = time.perf_counter()
     owned = vectors.storageLevel == StorageLevel.NONE
@@ -274,188 +406,6 @@ def build_index(
     }
 
 
-#: Stored-corpus schemas observed per index_dir: the appender itself wrote
-#: them, so the NEXT append can pass the schema to the read and skip the
-#: per-batch footer-inference pass (driver-side latency on the micro-batch
-#: path). Process-local by design — a fresh process re-infers once.
-_CORPUS_SCHEMA_CACHE: dict[str, "object"] = {}
-
-#: Per-index next-faiss_id state: {index_dir: {partition_id: next_id}} —
-#: BOUNDED driver state (nlist entries), maintained across appends so the
-#: steady-state batch path needs NO second corpus scan + broadcast build
-#: for the id offsets (they fold in as a literal map expression). Seeded
-#: from the stored corpus on a cache miss (fresh process / restart) and
-#: invalidated on any append failure; a wiped/rebootstrapped dir resets it
-#: because the bootstrap path never reads it. Single-writer by contract —
-#: the durable ingest gate serializes appenders per index_dir.
-_NEXT_IDS_CACHE: dict[str, dict[int, int]] = {}
-
-#: Per-index partition-id universe (the leader table's ids) — lets the
-#: append fold its next-id bookkeeping into the corpus write as observe()
-#: metrics instead of a separate action per micro-batch.
-_PIDS_CACHE: dict[str, "list[int]"] = {}
-
-#: Above this nlist, per-partition observe() metrics (one conditional sum
-#: per partition id) would bloat the plan; fall back to the aggregate job.
-_OBSERVE_NLIST_MAX = 256
-
-
-def _peek_append_state(index_dir: str) -> "tuple[object, dict[int, int] | None]":
-    """(cached corpus schema, cached next-id map) for ``index_dir``.
-
-    Accessor on purpose: append_to_index is fingerprinted by
-    staging.logic_token, which folds dict-typed module globals it names —
-    naming the mutable cache dicts directly from the append body would
-    fold their CONTENTS (tempdir paths!) into the durable-gate token and
-    re-key the gate on every run (function-typed globals are skipped, so
-    routing the state through accessors keeps the token a function of
-    logic only; regression: tests/test_staging.py
-    test_append_state_caches_do_not_thrash_gate_token)."""
-    return (
-        _CORPUS_SCHEMA_CACHE.get(index_dir),
-        _NEXT_IDS_CACHE.get(index_dir),
-        _PIDS_CACHE.get(index_dir),
-    )
-
-
-def _invalidate_next_ids(index_dir: str) -> None:
-    _NEXT_IDS_CACHE.pop(index_dir, None)
-
-
-#: Generation the cached append state was read/written at, per index dir.
-#: Compared against the on-disk ``.write_gen`` stamp under the write lock
-#: (see _single_writer) so a DIFFERENT process's writes invalidate this
-#: process's caches before they can double-allocate faiss_ids. The stamp
-#: is a fresh random token per write, not a counter: a counter could
-#: collide after api.reset recreates the directory (this process cached
-#: gen=2, the rebuilt index reaches gen=2 again) and silently validate a
-#: stale cache.
-_GEN_CACHE: dict[str, str] = {}
-
-
-def _read_write_gen(index_dir: str) -> str:
-    """On-disk write-generation stamp ("" if never written). Read and
-    written only under the exclusive ``.write_lock``, so a plain text
-    file is race-free."""
-    import os
-
-    try:
-        with open(os.path.join(index_dir, ".write_gen")) as f:
-            return f.read().strip()
-    except FileNotFoundError:
-        return ""
-
-
-def _cached_gen(index_dir: str) -> "str | None":
-    """Accessor on purpose — same reason as _peek_append_state: the
-    _single_writer wrapper is part of staging.logic_token's fingerprint
-    of every write op (ingest.py keys its durable gate on
-    append_to_index), and logic_token folds dict-typed module globals a
-    function NAMES. Naming _GEN_CACHE from the wrapper would fold its
-    CONTENTS (per-write uuid tokens!) into the gate token and re-key the
-    durable gate on every write — full cold rebuild per micro-batch and
-    cross-process gate-dir reaping. Regression:
-    tests/test_staging.py::test_append_state_caches_do_not_thrash_gate_token."""
-    return _GEN_CACHE.get(index_dir)
-
-
-def _store_cached_gen(index_dir: str, gen: str) -> None:
-    _GEN_CACHE[index_dir] = gen
-
-
-def _bump_write_gen(index_dir: str) -> str:
-    import os
-    import uuid
-
-    gen = uuid.uuid4().hex
-    with open(os.path.join(index_dir, ".write_gen"), "w") as f:
-        f.write(gen)
-    return gen
-
-
-def invalidate_append_state(index_dir: str) -> None:
-    """Drop ALL cached append state for ``index_dir`` — next-id map,
-    corpus schema, partition-id list. Required after out-of-band surgery
-    on the index directory (api.reset, manual partition repair per
-    tests/test_corruption.py): a rebuilt index may carry a different
-    schema or leader table, and stale pids would mis-key the observe
-    counters of the next append."""
-    _NEXT_IDS_CACHE.pop(index_dir, None)
-    _CORPUS_SCHEMA_CACHE.pop(index_dir, None)
-    _PIDS_CACHE.pop(index_dir, None)
-    _GEN_CACHE.pop(index_dir, None)
-
-
-def _single_writer(fn):
-    """Serialize the index WRITE path (r9 verdict item 3).
-
-    append_to_index, delete_ids, and compact_index each
-    materialize-then-overwrite (or append to) the same
-    ``corpus``/``id_mapping`` directories; two racing writers could
-    silently lose one side's rewrite — e.g. a delete planned against the
-    pre-append corpus overwrites the appended files out of existence.
-    Every write op therefore takes an exclusive cross-process advisory
-    lock on ``<index_dir>/.write_lock`` (fcntl.flock via
-    streaming.staging.process_lock — the same primitive the durable
-    stream gates use) for its full read-modify-write span, BLOCKING
-    until the current writer finishes: concurrent writers are safe and
-    equivalent to some serial order, pinned by
-    tests/test_concurrency.py::test_index_writers_serialize.
-
-    Cross-process cache freshness (r10 ADVICE): the lock alone does not
-    protect the per-process append caches (_NEXT_IDS_CACHE etc.) — if
-    process A appends (caching next-ids), process B appends or deletes
-    (renumbering faiss_ids on disk), then A appends again, A's stale
-    cached next-id map would double-allocate faiss_ids DESPITE holding
-    the lock. Every write op therefore bumps an on-disk generation stamp
-    (``<index_dir>/.write_gen``) at entry, and the wrapper drops this
-    process's cached append state whenever the on-disk generation
-    differs from the one the cache was stored at — a foreign write is
-    detected before the cache is consulted. A write that raises also
-    drops the caches (disk state uncertain); the next attempt re-seeds
-    from the stored corpus. Pinned by tests/test_concurrency.py::
-    test_cross_process_write_invalidates_append_cache.
-
-    Readers are not locked — Spark parquet reads against a directory
-    mid-overwrite were already the serving tier's documented
-    read-consistency model (snapshot-by-file-listing), unchanged here.
-    The lock is advisory and per-index-dir; ops on different indexes
-    never contend. Reentrancy is not provided (none of the write ops
-    call one another)."""
-    import functools
-    import os
-
-    @functools.wraps(fn)
-    def wrapper(spark, index_dir, *args, **kwargs):
-        from ..streaming.staging import process_lock
-
-        os.makedirs(index_dir, exist_ok=True)
-        with process_lock(os.path.join(index_dir, ".write_lock")):
-            disk_gen = _read_write_gen(index_dir)
-            if _cached_gen(index_dir) != disk_gen:
-                # Another process (or an out-of-band actor) wrote since
-                # this process last held the lock: every cached piece of
-                # append state may be stale — drop it all before fn can
-                # consult it.
-                invalidate_append_state(index_dir)
-            _store_cached_gen(index_dir, _bump_write_gen(index_dir))
-            try:
-                return fn(spark, index_dir, *args, **kwargs)
-            except BaseException:
-                invalidate_append_state(index_dir)
-                raise
-
-    return wrapper
-
-
-def _store_append_state(
-    index_dir: str, schema: object, next_map: dict[int, int], pids: "list[int]"
-) -> None:
-    _CORPUS_SCHEMA_CACHE[index_dir] = schema
-    _NEXT_IDS_CACHE[index_dir] = next_map
-    _PIDS_CACHE[index_dir] = pids
-
-
 def _run_concurrently(spark: SparkSession, fns: list) -> list:
     """Run each zero-argument callable on a thread of its own; return
     their results in order. Each thread inherits the caller's Spark local
@@ -503,42 +453,38 @@ def append_to_index(
     # faiss-id window, so this costs no extra exchange.
     batch = batch.select("vec_id", "embedding", "label").dropDuplicates(["vec_id"])
     bootstrap = not os.path.exists(f"{index_dir}/corpus")
-    cached_schema, cached_next, cached_pids = _peek_append_state(index_dir)
-    pids = cached_pids
-    if pids is None:
-        # One nlist-sized collect per index lifetime (re-seeded after a
-        # process restart), not per batch — the leader table is
-        # small-by-contract (operators/knn_numpy.py:67 note).
-        pids = sorted(
-            r["partition_id"] for r in centroids.select("partition_id").collect()
-        )
-    if bootstrap:
-        next_map: dict[int, int] = {}
-    else:
-        reader = spark.read
-        if cached_schema is not None:
-            reader = reader.schema(cached_schema)
+    state = _append_state(index_dir)
+    # One nlist-row collect per index per process, not per batch: a
+    # collect is one job, where count() adds an AQE stage job.
+    nlist = (
+        len(centroids.select("partition_id").collect()) if state is None else state.nlist
+    )
+    next_ids: dict[int, int] = {}
+    if not bootstrap:
+        reader = spark.read if state is None else spark.read.schema(state.schema)
         stored = reader.parquet(f"{index_dir}/corpus")
         batch = batch.join(stored.select("vec_id"), "vec_id", "left_anti")
-        next_map = cached_next
-        if next_map is None:
-            next_map = {
+        if state is None:
+            next_ids = {
                 r["partition_id"]: r["_next_id"]
                 for r in stored.groupBy("partition_id")
                 .agg((F.max("faiss_id") + 1).alias("_next_id"))
                 .collect()
             }
-    _invalidate_next_ids(index_dir)  # restored only on success
-    assigned = assign_partitions(batch, centroids, nlist=len(pids))
+        else:
+            next_ids = state.next_ids
+    assigned = assign_partitions(batch, centroids, nlist=nlist)
     w = Window.partitionBy("partition_id").orderBy(F.col("vec_id").asc())
     rows = assigned.withColumn("_rn", (F.row_number().over(w) - 1).cast("bigint"))
-    if next_map:
+    # The last row of each partition carries that partition's next id.
+    rows = rows.withColumn("_last", F.lead("_rn").over(w).isNull())
+    if next_ids:
         # nlist-bounded literal map: the id offsets ride the expression —
         # no broadcast-build job, no second corpus scan per batch.
         offsets = F.create_map(
             *[
                 F.lit(x)
-                for kv in next_map.items()
+                for kv in next_ids.items()
                 for x in (int(kv[0]), int(kv[1]))
             ]
         )
@@ -551,27 +497,19 @@ def append_to_index(
         rows.withColumn("faiss_id", F.col("_rn")).drop("_rn").localCheckpoint(eager=True)
     )
 
-    # Next-id bookkeeping rides the corpus write as observe() metrics (one
-    # conditional count per partition id — faiss_ids are dense, so next =
-    # old offset + batch count) instead of a separate aggregate action per
-    # micro-batch; past _OBSERVE_NLIST_MAX partitions the conditional-sum
-    # plan would bloat and a plain aggregate job takes over.
-    use_obs = len(pids) <= _OBSERVE_NLIST_MAX
-    if use_obs:
-        from pyspark.sql import Observation
+    # The batch's next ids ride the corpus write as one observed metric,
+    # sized by the partitions the batch touches: no job of their own.
+    from pyspark.sql import Observation
 
-        obs = Observation()
-        corpus_src = rows.observe(
-            obs,
-            *[
-                F.sum(
-                    F.when(F.col("partition_id") == int(p), 1).otherwise(0)
-                ).cast("bigint").alias(f"c{int(p)}")
-                for p in pids
-            ],
-        )
-    else:
-        corpus_src = rows
+    obs = Observation()
+    corpus_rows = rows.observe(
+        obs,
+        F.map_from_entries(
+            F.collect_list(
+                F.when(F.col("_last"), F.struct("partition_id", F.col("faiss_id") + 1))
+            )
+        ).alias("next_ids"),
+    ).drop("_last")
 
     # The two table writes read only the materialized checkpoint, so they
     # are independent jobs — run them CONCURRENTLY (the scheduler
@@ -581,7 +519,7 @@ def append_to_index(
     # validator treats any corpus/id_mapping row-count mismatch as
     # rebuild-from-scratch (streaming/ingest._index_consistent).
     def _write_corpus() -> None:
-        corpus_src.write.mode("append").partitionBy("partition_id").parquet(
+        corpus_rows.write.mode("append").partitionBy("partition_id").parquet(
             f"{index_dir}/corpus"
         )
 
@@ -596,39 +534,24 @@ def append_to_index(
             f"{index_dir}/id_mapping"
         )
 
-    def _batch_next_ids() -> dict[int, int]:
-        # Fallback only (nlist > _OBSERVE_NLIST_MAX): max faiss_id per
-        # partition of THIS batch (checkpointed — no corpus IO).
-        return {
-            r["partition_id"]: r["_nxt"]
-            for r in rows.groupBy("partition_id")
-            .agg((F.max("faiss_id") + 1).alias("_nxt"))
-            .collect()
-        }
-
     writes = [_write_corpus, _write_mapping]
-    if not use_obs:
-        writes.append(_batch_next_ids)
     if bootstrap:
         writes.append(
             lambda: centroids.write.mode("overwrite").parquet(f"{index_dir}/centroids")
         )
-    results = _run_concurrently(spark, writes)
-    if use_obs:
-        counts = obs.get  # resolved: the corpus write completed above
-        batch_next = {
-            int(p): next_map.get(int(p), 0) + counts[f"c{int(p)}"]
-            for p in pids
-            if counts[f"c{int(p)}"]
-        }
-    else:
-        batch_next = results[2]
-    # Cache schema + merged next-id state only after every write landed
-    # (rows' columns are exactly what partitionBy-append lands, partition
-    # column matched by name, so the next append skips footer inference);
-    # a failed append leaves the next-id cache invalidated (popped above)
-    # and the next attempt re-seeds from the stored corpus.
-    _store_append_state(index_dir, rows.schema, {**next_map, **batch_next}, pids)
+    _run_concurrently(spark, writes)
+    # Stored only after every write landed. corpus_rows' columns are
+    # exactly what partitionBy-append lands (partition column matched by
+    # name), so the next append's read skips footer inference.
+    _set_append_state(
+        index_dir,
+        _AppendState(
+            _read_write_gen(index_dir),
+            corpus_rows.schema,
+            {**next_ids, **(obs.get["next_ids"] or {})},
+            nlist,
+        ),
+    )
 
 
 @_single_writer
@@ -701,9 +624,8 @@ def delete_ids(
     3. ``id_mapping`` for the same partitions keeps its surviving rows
        (metadata and created_at — ingestion provenance — unchanged) with
        only ``faiss_id`` replaced from the renumbered corpus; the
-       in-process next-id cache is invalidated BEFORE any write so a
-       mid-flight failure can never leave pre-delete next-ids cached
-       over a renumbered corpus.
+       append record (_AppendState) is dropped before any write, so no
+       append numbers on from pre-delete next ids.
 
     Renumbering preserves the contract every consumer relies on
     (with_faiss_ids: dense 0-based ids per partition in vec_id order),
@@ -805,11 +727,9 @@ def delete_ids(
         .select("partition_id", "faiss_id", "original_id", "metadata", "created_at")
         .localCheckpoint(eager=True)
     )
-    # Invalidate the next-id cache BEFORE any write (the append_to_index
-    # convention): if either overwrite below dies mid-flight, the cache
-    # must not serve pre-delete next-ids over a renumbered corpus — the
-    # next append re-seeds from whatever is on disk instead.
-    _invalidate_next_ids(index_dir)
+    # The renumbering outdates the append record's next ids: the next
+    # append re-seeds from whatever is on disk.
+    invalidate_append_state(index_dir)
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:

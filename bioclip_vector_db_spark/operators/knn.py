@@ -71,17 +71,6 @@ def knn_join(
     )
 
 
-#: Collapsed 1-row centroid tables for assign_partitions, keyed by
-#: _plan_key — per-micro-batch plan reconstruction is driver latency.
-_CENTS_CACHE: dict[tuple[int, int], "DataFrame"] = {}
-
-
-def _plan_key(df: DataFrame) -> tuple[int, int]:
-    """(session id, semantic hash of the analyzed plan): a driver-side
-    hash, no job, equal for re-built DataFrames over the same plan."""
-    return (id(df.sparkSession), df._jdf.queryExecution().analyzed().semanticHash())
-
-
 def _use_gemm(nlist: int | None) -> bool:
     """The nearest-centroid kernel rule: the blocked GEMM
     (knn_numpy) when the caller holds a centroid count above
@@ -164,21 +153,11 @@ def assign_partitions(
         from .knn_numpy import assign_partitions_numpy
 
         return assign_partitions_numpy(vectors, centroids)
-    # The collapsed 1-row centroid table is memoized per (session,
-    # centroid plan): a streaming ingest calls this once per micro-batch
-    # with the SAME centroids, and rebuilding the agg plan is pure
-    # driver-side py4j latency on the batch path.
-    ckey = _plan_key(centroids)
-    cents = _CENTS_CACHE.get(ckey)
-    if cents is None:
-        cents = centroids.groupBy().agg(
-            F.collect_list(
-                F.struct(
-                    F.col("partition_id").alias("pid"), F.col("centroid").alias("c")
-                )
-            ).alias("_cents")
-        )
-        _CENTS_CACHE[ckey] = cents
+    cents = centroids.groupBy().agg(
+        F.collect_list(
+            F.struct(F.col("partition_id").alias("pid"), F.col("centroid").alias("c"))
+        ).alias("_cents")
+    )
     emb = F.col("embedding").cast("array<double>")
     # array_min over (d, pid) structs = lexicographic min = argmin with the
     # smallest-pid tiebreak, one distance evaluation per centroid.

@@ -106,6 +106,64 @@ def test_compact_index_preserves_tables(spark, sf_dir, tmp_path):
     assert after_engine.search(list(qv), top_n=5, nprobe=3).collect()[0].id == "123"
 
 
+def dense_faiss_ids(table) -> bool:
+    """Every partition of ``table`` numbers its rows 0..n-1 in faiss_id."""
+    per_part: dict[int, list[int]] = {}
+    for r in table.select("partition_id", "faiss_id").collect():
+        per_part.setdefault(r["partition_id"], []).append(r["faiss_id"])
+    return all(sorted(ids) == list(range(len(ids))) for ids in per_part.values())
+
+
+def _assert_equals_rebuild(spark, engine, vectors, centroids, rebuild_dir):
+    build_index(vectors, rebuild_dir, centroids=centroids)
+    full = VectorSearchEngine(spark, rebuild_dir)
+    key = ["partition_id", "faiss_id"]
+    for attr in ("corpus", "id_mapping"):
+        assert dense_faiss_ids(getattr(engine, attr)), attr
+        a = getattr(full, attr).drop("created_at").orderBy(*key).collect()
+        b = getattr(engine, attr).drop("created_at").orderBy(*key).collect()
+        assert a == b, f"{attr} diverged between rebuild and append"
+
+
+def test_add_batch_after_reset_assigns_against_the_new_centroids(spark, sf_dir, tmp_path):
+    """reset, then a build with other centroids into the same dir, then an
+    append through a freshly opened engine: the append reads the new
+    centroid files, not the reset ones, and its rows land where a rebuild
+    with the new centroids puts them."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    old = fixture_centroids(spark, sf_dir)
+    n = old.count()
+    new = old.select((F.lit(n - 1) - F.col("partition_id")).alias("partition_id"), "centroid")
+    d = str(tmp_path / "index")
+    build_index(emb.filter(F.col("vec_id") < 300), d, centroids=old)
+    engine = VectorSearchEngine(spark, d)
+    engine.add_batch(emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 400)))
+    engine.reset(force=True)
+    build_index(emb.filter(F.col("vec_id") < 300), d, centroids=new)
+    grown = VectorSearchEngine(spark, d).add_batch(emb.filter(F.col("vec_id") >= 300))
+    _assert_equals_rebuild(spark, grown, emb, new, str(tmp_path / "full"))
+
+
+def test_add_batch_after_rebuild_over_appended_dir_keeps_ids_dense(spark, sf_dir, tmp_path):
+    """A build over a dir this process already appended to replaces what
+    the append path learned about it: the next append numbers each
+    partition on from the rebuilt corpus, and the index equals a rebuild
+    over the union. Both appends take the same centroid frame (add_batch's
+    core with the engine's centroids held fixed), so only the next-id
+    state can go stale."""
+    from bioclip_vector_db_spark.operators.indexing import append_to_index
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cent = fixture_centroids(spark, sf_dir)
+    d = str(tmp_path / "index")
+    build_index(emb.filter(F.col("vec_id") < 200), d, centroids=cent)
+    append_to_index(spark, d, emb.filter(F.col("vec_id").between(200, 299)), cent)
+    build_index(emb.filter(F.col("vec_id") < 100), d, centroids=cent)
+    append_to_index(spark, d, emb.filter(F.col("vec_id") >= 100), cent)
+    grown = VectorSearchEngine(spark, d)
+    _assert_equals_rebuild(spark, grown, emb, cent, str(tmp_path / "full"))
+
+
 # -- search: request validation ---------------------------------------------
 
 

@@ -23,8 +23,11 @@ def test_build_index_layout_and_search(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings")
     built = build_index(emb, out, k=5)
 
-    # O3/O5/O6: three tables on disk; the corpus is hive-partitioned.
-    assert sorted(os.listdir(out)) == ["centroids", "corpus", "id_mapping"]
+    # O3/O5/O6: three tables on disk; the corpus is hive-partitioned. The
+    # two dotfiles are the write lock and generation every write op takes.
+    assert sorted(os.listdir(out)) == [
+        ".write_gen", ".write_lock", "centroids", "corpus", "id_mapping"
+    ]
 
     # O16/O31: counters observed on the write job itself.
     m = built["metrics"]

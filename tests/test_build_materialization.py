@@ -31,6 +31,7 @@ from bioclip_vector_db_spark.operators import embedding, indexing, knn
 from bioclip_vector_db_spark.operators.indexing import append_to_index, build_index
 from bioclip_vector_db_spark.operators.knn_numpy import LARGE_NLIST_THRESHOLD
 from bioclip_vector_db_spark.sources.catalog import load_table
+from tests.test_api import dense_faiss_ids
 from tests.test_ingest_e2e import _make_shards
 
 
@@ -232,11 +233,16 @@ def test_large_index_serves_through_the_gemm_kernels(
     assert rows == sorted(tuple(r) for r in want.collect())
     # Each query is in the corpus, so its first probe finds at least itself.
     assert {r[0] for r in rows} == set(range(8))
-    fresh = emb.filter(F.col("vec_id") < 8).withColumn("vec_id", F.col("vec_id") + 10_000)
-    engine.add_batch(fresh)
-    # The build's assignment, then the append's.
-    assert len(assign_plans) == 2 and all("MapInArrow" in p for p in assign_plans)
+    # Two appends: the first seeds the next ids from the stored corpus, the
+    # second numbers on from the ones the first observed.
+    for shift in (10_000, 20_000):
+        fresh = emb.filter(F.col("vec_id") < 8).withColumn("vec_id", F.col("vec_id") + shift)
+        engine = engine.add_batch(fresh)
+    # The build's assignment, then each append's.
+    assert len(assign_plans) == 3 and all("MapInArrow" in p for p in assign_plans)
     assert probes == []
+    assert engine.corpus.count() == emb.count() + 16
+    assert dense_faiss_ids(engine.corpus) and dense_faiss_ids(engine.id_mapping)
 
 
 def test_append_against_unseen_centroids_runs_no_probe(

@@ -15,9 +15,8 @@ have never been exercised under real contention:
   its in-flight `ranked` table mid-collect. Each thread here calls
   release after its query exactly like tools/check_correctness.py does
   per query;
-- ``knn._DERIVED_CACHE`` / ``knn._CENTS_CACHE``: two threads may race
-  to build the same derived table / collapsed centroid row — last write
-  wins, both values equivalent;
+- ``knn._DERIVED_CACHE``: two threads may race to build the same
+  derived table — last write wins, both values equivalent;
 - Spark itself: concurrent job submission on one session is supported.
 
 The gate runs a diverse query set serially (ground truth), then twice
@@ -156,20 +155,20 @@ def test_index_writers_serialize(spark, sf_dir, tmp_path):
 
 
 def test_cross_process_write_invalidates_append_cache(spark, sf_dir, tmp_path):
-    """Cross-process cache freshness (r10 ADVICE medium): the write lock
-    serializes writers but the per-process _NEXT_IDS_CACHE survives
+    """Cross-process record freshness: the write lock serializes writers
+    but the per-process append record (indexing._AppendState) survives
     between ops — if ANOTHER process appends or deletes (renumbering
-    faiss_ids on disk) between this process's appends, the stale cached
-    next-id map would double-allocate faiss_ids despite the lock.
-    _single_writer now bumps an on-disk ``.write_gen`` token per write
-    and drops the process's cached append state when the on-disk token
-    differs from the cached one.
+    faiss_ids on disk) between this process's appends, stale next ids
+    would double-allocate faiss_ids despite the lock. _single_writer
+    bumps an on-disk ``.write_gen`` token per write and drops the
+    process's record when the on-disk token differs from the record's.
 
-    Two branches: (control) a poisoned next-id cache with NO foreign
-    write IS consulted — proving the cache is load-bearing and the
-    generation stamp is the only defense; (fix) the same poisoned cache
-    plus a foreign generation token is discarded and the append re-seeds
-    from the stored corpus, keeping faiss_ids dense."""
+    Two branches: (control) a poisoned record with NO foreign write IS
+    consulted — proving the record is load-bearing and the generation
+    stamp is the only defense; (fix) the same poisoned record plus a
+    foreign generation token is discarded and the append re-seeds from
+    the stored corpus, keeping faiss_ids dense."""
+    import dataclasses
     import os
     import shutil
 
@@ -196,25 +195,30 @@ def test_cross_process_write_invalidates_append_cache(spark, sf_dir, tmp_path):
             p: sorted(ids) == list(range(len(ids))) for p, ids in per_part.items()
         }
 
-    # --- control: poisoned cache, no foreign write -> cache consulted ---
+    def poison() -> None:
+        state = indexing._append_state(idx)
+        assert state is not None, "append must store its record"
+        indexing._set_append_state(
+            idx,
+            dataclasses.replace(
+                state, next_ids={p: n + 1000 for p, n in state.next_ids.items()}
+            ),
+        )
+
+    # --- control: poisoned record, no foreign write -> record consulted ---
     indexing.append_to_index(spark, idx, first, cent)
-    assert idx in indexing._NEXT_IDS_CACHE, "append must cache next-ids"
-    indexing._NEXT_IDS_CACHE[idx] = {
-        p: n + 1000 for p, n in indexing._NEXT_IDS_CACHE[idx].items()
-    }
+    poison()
     indexing.append_to_index(spark, idx, second, cent)
     assert not all(dense_per_partition().values()), (
-        "poisoned next-id cache was NOT consulted — the control no longer "
+        "poisoned next ids were NOT consulted — the control no longer "
         "demonstrates the hazard the generation stamp exists for"
     )
 
-    # --- fix: poisoned cache + foreign generation token -> re-seeded ---
+    # --- fix: poisoned record + foreign generation token -> re-seeded ---
     shutil.rmtree(idx)
     indexing.invalidate_append_state(idx)
     indexing.append_to_index(spark, idx, first, cent)
-    indexing._NEXT_IDS_CACHE[idx] = {
-        p: n + 1000 for p, n in indexing._NEXT_IDS_CACHE[idx].items()
-    }
+    poison()
     # Every write op bumps .write_gen under the lock via _single_writer,
     # so a foreign token on disk IS what a concurrent process's append or
     # delete leaves behind.
@@ -222,7 +226,7 @@ def test_cross_process_write_invalidates_append_cache(spark, sf_dir, tmp_path):
         f.write("foreign-process-write")
     indexing.append_to_index(spark, idx, second, cent)
     density = dense_per_partition()
-    assert all(density.values()), f"stale cache double-allocated ids: {density}"
+    assert all(density.values()), f"stale record double-allocated ids: {density}"
     got = {r["vec_id"] for r in spark.read.parquet(f"{idx}/corpus").collect()}
     want = {r["vec_id"] for r in first.collect()} | {
         r["vec_id"] for r in second.collect()

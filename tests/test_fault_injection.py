@@ -27,8 +27,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from bioclip_vector_db_spark.operators.indexing import (
-    _invalidate_next_ids,
     append_to_index,
+    invalidate_append_state,
 )
 from bioclip_vector_db_spark.operators.knn import fixture_centroids
 from bioclip_vector_db_spark.streaming.ingest import (
@@ -95,9 +95,9 @@ def test_ingest_kill_between_batches_resumes_exactly_once(spark, sf_dir, tmp_pat
         assert err is not None, "kill did not fire"
         assert len(seen) == 1
 
-        # Simulate a process restart: the in-process next-id cache must be
+        # Simulate a process restart: the in-process append record must be
         # re-seeded from disk, not carried over from before the crash.
-        _invalidate_next_ids(index_dir)
+        invalidate_append_state(index_dir)
         stream_ingest(spark, feed, index_dir, cent)
 
         clean_dir = str(tmp_path / "idx_clean")
@@ -129,7 +129,7 @@ def test_ingest_crash_mid_batch_replay_is_absorbed(spark, sf_dir, tmp_path):
         err = _run_ingest_with_foreach(spark, feed, index_dir, _append_then_crash)
         assert err is not None and state["crashed"]
 
-        _invalidate_next_ids(index_dir)
+        invalidate_append_state(index_dir)
         stream_ingest(spark, feed, index_dir, cent)
 
         clean_dir = str(tmp_path / "idx_clean")

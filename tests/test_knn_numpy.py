@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import time
 
+import numpy as np
 from pyspark.sql import functions as F
 
 from bioclip_vector_db_spark.operators import knn, knn_numpy
@@ -138,9 +139,13 @@ def test_assign_kernels_agree_with_tied_centroids(spark, sf_dir, monkeypatch):
     flat numpy kernel must resolve every all-duplicate argmin tie exactly
     like the expr fold — to the smallest pid (expr: lexicographic (d, pid)
     fold; numpy: first-occurrence argmin over pid-ascending blocks with
-    strict-improvement updates)."""
-    monkeypatch.setattr(knn_numpy, "_TILE_ELEMS", 2048)
-    emb = load_table(spark, sf_dir, "embeddings").limit(64)
+    strict-improvement updates).
+
+    The executor's kernel reads its own module's _TILE_ELEMS, so at 64
+    rows it scores all centroids in one block. The cross-block rule is
+    driven on the driver instead, with a tile that splits the centroids
+    into many blocks."""
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 64)
     tied = _tied_centroids(spark)
     want = {
         r.vec_id: r.partition_id
@@ -157,6 +162,14 @@ def test_assign_kernels_agree_with_tied_centroids(spark, sf_dir, monkeypatch):
     assert got == want and len(got) == 64
     # Ties must land on the first duplicate block: every winner < n_distinct.
     assert all(pid < 8 for pid in got.values())
+
+    pids, cmat = knn_numpy._collect_centroids(tied, "partition_id", "centroid")
+    rows = emb.select("vec_id", "embedding").collect()
+    vecs = np.array([r.embedding for r in rows], dtype=np.float64)
+    monkeypatch.setattr(knn_numpy, "_TILE_ELEMS", 2048)  # 32 centroids a block
+    assert len(pids) > 2048 // len(rows)
+    best, _ = knn_numpy._best_centroid_core(vecs, pids, cmat, False)
+    assert dict(zip((r.vec_id for r in rows), best.tolist())) == want
 
 
 def test_pq_encode_kernels_agree_with_tied_codebooks(spark, sf_dir):

@@ -381,25 +381,22 @@ def test_logic_token_keeps_str_globals_containing_0x():
 
 def test_append_state_caches_do_not_thrash_gate_token():
     """append_to_index keeps per-index driver state (corpus schema,
-    next-faiss_id map) behind accessor functions: if the append body
-    named the mutable cache dicts directly, logic_token would fold their
-    contents (tempdir paths) and re-key the durable ingest gate on every
-    run — turning every restart into a cold rebuild."""
+    next-faiss_id map, centroid count, write generation) in one record
+    reached through accessor functions: if the append body or the
+    _single_writer wrapper named the record dict directly, logic_token
+    would fold its contents (tempdir paths, per-write generation tokens)
+    and re-key the durable ingest gate on every write — turning every
+    restart into a cold rebuild."""
+    from pyspark.sql import types as T
+
     from bioclip_vector_db_spark.operators import indexing as ix
 
     t1 = logic_token(ix.append_to_index)
-    ix._store_append_state("/tmp/fake_dir_a", object(), {0: 7}, [0, 1])
-    # r11: the _single_writer wrapper's generation cache is the same
-    # hazard one frame up — per-write uuid tokens folding into the gate
-    # token would re-key the durable gate on EVERY write (caught by the
-    # round-11 review; the wrapper must reach _GEN_CACHE only through
-    # _cached_gen/_store_cached_gen).
-    ix._store_cached_gen("/tmp/fake_dir_a", "deadbeef-token")
+    ix._set_append_state(
+        "/tmp/fake_dir_a", ix._AppendState("deadbeef-token", T.StructType(), {0: 7}, 2)
+    )
     try:
         t2 = logic_token(ix.append_to_index)
     finally:
-        ix._CORPUS_SCHEMA_CACHE.pop("/tmp/fake_dir_a", None)
-        ix._NEXT_IDS_CACHE.pop("/tmp/fake_dir_a", None)
-        ix._PIDS_CACHE.pop("/tmp/fake_dir_a", None)
-        ix._GEN_CACHE.pop("/tmp/fake_dir_a", None)
+        ix.invalidate_append_state("/tmp/fake_dir_a")
     assert t1 == t2
