@@ -23,9 +23,18 @@ to its ``nprobe`` partitions on the driver against that matrix, and only
 then touches partition data — one statically pruned scan of the probed
 partitions, at most 2 Spark jobs per request. ``search`` rejects a query
 whose length differs from the index dimension, a non-finite component,
-and ``top_n < 1`` or ``nprobe < 1`` with ``ValueError``. ``search_batch``
-stays a distributed plan: its query table is unbounded, so its routing
-must scale with it rather than run on the driver.
+and ``top_n < 1`` or ``nprobe < 1`` with ``ValueError``.
+
+``search_batch`` answers a query table the same way, like the reference
+leader's batched search: it collects ``(query_id, qv)`` once, routes every
+row on the driver in one vectorized pass, and hands the routed rows to
+one statically pruned corpus scan as a JVM local relation. Its bound is
+the query table on the driver. ``knn.ivf_search`` already brings nprobe
+copies of it there, vectors included, to broadcast its routed rows, so
+this collects 1/nprobe of what the distributed plan did. Both verbs route
+with one function per rule: the exact expression-kernel fold up to
+LARGE_NLIST_THRESHOLD centroids, the blocked-GEMM rule above it — the
+kernel ``knn.route_queries`` picks from the same count.
 """
 
 from __future__ import annotations
@@ -34,12 +43,24 @@ import copy
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .functions.vector import PARITY_SCALE, cosine_distance, lit_array
-from .operators.knn import ivf_search
-from .operators.knn_numpy import _collect_centroids
+from .functions.vector import PARITY_SCALE, cosine_distance_sql, sql_array
+from .operators import knn_numpy
+# The distributed form stays a name of this module: perfbench's tracer
+# wraps api.ivf_search as a layer span.
+from .operators.knn import ivf_search  # noqa: F401
+from .operators.knn import search_routed
+from .operators.knn_numpy import (
+    _TILE_ELEMS,
+    LARGE_NLIST_THRESHOLD,
+    _collect_centroids,
+    _list_matrix,
+)
 
 #: The reference's request/limit defaults (neighborhood_server.py:312,
 #: :417-421; nearest_neighbor_client.py:13).
@@ -59,19 +80,71 @@ def _spark_round(x: float) -> float:
     return float(Decimal(repr(x)).quantize(_PARITY_QUANTUM, rounding=ROUND_HALF_UP))
 
 
-def _probe_partitions(
-    pids: np.ndarray, cmat: np.ndarray, q: np.ndarray, nprobe: int
-) -> list[int]:
-    """The ``nprobe`` partitions ``knn.route_queries`` (expression kernel)
-    picks for ``q``, computed on the driver: distance ``1 - dot`` with the
-    dot a left fold from 0.0 in dim order (the ``aggregate(zip_with(...))``
-    order; ``cmat @ q`` sums in BLAS order and can differ in the last ulp),
-    rounded like Spark, ties to the smaller partition id."""
-    acc = np.zeros(len(pids))
-    for j, qj in enumerate(q):
-        acc += cmat[:, j] * qj
-    ranked = sorted(zip(map(_spark_round, (1.0 - acc).tolist()), pids.tolist()))
-    return [pid for _, pid in ranked[:nprobe]]
+def _route_exact(pids: np.ndarray, cmat: np.ndarray, qmat: np.ndarray, take: int) -> np.ndarray:
+    """The expression kernel's routing rule (``knn.route_queries`` up to
+    LARGE_NLIST_THRESHOLD centroids) for every row of ``qmat``: distance
+    ``1 - dot`` with the dot a left fold from 0.0 in dim order (the
+    ``aggregate(zip_with(...))`` order; ``qmat @ cmat.T`` sums in BLAS
+    order and can differ in the last ulp), rounded like Spark, ties to
+    the smaller partition id (``pids`` ascend)."""
+    acc = np.zeros((len(qmat), len(pids)))
+    for j in range(cmat.shape[1]):
+        acc += qmat[:, j : j + 1] * cmat[:, j]
+    dist = np.array([_spark_round(v) for v in (1.0 - acc).ravel().tolist()]).reshape(acc.shape)
+    return pids[np.argsort(dist, axis=1, kind="stable")[:, :take]]
+
+
+def _route(pids: np.ndarray, cmat: np.ndarray, qmat: np.ndarray, nprobe: int) -> np.ndarray:
+    """The (b, min(nprobe, nlist)) int32 partition ids each row of
+    ``qmat`` probes, nearest first, by the rule ``knn.route_queries``
+    picks for this centroid count. Rows go in blocks of at most
+    _TILE_ELEMS distances."""
+    take = min(nprobe, len(pids))
+    gemm = len(pids) > LARGE_NLIST_THRESHOLD
+    out = np.empty((len(qmat), take), dtype=np.int32)
+    step = max(1, _TILE_ELEMS // max(len(pids), 1))
+    for s in range(0, len(qmat), step):
+        block = qmat[s : s + step]
+        out[s : s + step] = (
+            knn_numpy._route_topn_core(block, pids, cmat, nprobe)
+            if gemm
+            else _route_exact(pids, cmat, block, take)
+        )
+    return out
+
+
+def _check_limits(top_n: int, nprobe: int) -> None:
+    if top_n < 1 or nprobe < 1:
+        raise ValueError(f"top_n and nprobe must be >= 1, got {top_n} and {nprobe}")
+
+
+def _query_matrix(qids: pa.Array, qv: pa.Array, dim: int) -> np.ndarray:
+    """The (b, dim) float64 matrix of a ``qv`` column. Raises ValueError
+    naming the first query whose vector is null, is not ``dim`` long, or
+    has a null or non-finite component: the expression kernel would give
+    that row a null or non-finite distance."""
+    lens = pc.list_value_length(qv).to_numpy(zero_copy_only=False)
+    bad = np.flatnonzero(~(lens == dim))
+    if bad.size:
+        i = int(bad[0])
+        if not qv[i].is_valid:
+            raise ValueError(f"query_id {qids[i].as_py()}: qv is null")
+        raise ValueError(
+            f"query_id {qids[i].as_py()}: qv has length {int(lens[i])}, "
+            f"the index dimension is {dim}"
+        )
+    if not len(qv):
+        return np.empty((0, dim))
+    qmat = _list_matrix(qv)
+    bad = np.flatnonzero(~np.isfinite(qmat).all(axis=1))
+    if bad.size:
+        raise ValueError(f"query_id {qids[int(bad[0])].as_py()}: qv has a non-finite component")
+    return qmat
+
+
+def _in_list(pids) -> str:
+    """A static partition filter over ``pids``; never renders ``IN ()``."""
+    return f"partition_id IN ({', '.join(map(str, pids))})" if len(pids) else "false"
 
 
 class VectorSearchEngine:
@@ -115,12 +188,13 @@ class VectorSearchEngine:
         merged ascending by distance (O22-O28).
 
         Routing runs on the driver against the centroid matrix loaded at
-        open, by the exact rule of ``knn.route_queries`` (expression
-        kernel). The plan is one scan statically pruned to the probed
+        open, by the rule ``knn.route_queries`` picks for that centroid
+        count. The plan is one scan statically pruned to the probed
         partitions: per-partition ``row_number() <= top_n`` over
         (distance, neighbor_id), the first GLOBAL_MAX_NEIGHBORS by
         (distance, neighbor_id), returned ordered by (distance, id) — the
-        rows ``ivf_search`` gives, in at most 2 Spark jobs.
+        rows ``ivf_search`` gives, in at most 2 Spark jobs. Its steps are
+        SQL strings, one py4j call each.
 
         Raises ``ValueError`` when the query length differs from the index
         dimension, a component is not finite, or ``top_n``/``nprobe`` < 1.
@@ -131,38 +205,67 @@ class VectorSearchEngine:
             raise ValueError(f"query has shape {q.shape}, the index dimension is {dim}")
         if not np.isfinite(q).all():
             raise ValueError("query has a non-finite component")
-        if top_n < 1 or nprobe < 1:
-            raise ValueError(f"top_n and nprobe must be >= 1, got {top_n} and {nprobe}")
-        probes = _probe_partitions(self._centroid_ids, self._centroid_matrix, q, nprobe)
-        scored = self.corpus.filter(F.col("partition_id").isin(probes)).select(
-            "partition_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_distance(lit_array(q.tolist()), F.col("embedding")).alias("distance"),
-        )
-        by_distance = (F.col("distance").asc(), F.col("neighbor_id").asc())
-        w = Window.partitionBy("partition_id").orderBy(*by_distance)
+        _check_limits(top_n, nprobe)
+        probes = _route(self._centroid_ids, self._centroid_matrix, q[None, :], nprobe)[0]
+        distance = cosine_distance_sql(sql_array(q.tolist()), "embedding")
         hits = (
-            scored.withColumn("local_rank", F.row_number().over(w))
-            .filter(F.col("local_rank") <= top_n)
-            .orderBy(*by_distance)
+            self.corpus.where(_in_list(probes.tolist()))
+            .selectExpr("partition_id", "vec_id AS neighbor_id", f"{distance} AS distance")
+            .selectExpr(
+                "*",
+                "row_number() OVER (PARTITION BY partition_id ORDER BY distance, neighbor_id)"
+                " AS local_rank",
+            )
+            .where(f"local_rank <= {int(top_n)}")
+            .orderBy("distance", "neighbor_id")
             .limit(GLOBAL_MAX_NEIGHBORS)
         )
         # O25 id remap: hits carry vec_id, whose original_id is its string
         # form by construction (build_id_mapping) — the join degenerates to
         # a cast here; against an external id space it would be
         # hits.join(id_mapping, ["partition_id", "faiss_id"]).
-        return hits.select(
-            F.col("neighbor_id").cast("string").alias("id"), "distance"
-        ).orderBy(F.col("distance").asc(), F.col("id").asc())
+        return hits.selectExpr("CAST(neighbor_id AS STRING) AS id", "distance").orderBy(
+            "distance", "id"
+        )
 
     def search_batch(self, queries: DataFrame, top_n: int = DEFAULT_TOP_N, nprobe: int = DEFAULT_NPROBE) -> DataFrame:
-        """X3: the same search lifted to a query table. Routing stays a
-        distributed plan (``knn.ivf_search``): the query table has no size
-        bound, so it is never collected to the driver. The centroid count
-        held since open picks the routing kernel."""
-        return ivf_search(
-            queries, self.corpus, self.centroids, nprobe=nprobe, top_n=top_n,
-            global_limit=GLOBAL_MAX_NEIGHBORS, nlist=len(self._centroid_ids),
+        """X3: the same search lifted to a query table ``(query_id, qv)``.
+        Returns ``(query_id, neighbor_id, partition_id, distance, rank)``:
+        the rows, types and row order of ``knn.ivf_search`` with
+        ``global_limit=GLOBAL_MAX_NEIGHBORS``.
+
+        The query table is collected once (bounded by the driver: the
+        distributed plan already collected nprobe times as much to
+        broadcast its routed rows) and routed on the driver like
+        ``search``. The routed rows reach the corpus scan as a broadcast
+        JVM local relation, the scan is statically pruned to the union of
+        the probed partitions, and ``knn.search_routed`` ranks them, the
+        tail ``ivf_search`` runs after its own routing. An empty query
+        table gives an empty frame of the same schema.
+
+        Raises ``ValueError`` naming the first query whose ``qv`` is
+        null, differs in length from the index dimension, or has a
+        non-finite component, and when ``top_n``/``nprobe`` < 1.
+        """
+        _check_limits(top_n, nprobe)
+        asked = queries.select("query_id", "qv")
+        table = asked.toArrow()
+        qids, qv = (table.column(i).combine_chunks() for i in range(2))
+        qmat = _query_matrix(qids, qv, self._centroid_matrix.shape[-1])
+        probes = _route(self._centroid_ids, self._centroid_matrix, qmat, nprobe)
+        rep = pa.array(np.repeat(np.arange(len(qmat)), probes.shape[1]))
+        routed = self.spark.createDataFrame(
+            pa.table(
+                [qids.take(rep), qv.take(rep), pa.array(probes.ravel(), pa.int32())],
+                names=["query_id", "qv", "partition_id"],
+            ),
+            T.StructType(
+                [*asked.schema.fields, T.StructField("partition_id", T.IntegerType(), False)]
+            ),
+        )
+        return search_routed(
+            self.corpus.where(_in_list(np.unique(probes).tolist())), routed,
+            top_n=top_n, global_limit=GLOBAL_MAX_NEIGHBORS,
         )
 
     def search_radius(self, queries: DataFrame, radius: float) -> DataFrame:

@@ -22,18 +22,10 @@ from pyspark.sql import functions as F
 PARITY_SCALE = 9
 
 
-def lit_array(values) -> Column:
-    """Array-literal Column in ONE driver round trip.
-
-    ``F.array(*[F.lit(v) for v in values])`` costs one py4j call per
-    element — ~1.4 ms each, so a 64-element plane costs ~90 ms of pure
-    driver-side Column construction and operators that build dozens of
-    planes per invocation (rp_project, simhash_signature, band keys)
-    spent SECONDS per query call in py4j before any Spark job ran
-    (measured: knn_rp_rescore 2.6 s construction). Parsing one
-    ``array(...)`` SQL string builds the identical expression tree —
-    same schema including containsNull=false, byte-identical optimized
-    plan (gated in tests/test_lit_array.py) — in a single call.
+def sql_array(values) -> str:
+    """The ``array(...)`` SQL literal of ``values``: the one renderer
+    behind ``lit_array`` and the plans that embed a vector in a SQL
+    string.
 
     Supports the literal element types used here: float (emitted as
     repr + 'D' so the parser yields DOUBLE exactly), bool, int, and str
@@ -64,7 +56,24 @@ def lit_array(values) -> Column:
             "lit_array: empty input (array() would carry ARRAY<NULL>/"
             "ARRAY<STRING> depending on version, not the per-element type)"
         )
-    return F.expr("array(" + ",".join(parts) + ")")
+    return "array(" + ",".join(parts) + ")"
+
+
+def lit_array(values) -> Column:
+    """Array-literal Column in ONE driver round trip.
+
+    ``F.array(*[F.lit(v) for v in values])`` costs one py4j call per
+    element — ~1.4 ms each, so a 64-element plane costs ~90 ms of pure
+    driver-side Column construction and operators that build dozens of
+    planes per invocation (rp_project, simhash_signature, band keys)
+    spent SECONDS per query call in py4j before any Spark job ran
+    (measured: knn_rp_rescore 2.6 s construction). Parsing one
+    ``array(...)`` SQL string (``sql_array``) builds the identical
+    expression tree — same schema including containsNull=false,
+    byte-identical optimized plan (gated in tests/test_lit_array.py) — in
+    a single call.
+    """
+    return F.expr(sql_array(values))
 
 
 def dot_product(
@@ -138,6 +147,18 @@ def cosine_distance(a: Column, b: Column, *, rounded: bool = True) -> Column:
     """
     d = F.lit(1.0) - dot_product(a, b)
     return F.round(d, PARITY_SCALE) if rounded else d
+
+
+def cosine_distance_sql(a: str, b: str) -> str:
+    """``cosine_distance(a, b)`` as a SQL string over two SQL array
+    expressions: the same expression tree (lambda variables named like
+    the Column form's), parsed in one call instead of built from a dozen
+    py4j Column calls."""
+    return (
+        f"round(1.0D - aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), "
+        f"CAST({b} AS ARRAY<DOUBLE>), (x, y) -> x * y), 0.0D, (x, y) -> x + y), "
+        f"{PARITY_SCALE})"
+    )
 
 
 def l2_norm(v: Column) -> Column:

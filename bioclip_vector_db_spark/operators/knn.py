@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_distance, dot_product, l2_normalize
+from ..functions.vector import cosine_distance, cosine_distance_sql, dot_product, l2_normalize
 from ..plans.registry import register
 from ..sources.catalog import load_table
 
@@ -183,7 +183,6 @@ def ivf_search(
     top_n: int = 10,
     global_limit: int = 100,
     loaded_partitions: str | None = None,
-    nlist: int | None = None,
 ) -> DataFrame:
     """Two-tier scatter-gather search: O22 routing -> O23 pruning -> O24
     per-partition top-n -> O27/O28 merge with a global per-query limit.
@@ -198,39 +197,44 @@ def ivf_search(
     ``self._indexes``, silently skipping the rest
     (neighborhood_server.py:208-225). That intersection is a broadcast
     semi-join of the routed probes against the expanded spec.
-
-    ``nlist``: the centroid count, forwarded to ``route_queries``.
     """
-    routed = route_queries(queries, centroids, nprobe, nlist=nlist)
+    routed = route_queries(queries, centroids, nprobe)
     if loaded_partitions is not None:
         from .relational import expand_partition_spec_df
 
         loaded = expand_partition_spec_df(queries.sparkSession, loaded_partitions)
         routed = routed.join(F.broadcast(loaded), "partition_id", "semi")
+    return search_routed(corpus_assigned, routed, top_n=top_n, global_limit=global_limit)
+
+
+def search_routed(
+    corpus_assigned: DataFrame, routed: DataFrame, *, top_n: int, global_limit: int
+) -> DataFrame:
+    """O23-O28 over routed probes ``(query_id, qv, partition_id)``: the
+    per-partition top-``top_n`` and the merge to ``global_limit`` per
+    query. Returns ``(query_id, neighbor_id, partition_id, distance,
+    rank)``, ``rank`` a BIGINT from 1 by (distance, neighbor_id).
+
+    Each step is one SQL string, one py4j call.
+    """
     # O23: equi-join on partition_id == partition pruning against a
     # partitionBy(partition_id) layout; only probed partitions are scanned.
-    candidates = corpus_assigned.join(
-        F.broadcast(routed.select("query_id", "qv", "partition_id")), "partition_id"
-    )
-    scored = candidates.select(
-        "query_id",
-        "partition_id",
-        F.col("vec_id").alias("neighbor_id"),
-        cosine_distance(F.col("qv"), F.col("embedding")).alias("distance"),
-    )
-    w_local = Window.partitionBy("query_id", "partition_id").orderBy(
-        F.col("distance").asc(), F.col("neighbor_id").asc()
-    )
-    local_topn = scored.withColumn("local_rank", F.row_number().over(w_local)).filter(
-        F.col("local_rank") <= top_n
-    )
-    w_global = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(), F.col("neighbor_id").asc()
-    )
+    distance = cosine_distance_sql("qv", "embedding")
+    by_distance = "ORDER BY distance, neighbor_id"
     return (
-        local_topn.withColumn("rank", F.row_number().over(w_global).cast("bigint"))
-        .filter(F.col("rank") <= global_limit)
-        .select("query_id", "neighbor_id", "partition_id", "distance", "rank")
+        corpus_assigned.join(
+            F.broadcast(routed.select("query_id", "qv", "partition_id")), "partition_id"
+        )
+        .selectExpr("query_id", "partition_id", "vec_id AS neighbor_id", f"{distance} AS distance")
+        .selectExpr(
+            "*", f"row_number() OVER (PARTITION BY query_id, partition_id {by_distance}) AS local_rank"
+        )
+        .where(f"local_rank <= {int(top_n)}")
+        .selectExpr(
+            "query_id", "neighbor_id", "partition_id", "distance",
+            f"CAST(row_number() OVER (PARTITION BY query_id {by_distance}) AS BIGINT) AS rank",
+        )
+        .where(f"rank <= {int(global_limit)}")
     )
 
 

@@ -462,6 +462,42 @@ def _routed_best_centroid(vectors: DataFrame, collected: tuple) -> DataFrame:
     )
 
 
+def _route_topn_core(
+    qmat: "np.ndarray", bpids: "np.ndarray", bC: "np.ndarray", nprobe: int
+) -> "np.ndarray":
+    """The GEMM routing rule: per query row, the top-``nprobe`` centroids
+    of the pid-sorted ``(bpids, bC)`` by round-9 ``1 - q . c`` (BLAS
+    order), ties to the smaller pid. Returns the (b, min(nprobe, k)) int32
+    pid matrix in exact (d, pid) lexicographic order per row."""
+    b = qmat.shape[0]
+    k = len(bpids)
+    take = min(nprobe, k)
+    cblock = max(take, min(k, _TILE_ELEMS // max(b, 1)))
+    cand_d: list[np.ndarray] = []
+    cand_p: list[np.ndarray] = []
+    for s in range(0, k, cblock):
+        dblk = 1.0 - qmat @ bC[s : s + cblock].T  # b x cblock
+        np.round(dblk, 9, out=dblk)
+        t = min(take, dblk.shape[1])
+        # Stable per-block (distance, pid) truncation: column index
+        # ascends with pid (bpids is pid-sorted, the block slice is
+        # contiguous) and a stable argsort keeps ascending-column
+        # order among equal distances — so a boundary tie can never
+        # evict a smaller-pid centroid before the global (d, pid)
+        # lexsort below sees it. argpartition picked an arbitrary
+        # member among >t boundary ties, diverging from the expr
+        # kernel exactly at the reference's nlist=31,622 design
+        # point (neighborhood_server.py:181-185 routing order).
+        idx = np.argsort(dblk, axis=1, kind="stable")[:, :t]  # b x t
+        cand_d.append(np.take_along_axis(dblk, idx, axis=1))
+        cand_p.append(bpids[s + idx])
+    dall = np.concatenate(cand_d, axis=1)  # b x (t*blocks)
+    pall = np.concatenate(cand_p, axis=1)
+    # Exact (d, pid) lexicographic order over the candidate pool.
+    order = np.lexsort((pall, dall), axis=1)[:, :take]
+    return np.take_along_axis(pall, order, axis=1).astype(np.int32)
+
+
 def route_queries_numpy(
     queries: DataFrame,
     centroids: DataFrame,
@@ -494,37 +530,6 @@ def route_queries_numpy(
         ]
     )
 
-    def _route_topn_core(qmat: "np.ndarray", bpids: "np.ndarray", bC: "np.ndarray"):
-        """Numeric core. Returns the (b, take) int32 pid matrix in exact
-        (d, pid) lexicographic order per row."""
-        b = qmat.shape[0]
-        k = len(bpids)
-        take = min(nprobe, k)
-        cblock = max(take, min(k, _TILE_ELEMS // max(b, 1)))
-        cand_d: list[np.ndarray] = []
-        cand_p: list[np.ndarray] = []
-        for s in range(0, k, cblock):
-            dblk = 1.0 - qmat @ bC[s : s + cblock].T  # b x cblock
-            np.round(dblk, 9, out=dblk)
-            t = min(take, dblk.shape[1])
-            # Stable per-block (distance, pid) truncation: column index
-            # ascends with pid (bpids is pid-sorted, the block slice is
-            # contiguous) and a stable argsort keeps ascending-column
-            # order among equal distances — so a boundary tie can never
-            # evict a smaller-pid centroid before the global (d, pid)
-            # lexsort below sees it. argpartition picked an arbitrary
-            # member among >t boundary ties, diverging from the expr
-            # kernel exactly at the reference's nlist=31,622 design
-            # point (neighborhood_server.py:181-185 routing order).
-            idx = np.argsort(dblk, axis=1, kind="stable")[:, :t]  # b x t
-            cand_d.append(np.take_along_axis(dblk, idx, axis=1))
-            cand_p.append(bpids[s + idx])
-        dall = np.concatenate(cand_d, axis=1)  # b x (t*blocks)
-        pall = np.concatenate(cand_p, axis=1)
-        # Exact (d, pid) lexicographic order over the candidate pool.
-        order = np.lexsort((pall, dall), axis=1)[:, :take]
-        return np.take_along_axis(pall, order, axis=1).astype(np.int32)
-
     out_arrow = to_arrow_schema(out_schema)
 
     def route_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -535,7 +540,7 @@ def route_queries_numpy(
             if not b:
                 continue
             qmat = _list_matrix(rb.column(1))
-            sel = _route_topn_core(qmat, bpids, bC)
+            sel = _route_topn_core(qmat, bpids, bC, nprobe)
             # The query id/vector columns replicate via Arrow take on a
             # repeated row index — no per-row Python list of vectors.
             rep = pa.array(np.repeat(np.arange(b, dtype=np.int64), take))

@@ -257,14 +257,17 @@ def planted(spark, tmp_path_factory):
     return VectorSearchEngine(spark, out), queries
 
 
+def _query_frame(spark, queries, qv_type="double"):
+    return spark.createDataFrame(
+        [(i, q.tolist()) for i, q in enumerate(queries)], f"query_id long, qv array<{qv_type}>"
+    )
+
+
 def _ivf_rows(spark, engine, queries, top_n, nprobe, global_limit=GLOBAL_MAX_NEIGHBORS):
     """Per query, the (id, distance) rows of the distributed ivf_search
     (expression routing), ordered like VectorSearchEngine.search."""
-    qdf = spark.createDataFrame(
-        [(i, q.tolist()) for i, q in enumerate(queries)], "query_id long, qv array<double>"
-    )
     hits = ivf_search(
-        qdf, engine.corpus, engine.centroids, nprobe=nprobe, top_n=top_n,
+        _query_frame(spark, queries), engine.corpus, engine.centroids, nprobe=nprobe, top_n=top_n,
         global_limit=global_limit,
     ).collect()
     out = {i: [] for i in range(len(queries))}
@@ -283,6 +286,112 @@ def test_search_equals_ivf_search(spark, planted, nprobe, top_n):
     for i, q in enumerate(queries):
         got = [(r.id, r.distance) for r in engine.search(q.tolist(), top_n, nprobe).collect()]
         assert got == want[i], f"query {i}, top_n={top_n}, nprobe={nprobe}"
+
+
+@pytest.mark.parametrize("nprobe", [1, 3, _NLIST, _NLIST + 2])
+@pytest.mark.parametrize("top_n", [1, 5])
+def test_search_batch_equals_ivf_search(spark, planted, nprobe, top_n):
+    """Driver routing of a query table + one pruned scan == expression
+    ivf_search: the same schema, and the same rows in the same order."""
+    engine, queries = planted
+    qdf = _query_frame(spark, queries)
+    want = ivf_search(
+        qdf, engine.corpus, engine.centroids, nprobe=nprobe, top_n=top_n,
+        global_limit=GLOBAL_MAX_NEIGHBORS,
+    )
+    got = engine.search_batch(qdf, top_n=top_n, nprobe=nprobe)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_search_batch_equals_ivf_search_on_float_vectors(spark, planted):
+    """A float query vector routes and scores as its exact double widening."""
+    engine, queries = planted
+    qdf = _query_frame(spark, queries, "float")
+    want = ivf_search(
+        qdf, engine.corpus, engine.centroids, nprobe=3, top_n=5,
+        global_limit=GLOBAL_MAX_NEIGHBORS,
+    )
+    got = engine.search_batch(qdf, top_n=5, nprobe=3)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_search_batch_empty_query_table(spark, planted):
+    engine, queries = planted
+    qdf = _query_frame(spark, queries).limit(0)
+    got = engine.search_batch(qdf, top_n=5, nprobe=3)
+    assert got.schema == ivf_search(qdf, engine.corpus, engine.centroids).schema
+    assert got.collect() == []
+
+
+@pytest.mark.parametrize(
+    "bad, match",
+    [
+        (None, "null"),
+        ([0.1] * (_DIM - 1), "dimension"),
+        ([0.1] * (_DIM + 1), "dimension"),
+        ([0.1, float("nan")] + [0.1] * (_DIM - 2), "non-finite"),
+        ([float("-inf")] + [0.1] * (_DIM - 1), "non-finite"),
+        ([0.1, None] + [0.1] * (_DIM - 2), "non-finite"),
+    ],
+)
+def test_search_batch_rejects_malformed_rows(spark, planted, bad, match):
+    """A row the expression kernel would give a null or non-finite
+    distance raises, naming its query_id."""
+    engine, queries = planted
+    rows = [(i, q.tolist()) for i, q in enumerate(queries)] + [(77, bad)]
+    qdf = spark.createDataFrame(rows, "query_id long, qv array<double>")
+    with pytest.raises(ValueError, match=f"query_id 77: .*{match}"):
+        engine.search_batch(qdf)
+
+
+def test_search_batch_rejects_limits_below_one(spark, planted):
+    engine, queries = planted
+    qdf = _query_frame(spark, queries)
+    with pytest.raises(ValueError, match="top_n"):
+        engine.search_batch(qdf, top_n=0)
+    with pytest.raises(ValueError, match="nprobe"):
+        engine.search_batch(qdf, nprobe=0)
+
+
+def test_search_plan_matches_the_column_form(spark, planted):
+    """``search``'s SQL-string steps build the executed plan the Column
+    form builds, up to expression ids, plan ids and the process-wide
+    counter pyspark suffixes to lambda variable names."""
+    import re
+
+    from pyspark.sql import Window
+
+    from bioclip_vector_db_spark.api import _route
+    from bioclip_vector_db_spark.functions.vector import cosine_distance, lit_array
+
+    engine, queries = planted
+    q = queries[0]
+    probes = _route(engine._centroid_ids, engine._centroid_matrix, q[None, :], 3)[0].tolist()
+    by = (F.col("distance").asc(), F.col("neighbor_id").asc())
+    column_form = (
+        engine.corpus.filter(F.col("partition_id").isin(probes))
+        .select(
+            "partition_id", F.col("vec_id").alias("neighbor_id"),
+            cosine_distance(lit_array(q.tolist()), F.col("embedding")).alias("distance"),
+        )
+        .withColumn("local_rank", F.row_number().over(Window.partitionBy("partition_id").orderBy(*by)))
+        .filter(F.col("local_rank") <= 5)
+        .orderBy(*by)
+        .limit(GLOBAL_MAX_NEIGHBORS)
+        .select(F.col("neighbor_id").cast("string").alias("id"), "distance")
+        .orderBy(F.col("distance").asc(), F.col("id").asc())
+    )
+    got = engine.search(q.tolist(), top_n=5, nprobe=3)
+
+    def plan(df):
+        text = df._jdf.queryExecution().executedPlan().toString()
+        text = re.sub(r"\b([xy])_\d+#", r"\1#", re.sub(r"#\d+L?", "#", text))
+        return re.sub(r"plan_id=\d+", "plan_id=", text)
+
+    assert plan(got) == plan(column_form)
+    assert got.collect() == column_form.collect()
 
 
 def test_planted_ties_are_exercised(spark, planted):
@@ -337,6 +446,29 @@ def test_search_runs_in_two_jobs(spark, sf_dir, tmp_path):
     assert got == VectorSearchEngine(spark, d).search(q450, top_n=5, nprobe=3).collect()
     assert got[0].id == "450"
     assert _jobs_of(spark, "api-grown-search", lambda: grown.search(q450, top_n=5, nprobe=3).collect()) <= 2
+
+
+def test_search_batch_runs_in_five_jobs_without_reading_centroids(spark, sf_dir, tmp_path):
+    """A warm batch request routes against the matrix held since open: at
+    most 5 Spark jobs, and it answers with the centroid files gone."""
+    import shutil
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    d = str(tmp_path / "index")
+    build_index(emb, d, centroids=fixture_centroids(spark, sf_dir))
+    engine = VectorSearchEngine(spark, d)
+    queries = emb.filter(F.col("vec_id") < 32).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    want = engine.search_batch(queries, top_n=5, nprobe=3).collect()
+    shutil.rmtree(f"{d}/centroids")
+    got = []
+    n_jobs = _jobs_of(
+        spark, "api-search-batch",
+        lambda: got.extend(engine.search_batch(queries, top_n=5, nprobe=3).collect()),
+    )
+    assert n_jobs <= 5
+    assert got == want and {r.query_id for r in got} == set(range(32))
 
 
 def test_grown_engine_rereads_without_a_job(spark, sf_dir, tmp_path):

@@ -27,7 +27,7 @@ from pyspark.sql.functions import pandas_udf
 
 from bioclip_vector_db_spark import pipeline
 from bioclip_vector_db_spark.api import GLOBAL_MAX_NEIGHBORS, VectorSearchEngine
-from bioclip_vector_db_spark.operators import embedding, indexing, knn
+from bioclip_vector_db_spark.operators import embedding, indexing, knn, knn_numpy
 from bioclip_vector_db_spark.operators.indexing import append_to_index, build_index
 from bioclip_vector_db_spark.operators.knn_numpy import LARGE_NLIST_THRESHOLD
 from bioclip_vector_db_spark.sources.catalog import load_table
@@ -213,7 +213,7 @@ def assign_plans(monkeypatch):
 
 
 def test_large_index_serves_through_the_gemm_kernels(
-    spark, sf_dir, tmp_path, probes, assign_plans
+    spark, sf_dir, tmp_path, probes, assign_plans, monkeypatch
 ):
     emb = load_table(spark, sf_dir, "embeddings")
     out = str(tmp_path / "index")
@@ -222,8 +222,17 @@ def test_large_index_serves_through_the_gemm_kernels(
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
+    routed_at = []
+    real_core = knn_numpy._route_topn_core
+
+    def core_spy(qmat, pids, cmat, nprobe):
+        routed_at.append(len(pids))
+        return real_core(qmat, pids, cmat, nprobe)
+
+    monkeypatch.setattr(knn_numpy, "_route_topn_core", core_spy)
     got = engine.search_batch(queries, top_n=5, nprobe=3)
-    assert "MapInArrow" in _plan(got)
+    # search_batch routes on the driver by the GEMM rule at this count.
+    assert routed_at == [_BIG_NLIST]
     want = knn.ivf_search(
         queries, engine.corpus, engine.centroids, nprobe=3, top_n=5,
         global_limit=GLOBAL_MAX_NEIGHBORS,
@@ -233,6 +242,14 @@ def test_large_index_serves_through_the_gemm_kernels(
     assert rows == sorted(tuple(r) for r in want.collect())
     # Each query is in the corpus, so its first probe finds at least itself.
     assert {r[0] for r in rows} == set(range(8))
+    # search routes through the same GEMM core, one query row at a time,
+    # and answers with the batch's rows for that query.
+    qvs = {r.query_id: r.qv for r in queries.collect()}
+    for qid in (0, 5):
+        hits = [tuple(r) for r in engine.search(qvs[qid], top_n=5, nprobe=3).collect()]
+        batch = sorted(((str(r[1]), r[3]) for r in rows if r[0] == qid), key=lambda t: (t[1], t[0]))
+        assert hits == batch
+    assert routed_at == [_BIG_NLIST] * 3
     # Two appends: the first seeds the next ids from the stored corpus, the
     # second numbers on from the ones the first observed.
     for shift in (10_000, 20_000):
