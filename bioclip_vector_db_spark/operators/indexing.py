@@ -424,6 +424,15 @@ def _run_concurrently(spark: SparkSession, fns: list) -> list:
         return [f.result() for f in futures]
 
 
+def _release_checkpoint(*checkpointed: DataFrame) -> None:
+    """Drop eager localCheckpoints once their write op's tables have
+    landed, without waiting on the block manager. Nothing may run them
+    again; a kept one would hold its blocks until a JVM GC lets the
+    ContextCleaner drop the RDD."""
+    for df in checkpointed:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 @_single_writer
 def append_to_index(
     spark: SparkSession,
@@ -539,7 +548,10 @@ def append_to_index(
         writes.append(
             lambda: centroids.write.mode("overwrite").parquet(f"{index_dir}/centroids")
         )
-    _run_concurrently(spark, writes)
+    try:
+        _run_concurrently(spark, writes)
+    finally:
+        _release_checkpoint(rows)
     # Stored only after every write landed. corpus_rows' columns are
     # exactly what partitionBy-append lands (partition column matched by
     # name), so the next append's read skips footer inference.
@@ -571,9 +583,9 @@ def compact_index(
     bit-for-bit. The read is eagerly localCheckpoint-ed before the
     overwrite (same self-read-write hazard as append_to_index).
 
-    Returns per-table file counts before/after. On a cluster this runs
-    per-partition-subtree with dynamic partition overwrite; the full
-    rewrite here is the local[*] form of the same job.
+    Both tables are always rewritten in full, whatever partitions the
+    appends touched, so a compaction costs a full pass over the index.
+    Returns per-table file counts before/after.
     """
     import glob
 
@@ -585,7 +597,10 @@ def compact_index(
         n_rows = df.count()
         n_files = max(1, -(-n_rows // target_rows_per_file))
         compacted = df.repartition(n_files, "partition_id").localCheckpoint(eager=True)
-        compacted.write.mode("overwrite").partitionBy("partition_id").parquet(path)
+        try:
+            compacted.write.mode("overwrite").partitionBy("partition_id").parquet(path)
+        finally:
+            _release_checkpoint(compacted)
         counts[f"{table}_files_before"] = n_before
         counts[f"{table}_files_after"] = len(
             glob.glob(f"{path}/partition_id=*/*.parquet")
@@ -749,6 +764,7 @@ def delete_ids(
         )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        _release_checkpoint(rewritten, new_mapping)
     kept_parts = set(part_counts)
     for p in set(touched) - kept_parts:
         for table in ("corpus", "id_mapping"):

@@ -19,22 +19,6 @@ from ..sources.catalog import load_table
 # ---------------------------------------------------------------------------
 
 
-def expand_partition_spec(spec: str) -> list[int]:
-    """Driver-side O15: ``"1,2,5-10"`` -> ``[1, 2, 5, 6, ..., 10]``
-    (sorted, deduped) — mirrors neighborhood_server.py:353-365."""
-    out: set[int] = set()
-    for token in spec.split(","):
-        token = token.strip()
-        if not token:
-            continue
-        if "-" in token:
-            lo, hi = token.split("-", 1)
-            out.update(range(int(lo), int(hi) + 1))
-        else:
-            out.add(int(token))
-    return sorted(out)
-
-
 def expand_partition_spec_df(spark: SparkSession, spec: str) -> DataFrame:
     """Columnar O15 — the same expansion as a DataFrame expression
     (split -> sequence -> explode -> distinct -> sort), usable inline in a

@@ -8,10 +8,15 @@ predicate pushdown, column pruning, and partition pruning for free.
 
 from __future__ import annotations
 
+import json
 import logging
 import os
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+_log = logging.getLogger(__name__)
 
 #: All driver-fixture tables (TESTDATA.md) — TPC-H-ish star schema plus
 #: events (stream analog), documents (text corpus), embeddings (vector corpus).
@@ -56,102 +61,102 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table with its TIMESTAMP(NANOS) column made usable —
-    shared by the batch catalog and the streaming reader
-    (streaming/events.py) so both read the table identically."""
+    """The events table with its TIMESTAMP(NANOS) column made usable. The
+    streaming reader (streaming/events.read_events_stream) applies the
+    same confs and conversion, so both read the table identically."""
     set_events_confs(spark)
     df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     return convert_event_ts(df)
 
 
-def infer_events_schema(spark: SparkSession, sf_dir: str, glob_pat: str):
-    """Schema for the events file-stream source from the parquet footers
-    directly — no Spark batch-read analysis pass (file-index build + footer
-    job + schema merge cost ~0.11 s per call; 12 call sites, two per
-    stream-stream join query). Returns ``None`` whenever the footers carry
-    anything outside the small type whitelist that is PROVEN to map the way
-    Spark's own parquet inference does under the events confs
-    (``nanosAsLong``, NTZ inference) — the caller then falls back to the
-    batch reader, so a type gap costs the old inference pass, never parity.
+def stream_schema(spark: SparkSession, path: str, glob: str = "*.parquet") -> StructType:
+    """The schema ``spark.read.option("pathGlobFilter", glob).parquet(path)``
+    infers, derived on the driver with no Spark job: every matching
+    file's footer goes through Spark's own
+    ``ParquetFileFormat.readSchemaFromFooter`` with a
+    ``ParquetToSparkSchemaConverter`` built from the session's SQL confs
+    (nanosAsLong, NTZ inference, INT96, binaryAsString), so the answer is
+    the batch reader's by construction. Names starting with ``_`` or
+    ``.`` are skipped, as Spark's file index skips them.
+
+    Two layouts take the batch reader's own inference, and the reason is
+    logged: a partitioned directory (its partition columns are in no
+    footer) and files whose converted schemas differ (which footer the
+    batch reader picks is its own choice). A directory with no matching
+    file, or an unreadable footer, raises.
     """
-    import glob as _glob
+    # Classes are named in full: walking ``spark._jvm.org.apache...`` costs
+    # one py4j round trip per name segment.
+    def jvm_class(name: str) -> JavaClass:
+        return JavaClass(name, spark._jvm._gateway_client)
 
-    try:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql import types as T
-
-        files = [
-            f
-            for f in sorted(_glob.glob(os.path.join(sf_dir, glob_pat)))
-            if os.path.isfile(f) and not os.path.basename(f)[0] in "._"
-        ]
-        if not files:
-            return None
-        # Partitioned layouts (subdirectories) add partition columns the
-        # footer cannot see — leave those to the batch reader.
-        with os.scandir(sf_dir) as it:
-            if any(e.is_dir() and e.name[0] not in "._" for e in it):
-                return None
-        first = pq.ParquetFile(files[0])
-        # INT96 carries no logical-type annotation: Spark reads it as
-        # TIMESTAMP regardless of the nanosAsLong conf, while arrow reports
-        # timestamp[ns] — indistinguishable from TIMESTAMP(NANOS) here.
-        meta = first.metadata.schema
-        if any(meta.column(i).physical_type == "INT96" for i in range(len(meta))):
-            return None
-        arrow_schema = first.schema_arrow
-        for f in files[1:]:
-            if not pq.read_schema(f).equals(arrow_schema, check_metadata=False):
-                return None  # batch reader picks one footer; don't guess which
-
-        nanos_as_long = (
-            spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true"
-        )
-        infer_ntz = (
-            spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-            == "true"
-        )
-        simple = {
-            pa.int8(): T.ByteType(),
-            pa.int16(): T.ShortType(),
-            pa.int32(): T.IntegerType(),
-            pa.int64(): T.LongType(),
-            pa.float32(): T.FloatType(),
-            pa.float64(): T.DoubleType(),
-            pa.string(): T.StringType(),
-            pa.bool_(): T.BooleanType(),
-            pa.date32(): T.DateType(),
-            pa.binary(): T.BinaryType(),
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    root = jvm_class("org.apache.hadoop.fs.Path")(path)
+    pattern = jvm_class("org.apache.hadoop.fs.GlobPattern")(glob)
+    files, partitioned = [], False
+    for status in root.getFileSystem(conf).listStatus(root):
+        name = status.getPath().getName()
+        if name.startswith(("_", ".")):
+            continue
+        if status.isDirectory():
+            partitioned = True
+        elif pattern.matches(name):
+            files.append(status)
+    if partitioned:
+        reason = "partitioned directory"
+    elif not files:
+        raise FileNotFoundError(f"no file matching {glob!r} under {path}")
+    else:
+        parquet = "org.apache.spark.sql.execution.datasources.parquet."
+        converter = jvm_class(parquet + "ParquetToSparkSchemaConverter")(state.conf())
+        read_footer = jvm_class(parquet + "ParquetFooterReader").readFooter
+        to_schema = jvm_class(parquet + "ParquetFileFormat").readSchemaFromFooter
+        skip_row_groups = jvm_class(
+            "org.apache.parquet.format.converter.ParquetMetadataConverter"
+        ).SKIP_ROW_GROUPS
+        input_file = jvm_class("org.apache.parquet.hadoop.util.HadoopInputFile")
+        footer = jvm_class("org.apache.parquet.hadoop.Footer")
+        schemas = {
+            to_schema(
+                footer(
+                    status.getPath(),
+                    read_footer(input_file.fromStatus(status, conf), skip_row_groups),
+                ),
+                converter,
+            )
+            .asNullable()  # as the batch reader's relation makes it
+            .json()
+            for status in files
         }
-        fields = []
-        for af in arrow_schema:
-            t = af.type
-            if pa.types.is_timestamp(t):
-                # NANOS is tested before the zone: Spark maps
-                # TIMESTAMP(NANOS, isAdjustedToUTC=*) alike.
-                if t.unit == "ns":
-                    if not nanos_as_long:
-                        return None  # Spark errors on TIMESTAMP(NANOS) here
-                    spark_t = T.LongType()
-                elif t.tz is not None:
-                    spark_t = T.TimestampType()
-                else:
-                    spark_t = T.TimestampNTZType() if infer_ntz else T.TimestampType()
-            else:
-                spark_t = simple.get(t)
-                if spark_t is None:
-                    return None
-            fields.append(T.StructField(af.name, spark_t, True))
-        return T.StructType(fields)
-    except Exception as exc:
-        logging.getLogger(__name__).debug(
-            "infer_events_schema(%s): footer read failed, falling back to "
-            "Spark's own inference: %r",
-            sf_dir,
-            exc,
-        )
-        return None
+        if len(schemas) == 1:
+            return StructType.fromJson(json.loads(schemas.pop()))
+        reason = f"footers convert to {len(schemas)} different schemas"
+    _log.info(
+        "stream_schema(%s, %r): %s; taking the batch reader's schema",
+        path,
+        glob,
+        reason,
+    )
+    return spark.read.option("pathGlobFilter", glob).parquet(path).schema
+
+
+def read_parquet_stream(
+    spark: SparkSession,
+    path: str,
+    glob: str = "*.parquet",
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The package's one file-stream reader: ``spark.readStream`` over the
+    parquet files under ``path`` whose names match ``glob``, with the
+    schema from :func:`stream_schema`. ``max_files_per_trigger`` caps the
+    files each micro-batch takes (Spark's ``maxFilesPerTrigger``)."""
+    reader = spark.readStream.schema(stream_schema(spark, path, glob)).option(
+        "pathGlobFilter", glob
+    )
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(path)
 
 
 def set_events_confs(spark: SparkSession) -> None:

@@ -36,36 +36,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import register
-from ..sources.catalog import load_table
+from ..sources.catalog import (
+    convert_event_ts,
+    load_table,
+    read_parquet_stream,
+    set_events_confs,
+)
 from .staging import fixture_stream_conf
 
 SESSION_GAP = "4 hours"
 
-def read_events_stream(spark: SparkSession, sf_dir: str, **reader_opts: str) -> DataFrame:
+def read_events_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    glob: str = "events.parquet",
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
     """``readStream`` over the events parquet — the O1-analog streaming
-    scan. The file-stream source needs an explicit schema; it is inferred
-    from the actual footers with the SAME confs as the batch reader, so
-    whatever unit the fixture's ts carries (the regenerated testdata has
-    switched between timestamp[ns]-read-as-long and timestamp[us]), batch
-    and stream read it identically and ``convert_event_ts`` normalizes."""
-    from ..sources.catalog import (
-        convert_event_ts,
-        infer_events_schema,
-        set_events_confs,
-    )
-
+    scan, read under the same confs as the batch catalog, so whatever unit
+    the fixture's ts carries, batch and stream read it identically and
+    ``convert_event_ts`` normalizes it."""
     set_events_confs(spark)
-    glob_pat = reader_opts.get("pathGlobFilter", "events.parquet")
-    schema = infer_events_schema(spark, sf_dir, glob_pat)
-    if schema is None:
-        schema = spark.read.option("pathGlobFilter", glob_pat).parquet(sf_dir).schema
-    reader = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
+    return convert_event_ts(
+        read_parquet_stream(spark, sf_dir, glob, max_files_per_trigger)
     )
-    for k, v in reader_opts.items():
-        reader = reader.option(k, v)
-    return convert_event_ts(reader.parquet(sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -229,7 +223,7 @@ def q_events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds the fixture's whole time span so no key expires mid-feed."""
     staged = _stage_overlap_feed(sf_dir)
     stream = read_events_stream(
-        spark, staged, pathGlobFilter="*.parquet", maxFilesPerTrigger="1"
+        spark, staged, glob="*.parquet", max_files_per_trigger=1
     ).select("event_id", "ts", "user_id", "event_type")
     deduped = stream.withWatermark("ts", "40 days").dropDuplicatesWithinWatermark(
         ["event_id"]
@@ -439,7 +433,7 @@ def q_events_stream_to_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     with durable_stream_gate(
         "bvds_stream_sink",
         os.path.join(sf_dir, "events.parquet"),
-        logic=(read_events_stream, tumbling_stats, "1 hour"),
+        logic=(read_events_stream, read_parquet_stream, tumbling_stats, "1 hour"),
     ) as (out, _fresh):
         stream = read_events_stream(spark, sf_dir)
         agg = tumbling_stats(stream.withWatermark("ts", "1 hour"), "1 hour")
@@ -521,7 +515,7 @@ def q_events_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     staged = _stage_late_feed(sf_dir)
     stream = read_events_stream(
-        spark, staged, pathGlobFilter="*.parquet", maxFilesPerTrigger="1"
+        spark, staged, glob="*.parquet", max_files_per_trigger=1
     )
     agg = tumbling_stats(stream.withWatermark("ts", LATE_DELAY), "1 hour")
     name = "events_late_data_drop_sink"

@@ -12,12 +12,13 @@ code path api.add_batch uses), so the streaming and serving ingest paths
 cannot drift apart.
 
 Scale notes: state lives entirely in the index tables (no streaming state
-store); per-batch cost is the batch assignment plus one broadcast
-max-faiss_id aggregate over the stored corpus; appends only touch the
-partition directories the batch lands in. The per-batch anti-join dedup
-scans stored vec_ids — at 100 TB that becomes a bloom-filter or
-partition-pruned semi-join, which Spark's AQE already rewrites when the
-id side is small.
+store). Per batch: the batch assignment and the two table writes; the
+next faiss_ids ride the corpus write as an observed metric, so the
+max-faiss_id aggregate over the stored corpus runs only on a process's
+first append to an index. Appends only touch the partition directories
+the batch lands in. The per-batch anti-join dedup scans stored vec_ids —
+at 100 TB that becomes a bloom-filter or partition-pruned semi-join,
+which Spark's AQE already rewrites when the id side is small.
 
 Determinism of the gated query: the feed files split vec_id into three
 ascending ranges processed in mtime order, so each partition's appended
@@ -29,6 +30,7 @@ oracle applies verbatim.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +39,7 @@ from ..operators.dedup import nd_ctes_sql as _nd_ctes_sql
 from ..operators.indexing import ASSIGNED_CTE, _run_concurrently, append_to_index
 from ..operators.knn import fixture_centroids
 from ..plans.registry import register
+from ..sources.catalog import read_parquet_stream
 
 
 def _stage_embedding_feed(sf_dir: str, n_files: int = 3) -> str:
@@ -65,6 +68,26 @@ def _stage_embedding_feed(sf_dir: str, n_files: int = 3) -> str:
     )
 
 
+def drain_feed(
+    spark: SparkSession,
+    feed_dir: str,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint: str,
+) -> None:
+    """Run ``fn`` as the foreachBatch sink of a stream over the parquet
+    files under ``feed_dir``, one file per micro-batch, until every file
+    is processed (availableNow). The stream's progress lives at
+    ``checkpoint``, so a rerun resumes after the last committed batch."""
+    (
+        read_parquet_stream(spark, feed_dir, max_files_per_trigger=1)
+        .writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def stream_ingest(
     spark: SparkSession, feed_dir: str, index_dir: str, centroids: DataFrame
 ) -> None:
@@ -74,36 +97,7 @@ def stream_ingest(
     def _append(batch: DataFrame, _batch_id: int) -> None:
         append_to_index(spark, index_dir, batch, centroids)
 
-    # Infer the stream schema from the staged files themselves (footer
-    # read) rather than hardcoding one — the regenerated fixtures have
-    # changed physical types across rounds and the staged feed carries
-    # whatever the source carries. One pyarrow footer read, no Spark job
-    # (the batch-read inference pass cost a scheduler round-trip per cold
-    # ingest); the Spark reader stays the fallback for any arrow->Spark
-    # type gap.
-    import glob
-
-    try:
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        first = sorted(glob.glob(os.path.join(feed_dir, "*.parquet")))[0]
-        schema = from_arrow_schema(pq.read_schema(first))
-    except Exception:
-        schema = (
-            spark.read.option("pathGlobFilter", "*.parquet").parquet(feed_dir).schema
-        )
-    q = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-        .writeStream.foreachBatch(_append)
-        .option("checkpointLocation", f"{index_dir}/_ingest_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_feed(spark, feed_dir, _append, f"{index_dir}/_ingest_ckpt")
 
 
 def _index_consistent(spark: SparkSession, index_dir: str) -> bool:
@@ -153,7 +147,7 @@ def q_streaming_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     with durable_stream_gate(
         "bvds_stream_ingest",
         os.path.join(sf_dir, "embeddings.parquet"),
-        logic=(stream_ingest, append_to_index),
+        logic=(stream_ingest, drain_feed, append_to_index),
         validate=lambda d: _index_consistent(spark, d),
     ) as (index_dir, _fresh):
         # Per-batch shuffles (anti-join, faiss-id window) move k*batch-sized
@@ -238,10 +232,6 @@ def stream_near_dup_ingest(
     batch (which would flag in-batch pairs), and arrival-order semantics
     hold even if the whole checkpoint is lost and every batch replays.
     """
-    import glob as _glob
-
-    from pyspark.sql import functions as F
-
     from ..operators.dedup import doc_shingles, lsh_band_buckets, minhash_signatures
 
     def _process(batch: DataFrame, _batch_id: int) -> None:
@@ -385,27 +375,7 @@ def stream_near_dup_ingest(
         for df_ in _batch_persists:
             df_.unpersist()
 
-    try:
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        first = sorted(_glob.glob(os.path.join(feed_dir, "*.parquet")))[0]
-        schema = from_arrow_schema(pq.read_schema(first))
-    except Exception:
-        schema = (
-            spark.read.option("pathGlobFilter", "*.parquet").parquet(feed_dir).schema
-        )
-    q = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed_dir)
-        .writeStream.foreachBatch(_process)
-        .option("checkpointLocation", f"{store_dir}/_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_feed(spark, feed_dir, _process, f"{store_dir}/_ckpt")
 
 
 @register(
@@ -556,40 +526,21 @@ def q_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     after checkpoint loss republishes identical snapshots
     (unit-tested in tests/test_round7_ops.py). The settled snapshot must
     equal the batch arg-max oracle over the whole events table."""
+    import shutil
     import tempfile
 
     from .events import _stage_late_feed
+    from .staging import fixture_stream_conf
 
     feed = _stage_late_feed(sf_dir)
     store = tempfile.mkdtemp(prefix="bvds_cdc_")
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    first = sorted(_glob.glob(os.path.join(feed, "*.parquet")))[0]
-    schema = from_arrow_schema(_pq.read_schema(first))
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         merge_cdc_snapshot(spark, store, batch, batch_id)
 
-    from .staging import fixture_stream_conf
-
-    import shutil
-
     try:
         with fixture_stream_conf(spark):
-            q = (
-                spark.readStream.schema(schema)
-                .option("pathGlobFilter", "*.parquet")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(feed)
-                .writeStream.foreachBatch(_merge)
-                .option("checkpointLocation", os.path.join(store, "_ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            drain_feed(spark, feed, _merge, os.path.join(store, "_ckpt"))
         snaps = sorted(
             (d for d in os.listdir(store) if d.startswith("snap_")),
             key=lambda d: int(d.split("_")[1]),

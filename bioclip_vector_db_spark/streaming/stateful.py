@@ -1,5 +1,5 @@
 """X7 (custom stateful): arbitrary per-key streaming state via
-``applyInPandasWithState`` and Spark 4's ``transformWithStateInPandas``.
+``applyInPandasWithState``.
 
 Windowed aggregations (streaming/events.py) cover everything the built-in
 state machines express; this module is the escape hatch the brief calls for
@@ -8,33 +8,14 @@ per-user lifetime profile (event count, value total, last-seen timestamp)
 maintained across micro-batches and re-emitted on every update, the shape a
 feature-store or abuse-counter pipeline needs.
 
-Two APIs implement the same profile semantics (r15 verdict item 3):
-
-- ``running_user_profiles`` — the legacy ``applyInPandasWithState``
-  operator, fully exercised here (oracle-gated query + replay tests);
-- ``running_user_profiles_tws`` — the production-current
-  ``transformWithStateInPandas`` form (typed ValueState, optional
-  processing-time TTL, RocksDB state store). Its Python client speaks
-  protobuf to the JVM state server, and THIS sandbox has no
-  ``google.protobuf`` (and installs are out of scope), so the operator
-  fails fast with a named-dependency error here; the wiring, processor
-  class, and tests (tests/test_transform_with_state.py — skipped with
-  the same reason when the dep is absent) are real and run wherever
-  protobuf exists. Same deviation class as the BioCLIP model wiring
-  (SURVEY §7(d) [W]).
-
 Scale notes: state is partitioned by the group key (user_id) exactly like a
 streaming aggregation — each executor holds its keys' state in the state
 store; batches arrive as Arrow-backed pandas frames per key. State size is
-O(distinct users) x a few scalars, independent of event volume. TTL (the
-transformWithState form) bounds the keyspace for abandoned keys — the knob
-the legacy API lacks short of manual timeout bookkeeping.
+O(distinct users) x a few scalars, independent of event volume.
 """
 
 from __future__ import annotations
 
-import contextlib
-import importlib.util
 from collections.abc import Iterator
 
 import pandas as pd
@@ -101,146 +82,6 @@ def running_user_profiles(events: DataFrame) -> DataFrame:
         STATE_SCHEMA,
         "update",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState form (Spark 4 stateful-processor API)
-# ---------------------------------------------------------------------------
-
-#: RocksDB provider class transformWithState requires (the default HDFS
-#: provider does not implement the multi-column-family state layout the
-#: new API's typed state variables use).
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def transform_with_state_unavailable_reason() -> "str | None":
-    """None when transformWithState's Python client can run; otherwise the
-    missing dependency, named. pyspark's StatefulProcessorApiClient talks
-    protobuf to the JVM state server (StateMessage_pb2), so without
-    ``google.protobuf`` the TWS driver worker crashes at init — fail fast
-    with the reason instead (measured in this sandbox: the raw failure is
-    an opaque 'driver worker exited unexpectedly' STREAM_FAILED)."""
-    if importlib.util.find_spec("google") is None or (
-        importlib.util.find_spec("google.protobuf") is None
-    ):
-        return (
-            "google.protobuf is not installed — pyspark's "
-            "transformWithState state-server client (StateMessage_pb2) "
-            "requires it; use running_user_profiles "
-            "(applyInPandasWithState) or install protobuf"
-        )
-    return None
-
-
-@contextlib.contextmanager
-def rocksdb_state_conf(spark: SparkSession) -> Iterator[None]:
-    """Temporarily pin the RocksDB state-store provider (restoring the
-    previous provider on exit): the provider is resolved at FIRST query
-    start from the session conf, and transformWithState refuses the
-    default HDFS-backed provider."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-class UserProfileProcessor:
-    """StatefulProcessor maintaining the same per-user lifetime profile as
-    ``_update_user_profile``, on the Spark 4 typed-state API: one
-    ValueState holding (n, total, last_us), optional processing-time TTL
-    (``ttl_ms``) after which an un-updated user's state expires and the
-    profile restarts from zero — the feature-store retention semantic the
-    legacy API cannot express without hand-rolled timeout bookkeeping.
-
-    Defined lazily as a plain class (not a StatefulProcessor subclass at
-    import time) would be unnecessary — pyspark.sql.streaming.
-    stateful_processor imports cleanly without protobuf; only the RUNTIME
-    client needs it, so the subclass is declared normally and the
-    dependency gate lives in running_user_profiles_tws."""
-
-    def __init__(self, ttl_ms: "int | None" = None):
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState(
-            "profile",
-            "n_events long, total_value double, last_seen_us long",
-            ttlDurationMs=self._ttl_ms,
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        n, total, last_us = (
-            self._state.get() if self._state.exists() else (0, 0.0, 0)
-        )
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            if len(pdf):
-                last_us = max(last_us, int(pdf["ts"].max().value // 1000))
-        self._state.update((n, total, last_us))
-        # Same round-6 emission contract as _update_user_profile — the two
-        # APIs must be result-identical on the same feed.
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(total, 6)],
-                "last_seen": [pd.Timestamp(last_us, unit="us")],
-            }
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        # TTL expiry is handled by the state store itself (the variable
-        # reads absent after expiry); no user timers are registered.
-        return iter(())
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        raise RuntimeError(
-            "UserProfileProcessor does not take an initial state"
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_profiles_tws(
-    events: DataFrame, *, ttl_ms: "int | None" = None
-) -> DataFrame:
-    """``running_user_profiles`` on ``transformWithStateInPandas`` — the
-    Spark 4 stateful-processor API a production pipeline targets (typed
-    state variables, timers, TTL, RocksDB). Identical emission semantics
-    to the legacy operator on the same micro-batch feed; ``ttl_ms`` opts
-    into processing-time state expiry (timeMode switches to
-    ProcessingTime, which TTL requires).
-
-    Fails fast with the named missing dependency where the TWS Python
-    client cannot run (see transform_with_state_unavailable_reason);
-    callers needing a portable operator use running_user_profiles."""
-    reason = transform_with_state_unavailable_reason()
-    if reason is not None:
-        raise RuntimeError(f"transformWithState unavailable: {reason}")
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # Registration-by-shape: StatefulProcessor is an ABC; register the
-    # concrete class so isinstance checks in pyspark accept it without
-    # importing protobuf at module-import time.
-    if not issubclass(UserProfileProcessor, StatefulProcessor):
-        StatefulProcessor.register(UserProfileProcessor)
-    events = events.select("user_id", "ts", "value")
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserProfileProcessor(ttl_ms=ttl_ms),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="ProcessingTime" if ttl_ms is not None else "None",
     )
 
 

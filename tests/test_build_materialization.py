@@ -115,6 +115,20 @@ def test_build_leaves_the_cache_as_it_found_it(spark, sf_dir, tmp_path):
     assert vectors.storageLevel == StorageLevel.NONE
 
 
+def test_add_batch_leaves_the_cache_as_it_found_it(spark, sf_dir, tmp_path):
+    """The append's eager checkpoint is released once its writes land, so
+    add_batch adds no persistent RDD. (The ContextCleaner may drop RDDs
+    that earlier work left, so only additions are checked.)"""
+    emb = load_table(spark, sf_dir, "embeddings")
+    d = str(tmp_path / "index")
+    build_index(emb.filter(F.col("vec_id") < 150), d, k=3)
+    engine = VectorSearchEngine(spark, d)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    engine.add_batch(emb.filter((F.col("vec_id") >= 150) & (F.col("vec_id") < 200)))
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
 def test_build_keeps_the_callers_persist(spark, sf_dir, tmp_path):
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 150)
     vectors, acc = _counted(spark, emb)

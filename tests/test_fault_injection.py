@@ -31,9 +31,11 @@ from bioclip_vector_db_spark.operators.indexing import (
     invalidate_append_state,
 )
 from bioclip_vector_db_spark.operators.knn import fixture_centroids
+from bioclip_vector_db_spark.sources.catalog import read_parquet_stream
 from bioclip_vector_db_spark.streaming.ingest import (
     _index_consistent,
     _stage_embedding_feed,
+    drain_feed,
     stream_ingest,
 )
 from bioclip_vector_db_spark.streaming.staging import fixture_stream_conf
@@ -49,26 +51,10 @@ def _mapping_rows(spark, index_dir):
 
 
 def _run_ingest_with_foreach(spark, feed, index_dir, fn) -> "Exception | None":
-    """stream_ingest's exact reader/checkpoint wiring, but with an
-    injectable foreachBatch — returns the streaming failure, if any."""
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    first = sorted(
-        f for f in os.listdir(feed) if f.endswith(".parquet")
-    )[0]
-    schema = from_arrow_schema(pq.read_schema(os.path.join(feed, first)))
-    q = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .writeStream.foreachBatch(fn)
-        .option("checkpointLocation", f"{index_dir}/_ingest_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
+    """stream_ingest's reader and checkpoint wiring (``drain_feed``), with
+    an injectable foreachBatch — returns the streaming failure, if any."""
     try:
-        q.awaitTermination()
+        drain_feed(spark, feed, fn, f"{index_dir}/_ingest_ckpt")
         return None
     except Exception as e:  # the injected kill surfaces here
         return e
@@ -181,19 +167,11 @@ def test_parquet_sink_crash_mid_batch_is_exactly_once(spark, sf_dir, tmp_path):
                 raise RuntimeError("injected mid-batch task failure")
             yield pdf
 
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    schema = from_arrow_schema(src.schema)
     out = tmp_path / "sink"
 
     def _run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(feed))
-            .mapInPandas(_fail_on_late_rows, schema)
-        )
+        stream = read_parquet_stream(spark, str(feed), max_files_per_trigger=1)
+        stream = stream.mapInPandas(_fail_on_late_rows, stream.schema)
         q = (
             stream.writeStream.format("parquet")
             .option("path", f"{out}/data")

@@ -10,7 +10,7 @@ import math
 from hypothesis import given, settings, strategies as st
 
 from bioclip_vector_db_spark.operators.embedding import _md5_embed
-from bioclip_vector_db_spark.operators.relational import expand_partition_spec
+from bioclip_vector_db_spark.operators.relational import expand_partition_spec_df
 from bioclip_vector_db_spark.operators.taxon import FULL_REGEX, OUT_COLS
 
 _MARKERS = {"kingdom", "phylum", "class", "order", "family", "genus", "species", "with", "common", "name", "photo", "of", "a"}
@@ -39,6 +39,22 @@ def test_taxon_regex_roundtrips_wellformed_captions(words):
     assert got == words
 
 
+def expand_partition_spec(spec: str) -> list[int]:
+    """The driver-side oracle for O15: ``"1,2,5-10"`` -> ``[1, 2, 5, 6,
+    ..., 10]`` (sorted, deduped) — mirrors neighborhood_server.py:353-365."""
+    out: set[int] = set()
+    for token in spec.split(","):
+        token = token.strip()
+        if not token:
+            continue
+        if "-" in token:
+            lo, hi = token.split("-", 1)
+            out.update(range(int(lo), int(hi) + 1))
+        else:
+            out.add(int(token))
+    return sorted(out)
+
+
 @given(
     st.lists(
         st.one_of(
@@ -51,21 +67,16 @@ def test_taxon_regex_roundtrips_wellformed_captions(words):
         max_size=6,
     )
 )
-@settings(max_examples=100, deadline=None)
-def test_partition_spec_expansion_properties(tokens):
-    """Sorted, deduped, and complete: every range member appears exactly
-    once regardless of token order/overlap (neighborhood_server.py:353-365
-    semantics)."""
+@settings(max_examples=20, deadline=None)
+def test_partition_spec_expansion_properties(spark, tokens):
+    """Sorted, deduped, and complete: the columnar expansion lists every
+    range member exactly once regardless of token order/overlap
+    (neighborhood_server.py:353-365 semantics). Each example runs a Spark
+    job (about 0.5 s), hence fewer examples than the driver-only
+    properties here."""
     spec = ",".join(tokens)
-    got = expand_partition_spec(spec)
-    want = set()
-    for t in tokens:
-        if "-" in t:
-            lo, hi = map(int, t.split("-"))
-            want.update(range(lo, hi + 1))
-        else:
-            want.add(int(t))
-    assert got == sorted(want)
+    got = [r.partition_id for r in expand_partition_spec_df(spark, spec).collect()]
+    assert got == expand_partition_spec(spec)
 
 
 @given(st.text(min_size=0, max_size=200))

@@ -37,7 +37,7 @@ def test_state_accumulates_across_batches(spark, tmp_path):
     _write_batch(d / "b2.parquet", [(4, base + 10, 7, 5.0)])
 
     stream = ev.read_events_stream(
-        spark, str(d), pathGlobFilter="*.parquet", maxFilesPerTrigger="1"
+        spark, str(d), glob="*.parquet", max_files_per_trigger=1
     )
     q = (
         stateful.running_user_profiles(stream)

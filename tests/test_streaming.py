@@ -54,7 +54,7 @@ def test_watermark_drops_late_events(spark, tmp_path):
     _write_batch(d / "batch3.parquet", [(5, base + 300), (6, base + 7 * h)])
 
     stream = ev.read_events_stream(
-        spark, str(d), pathGlobFilter="*.parquet", maxFilesPerTrigger="1"
+        spark, str(d), glob="*.parquet", max_files_per_trigger=1
     )
     agg = ev.tumbling_stats(stream.withWatermark("ts", "1 hour"), "1 hour")
     q = (
@@ -143,58 +143,85 @@ def test_cdc_upsert_leaves_no_tempdirs(spark, sf_dir):
     assert set(glob.glob(pattern)) == before
 
 
-def test_footer_schema_inference_matches_batch_reader(spark, sf_dir, tmp_path):
-    """infer_events_schema must equal the batch reader's inference bit-for-bit
-    wherever it answers (r17: replaces a ~0.11 s batch-read analysis pass per
-    read_events_stream call), and must return None — routing the caller to
-    the batch-reader fallback — on anything outside its verified whitelist."""
-    from bioclip_vector_db_spark.sources.catalog import (
-        infer_events_schema,
-        set_events_confs,
-    )
+def _batch_schema(spark, path, glob="*.parquet"):
+    return spark.read.option("pathGlobFilter", glob).parquet(path).schema
 
-    set_events_confs(spark)
-    # single-file fixture (the bench path)
-    fast = infer_events_schema(spark, sf_dir, "events.parquet")
-    slow = spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir).schema
-    assert fast == slow
-    # staged multi-file feed (nanos-as-long ts, the dedup/late-data path)
-    feed = ev._stage_overlap_feed(sf_dir)
-    fast = infer_events_schema(spark, feed, "*.parquet")
-    slow = spark.read.option("pathGlobFilter", "*.parquet").parquet(feed).schema
-    assert fast == slow
-    # unsupported type (decimal) -> None, never a guess
-    import pyarrow as pa
+
+def _write_dir(path, *tables, int96=()):
+    """One parquet file per table under ``path``; files whose index is in
+    ``int96`` store their timestamps as INT96."""
     import pyarrow.parquet as pq
 
-    pq.write_table(
-        pa.table({"d": pa.array([1], type=pa.decimal128(10, 2))}),
-        str(tmp_path / "x.parquet"),
+    path.mkdir()
+    for i, tbl in enumerate(tables):
+        pq.write_table(
+            tbl, str(path / f"f{i}.parquet"), use_deprecated_int96_timestamps=i in int96
+        )
+    return str(path)
+
+
+def test_footer_schema_inference_matches_batch_reader(spark, sf_dir, tmp_path):
+    """stream_schema equals the batch reader's inference on every layout a
+    stream here reads, and on the layouts an arrow->Spark type mapping
+    gets wrong: decimals, INT96 in either file of a two-file directory,
+    and a directory whose files disagree."""
+    import pyarrow as pa
+
+    from bioclip_vector_db_spark.sources.catalog import set_events_confs, stream_schema
+    from bioclip_vector_db_spark.streaming import ingest
+
+    set_events_confs(spark)
+    # the single-file fixture (the bench path)
+    assert stream_schema(spark, sf_dir, "events.parquet") == _batch_schema(
+        spark, sf_dir, "events.parquet"
     )
-    assert infer_events_schema(spark, str(tmp_path), "*.parquet") is None
-    # mixed-schema directory -> None (batch reader picks one footer; don't guess)
-    pq.write_table(pa.table({"a": pa.array([1], type=pa.int64())}), str(tmp_path / "m1.parquet"))
-    pq.write_table(pa.table({"a": pa.array(["x"])}), str(tmp_path / "m2.parquet"))
-    assert infer_events_schema(spark, str(tmp_path), "m*.parquet") is None
+    # every staged multi-file feed a stream reads
+    for feed in (
+        ev._stage_overlap_feed(sf_dir),
+        ev._stage_late_feed(sf_dir),
+        ingest._stage_embedding_feed(sf_dir),
+        ingest._stage_documents_feed(sf_dir),
+    ):
+        assert stream_schema(spark, feed) == _batch_schema(spark, feed)
+    ts_ns = pa.table(
+        {
+            "ts": pa.array([1_700_000_000_000_000], type=pa.timestamp("us")).cast(
+                pa.timestamp("ns")
+            )
+        }
+    )
+    dirs = [
+        _write_dir(
+            tmp_path / "decimal",
+            pa.table({"d": pa.array([1], type=pa.decimal128(10, 2))}),
+        ),
+        _write_dir(tmp_path / "int96_first", ts_ns, ts_ns, int96=(0,)),
+        _write_dir(tmp_path / "int96_second", ts_ns, ts_ns, int96=(1,)),
+        _write_dir(
+            tmp_path / "mixed",
+            pa.table({"a": pa.array([1], type=pa.int64())}),
+            pa.table({"a": pa.array(["x"])}),
+        ),
+    ]
+    for d in dirs:
+        assert stream_schema(spark, d) == _batch_schema(spark, d)
 
 
 @pytest.mark.parametrize(
     "unit,tz", [("ns", "UTC"), ("ns", None), ("us", "UTC")]
 )
 def test_footer_schema_inference_timestamp_units(spark, tmp_path, unit, tz):
-    """Zone-aware NANOS must follow the nanosAsLong path like naive NANOS:
-    Spark types TIMESTAMP(NANOS, isAdjustedToUTC=*) as LONG under the
-    events confs, so the footer inferrer may answer only that (or None)."""
+    """Zone-aware NANOS follows the nanosAsLong path like naive NANOS:
+    under the events confs Spark types TIMESTAMP(NANOS, isAdjustedToUTC=*)
+    as LONG, and stream_schema answers exactly what the batch reader
+    answers for every unit."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from bioclip_vector_db_spark.sources.catalog import (
-        infer_events_schema,
-        set_events_confs,
-    )
+    from bioclip_vector_db_spark.sources.catalog import set_events_confs, stream_schema
 
     set_events_confs(spark)
-    pq.write_table(
+    d = _write_dir(
+        tmp_path / "ev",
         pa.table(
             {
                 "ts": pa.array(
@@ -203,23 +230,37 @@ def test_footer_schema_inference_timestamp_units(spark, tmp_path, unit, tz):
                 "v": pa.array([1], type=pa.int64()),
             }
         ),
-        str(tmp_path / "ev.parquet"),
     )
-    fast = infer_events_schema(spark, str(tmp_path), "*.parquet")
-    assert fast is None or fast == spark.read.parquet(str(tmp_path)).schema
+    assert stream_schema(spark, d) == _batch_schema(spark, d)
 
 
 def test_footer_schema_inference_logs_its_fallback(spark, tmp_path, caplog):
-    """An unreadable footer sends the caller to the batch reader, and the
-    reason is logged at debug level instead of being swallowed."""
+    """stream_schema hands exactly two layouts to the batch reader — a
+    partitioned directory and files whose converted schemas differ — and
+    logs which one; an unreadable footer raises instead of being
+    swallowed."""
     import logging
 
-    from bioclip_vector_db_spark.sources.catalog import infer_events_schema
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from py4j.protocol import Py4JJavaError
 
-    (tmp_path / "ev.parquet").write_bytes(b"not a parquet file")
-    with caplog.at_level(logging.DEBUG, logger="bioclip_vector_db_spark.sources.catalog"):
-        assert infer_events_schema(spark, str(tmp_path), "*.parquet") is None
-    assert any(
-        "falling back" in r.getMessage() and r.levelno == logging.DEBUG
-        for r in caplog.records
-    )
+    from bioclip_vector_db_spark.sources.catalog import stream_schema
+
+    part = tmp_path / "part"
+    (part / "p=1").mkdir(parents=True)
+    pq.write_table(pa.table({"a": [1]}), str(part / "p=1" / "x.parquet"))
+    mixed = _write_dir(tmp_path / "mixed", pa.table({"a": [1]}), pa.table({"a": ["x"]}))
+    logger = "bioclip_vector_db_spark.sources.catalog"
+    with caplog.at_level(logging.INFO, logger=logger):
+        assert stream_schema(spark, str(part)) == _batch_schema(spark, str(part))
+        assert stream_schema(spark, mixed) == _batch_schema(spark, mixed)
+    logged = [r.getMessage() for r in caplog.records if r.name == logger]
+    assert any("partitioned directory" in m for m in logged)
+    assert any("different schemas" in m for m in logged)
+
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "ev.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="ev.parquet"):
+        stream_schema(spark, str(bad))

@@ -37,7 +37,7 @@ def test_streaming_dedup_drops_redelivery(spark, tmp_path):
     _write_batch(d / "b2.parquet", [(2, base + 2), (3, base + 600)])
 
     stream = ev.read_events_stream(
-        spark, str(d), pathGlobFilter="*.parquet", maxFilesPerTrigger="1"
+        spark, str(d), glob="*.parquet", max_files_per_trigger=1
     )
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
